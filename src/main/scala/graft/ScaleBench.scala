@@ -549,19 +549,22 @@ object ScaleBench {
           // replicas get DISTINCT text (a per-replica suffix — identical
           // replicas would collapse to one keeper and the join input
           // would never grow with the factor) and the fixed 4000-doc
-          // base slice carries the constant-df boilerplate phrase
+          // base slice carries the constant-df boilerplate phrase: gated
+          // on the original replica's unshifted id, so no replica ever
+          // joins the slice and the hot shingle's df is the same at
+          // every factor
           val reps = spark.range(k).select($"id".as("rep"))
           spark.read.parquet(s"$srcDir/documents.parquet")
             .crossJoin(reps)
+            .withColumn("text",
+              when($"rep" === 0 && $"doc_id" < 4000, concat($"text",
+                lit(" shared boiler plate phrase every skewed keeper repeats")))
+                .otherwise($"text"))
             .withColumn("doc_id",
               $"doc_id" + $"rep" * maxOf("documents", "doc_id"))
             .withColumn("text",
               when($"rep" > 0, concat($"text", lit(" replica marker "),
                 $"rep")).otherwise($"text"))
-            .withColumn("text",
-              when($"doc_id" < 4000, concat($"text",
-                lit(" shared boiler plate phrase every skewed keeper repeats")))
-                .otherwise($"text"))
             .drop("rep")
             .write.mode("overwrite").parquet(s"$dir/documents.parquet")
         case _ =>

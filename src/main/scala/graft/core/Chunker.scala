@@ -12,7 +12,7 @@ import org.apache.spark.util.SerializableConfiguration
   */
 final case class ChunkSpec(relPath: String, absPath: String, idx: Long, offset: Long, len: Long)
 
-/** Digest of one chunk, keyed for the total sort. */
+/** Digest of one chunk, keyed by (relPath, idx) — the fold order. */
 final case class ChunkDigest(relPath: String, idx: Long, digest: Array[Byte])
 
 /** Fixed-length chunking as driver-planned range reads.
@@ -99,9 +99,17 @@ object Chunker {
 
   /** Computes the domain-separated digest of every planned chunk, streaming
     * file bytes through the digest in 64 KiB reads (never materializing a
-    * whole chunk — the default block size is 128 MiB). Specs are
-    * range-partitioned and sorted by (path, offset) within partitions so a
-    * task reads each file sequentially.
+    * whole chunk — the default block size is 128 MiB).
+    *
+    * Order contract: the result is globally ordered by (absPath, idx).
+    * Specs are range-partitioned on (absPath, idx) and sorted within
+    * partitions — the plan's one exchange — and the digest
+    * `mapPartitions` keeps row order, so partition i holds keys below
+    * partition i+1's and `collect()` returns the digests in that order.
+    * A task thereby reads each file sequentially, and
+    * [[DirHash.hashDirectoryRaw]] folds the collected rows without
+    * sorting them again. For specs sharing one root, (absPath, idx)
+    * order is (relPath, idx) order in UTF-8 bytes.
     *
     * Digest layout per chunk (reference /root/reference/dirhash.py:288-303):
     * `H( utf8(relPath) || 0x00 || ascii_decimal(idx) || 0x00 || content )`.

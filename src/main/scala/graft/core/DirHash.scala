@@ -15,8 +15,11 @@ final case class HashComparisonResult(matches: Boolean, actualHash: String)
   *   1. driver: recursive listing (files + dirs, empty dirs included)
   *   2. executors: chunk-digest every block of every file (one Dataset of
   *      planned range reads — no per-file RDD union chain)
-  *   3. one total sort of the digests by (relPath, idx) — the pipeline's
-  *      single shuffle, same as the reference's `sortBy` (dirhash.py:413)
+  *   3. the digests come back already in (relPath, idx) order: the
+  *      pipeline's single exchange is `digestChunks`' range partition on
+  *      (absPath, idx), which fixes both the read order and the fold
+  *      order — the reference's `sortBy` (dirhash.py:413) without a
+  *      second sort, so every byte is read and digested once
   *   4. driver: sequential, order-dependent digest fold (deliberately NOT a
   *      Spark aggregation — it is non-associative and non-commutative,
   *      SURVEY.md §2.4). Collected rows are 28-64 B digests, so driver
@@ -79,10 +82,12 @@ object DirHash {
     val nChunks = Chunker.countChunks(entries, blockSize)
     val specs = Chunker.planChunksDataset(spark, dir, entries, blockSize,
       knownChunkCount = nChunks)
+    // digestChunks' rows are globally (absPath, idx)-ordered, i.e.
+    // (relPath, idx) in UTF-8 byte order == Python code-point order, and
+    // collect() keeps partition order. No second sort: an orderBy here
+    // would re-run the read+digest in its range-sampling job.
     val sortedDigests = Chunker.digestChunks(spark, specs,
-      nChunks, algo, hadoopConf)
-      .orderBy("relPath", "idx") // UTF8 binary order == Python code-point order
-      .collect()
+      nChunks, algo, hadoopConf).collect()
 
     val allEntries = entries.map(_.relPath).sorted(Listing.utf8Ordering)
 

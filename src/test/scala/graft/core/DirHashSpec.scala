@@ -3,6 +3,14 @@ package graft.core
 import graft.SparkTestSession
 import graft.fs.{FileEntry, Listing}
 import graft.hash.{Algos, HashSpec}
+import org.apache.hadoop.fs.FileSystem
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -197,6 +205,125 @@ class DirHashSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(DirHash.hashDirectoryRaw(spark, root.toString, "sha256", 1024 * 1024) == expected)
     assert(DirHash.hashDirectory(spark, root.toString, "sha256", "1M") ==
       s"v1-sha256-1M-$expected")
+  }
+
+  /** Drains the async listener bus (private[spark]; the same reflective
+    * call the bench uses), so listener counts are complete. */
+  private def drainListeners(): Unit = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+  }
+
+  private def fileBytesRead(): Long = {
+    import scala.jdk.CollectionConverters._
+    FileSystem.getAllStatistics.asScala.filter(_.getScheme == "file")
+      .map(_.getBytesRead).sum
+  }
+
+  test("hash plan: one range exchange on (absPath, idx), every byte read once, <= 3 jobs") {
+    // 1M blocks: 32 + 4 chunks, spread over several range partitions
+    val executions = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val qeListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        executions.add(qe); ()
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val jobListener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    drainListeners()
+    spark.listenerManager.register(qeListener)
+    spark.sparkContext.addSparkListener(jobListener)
+    val read0 = fileBytesRead()
+    try {
+      DirHash.hashDirectoryRaw(spark, root.toString, "sha256", 1024 * 1024)
+      drainListeners()
+    } finally {
+      spark.listenerManager.unregister(qeListener)
+      spark.sparkContext.removeSparkListener(jobListener)
+    }
+    val treeBytes = ZerosLen.toLong + Seq(LoremText, HelloText, PasswordsText, AbcText)
+      .map(_.getBytes("UTF-8").length).sum
+    assert(fileBytesRead() - read0 == treeBytes)
+    assert(jobs.get <= 3, s"${jobs.get} jobs for one hash")
+
+    assert(executions.size == 1)
+    val plan = executions.peek().executedPlan
+    plan match {
+      case a: AdaptiveSparkPlanExec => assert(a.isFinalPlan)
+      case _ =>
+    }
+    val exchanges = new AdaptiveSparkPlanHelper {}
+      .collect(plan) { case e: ShuffleExchangeLike => e }
+    assert(exchanges.size == 1, s"exchanges:\n${exchanges.mkString("\n")}")
+    exchanges.head.outputPartitioning match {
+      case RangePartitioning(ordering, n) =>
+        assert(ordering.map(_.child).collect { case a: Attribute => a.name } ==
+          Seq("absPath", "idx"))
+        assert(n > 1)
+      case other => fail(s"not a range partitioning: $other")
+    }
+  }
+
+  test("fold order is UTF-8 (relPath, idx) order across range partitions, AQE on and off") {
+    // U+FF5E sorts before U+1D11E in UTF-8 and code points, after it in
+    // UTF-16 (the astral character is a D834 surrogate pair); "." (0x2E)
+    // sorts before "/" (0x2F), so a file beside a same-named directory
+    // comes first. Expected order, by hand:
+    val files = Seq("a b.txt" -> 3000, "a b/e.bin" -> 2500, "a b/\u00e9.bin" -> 5000,
+      "\u00e9" -> 4100, "\u30c7\u30fc\u30bf\uff5e" -> 7000,
+      "\u30c7\u30fc\u30bf\ud834\udd1e" -> 6000)
+    val entries = Seq(files(0)._1, "a b/") ++ files.drop(1).map(_._1)
+    val block = 1024
+    val rnd = new scala.util.Random(7)
+    val content = files.map { case (p, n) => p -> Array.fill(n)(rnd.nextInt().toByte) }.toMap
+    val tree = Files.createTempDirectory("dirhash-order")
+    files.foreach { case (p, _) =>
+      Files.createDirectories(tree.resolve(p).getParent)
+      Files.write(tree.resolve(p), content(p))
+    }
+    val zero = Array(0.toByte)
+    val chunks = files.flatMap { case (p, n) =>
+      (0 until (n + block - 1) / block).map { i =>
+        val d = Algos.get("sha256")
+        d.update(p); d.update(zero); d.update(i.toString); d.update(zero)
+        d.update(content(p).slice(i * block, (i + 1) * block))
+        (p, i.toLong, d.digest())
+      }
+    }
+    val h = Algos.get("sha256")
+    h.update(entries.size.toString); h.update(zero)
+    entries.foreach { e => h.update(e); h.update(zero) }
+    chunks.foreach(c => h.update(c._3))
+    val expected = Algos.hex(h.digest())
+
+    val conf = spark.sparkContext.hadoopConfiguration
+    val listing = Listing.list(tree.toString, conf)
+    val aqeKey = "spark.sql.adaptive.enabled"
+    val aqe0 = spark.conf.getOption(aqeKey)
+    try Seq("true", "false").foreach { aqe =>
+      spark.conf.set(aqeKey, aqe)
+      assert(DirHash.hashDirectoryRaw(spark, tree.toString, "sha256", block) == expected,
+        s"AQE $aqe")
+      // the distributed spec plan flows through the same exchange
+      val specs = Chunker.planChunksDataset(spark, tree.toString, listing, block,
+        driverSpecLimit = 0L)
+      val got = Chunker.digestChunks(spark, specs, chunks.size.toLong, "sha256", conf)
+        .collect().toSeq
+      assert(got.map(c => (c.relPath, c.idx)) == chunks.map(c => (c._1, c._2)),
+        s"AQE $aqe")
+      assert(got.map(_.digest.toSeq) == chunks.map(_._3.toSeq), s"AQE $aqe")
+    } finally {
+      aqe0 match {
+        case Some(v) => spark.conf.set(aqeKey, v)
+        case None => spark.conf.unset(aqeKey)
+      }
+      import scala.jdk.CollectionConverters._
+      Files.walk(tree).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+    }
   }
 
   test("empty root hashes the reference byte layout: count, 0x00, 0x00 (ADVICE r1)") {
