@@ -8,12 +8,21 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.util.SerializableConfiguration
 
 /** One planned fixed-length block read: chunk `idx` of file `relPath`,
-  * bytes `[offset, offset+len)` of the underlying file.
+  * bytes `[offset, offset+len)` of the underlying file, whose listed
+  * length is `fileLen`.
   */
-final case class ChunkSpec(relPath: String, absPath: String, idx: Long, offset: Long, len: Long)
+final case class ChunkSpec(relPath: String, absPath: String, idx: Long, offset: Long, len: Long,
+    fileLen: Long)
 
 /** Digest of one chunk, keyed by (relPath, idx) — the fold order. */
 final case class ChunkDigest(relPath: String, idx: Long, digest: Array[Byte])
+
+/** A file's length on disk no longer matches its listing: it grew or
+  * shrank between the listing and the read of its chunks, so its bytes
+  * cannot be hashed as listed.
+  */
+final class FileChangedException(val path: String, val listedLen: Long)
+    extends java.io.IOException(s"$path changed since it was listed at $listedLen bytes")
 
 /** Fixed-length chunking as driver-planned range reads.
   *
@@ -30,19 +39,27 @@ final case class ChunkDigest(relPath: String, idx: Long, digest: Array[Byte])
   */
 object Chunker {
 
-  /** Plans chunk ranges for every regular file. Empty files yield no chunks
-    * (they still appear in the listing — SURVEY.md §1.3).
+  private def chunkCount(fileLen: Long, blockSize: Long): Long =
+    (fileLen + blockSize - 1) / blockSize // 0 for empty files
+
+  /** Chunks `[from, until)` of one listed file under `root`. */
+  private def fileChunkSpecs(root: String, fe: FileEntry, blockSize: Long,
+      from: Long, until: Long): Iterator[ChunkSpec] =
+    (from until until).iterator.map { i =>
+      val offset = i * blockSize
+      ChunkSpec(fe.relPath, s"$root/${fe.relPath}", i, offset,
+        math.min(blockSize, fe.size - offset), fe.size)
+    }
+
+  /** Plans chunk ranges for every regular file, in listing order. Empty
+    * files yield no chunks (they still appear in the listing — SURVEY.md
+    * §1.3).
     */
   def planChunks(rootDir: String, entries: Seq[FileEntry], blockSize: Long): Seq[ChunkSpec] = {
     require(blockSize > 0, s"block size must be positive: $blockSize")
     val root = graft.fs.Listing.stripTrailingSlashes(rootDir)
     entries.iterator.filterNot(_.isDir).flatMap { fe =>
-      val nChunks = (fe.size + blockSize - 1) / blockSize // 0 for empty files
-      (0L until nChunks).map { i =>
-        val offset = i * blockSize
-        ChunkSpec(fe.relPath, s"$root/${fe.relPath}", i, offset,
-          math.min(blockSize, fe.size - offset))
-      }
+      fileChunkSpecs(root, fe, blockSize, 0L, chunkCount(fe.size, blockSize))
     }.toSeq
   }
 
@@ -50,135 +67,133 @@ object Chunker {
     * no spec materialization.
     */
   def countChunks(entries: Seq[FileEntry], blockSize: Long): Long =
-    entries.iterator.filterNot(_.isDir)
-      .map(fe => (fe.size + blockSize - 1) / blockSize).sum
+    entries.iterator.filterNot(_.isDir).map(fe => chunkCount(fe.size, blockSize)).sum
 
-  /** The chunk plan as a Dataset. Plans up to `driverSpecLimit` specs
-    * take the driver Seq path (byte-identical to [[planChunks]], zero
-    * extra jobs — the default covers 100 TB at the 128 MiB default
-    * block size, ~10⁶ specs); above it the expansion runs as a
-    * distributed flatMap over the FILE list, so the driver holds
-    * O(#files), never O(#chunks). The old always-driver path made
-    * plan-time memory scale inversely with block size: 100 TB at 1 MiB
-    * blocks is 10⁸ specs — a driver OOM for choosing a small `-b`,
-    * which the reference's own collect bound never imposed at plan
-    * time. A single huge file expands lazily (iterator flatMap) inside
-    * its task and is immediately re-spread by digestChunks'
-    * range-repartition on (path, idx).
+  /** Chunks `[from, until)` of one file: a contiguous piece of a slice. */
+  private final case class Segment(file: FileEntry, from: Long, until: Long)
+
+  /** Cuts the chunk sequence of the non-empty files, in UTF-8
+    * `(relPath, idx)` order, at chunk boundaries into `nParts` contiguous
+    * slices of about equal bytes: cut `j` falls at the first chunk end at
+    * or past `j * total / nParts`, so every slice holds within one block
+    * of `total / nParts` bytes. A file may span several slices. O(#files +
+    * nParts) time and memory.
+    */
+  private def planSlices(files: Seq[FileEntry], blockSize: Long,
+      nParts: Int): Array[Array[Segment]] = {
+    val total = files.iterator.map(_.size).sum
+    val (q, r) = (total / nParts, total % nParts)
+    def cutAt(j: Int): Long = j * q + (j * r + nParts - 1) / nParts // ceil(j * total / nParts)
+    val slices = Array.newBuilder[Array[Segment]]
+    var slice = Array.newBuilder[Segment]
+    var j = 1
+    var fileStart = 0L
+    files.foreach { fe =>
+      val n = chunkCount(fe.size, blockSize)
+      var from = 0L
+      while (j < nParts && cutAt(j) <= fileStart + fe.size) {
+        val cut = chunkCount(cutAt(j) - fileStart, blockSize)
+        if (cut > from) slice += Segment(fe, from, cut)
+        slices += slice.result()
+        slice = Array.newBuilder[Segment]
+        from = cut
+        j += 1
+      }
+      if (n > from) slice += Segment(fe, from, n)
+      fileStart += fe.size
+    }
+    slices += slice.result()
+    slices.result()
+  }
+
+  /** The chunk plan as a Dataset with no shuffle behind it: the driver
+    * cuts the UTF-8 `(relPath, idx)`-ordered chunk sequence into
+    * `max(1, min(#chunks, defaultParallelism))` contiguous, byte-balanced
+    * slices ([[planSlices]]) and ships one slice per partition, each
+    * expanded lazily into its `ChunkSpec`s inside the task. Partition `i`
+    * therefore holds the chunks just before partition `i+1`'s, and the
+    * driver holds O(#files + #partitions) whatever the block size.
+    *
+    * `knownChunkCount` is unused: the plan counts chunks while cutting
+    * slices. It stays for callers that pass it.
     */
   def planChunksDataset(spark: SparkSession, rootDir: String,
       entries: Seq[FileEntry], blockSize: Long,
-      driverSpecLimit: Long = 4000000L,
       knownChunkCount: Long = -1L): Dataset[ChunkSpec] = {
     import spark.implicits._
     require(blockSize > 0, s"block size must be positive: $blockSize")
-    // callers that already hold the count (hashDirectoryRaw passes it to
-    // digestChunks' range sizing too) hand it in, so the O(#files) pass
-    // runs once per hash and the two sites cannot disagree
-    val nChunks =
-      if (knownChunkCount >= 0) knownChunkCount
-      else countChunks(entries, blockSize)
-    if (nChunks <= driverSpecLimit)
-      spark.createDataset(planChunks(rootDir, entries, blockSize))
-    else {
-      val root = graft.fs.Listing.stripTrailingSlashes(rootDir)
-      val files = entries.filterNot(_.isDir)
-      val bs = blockSize
-      spark.createDataset(files)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .flatMap { fe =>
-          val nChunks = (fe.size + bs - 1) / bs // 0 for empty files
-          (0L until nChunks).iterator.map { i =>
-            val offset = i * bs
-            ChunkSpec(fe.relPath, s"$root/${fe.relPath}", i, offset,
-              math.min(bs, fe.size - offset))
-          }
-        }
-    }
+    val root = graft.fs.Listing.stripTrailingSlashes(rootDir)
+    val files = entries.filter(fe => !fe.isDir && fe.size > 0)
+      .sortBy(_.relPath)(graft.fs.Listing.utf8Ordering)
+    val nChunks = files.iterator.map(fe => chunkCount(fe.size, blockSize)).sum
+    val nParts = math.max(1L,
+      math.min(nChunks, spark.sparkContext.defaultParallelism.toLong)).toInt
+    val slices = planSlices(files, blockSize, nParts)
+    spark.createDataset(spark.sparkContext.parallelize(slices.toSeq, nParts).flatMap(
+      _.iterator.flatMap(s => fileChunkSpecs(root, s.file, blockSize, s.from, s.until))))
   }
 
   /** Computes the domain-separated digest of every planned chunk, streaming
     * file bytes through the digest in 64 KiB reads (never materializing a
     * whole chunk — the default block size is 128 MiB).
     *
-    * Order contract: the result is globally ordered by (absPath, idx).
-    * Specs are range-partitioned on (absPath, idx) and sorted within
-    * partitions — the plan's one exchange — and the digest
-    * `mapPartitions` keeps row order, so partition i holds keys below
-    * partition i+1's and `collect()` returns the digests in that order.
-    * A task thereby reads each file sequentially, and
-    * [[DirHash.hashDirectoryRaw]] folds the collected rows without
-    * sorting them again. For specs sharing one root, (absPath, idx)
-    * order is (relPath, idx) order in UTF-8 bytes.
+    * No exchange: each partition is digested in input order, so with the
+    * plan of [[planChunksDataset]] `collect()` returns the digests in UTF-8
+    * `(relPath, idx)` order and [[DirHash.hashDirectoryRaw]] folds them
+    * without sorting. A task reads each of its files sequentially. After a
+    * file's final chunk a one-byte read must hit EOF; a file that grew or
+    * shrank since it was listed fails the task with a
+    * [[FileChangedException]] naming the path. `nSpecs` is unused; it stays
+    * for callers that pass it.
     *
     * Digest layout per chunk (reference /root/reference/dirhash.py:288-303):
     * `H( utf8(relPath) || 0x00 || ascii_decimal(idx) || 0x00 || content )`.
     */
   def digestChunks(
       spark: SparkSession,
-      specs: Seq[ChunkSpec],
-      algo: String,
-      hadoopConf: Configuration): Dataset[ChunkDigest] = {
-    import spark.implicits._
-    digestChunks(spark, spark.createDataset(specs), specs.size.toLong,
-      algo, hadoopConf)
-  }
-
-  /** Dataset-plan variant: `nSpecs` is the planned chunk count (cheap
-    * O(#files) arithmetic via [[countChunks]]) used to size the range
-    * partitioning without counting the Dataset.
-    */
-  def digestChunks(
-      spark: SparkSession,
       specs: Dataset[ChunkSpec],
-      nSpecs: Long,
+      nSpecs: Long = -1L,
       algo: String,
       hadoopConf: Configuration): Dataset[ChunkDigest] = {
     import spark.implicits._
     Algos.get(algo) // fail fast on the driver for unknown algorithms
     val serConf = new SerializableConfiguration(hadoopConf)
-    val parallelism = spark.sparkContext.defaultParallelism
-    // ~4 specs per core up to the spec count, so large files fan out wide
-    // while tiny trees don't pay for empty tasks.
-    val nParts = math.max(1, math.min(nSpecs, parallelism * 4L)).toInt
-    specs
-      .repartitionByRange(nParts, $"absPath", $"idx")
-      .sortWithinPartitions($"absPath", $"idx")
-      .mapPartitions { it =>
-        val conf = serConf.value
-        val buf = new Array[Byte](64 * 1024)
-        var openPath: String = null
-        var in: org.apache.hadoop.fs.FSDataInputStream = null
-        def close(): Unit = if (in != null) { in.close(); in = null; openPath = null }
-        val digests = it.map { spec =>
-          if (openPath != spec.absPath) {
-            close()
-            val p = new Path(spec.absPath)
-            in = p.getFileSystem(conf).open(p)
-            openPath = spec.absPath
-          }
-          in.seek(spec.offset)
-          val d = Algos.get(algo)
-          d.update(spec.relPath)
-          d.update(Array(0.toByte))
-          d.update(spec.idx.toString)
-          d.update(Array(0.toByte))
-          var remaining = spec.len
-          while (remaining > 0) {
-            val n = in.read(buf, 0, math.min(buf.length.toLong, remaining).toInt)
-            if (n < 0)
-              throw new java.io.IOException(
-                s"unexpected EOF in ${spec.absPath} at chunk ${spec.idx}")
-            d.update(buf, 0, n)
-            remaining -= n
-          }
-          ChunkDigest(spec.relPath, spec.idx, d.digest())
+    specs.mapPartitions { it =>
+      val conf = serConf.value
+      val buf = new Array[Byte](64 * 1024)
+      var openPath: String = null
+      var in: org.apache.hadoop.fs.FSDataInputStream = null
+      def close(): Unit = if (in != null) { in.close(); in = null; openPath = null }
+      val digests = it.map { spec =>
+        def changed = new FileChangedException(spec.absPath, spec.fileLen)
+        if (openPath != spec.absPath) {
+          close()
+          val p = new Path(spec.absPath)
+          in = p.getFileSystem(conf).open(p)
+          openPath = spec.absPath
         }
-        new Iterator[ChunkDigest] {
-          def hasNext: Boolean = { val h = digests.hasNext; if (!h) close(); h }
-          def next(): ChunkDigest = digests.next()
+        try in.seek(spec.offset)
+        catch { case _: java.io.EOFException => throw changed }
+        val d = Algos.get(algo)
+        d.update(spec.relPath)
+        d.update(Array(0.toByte))
+        d.update(spec.idx.toString)
+        d.update(Array(0.toByte))
+        var remaining = spec.len
+        while (remaining > 0) {
+          val n = in.read(buf, 0, math.min(buf.length.toLong, remaining).toInt)
+          if (n < 0) throw changed
+          d.update(buf, 0, n)
+          remaining -= n
         }
+        if (spec.offset + spec.len == spec.fileLen && in.read() >= 0) throw changed
+        ChunkDigest(spec.relPath, spec.idx, d.digest())
       }
+      new Iterator[ChunkDigest] {
+        def hasNext: Boolean = { val h = digests.hasNext; if (!h) close(); h }
+        def next(): ChunkDigest = digests.next()
+      }
+    }
   }
 
   /** Raw chunk bytes of a single file — test/debug surface mirroring the
@@ -204,7 +219,7 @@ object Chunker {
         var done = 0
         while (done < out.length) {
           val n = in.read(out, done, out.length - done)
-          if (n < 0) throw new java.io.IOException(s"unexpected EOF in ${spec.absPath}")
+          if (n < 0) throw new FileChangedException(spec.absPath, spec.fileLen)
           done += n
         }
         (spec.idx, out)

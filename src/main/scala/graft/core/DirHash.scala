@@ -15,11 +15,11 @@ final case class HashComparisonResult(matches: Boolean, actualHash: String)
   *   1. driver: recursive listing (files + dirs, empty dirs included)
   *   2. executors: chunk-digest every block of every file (one Dataset of
   *      planned range reads — no per-file RDD union chain)
-  *   3. the digests come back already in (relPath, idx) order: the
-  *      pipeline's single exchange is `digestChunks`' range partition on
-  *      (absPath, idx), which fixes both the read order and the fold
-  *      order — the reference's `sortBy` (dirhash.py:413) without a
-  *      second sort, so every byte is read and digested once
+  *   3. the digests come back already in (relPath, idx) order, with no
+  *      shuffle: the driver plans the chunks as contiguous, byte-balanced
+  *      slices of that order, one per task, so a hash is one job of one
+  *      stage — the reference's total `sortBy` (dirhash.py:413) done at
+  *      plan time, and every byte is read and digested once
   *   4. driver: sequential, order-dependent digest fold (deliberately NOT a
   *      Spark aggregation — it is non-associative and non-commutative,
   *      SURVEY.md §2.4). Collected rows are 28-64 B digests, so driver
@@ -76,18 +76,15 @@ object DirHash {
     val hadoopConf = spark.sparkContext.hadoopConfiguration
     val entries = Listing.list(dir, hadoopConf)
 
-    // Dataset-side plan: O(#files) on the driver regardless of block
-    // size (the digest COLLECT below stays driver-bounded by design —
-    // that bound is the reference's own spec)
-    val nChunks = Chunker.countChunks(entries, blockSize)
-    val specs = Chunker.planChunksDataset(spark, dir, entries, blockSize,
-      knownChunkCount = nChunks)
-    // digestChunks' rows are globally (absPath, idx)-ordered, i.e.
-    // (relPath, idx) in UTF-8 byte order == Python code-point order, and
-    // collect() keeps partition order. No second sort: an orderBy here
-    // would re-run the read+digest in its range-sampling job.
-    val sortedDigests = Chunker.digestChunks(spark, specs,
-      nChunks, algo, hadoopConf).collect()
+    // Dataset-side plan: O(#files + #tasks) on the driver regardless of
+    // block size (the digest COLLECT below stays driver-bounded by
+    // design — that bound is the reference's own spec)
+    val specs = Chunker.planChunksDataset(spark, dir, entries, blockSize)
+    // the plan's partitions are consecutive runs of the (relPath, idx)
+    // order in UTF-8 bytes (== Python code-point order), digestChunks
+    // keeps row order and collect() keeps partition order: no sort here
+    val sortedDigests = Chunker.digestChunks(spark, specs, algo = algo,
+      hadoopConf = hadoopConf).collect()
 
     val allEntries = entries.map(_.relPath).sorted(Listing.utf8Ordering)
 

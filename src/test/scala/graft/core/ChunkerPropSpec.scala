@@ -94,41 +94,90 @@ class ChunkerPropSpec extends AnyFunSuite {
     }
   }
 
-  test("property: distributed plan == driver plan (forced via driverSpecLimit 0)") {
-    import graft.fs.FileEntry
+  // Names whose UTF-8 and UTF-16 orders differ (U+FF5E sorts before the
+  // astral U+1D11E in UTF-8, after its D834 surrogate in UTF-16), a space,
+  // "é", and a file beside a same-named directory ("." 0x2E < "/" 0x2F).
+  private val names = Seq("a b.txt", "a b/e.bin", "a b/\u00e9", "\u00e9",
+    "\u30c7\uff5e", "\u30c7\ud834\udd1e", "x/y/z", "zz")
+  private val listings: Gen[Seq[FileEntry]] = for {
+    picked <- Gen.someOf(names)
+    lens <- Gen.listOfN(picked.size, sizes)
+    dirs <- Gen.someOf(Seq("a b/", "x/", "x/y/", "empty/"))
+    giant <- Gen.oneOf(false, true)
+  } yield {
+    val files = picked.toSeq.zip(lens).map { case (n, len) => FileEntry(n, isDir = false, len) }
+    // one file larger than the whole rest
+    val sized = if (giant && files.nonEmpty)
+      files.updated(0, files.head.copy(size = files.map(_.size).sum + 1))
+    else files
+    sized ++ dirs.map(FileEntry(_, isDir = true, 0L))
+  }
+
+  test("property: plan partitions are ordered UTF-8 runs of balanced bytes") {
+    val cores = spark.sparkContext.defaultParallelism
+    val byKey = Ordering.Tuple2(graft.fs.Listing.utf8Ordering, Ordering.Long)
     for {
-      size <- samples(sizes, 20)
-      block <- samples(blocks, 4)
+      entries <- samples(listings, 40)
+      block <- samples(blocks, 3)
     } {
-      val entries = Seq(FileEntry("a/f1", isDir = false, size),
-        FileEntry("f2", isDir = false, (size * 3) % 4097),
-        FileEntry("a", isDir = true, 0L),
-        FileEntry("empty", isDir = false, 0L))
-      val driver = Chunker.planChunks("/r", entries, block)
-      val dist = Chunker.planChunksDataset(spark, "/r", entries, block,
-        driverSpecLimit = 0L).collect().toSeq
-      assert(dist.sortBy(s => (s.relPath, s.idx)) ==
-        driver.sortBy(s => (s.relPath, s.idx)),
-        s"plan mismatch at size=$size block=$block")
+      val parts = Chunker.planChunksDataset(spark, "/r", entries, block).rdd
+        .mapPartitionsWithIndex((i, it) => Iterator(i -> it.toVector)).collect()
+      val expected = Chunker.planChunks("/r", entries, block)
+        .sortBy(s => (s.relPath, s.idx))(byKey)
+      val at = s"at block=$block, entries=$entries"
+      assert(parts.map(_._1).toSeq == parts.indices, at)
+      assert(parts.length == math.max(1, math.min(expected.size, cores)), at)
+      assert(parts.toSeq.flatMap(_._2) == expected, at) // no re-sort of the rows
+      val total = expected.map(_.len).sum
+      parts.foreach { case (i, p) => // |bytes - total / nParts| <= one block
+        assert(math.abs(p.map(_.len).sum * parts.length - total) <= block * parts.length,
+          s"partition $i $at")
+      }
     }
   }
 
   test("a 10-million-chunk listing plans without driver materialization") {
     import graft.fs.FileEntry
-    // 10 files × 1e6 chunks each: the old driver Seq would be 1e7
-    // ChunkSpec objects (~1.5 GB with object headers + two boxed paths
-    // each); the Dataset plan never materializes them driver-side —
-    // lazy iterator flatMap per file, spot-checked at both extremes.
+    // 10 files × 1e6 chunks each: a driver Seq would be 1e7 ChunkSpec
+    // objects (~1.5 GB with object headers + two boxed paths each); the
+    // Dataset plan ships one slice of file segments per partition and
+    // expands it lazily inside the task, spot-checked at both extremes.
     // (Planning needs sizes only; no bytes are read.)
     val entries = (0 until 10).map(i =>
       FileEntry(f"big$i%02d", isDir = false, 1000000L * 512))
-    val ds = Chunker.planChunksDataset(spark, "/r", entries, 512L,
-      driverSpecLimit = 1000L)
+    val ds = Chunker.planChunksDataset(spark, "/r", entries, 512L)
     assert(ds.count() == 10000000L)
     import spark.implicits._
     val last = ds.filter($"relPath" === "big09" && $"idx" === 999999L)
       .collect()
     assert(last.length == 1 && last(0).offset == 999999L * 512 &&
       last(0).len == 512L)
+  }
+
+  test("a file that grew or shrank after listing fails with FileChangedException") {
+    val root = writeTree(Map("a/one" -> Array.fill[Byte](3000)(1),
+      "b/two" -> Array.fill[Byte](5000)(2)))
+    try {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val specs = Chunker.planChunksDataset(spark, root.toString,
+        graft.fs.Listing.list(root.toString, conf), 1024L)
+      def digest() = Chunker.digestChunks(spark, specs, -1L, "sha256", conf).collect()
+      assert(digest().length == 3 + 5)
+      val changed = root.resolve("a/one")
+      def assertChanged(): Unit = {
+        val e = intercept[Exception](digest())
+        assert(e.getMessage.contains(changed.toString), e.getMessage)
+        val typed = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .collectFirst { case f: FileChangedException => f }
+        assert(typed.exists(f => f.path == changed.toString && f.listedLen == 3000L),
+          s"no FileChangedException for $changed in the causes of $e")
+      }
+      // grew by one byte: the final chunk reads as listed, the EOF probe fails
+      Files.write(changed, Array[Byte](9), java.nio.file.StandardOpenOption.APPEND)
+      assertChanged()
+      // truncated below chunk 1's offset: a short read, and a seek past EOF
+      Files.write(changed, Array.fill[Byte](1000)(1))
+      assertChanged()
+    } finally rmTree(root)
   }
 }

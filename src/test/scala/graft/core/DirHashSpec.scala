@@ -4,9 +4,7 @@ import graft.SparkTestSession
 import graft.fs.{FileEntry, Listing}
 import graft.hash.{Algos, HashSpec}
 import org.apache.hadoop.fs.FileSystem
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.catalyst.expressions.Attribute
-import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
@@ -221,8 +219,8 @@ class DirHashSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(_.getBytesRead).sum
   }
 
-  test("hash plan: one range exchange on (absPath, idx), every byte read once, <= 3 jobs") {
-    // 1M blocks: 32 + 4 chunks, spread over several range partitions
+  test("hash plan: no exchange, one job, a task per core, every byte read once") {
+    // 1M blocks: 32 + 4 chunks, more than the session's cores
     val executions = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
     val qeListener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
@@ -231,8 +229,10 @@ class DirHashSpec extends AnyFunSuite with BeforeAndAfterAll {
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val tasks = new java.util.concurrent.atomic.AtomicInteger
     val jobListener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = { tasks.incrementAndGet(); () }
     }
     drainListeners()
     spark.listenerManager.register(qeListener)
@@ -248,7 +248,8 @@ class DirHashSpec extends AnyFunSuite with BeforeAndAfterAll {
     val treeBytes = ZerosLen.toLong + Seq(LoremText, HelloText, PasswordsText, AbcText)
       .map(_.getBytes("UTF-8").length).sum
     assert(fileBytesRead() - read0 == treeBytes)
-    assert(jobs.get <= 3, s"${jobs.get} jobs for one hash")
+    assert(jobs.get == 1, s"${jobs.get} jobs for one hash")
+    assert(tasks.get == math.min(32 + 4, spark.sparkContext.defaultParallelism))
 
     assert(executions.size == 1)
     val plan = executions.peek().executedPlan
@@ -258,14 +259,7 @@ class DirHashSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val exchanges = new AdaptiveSparkPlanHelper {}
       .collect(plan) { case e: ShuffleExchangeLike => e }
-    assert(exchanges.size == 1, s"exchanges:\n${exchanges.mkString("\n")}")
-    exchanges.head.outputPartitioning match {
-      case RangePartitioning(ordering, n) =>
-        assert(ordering.map(_.child).collect { case a: Attribute => a.name } ==
-          Seq("absPath", "idx"))
-        assert(n > 1)
-      case other => fail(s"not a range partitioning: $other")
-    }
+    assert(exchanges.isEmpty, s"exchanges:\n${exchanges.mkString("\n")}")
   }
 
   test("fold order is UTF-8 (relPath, idx) order across range partitions, AQE on and off") {
@@ -308,9 +302,8 @@ class DirHashSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.conf.set(aqeKey, aqe)
       assert(DirHash.hashDirectoryRaw(spark, tree.toString, "sha256", block) == expected,
         s"AQE $aqe")
-      // the distributed spec plan flows through the same exchange
-      val specs = Chunker.planChunksDataset(spark, tree.toString, listing, block,
-        driverSpecLimit = 0L)
+      // the planned Dataset alone, digested and collected without a sort
+      val specs = Chunker.planChunksDataset(spark, tree.toString, listing, block)
       val got = Chunker.digestChunks(spark, specs, chunks.size.toLong, "sha256", conf)
         .collect().toSeq
       assert(got.map(c => (c.relPath, c.idx)) == chunks.map(c => (c._1, c._2)),
