@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan inspection: `ExplainTool [sfDir] [queryName ...]` prints the
   * formatted physical plan and wall time for each named query (all
@@ -10,14 +9,7 @@ object ExplainTool {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.build("ExplainTool")
     names.foreach { name =>
       // time from query construction: iterative operators (e.g. the
       // cluster propagation) do eager work while BUILDING the DataFrame

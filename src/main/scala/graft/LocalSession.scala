@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one local session configuration every harness main (Verify,
-  * Bench, ScaleBench) runs under: `local[N]` with N shuffle partitions
+  * Bench, ScaleBench, ExplainTool) runs under: `local[N]` with N shuffle partitions
   * (N = SPARK_GRAFT_CPUS, default 32), UTC, UI off — kept in a single
   * place so the correctness gate and both benchmarks can never drift
   * onto different configs.

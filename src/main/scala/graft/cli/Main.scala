@@ -2,7 +2,6 @@ package graft.cli
 
 import graft.core.{Archive, DirHash}
 import graft.hash.{Algos, HashSpec}
-import org.apache.spark.sql.SparkSession
 
 /** CLI flag-compatible with the reference's `_main`
   * (/root/reference/dirhash.py:582-687): positional dir;
@@ -58,69 +57,57 @@ object Main {
       }
     }
 
-    val builder = SparkSession.builder()
-      .appName("DirHash")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    // under spark-submit the master comes from the launcher config; when run
-    // directly (the reference's `SparkContext(appName=...)` path) fall back
-    // to all local cores
-    if (!new org.apache.spark.SparkConf().contains("spark.master"))
-      builder.master("local[*]")
-    // stop only a session we created — the reference likewise stops its
-    // SparkContext only when it wasn't handed one (dirhash.py:325-335)
-    val preexisting = SparkSession.getDefaultSession.isDefined
-    val spark = builder.getOrCreate()
-    try {
-      val expected: Option[String] =
-        if (args.checkName) {
-          // verify the directory's basename as its own hash string
-          // (reference dirhash.py:636-639)
-          val base = graft.fs.Listing.stripTrailingSlashes(args.dir)
-          Some(base.substring(base.lastIndexOf('/') + 1))
-        } else args.check
+    // the hash runs in the caller's session if one is active, else in a
+    // local one that DirHash creates and stops (the reference's
+    // create-if-absent rule, dirhash.py:325-335); archiving needs no Spark
+    val expected: Option[String] =
+      if (args.checkName) {
+        // verify the directory's basename as its own hash string
+        // (reference dirhash.py:636-639)
+        val base = graft.fs.Listing.stripTrailingSlashes(args.dir)
+        Some(base.substring(base.lastIndexOf('/') + 1))
+      } else args.check
 
-      expected match {
-        case Some(hashStr) =>
-          // the reference's two-line digest-only report (dirhash.py:645-661):
-          // "%9s %s" pads "Actual:" to 9 chars; the trailing \n inside the
-          // formatted string plus print's own newline ends output with a
-          // blank line
-          val expHex = HashSpec.parseHashString(hashStr).hexDigest
-          val result = DirHash.verifyDirectoryHash(spark, args.dir, hashStr)
-          if (result.matches) {
-            println(s"The hash values match:\nExpected: $expHex\n  Actual: ${result.actualHash}\n")
-            0
-          } else {
-            println(s"Hash value mismatch:\nExpected: $expHex\n  Actual: ${result.actualHash}\n")
-            1
-          }
-        case None =>
-          val hashStr = DirHash.hashDirectory(spark, args.dir, args.algo, args.blockSize)
-          args.archive match {
-            case Some(repo) =>
-              // on archive the reference prints the NEW PATH, not the hash
-              // (dirhash.py:668-669)
-              val newPath = Archive.moveFolderToHashedArchive(repo, args.dir, hashStr)
-              println(newPath)
-              args.softlink.foreach { link =>
-                // the archive already succeeded (directory moved, path
-                // printed); the reference logs an `ln` failure and still
-                // exits 0 (dirhash.py:671-682) — a wrapper treating
-                // nonzero as "archive failed" must not retry/alarm here
-                try Archive.createSoftlink(repo, hashStr, link)
-                catch {
-                  case scala.util.control.NonFatal(e) =>
-                    System.err.println(s"Error while creating softlink: ${e.getMessage}")
-                }
+    expected match {
+      case Some(hashStr) =>
+        // the reference's two-line digest-only report (dirhash.py:645-661):
+        // "%9s %s" pads "Actual:" to 9 chars; the trailing \n inside the
+        // formatted string plus print's own newline ends output with a
+        // blank line
+        val expHex = HashSpec.parseHashString(hashStr).hexDigest
+        val result = DirHash.verifyDirectoryHash(args.dir, hashStr)
+        if (result.matches) {
+          println(s"The hash values match:\nExpected: $expHex\n  Actual: ${result.actualHash}\n")
+          0
+        } else {
+          println(s"Hash value mismatch:\nExpected: $expHex\n  Actual: ${result.actualHash}\n")
+          1
+        }
+      case None =>
+        val hashStr = DirHash.hashDirectory(args.dir, args.algo, args.blockSize)
+        args.archive match {
+          case Some(repo) =>
+            // on archive the reference prints the NEW PATH, not the hash
+            // (dirhash.py:668-669)
+            val newPath = Archive.moveFolderToHashedArchive(repo, args.dir, hashStr)
+            println(newPath)
+            args.softlink.foreach { link =>
+              // the archive already succeeded (directory moved, path
+              // printed); the reference logs an `ln` failure and still
+              // exits 0 (dirhash.py:671-682) — a wrapper treating
+              // nonzero as "archive failed" must not retry/alarm here
+              try Archive.createSoftlink(repo, hashStr, link)
+              catch {
+                case scala.util.control.NonFatal(e) =>
+                  System.err.println(s"Error while creating softlink: ${e.getMessage}")
               }
-              0
-            case None =>
-              println(hashStr)
-              0
-          }
-      }
-    } finally if (!preexisting) spark.stop()
+            }
+            0
+          case None =>
+            println(hashStr)
+            0
+        }
+    }
   }
 
   @annotation.tailrec

@@ -2,6 +2,7 @@ package graft.core
 
 import graft.fs.FileEntry
 import graft.hash.Algos
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, SparkSession}
@@ -146,7 +147,7 @@ object Chunker {
     * [[FileChangedException]] naming the path. `nSpecs` is unused; it stays
     * for callers that pass it.
     *
-    * Digest layout per chunk (reference /root/reference/dirhash.py:288-303):
+    * Digest layout per chunk, keyed by [[graft.hash.Algos.chunkDigest]]:
     * `H( utf8(relPath) || 0x00 || ascii_decimal(idx) || 0x00 || content )`.
     */
   def digestChunks(
@@ -174,11 +175,7 @@ object Chunker {
         }
         try in.seek(spec.offset)
         catch { case _: java.io.EOFException => throw changed }
-        val d = Algos.get(algo)
-        d.update(spec.relPath)
-        d.update(Array(0.toByte))
-        d.update(spec.idx.toString)
-        d.update(Array(0.toByte))
+        val d = Algos.chunkDigest(algo, spec.relPath.getBytes(UTF_8), spec.idx)
         var remaining = spec.len
         while (remaining > 0) {
           val n = in.read(buf, 0, math.min(buf.length.toLong, remaining).toInt)
@@ -193,6 +190,21 @@ object Chunker {
         def hasNext: Boolean = { val h = digests.hasNext; if (!h) close(); h }
         def next(): ChunkDigest = digests.next()
       }
+    }
+  }
+
+  /** Re-stats the files the listing saw as empty: they have no chunk, so
+    * [[digestChunks]] never reads them. One that now holds bytes fails with
+    * a [[FileChangedException]] naming its path. One stat per such file.
+    */
+  def checkListedEmpty(rootDir: String, entries: Seq[FileEntry],
+      hadoopConf: Configuration): Unit = {
+    val root = graft.fs.Listing.stripTrailingSlashes(rootDir)
+    entries.iterator.filter(fe => !fe.isDir && fe.size == 0).foreach { fe =>
+      val path = s"$root/${fe.relPath}"
+      val p = new Path(path)
+      if (p.getFileSystem(hadoopConf).getFileStatus(p).getLen != 0)
+        throw new FileChangedException(path, 0L)
     }
   }
 

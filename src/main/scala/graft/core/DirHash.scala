@@ -85,6 +85,8 @@ object DirHash {
     // keeps row order and collect() keeps partition order: no sort here
     val sortedDigests = Chunker.digestChunks(spark, specs, algo = algo,
       hadoopConf = hadoopConf).collect()
+    // a file listed empty has no chunk, so nothing above has read it
+    Chunker.checkListedEmpty(dir, entries, hadoopConf)
 
     val allEntries = entries.map(_.relPath).sorted(Listing.utf8Ordering)
 

@@ -22,16 +22,10 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object ChunkHashOps {
 
-  private val ZERO = Array(0.toByte)
-
   /** One chunk digest; `algo` must be a whitelisted name (Algos.get). */
   def compute(path: UTF8String, idx: Long, content: Array[Byte],
       algo: UTF8String): Array[Byte] = {
-    val d = Algos.get(algo.toString)
-    d.update(path.getBytes)
-    d.update(ZERO)
-    d.update(java.lang.Long.toString(idx))
-    d.update(ZERO)
+    val d = Algos.chunkDigest(algo.toString, path.getBytes, idx)
     d.update(content)
     d.digest()
   }

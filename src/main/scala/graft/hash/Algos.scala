@@ -64,6 +64,21 @@ object Algos {
       throw new IllegalArgumentException(s"""unsupported hash function: "$name"""")
     ).apply()
 
+  private val Zero = Array(0.toByte)
+
+  /** A fresh `name` digest already fed the key of chunk `idx` of the file
+    * whose UTF-8 path is `path`: `path 0x00 ascii_decimal(idx) 0x00`. The
+    * caller appends the chunk's content (reference dirhash.py:288-303).
+    */
+  def chunkDigest(name: String, path: Array[Byte], idx: Long): Digest = {
+    val d = get(name)
+    d.update(path)
+    d.update(Zero)
+    d.update(java.lang.Long.toString(idx))
+    d.update(Zero)
+    d
+  }
+
   def hex(bytes: Array[Byte]): String = {
     val sb = new StringBuilder(bytes.length * 2)
     bytes.foreach(b => sb.append(f"${b & 0xff}%02x"))

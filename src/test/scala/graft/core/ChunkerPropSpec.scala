@@ -180,4 +180,20 @@ class ChunkerPropSpec extends AnyFunSuite {
       assertChanged()
     } finally rmTree(root)
   }
+
+  test("a file listed empty that grew fails with FileChangedException") {
+    val root = writeTree(Map("a/one" -> Array.fill[Byte](3000)(1),
+      "e/still" -> Array.emptyByteArray, "e/grows" -> Array.emptyByteArray))
+    try {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val entries = graft.fs.Listing.list(root.toString, conf)
+      Chunker.checkListedEmpty(root.toString, entries, conf) // unchanged: passes
+      val grown = root.resolve("e/grows")
+      Files.write(grown, Array[Byte](9))
+      val e = intercept[FileChangedException](
+        Chunker.checkListedEmpty(root.toString, entries, conf))
+      assert(e.path == grown.toString && e.listedLen == 0L)
+      assert(e.getMessage.contains(grown.toString), e.getMessage)
+    } finally rmTree(root)
+  }
 }

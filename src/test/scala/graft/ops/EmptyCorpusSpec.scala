@@ -38,21 +38,8 @@ class EmptyCorpusSpec extends AnyFunSuite {
     tmp
   }
 
-  // same scoping as NullTextSpec: the relational (tpch) queries read
-  // tables this corpus doesn't carry
-  private def readsDocsOnly(name: String): Boolean = {
-    val tpch = Set("q01", "q02", "q03", "q04", "q05", "q06", "q07", "q08",
-      "q09", "q10", "q11", "q12", "q29", "q37", "q38", "q42", "q43", "q44",
-      "q58", "q71", "q111", "q114", "q115", "q120", "q141", "q149",
-      "q150", "q151", "q156", "q173", "q217", "q218", "q219",
-      "q259", "q260", "q266", "q267", "q273", "q274", "q278", "q279",
-      "q281", "q282", "q283", "q284", "q285", "q286", "q287", "q288",
-      "q289", "q290", "q291", "q292")
-    !tpch.contains(name.takeWhile(_ != '_'))
-  }
-
   for ((name, fn) <- graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      if readsDocsOnly(name))
+      if graft.TestFixtures.readsDocsOnly(name))
     test(s"$name does not throw on an all-empty corpus") {
       fn(spark, dir).collect()
     }
