@@ -140,7 +140,6 @@ object Dedup {
       hexMax: String = "ff"): DataFrame =
     Memo.cached(minsTableCache,
         (spark, dir, hexMax, docsFingerprint(spark, dir)),
-        onEvict = (df: DataFrame) => df.unpersist(),
         label = s"mins16/$hexMax") {
       val fromFf =
         if (hexMax == "ff") None
@@ -169,7 +168,6 @@ object Dedup {
       hexMax: String = "ff"): DataFrame =
     Memo.cached(candTableCache,
         (spark, dir, hexMax, docsFingerprint(spark, dir)),
-        onEvict = (df: DataFrame) => df.unpersist(),
         label = s"bandCandidates44/$hexMax") {
       val fromFf =
         if (hexMax == "ff") None
@@ -203,7 +201,6 @@ object Dedup {
       hexMax: String = "ff"): DataFrame =
     Memo.cached(pairTableCache,
         (spark, dir, hexMax, docsFingerprint(spark, dir)),
-        onEvict = Memo.releaseOnEvict,
         label = s"exactPairTable/$hexMax") {
       val fromFf =
         if (hexMax == "ff") None
@@ -380,7 +377,6 @@ object Dedup {
     val bands = 4
     val rowsPerBand = 4
     val k = bands * rowsPerBand
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // the mins come from the shared memoized table (the memo owns the
     // persist lifetime); only the per-doc exact sets are query-local
     val mins = minsTable16(spark, dir)
@@ -388,8 +384,7 @@ object Dedup {
       .select($"doc_id", toks.as("t"))
       .select($"doc_id", hashedShingleSet($"t").as("set"))
       .select($"doc_id", $"set", size($"set").cast("long").as("n"))
-      .persist(lvl)
-    try {
+    Memo.withPersisted(sets) {
       val cand = candidatePairs(bandSignaturesFromMins(mins, bands, rowsPerBand))
       val agree = (0 until k)
         .map(i => when(col(s"a.m$i") === col(s"b.m$i"), 1L).otherwise(0L))
@@ -410,8 +405,6 @@ object Dedup {
         .withColumn("within_tol",
           abs($"est_jaccard" - $"jaccard") <= tol)
         .localCheckpoint(true)
-    } finally {
-      sets.unpersist()
     }
   }
 
@@ -437,7 +430,6 @@ object Dedup {
     Memo.cached(clusterTableCache,
         (spark, dir, maxIters, driverEdgeLimit,
           docsFingerprint(spark, dir)),
-        onEvict = (df: DataFrame) => df.unpersist(),
         label = "dedupClusters") {
       lazyPersist(
         dedupClustersUncached(spark, dir, maxIters, driverEdgeLimit))
@@ -450,7 +442,6 @@ object Dedup {
     // count + the propagation loop (distributed path) — without caching
     // the whole shingle->minhash->band-join pipeline runs per action
     val edges = minhashCandidates(spark, dir).select($"doc_a".as("s"), $"doc_b".as("d"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // Tiered: LSH banding leaves a candidate graph orders of magnitude
     // smaller than the corpus, so up to `driverEdgeLimit` edges a driver
@@ -458,41 +449,37 @@ object Dedup {
     // rounds of per-job scheduling overhead — the same bounded-collect
     // the dirhash digest fold relies on. Larger graphs take the
     // distributed propagation below.
-    val edgeCount = edges.count()
-    if (edgeCount <= driverEdgeLimit) {
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
+    val (roots, onDriver) = Memo.withPersisted(edges) {
+      if (edges.count() <= driverEdgeLimit) {
+        val parent = scala.collection.mutable.Map.empty[Long, Long]
+        def find(x: Long): Long = {
+          var r = x
+          while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+          var c = x
+          while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+          r
+        }
+        val collected = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
+        collected.foreach { case (a, b) =>
+          val (ra, rb) = (find(a), find(b))
+          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+        }
+        // immutable roots for every node that appears in an edge
+        // (bounded by 2·E)
+        val roots = collected.iterator.flatMap(e => Iterator(e._1, e._2))
+          .toSet[Long].map(x => x -> find(x)).toMap
+        (spark.createDataset(roots.toSeq).toDF("edge_node", "root"), true)
+      } else {
+        val (stars, _) = connectedComponents(edges, maxIters)
+        (stars.select($"s".as("edge_node"), $"d".as("root")), false)
       }
-      val collected = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      collected.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      // immutable roots for every node that appears in an edge (bounded
-      // by 2·E); everything else is its own singleton cluster
-      val roots = collected.iterator.flatMap(e => Iterator(e._1, e._2))
-        .toSet[Long].map(x => x -> find(x)).toMap
-      edges.unpersist()
-      // broadcast LEFT JOIN + coalesce, not a lookup UDF: stays inside
-      // whole-stage codegen and keeps the doc scan column-pruned
-      val rootRows = spark.createDataset(roots.toSeq)
-        .toDF("edge_node", "root")
-      return docs(spark, dir)
-        .join(broadcast(rootRows), $"doc_id" === $"edge_node", "left")
-        .select($"doc_id", coalesce($"root", $"doc_id").as("cluster_id"))
     }
-
-    val (stars, _) = connectedComponents(edges, maxIters)
-    edges.unpersist()
-    // star edges cover only nodes that appear in some edge; everything
-    // else is its own singleton cluster
+    // roots cover only nodes that appear in some edge; everything else
+    // is its own singleton cluster. The driver's table joins as a
+    // broadcast LEFT JOIN + coalesce, not a lookup UDF: stays inside
+    // whole-stage codegen and keeps the doc scan column-pruned
     docs(spark, dir)
-      .join(stars.select($"s".as("edge_node"), $"d".as("root")),
+      .join(if (onDriver) broadcast(roots) else roots,
         $"doc_id" === $"edge_node", "left")
       .select($"doc_id", coalesce($"root", $"doc_id").as("cluster_id"))
   }
@@ -652,9 +639,8 @@ object Dedup {
     * shuffle — the uncached q39 plan carried FOUR parquet scans and
     * four keeper exchanges (measured 2.6 s → 1.4 s at sf0.1). The
     * cache holds (long, long) rows, smaller than the corpus it
-    * replaces, and spills under MEMORY_AND_DISK. Returns the joined
-    * pair table plus the release handle; callers checkpoint their
-    * result and release.
+    * replaces, and spills under MEMORY_AND_DISK. Returns the memoized
+    * joined pair table; the Memo releases it, callers never do.
     */
   private val keeperPairCache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String, Long), DataFrame]
@@ -667,7 +653,6 @@ object Dedup {
     // (session, corpus) and the memo owns the lifetime
     Memo.cached(keeperPairCache,
         (spark, dir, docsFingerprint(spark, dir)),
-        onEvict = (df: DataFrame) => df.unpersist(),
         label = "keeperShingleIntersections") {
       import spark.implicits._
       val keepers = docs(spark, dir)
@@ -677,8 +662,7 @@ object Dedup {
       val sh = keepers
         .select($"doc_id", toks.as("t"))
         .select($"doc_id", explode(hashedShingleSet($"t")).as("sh"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      Memo.withPersisted(sh) {
         // sizes from the exploded set: sh rows are distinct per doc, so
         // the count IS the set size — no fourth keeper aggregation
         val sizes = sh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
@@ -692,7 +676,7 @@ object Dedup {
           .join(sizes.select($"doc_id".as("doc_b"), $"n".as("nb")), "doc_b"))
         joined.count()
         joined
-      } finally sh.unpersist()
+      }
     }
 
   /** The keeper intersection join's pair-row generator: one
@@ -954,7 +938,6 @@ object Dedup {
     // once (round-13 ADVICE) — eviction only costs a recompute
     Memo.cached(gramMultCache,
         (spark, dir, n, docsFingerprint(spark, dir)),
-        onEvict = (df: DataFrame) => df.unpersist(),
         label = s"gramMultiplicity/$n", cap = 4) {
       import spark.implicits._
       graft.functions.TextOps.register(spark)
@@ -1086,14 +1069,12 @@ object Dedup {
     // with the signature cache below
     val d = docs(spark, dir)
       .select($"doc_id", sha2($"text", 256).as("ch"), isBase($"doc_id").as("is_base"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // persisted: the signature pipeline (shingle explode + 16-min agg +
     // band unpivot) feeds both the incoming and the base side of the
     // bucket probe; without the cache it runs twice end to end
     val sigs = minhashSignatures(spark, dir)
       .withColumn("is_base", isBase($"doc_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(d, sigs) {
       val baseHashes = d.filter($"is_base").select($"ch").distinct()
         .withColumn("hit", lit(true))
       val cand = sigs.filter(!$"is_base").as("a")
@@ -1112,9 +1093,6 @@ object Dedup {
           coalesce($"n_near_candidates", lit(0L)).as("n_near_candidates"),
           (!$"is_exact_dup").as("keep"))
         .localCheckpoint(true)
-    } finally {
-      sigs.unpersist()
-      d.unpersist()
     }
   }
 
@@ -1222,8 +1200,7 @@ object Dedup {
             .as("jaccard"))
         .filter($"jaccard" >= t)
     val dfreq = sh.groupBy($"sh").agg(count(lit(1)).as("df"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(dfreq) {
       val maxRow = dfreq.agg(max($"df")).head()
       val maxDf = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
       if (maxDf <= dfCap) {
@@ -1245,8 +1222,7 @@ object Dedup {
             col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
           .groupBy(col("a.doc_id").as("rep_a"), col("b.doc_id").as("rep_b"))
           .agg(count(lit(1)).as("c_l"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
+        Memo.withPersisted(cLL) {
           val hvA = heavy.select($"doc_id".as("rep_a"), $"sh")
           val hvB = heavy.select($"doc_id".as("rep_b"), $"sh")
           val cLH = cLL.select($"rep_a", $"rep_b")
@@ -1279,9 +1255,9 @@ object Dedup {
             .groupBy($"rep_a", $"rep_b").agg(count(lit(1)).as("common"))
           jaccardOf(pairsLight.unionByName(pairsHeavy))
             .localCheckpoint(true)
-        } finally cLL.unpersist()
+        }
       }
-    } finally dfreq.unpersist()
+    }
   }
 
   /** Doc-partitioned (df, sh)-ranked postings with each doc's safe
@@ -1409,18 +1385,14 @@ object Dedup {
       hexMax: String): (DataFrame, DataFrame) =
     Memo.cached(repTablesCache,
         (spark, dir, hexMax, docsFingerprint(spark, dir)),
-        onEvict = (v: (DataFrame, DataFrame)) => {
-          v._1.unpersist(); v._2.unpersist(); ()
-        }, label = s"repTables/$hexMax") {
+        label = s"repTables/$hexMax") {
       import spark.implicits._
-      val grouped = sampleDocs(docs(spark, dir), hexMax)
+      val grouped = lazyPersist(sampleDocs(docs(spark, dir), hexMax)
         .select($"doc_id", array_sort(hashedShingleSet(toks)).as("shs"))
-        .select($"doc_id", $"shs", gkeyOf($"shs"), size($"shs").as("n"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val reps = grouped
+        .select($"doc_id", $"shs", gkeyOf($"shs"), size($"shs").as("n")))
+      val reps = lazyPersist(grouped
         .groupBy($"gkey").agg(min($"doc_id").as("doc_id"))
-        .join(grouped.select($"doc_id", $"shs", $"n"), Seq("doc_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .join(grouped.select($"doc_id", $"shs", $"n"), Seq("doc_id")))
       // lazily persisted on purpose — see [[lazyPersist]]: eager
       // materialization here re-planned the building query's joins off
       // the actual cached bytes (q148's broadcasts became sort-merge)
@@ -1452,16 +1424,13 @@ object Dedup {
     val grouped = d
       .select($"doc_id", array_sort(hashedShingleSet(toks)).as("shs"))
       .select($"doc_id", $"shs", gkeyOf($"shs"), size($"shs").as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // reps is read by multiple consumers (pairFn's shingle explode and
     // verify fetches) — without the persist each one re-runs the
     // groupBy(gkey)+self-join dedup pipeline from the top
     val reps = grouped
       .groupBy($"gkey").agg(min($"doc_id").as("doc_id"))
       .join(grouped.select($"doc_id", $"shs", $"n"), Seq("doc_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try dedupFirstExpand(grouped, reps)(pairFn)
-    finally { reps.unpersist(); grouped.unpersist() }
+    Memo.withPersisted(grouped, reps)(dedupFirstExpand(grouped, reps)(pairFn))
   }
 
   /** The shared back half of the dedup-first treatment: run `pairFn`
@@ -1567,12 +1536,10 @@ object Dedup {
     import spark.implicits._
     val grouped = docs(spark, dir)
       .select($"doc_id", md5($"text").as("gkey"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tf = shingleRows(spark, dir)
       .groupBy($"doc_id", xxhash64($"sh").as("g"))
       .agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy($"g").agg(count(lit(1)).as("df"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nDocs = docs(spark, dir).agg(count(lit(1)).as("n_docs"))
     val repIds = grouped.groupBy($"gkey").agg(min($"doc_id").as("doc_id"))
     val wts = tf.join(repIds, Seq("doc_id"), "left_semi")
@@ -1580,8 +1547,7 @@ object Dedup {
       .crossJoin(broadcast(nDocs))
       .select($"doc_id", $"g", $"df",
         ($"tf" * log($"n_docs".cast("double") / $"df")).as("wt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(grouped, dfreq, wts) {
       val norms = wts.groupBy($"doc_id")
         .agg(sqrt(sum($"wt" * $"wt")).as("nrm"),
           count(lit(1)).as("n_grams"))
@@ -1689,7 +1655,7 @@ object Dedup {
         .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
           $"n_grams".as("n_shared"), lit(1.0).as("cosine"))
       cross.unionByName(within).localCheckpoint(true)
-    } finally { wts.unpersist(); dfreq.unpersist(); grouped.unpersist() }
+    }
   }
 
   /** MinHash banding quality report (q186): precision/recall of the q15
@@ -1731,11 +1697,9 @@ object Dedup {
   def weightedJaccard(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val sh = shingleRows(spark, dir).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val grouped = docs(spark, dir)
       .select($"doc_id", md5($"text").as("gkey"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(sh, grouped) {
       val nDocs = docs(spark, dir).agg(count(lit(1)).as("n_docs"))
       val wts = sh.groupBy($"sh").agg(count(lit(1)).as("df"))
         .crossJoin(broadcast(nDocs))
@@ -1744,8 +1708,7 @@ object Dedup {
             .as("wm"))
       val repIds = grouped.groupBy($"gkey").agg(min($"doc_id").as("doc_id"))
       val repSh = sh.join(repIds, Seq("doc_id"), "left_semi")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      Memo.withPersisted(repSh) {
         val shw = repSh.join(wts, Seq("sh"))
         val docW = shw.groupBy($"doc_id")
           .agg(sum($"wm").as("sw"), count(lit(1)).as("n_sh"))
@@ -1794,8 +1757,8 @@ object Dedup {
             $"n_sh".as("common"), lit(1.0).as("jaccard"),
             lit(1.0).as("weighted_jaccard"))
         cross.unionByName(within).localCheckpoint(true)
-      } finally repSh.unpersist()
-    } finally { sh.unpersist(); grouped.unpersist() }
+      }
+    }
   }
 
   /** Banding-scheme planner (q212): the SAME 16 cached permutation

@@ -29,42 +29,41 @@ object Graph {
     import spark.implicits._
     val edges = Similarity.knnGraph(spark, dir, nPlanes, k)
       .select($"vec_id".as("src"), $"neighbor_id".as("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    // out-degree rides along each edge row; the join reuses the edge
-    // exchange on src (same key both sides)
-    val withDeg = edges
-      .join(edges.groupBy($"src").agg(count(lit(1)).as("deg")), "src")
-    val nodes = spark.read.parquet(s"$dir/embeddings.parquet")
-      .select($"vec_id")
-    // one tiny driver-side count (the same bounded-scalar pattern as the
-    // dedupClusters edge count): N parameterizes every round's literals
-    val n = nodes.count()
-    if (n == 0) {
-      return nodes.select($"vec_id", lit(0.0).as("rank_ratio"))
+    Memo.withPersisted(edges) {
+      // out-degree rides along each edge row; the join reuses the edge
+      // exchange on src (same key both sides)
+      val withDeg = edges
+        .join(edges.groupBy($"src").agg(count(lit(1)).as("deg")), "src")
+      val nodes = spark.read.parquet(s"$dir/embeddings.parquet")
+        .select($"vec_id")
+      // one tiny driver-side count (the same bounded-scalar pattern as the
+      // dedupClusters edge count): N parameterizes every round's literals
+      val n = nodes.count()
+      if (n == 0) nodes.select($"vec_id", lit(0.0).as("rank_ratio"))
+      else {
+        // no per-round checkpoint: iters is a small fixed constant, so the
+        // lineage is bounded at plan time and one job runs all rounds —
+        // eager localCheckpoint per round tripled wall time by forcing a
+        // materialization barrier between every pair of rounds (checkpoint
+        // when iterating to CONVERGENCE, where lineage is unbounded)
+        var ranks = nodes.select($"vec_id", lit(1.0 / n).as("rank"))
+        for (_ <- 1 to iters) {
+          val inMass = withDeg.join(ranks, $"src" === $"vec_id")
+            .select($"dst", ($"rank" / $"deg").as("c"))
+            .groupBy($"dst").agg(sum($"c").as("in_mass"))
+          ranks = nodes.join(inMass, $"vec_id" === $"dst", "left")
+            .select($"vec_id",
+              (lit((1.0 - damping) / n) +
+                lit(damping) * coalesce($"in_mass", lit(0.0))).as("rank"))
+        }
+        // ONE eager checkpoint of the node-sized result lets the edge cache
+        // be released before returning — a lazy return would either leak the
+        // MEMORY_AND_DISK edge table for the session lifetime or recompute
+        // the KNN pipeline once per rank round
+        ranks.select($"vec_id", round($"rank" * n, 6).as("rank_ratio"))
+          .localCheckpoint(true)
+      }
     }
-    // no per-round checkpoint: iters is a small fixed constant, so the
-    // lineage is bounded at plan time and one job runs all rounds —
-    // eager localCheckpoint per round tripled wall time by forcing a
-    // materialization barrier between every pair of rounds (checkpoint
-    // when iterating to CONVERGENCE, where lineage is unbounded)
-    var ranks = nodes.select($"vec_id", lit(1.0 / n).as("rank"))
-    for (_ <- 1 to iters) {
-      val inMass = withDeg.join(ranks, $"src" === $"vec_id")
-        .select($"dst", ($"rank" / $"deg").as("c"))
-        .groupBy($"dst").agg(sum($"c").as("in_mass"))
-      ranks = nodes.join(inMass, $"vec_id" === $"dst", "left")
-        .select($"vec_id",
-          (lit((1.0 - damping) / n) +
-            lit(damping) * coalesce($"in_mass", lit(0.0))).as("rank"))
-    }
-    // ONE eager checkpoint of the node-sized result lets the edge cache
-    // be released before returning — a lazy return would either leak the
-    // MEMORY_AND_DISK edge table for the session lifetime or recompute
-    // the KNN pipeline once per rank round
-    ranks.select($"vec_id", round($"rank" * n, 6).as("rank_ratio"))
-      .localCheckpoint(true)
-    } finally edges.unpersist()
   }
 
   /** Per-node triangle count and local clustering coefficient over the
@@ -91,8 +90,7 @@ object Graph {
       .select(least($"vec_id", $"neighbor_id").as("a"),
         greatest($"vec_id", $"neighbor_id").as("b"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(und) {
     val tri = und.as("e1")
       .join(und.as("e2"), col("e1.b") === col("e2.a"))
       .join(und.as("e3"),
@@ -115,7 +113,7 @@ object Graph {
         when($"degree" >= 2,
           round($"n_triangles" * lit(2.0) / ($"degree" * ($"degree" - 1)), 6)))
       .localCheckpoint(true)
-    } finally und.unpersist()
+    }
   }
 
   /** Synchronous label propagation over the undirected KNN closure
@@ -138,46 +136,47 @@ object Graph {
     */
   /** Shared LPA core: undirected closure of the KNN graph (persisted
     * canonical a<b edge list) + the synchronous mode-of-neighbors label
-    * rounds. Callers receive (canonical edges, final labels) and MUST
-    * checkpoint their result before `edges.unpersist()`.
+    * rounds. `body` receives (canonical edges, final labels) while the
+    * edge cache is held, and MUST checkpoint what it returns.
     */
-  private def lpaLabels(spark: SparkSession, dir: String, rounds: Int,
-      nPlanes: Int, k: Int): (DataFrame, DataFrame) = {
+  private def withLpaLabels[A](spark: SparkSession, dir: String,
+      rounds: Int, nPlanes: Int, k: Int)(
+      body: (DataFrame, DataFrame) => A): A = {
     import spark.implicits._
     val und = Similarity.knnGraph(spark, dir, nPlanes, k)
       .select(least($"vec_id", $"neighbor_id").as("a"),
         greatest($"vec_id", $"neighbor_id").as("b"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val edges = und.select($"a".as("u"), $"b".as("v"))
-      .unionByName(und.select($"b".as("u"), $"a".as("v")))
-    val nodes = spark.read.parquet(s"$dir/embeddings.parquet")
-      .select($"vec_id")
-    var labels = nodes.select($"vec_id", $"vec_id".as("lbl"))
-    for (_ <- 1 to rounds) {
-      // argmax via min_by on the packed (−count, label) struct key —
-      // same (count DESC, label ASC) pick as a rank window, without
-      // the per-round partition sort the window would add
-      val mode = edges.join(labels, $"v" === $"vec_id")
-        .groupBy($"u", $"lbl").agg(count(lit(1)).as("c"))
-        .groupBy($"u")
-        .agg(min_by($"lbl", struct((-$"c").as("nc"), $"lbl")).as("new_lbl"))
-        .withColumnRenamed("u", "vec_id")
-      labels = labels.join(mode, Seq("vec_id"), "left")
-        .select($"vec_id", coalesce($"new_lbl", $"lbl").as("lbl"))
+    Memo.withPersisted(und) {
+      val edges = und.select($"a".as("u"), $"b".as("v"))
+        .unionByName(und.select($"b".as("u"), $"a".as("v")))
+      val nodes = spark.read.parquet(s"$dir/embeddings.parquet")
+        .select($"vec_id")
+      var labels = nodes.select($"vec_id", $"vec_id".as("lbl"))
+      for (_ <- 1 to rounds) {
+        // argmax via min_by on the packed (−count, label) struct key —
+        // same (count DESC, label ASC) pick as a rank window, without
+        // the per-round partition sort the window would add
+        val mode = edges.join(labels, $"v" === $"vec_id")
+          .groupBy($"u", $"lbl").agg(count(lit(1)).as("c"))
+          .groupBy($"u")
+          .agg(min_by($"lbl", struct((-$"c").as("nc"), $"lbl")).as("new_lbl"))
+          .withColumnRenamed("u", "vec_id")
+        labels = labels.join(mode, Seq("vec_id"), "left")
+          .select($"vec_id", coalesce($"new_lbl", $"lbl").as("lbl"))
+      }
+      body(und, labels)
     }
-    (und, labels)
   }
 
   def labelPropagation(spark: SparkSession, dir: String, rounds: Int = 3,
       nPlanes: Int = 8, k: Int = 3): DataFrame = {
     import spark.implicits._
-    val (und, labels) = lpaLabels(spark, dir, rounds, nPlanes, k)
-    try {
+    withLpaLabels(spark, dir, rounds, nPlanes, k) { (_, labels) =>
       labels.groupBy($"lbl".as("community_id"))
         .agg(count(lit(1)).as("n_members"), min($"vec_id").as("min_member"))
         .localCheckpoint(true)
-    } finally und.unpersist()
+    }
   }
 
   /** LPA to FIXPOINT (q224): the q170 synchronous rounds iterated until
@@ -203,8 +202,7 @@ object Graph {
       .select(least($"vec_id", $"neighbor_id").as("a"),
         greatest($"vec_id", $"neighbor_id").as("b"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(und) {
       val edges = und.select($"a".as("u"), $"b".as("v"))
         .unionByName(und.select($"b".as("u"), $"a".as("v")))
       val nodes = spark.read.parquet(s"$dir/embeddings.parquet")
@@ -232,7 +230,7 @@ object Graph {
       labels.groupBy($"lbl".as("community_id"))
         .agg(count(lit(1)).as("n_members"), min($"vec_id").as("min_member"))
         .localCheckpoint(true)
-    } finally und.unpersist()
+    }
   }
 
   /** PageRank under EXACT e12-scaled integer arithmetic with sound
@@ -275,50 +273,50 @@ object Graph {
     val scale = 1000000000000L
     val edges = Similarity.knnGraph(spark, dir, nPlanes, k)
       .select($"vec_id".as("src"), $"neighbor_id".as("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(edges) {
       val withDeg = edges
         .join(edges.groupBy($"src").agg(count(lit(1)).as("deg")), "src")
       val nodes = spark.read.parquet(s"$dir/embeddings.parquet")
         .select($"vec_id")
       val n = nodes.count()
       if (n == 0) {
-        return (nodes.select($"vec_id", lit(0L).as("rank_e12"),
+        (nodes.select($"vec_id", lit(0L).as("rank_e12"),
           lit(0.0).as("rank_ratio")), 0)
+      } else {
+        val tele = (scale * 15L / 100L) / n
+        var ranks = nodes.select($"vec_id", lit(scale / n).as("r"))
+          .localCheckpoint(true)
+        var changed = 1L
+        var it = 0
+        while (it < maxIters && changed > 0) {
+          val inMass = withDeg.join(ranks, $"src" === $"vec_id")
+            .select($"dst", expr("r div deg").as("c"))
+            .groupBy($"dst").agg(sum($"c").as("s"))
+          // ONE job per round (round-14, guide §2.4): the LAZY local
+          // checkpoint is materialized BY the convergence count, which
+          // scans every partition — so the state blocks land and `changed`
+          // comes back in the same driver round-trip, replacing the
+          // eager-checkpoint + count() pair. localCheckpoint (not persist)
+          // because the round references `ranks` twice: only a checkpoint
+          // cuts the lineage, and un-cut plans grow exponentially here.
+          val next = ranks.select($"vec_id", $"r".as("prev"))
+            .join(inMass, $"vec_id" === $"dst", "left")
+            .select($"vec_id", $"prev",
+              (lit(tele) +
+                expr(s"(85 * coalesce(s, 0L)) div 100")).as("r"))
+            .localCheckpoint(false)
+          changed = next.filter($"r" =!= $"prev").count()
+          ranks = next.select($"vec_id", $"r")
+          it += 1
+        }
+        // cast r to double BEFORE multiplying: r * n in BIGINT overflows
+        // Long once n ≳ 1e7 with a concentrated hub rank (ADVICE r7)
+        (ranks
+          .select($"vec_id", $"r".as("rank_e12"),
+            round($"r".cast("double") * n / scale, 6).as("rank_ratio"))
+          .localCheckpoint(true), it)
       }
-      val tele = (scale * 15L / 100L) / n
-      var ranks = nodes.select($"vec_id", lit(scale / n).as("r"))
-        .localCheckpoint(true)
-      var changed = 1L
-      var it = 0
-      while (it < maxIters && changed > 0) {
-        val inMass = withDeg.join(ranks, $"src" === $"vec_id")
-          .select($"dst", expr("r div deg").as("c"))
-          .groupBy($"dst").agg(sum($"c").as("s"))
-        // ONE job per round (round-14, guide §2.4): the LAZY local
-        // checkpoint is materialized BY the convergence count, which
-        // scans every partition — so the state blocks land and `changed`
-        // comes back in the same driver round-trip, replacing the
-        // eager-checkpoint + count() pair. localCheckpoint (not persist)
-        // because the round references `ranks` twice: only a checkpoint
-        // cuts the lineage, and un-cut plans grow exponentially here.
-        val next = ranks.select($"vec_id", $"r".as("prev"))
-          .join(inMass, $"vec_id" === $"dst", "left")
-          .select($"vec_id", $"prev",
-            (lit(tele) +
-              expr(s"(85 * coalesce(s, 0L)) div 100")).as("r"))
-          .localCheckpoint(false)
-        changed = next.filter($"r" =!= $"prev").count()
-        ranks = next.select($"vec_id", $"r")
-        it += 1
-      }
-      // cast r to double BEFORE multiplying: r * n in BIGINT overflows
-      // Long once n ≳ 1e7 with a concentrated hub rank (ADVICE r7)
-      (ranks
-        .select($"vec_id", $"r".as("rank_e12"),
-          round($"r".cast("double") * n / scale, 6).as("rank_ratio"))
-        .localCheckpoint(true), it)
-    } finally edges.unpersist()
+    }
   }
 
   /** PERSONALIZED PageRank (q257): the q225 exact-integer fixpoint with
@@ -349,45 +347,45 @@ object Graph {
     val scale = 1000000000000L
     val edges = Similarity.knnGraph(spark, dir, nPlanes, k)
       .select($"vec_id".as("src"), $"neighbor_id".as("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(edges) {
       val withDeg = edges
         .join(edges.groupBy($"src").agg(count(lit(1)).as("deg")), "src")
       val nodes = spark.read.parquet(s"$dir/embeddings.parquet")
         .select($"vec_id")
       val ns = nodes.filter($"vec_id" < seedMax).count()
       if (ns == 0) {
-        return (nodes.select($"vec_id", lit(0L).as("ppr_e12"),
+        (nodes.select($"vec_id", lit(0L).as("ppr_e12"),
           lit(false).as("is_seed"), lit(0.0).as("ppr_mass")), 0)
+      } else {
+        val teleSeed = (scale * 15L / 100L) / ns
+        val seedCol = $"vec_id" < seedMax
+        var ranks = nodes.select($"vec_id",
+            when(seedCol, lit(scale / ns)).otherwise(lit(0L)).as("r"))
+          .localCheckpoint(true)
+        var changed = 1L
+        var it = 0
+        while (it < maxIters && changed > 0) {
+          val inMass = withDeg.join(ranks, $"src" === $"vec_id")
+            .select($"dst", expr("r div deg").as("c"))
+            .groupBy($"dst").agg(sum($"c").as("s"))
+          // one job per round: LAZY local checkpoint materialized by the
+          // convergence count (the q225 round-14 treatment)
+          val next = ranks.select($"vec_id", $"r".as("prev"))
+            .join(inMass, $"vec_id" === $"dst", "left")
+            .select($"vec_id", $"prev",
+              (when(seedCol, lit(teleSeed)).otherwise(lit(0L)) +
+                expr(s"(85 * coalesce(s, 0L)) div 100")).as("r"))
+            .localCheckpoint(false)
+          changed = next.filter($"r" =!= $"prev").count()
+          ranks = next.select($"vec_id", $"r")
+          it += 1
+        }
+        (ranks
+          .select($"vec_id", $"r".as("ppr_e12"), seedCol.as("is_seed"),
+            round($"r".cast("double") / scale, 6).as("ppr_mass"))
+          .localCheckpoint(true), it)
       }
-      val teleSeed = (scale * 15L / 100L) / ns
-      val seedCol = $"vec_id" < seedMax
-      var ranks = nodes.select($"vec_id",
-          when(seedCol, lit(scale / ns)).otherwise(lit(0L)).as("r"))
-        .localCheckpoint(true)
-      var changed = 1L
-      var it = 0
-      while (it < maxIters && changed > 0) {
-        val inMass = withDeg.join(ranks, $"src" === $"vec_id")
-          .select($"dst", expr("r div deg").as("c"))
-          .groupBy($"dst").agg(sum($"c").as("s"))
-        // one job per round: LAZY local checkpoint materialized by the
-        // convergence count (the q225 round-14 treatment)
-        val next = ranks.select($"vec_id", $"r".as("prev"))
-          .join(inMass, $"vec_id" === $"dst", "left")
-          .select($"vec_id", $"prev",
-            (when(seedCol, lit(teleSeed)).otherwise(lit(0L)) +
-              expr(s"(85 * coalesce(s, 0L)) div 100")).as("r"))
-          .localCheckpoint(false)
-        changed = next.filter($"r" =!= $"prev").count()
-        ranks = next.select($"vec_id", $"r")
-        it += 1
-      }
-      (ranks
-        .select($"vec_id", $"r".as("ppr_e12"), seedCol.as("is_seed"),
-          round($"r".cast("double") / scale, 6).as("ppr_mass"))
-        .localCheckpoint(true), it)
-    } finally edges.unpersist()
+    }
   }
 
   /** Newman modularity of the LPA partition (q175): per community c the
@@ -395,7 +393,7 @@ object Graph {
     * contribution m_c/m − (d_c/2m)², whose sum is the partition's Q —
     * the "are these communities denser than chance" verdict on q170's
     * output (LPA can converge to junk on a near-random graph; Q is how
-    * you find out). Shares [[lpaLabels]] verbatim, so the scored
+    * you find out). Shares [[withLpaLabels]] verbatim, so the scored
     * partition can never drift from the one q170 reports.
     *
     * Scale: two label joins on the canonical edge list (each endpoint),
@@ -406,8 +404,7 @@ object Graph {
   def lpaModularity(spark: SparkSession, dir: String, rounds: Int = 3,
       nPlanes: Int = 8, k: Int = 3): DataFrame = {
     import spark.implicits._
-    val (und, labels0) = lpaLabels(spark, dir, rounds, nPlanes, k)
-    try {
+    withLpaLabels(spark, dir, rounds, nPlanes, k) { (und, labels0) =>
       // the partition is referenced FOUR times below (both edge
       // endpoints, the degree rollup, the size rollup) — without this
       // node-sized barrier the whole KNN+LPA chain re-executes per
@@ -436,7 +433,7 @@ object Graph {
               pow(coalesce($"d_c", lit(0L)) / (lit(2.0) * $"m"), 2))
             .otherwise(lit(0.0)), 6).as("q_contrib"))
         .localCheckpoint(true)
-    } finally und.unpersist()
+    }
   }
 
   /** k-core decomposition, `rounds` fixed pruning rounds (q135): rounds
@@ -459,8 +456,7 @@ object Graph {
       .select(least($"vec_id", $"neighbor_id").as("a"),
         greatest($"vec_id", $"neighbor_id").as("b"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(und0) {
     var edges = und0.select($"a", $"b")
     var keep: DataFrame = null
     for (_ <- 1 to rounds) {
@@ -489,7 +485,7 @@ object Graph {
       .select($"vec_id", coalesce($"in_core", lit(false)).as("in_core"),
         coalesce($"core_deg", lit(0L)).as("core_deg"))
       .localCheckpoint(true)
-    } finally und0.unpersist()
+    }
   }
 
   /** k-core to FIXPOINT (q220): the [[kCore]] pruning loop iterated
@@ -519,8 +515,7 @@ object Graph {
       .select(least($"vec_id", $"neighbor_id").as("a"),
         greatest($"vec_id", $"neighbor_id").as("b"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(und0) {
       var edges = und0.select($"a", $"b").localCheckpoint(true)
       var keep: DataFrame = edges.select(explode(array($"a", $"b")).as("node"))
         .groupBy($"node").agg(count(lit(1)).as("deg"))
@@ -553,7 +548,7 @@ object Graph {
         .select($"vec_id", coalesce($"in_core", lit(false)).as("in_core"),
           coalesce($"core_deg", lit(0L)).as("core_deg"))
         .localCheckpoint(true)
-    } finally und0.unpersist()
+    }
   }
 
   /** Connected-component census of the KNN graph (q216): component
@@ -575,8 +570,7 @@ object Graph {
       .select(least($"vec_id", $"neighbor_id").as("s"),
         greatest($"vec_id", $"neighbor_id").as("d"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(und) {
       val (stars, _) = Dedup.connectedComponents(und)
       val assign = spark.read.parquet(s"$dir/embeddings.parquet")
         .select($"vec_id")
@@ -596,7 +590,7 @@ object Graph {
             .as("frac_in_largest"),
           round($"n_singletons" / $"n_vectors".cast("double"), 6)
             .as("frac_singletons"))
-    } finally und.unpersist()
+    }
   }
 
   /** BFS reachability levels from vector 0 over the KNN graph (q213):
@@ -618,8 +612,7 @@ object Graph {
       .select(least($"vec_id", $"neighbor_id").as("a"),
         greatest($"vec_id", $"neighbor_id").as("b"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(und) {
       val edges = und.select($"a".as("u"), $"b".as("v"))
         .unionByName(und.select($"b".as("u"), $"a".as("v")))
       var visited = spark.range(1).select(lit(0L).as("vec_id"),
@@ -653,7 +646,7 @@ object Graph {
         .select(lit(-1L).as("level"), $"n_nodes")
         .filter($"n_nodes" > 0)
       reached.unionByName(unreached).localCheckpoint(true)
-    } finally und.unpersist()
+    }
   }
 
   /** Degree assortativity of the KNN graph (q209): the Pearson
@@ -765,86 +758,86 @@ object Graph {
     import spark.implicits._
     val edges = Similarity.knnGraph(spark, dir, nPlanes, k)
       .select($"vec_id".as("src"), $"neighbor_id".as("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(edges) {
       val nodes = spark.read.parquet(s"$dir/embeddings.parquet")
         .select($"vec_id")
       val n = nodes.count()
       if (n == 0) {
-        return (nodes.select($"vec_id", lit(0L).as("hub_e6"),
+        (nodes.select($"vec_id", lit(0L).as("hub_e6"),
           lit(0L).as("auth_e6"), lit(0.0).as("hub_score"),
           lit(0.0).as("auth_score")), 0)
-      }
-      // e6 below a million nodes (what the oracle replays), n above it —
-      // see hitsScale for the init-floors-to-zero hazard and the i64 cap
-      val scale = hitsScale(n)
-      // L1-renormalize an integer vector to total ≈ SCALE; tot is a
-      // one-row aggregate joined by broadcast cross-join (never a
-      // SinglePartition window)
-      def renorm(raw: DataFrame, col: String): DataFrame = {
-        val tot = raw.agg(greatest(sum(org.apache.spark.sql.functions
-          .col(col)), lit(1L)).as("tot"))
-        raw.crossJoin(broadcast(tot))
+      } else {
+        // e6 below a million nodes (what the oracle replays), n above it —
+        // see hitsScale for the init-floors-to-zero hazard and the i64 cap
+        val scale = hitsScale(n)
+        // L1-renormalize an integer vector to total ≈ SCALE; tot is a
+        // one-row aggregate joined by broadcast cross-join (never a
+        // SinglePartition window)
+        def renorm(raw: DataFrame, col: String): DataFrame = {
+          val tot = raw.agg(greatest(sum(org.apache.spark.sql.functions
+            .col(col)), lit(1L)).as("tot"))
+          raw.crossJoin(broadcast(tot))
+            .select($"vec_id",
+              expr(s"($col * $scale) div tot").as(col))
+        }
+        // State carries the SUPPORT only (rows with a nonzero sum path);
+        // zero-in-degree / zero-out-degree nodes are implicit zeros — the
+        // renorm total ignores them and `(0·SCALE) div tot = 0`, so the
+        // values are bit-identical to the dense formulation while each
+        // round drops two parquet-scan left-joins whose only job was
+        // materializing those zeros. They are re-added ONCE at the end.
+        var state = nodes
+          .select($"vec_id", lit(scale / n).as("h"), lit(scale / n).as("a"))
+          .localCheckpoint(true)
+        var changed = 1L
+        var it = 0
+        while (it < maxIters && changed > 0) {
+          val aAgg = edges.join(state.select($"vec_id", $"h"),
+              $"src" === $"vec_id")
+            .groupBy($"dst").agg(sum($"h").as("a"))
+            .select($"dst".as("vec_id"), $"a")
+          // aNorm is referenced three times (h-sum via renorm's double
+          // branch + the final join) — unmaterialized that re-evaluates
+          // aAgg up to 6× per round, the Spark-side twin of the oracle's
+          // MATERIALIZED-CTE requirement. LAZY checkpoint (round-14): its
+          // blocks land inside the exit-count job below, chained through
+          // `next` — one driver round-trip per round instead of three.
+          val aNorm = renorm(aAgg, "a").localCheckpoint(false)
+          val hAgg = edges.join(aNorm.select($"vec_id".as("av"), $"a"),
+              $"dst" === $"av")
+            .groupBy($"src").agg(sum($"a").as("h"))
+            .select($"src".as("vec_id"), $"h")
+          // lazy checkpoint materialized by the exit count below (the
+          // q225 round-14 treatment)
+          val next = renorm(hAgg, "h")
+            .join(aNorm, Seq("vec_id"), "full")
+            .select($"vec_id", coalesce($"h", lit(0L)).as("h"),
+              coalesce($"a", lit(0L)).as("a"))
+            .localCheckpoint(false)
+          // the exit compares FULL states: support-only rows make a
+          // vanished (or appeared) row a difference too, so a repeated
+          // support state is a repeated full state — the cap argument
+          // stays sound
+          changed = next
+            .join(state.select($"vec_id", $"h".as("ph"), $"a".as("pa")),
+              Seq("vec_id"), "full")
+            .filter($"h".isNull || $"ph".isNull ||
+              $"h" =!= $"ph" || $"a" =!= $"pa")
+            .count()
+          state = next
+          it += 1
+        }
+        (nodes.join(state, Seq("vec_id"), "left")
           .select($"vec_id",
-            expr(s"($col * $scale) div tot").as(col))
+            coalesce($"h", lit(0L)).as("hub_e6"),
+            coalesce($"a", lit(0L)).as("auth_e6"),
+            round(coalesce($"h", lit(0L)).cast("double") / scale, 6)
+              .as("hub_score"),
+            round(coalesce($"a", lit(0L)).cast("double") / scale, 6)
+              .as("auth_score"))
+          .localCheckpoint(true), it)
       }
-      // State carries the SUPPORT only (rows with a nonzero sum path);
-      // zero-in-degree / zero-out-degree nodes are implicit zeros — the
-      // renorm total ignores them and `(0·SCALE) div tot = 0`, so the
-      // values are bit-identical to the dense formulation while each
-      // round drops two parquet-scan left-joins whose only job was
-      // materializing those zeros. They are re-added ONCE at the end.
-      var state = nodes
-        .select($"vec_id", lit(scale / n).as("h"), lit(scale / n).as("a"))
-        .localCheckpoint(true)
-      var changed = 1L
-      var it = 0
-      while (it < maxIters && changed > 0) {
-        val aAgg = edges.join(state.select($"vec_id", $"h"),
-            $"src" === $"vec_id")
-          .groupBy($"dst").agg(sum($"h").as("a"))
-          .select($"dst".as("vec_id"), $"a")
-        // aNorm is referenced three times (h-sum via renorm's double
-        // branch + the final join) — unmaterialized that re-evaluates
-        // aAgg up to 6× per round, the Spark-side twin of the oracle's
-        // MATERIALIZED-CTE requirement. LAZY checkpoint (round-14): its
-        // blocks land inside the exit-count job below, chained through
-        // `next` — one driver round-trip per round instead of three.
-        val aNorm = renorm(aAgg, "a").localCheckpoint(false)
-        val hAgg = edges.join(aNorm.select($"vec_id".as("av"), $"a"),
-            $"dst" === $"av")
-          .groupBy($"src").agg(sum($"a").as("h"))
-          .select($"src".as("vec_id"), $"h")
-        // lazy checkpoint materialized by the exit count below (the
-        // q225 round-14 treatment)
-        val next = renorm(hAgg, "h")
-          .join(aNorm, Seq("vec_id"), "full")
-          .select($"vec_id", coalesce($"h", lit(0L)).as("h"),
-            coalesce($"a", lit(0L)).as("a"))
-          .localCheckpoint(false)
-        // the exit compares FULL states: support-only rows make a
-        // vanished (or appeared) row a difference too, so a repeated
-        // support state is a repeated full state — the cap argument
-        // stays sound
-        changed = next
-          .join(state.select($"vec_id", $"h".as("ph"), $"a".as("pa")),
-            Seq("vec_id"), "full")
-          .filter($"h".isNull || $"ph".isNull ||
-            $"h" =!= $"ph" || $"a" =!= $"pa")
-          .count()
-        state = next
-        it += 1
-      }
-      (nodes.join(state, Seq("vec_id"), "left")
-        .select($"vec_id",
-          coalesce($"h", lit(0L)).as("hub_e6"),
-          coalesce($"a", lit(0L)).as("auth_e6"),
-          round(coalesce($"h", lit(0L)).cast("double") / scale, 6)
-            .as("hub_score"),
-          round(coalesce($"a", lit(0L)).cast("double") / scale, 6)
-            .as("auth_score"))
-        .localCheckpoint(true), it)
-    } finally edges.unpersist()
+    }
   }
 
   def adamicAdar(spark: SparkSession, dir: String, nPlanes: Int = 8,
@@ -854,8 +847,7 @@ object Graph {
       .select(least($"vec_id", $"neighbor_id").as("a"),
         greatest($"vec_id", $"neighbor_id").as("b"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(und) {
       val adj = und.select($"a".as("u"), $"b".as("w"))
         .unionByName(und.select($"b".as("u"), $"a".as("w")))
       val deg = adj.groupBy($"w").agg(count(lit(1)).as("deg"))
@@ -875,7 +867,7 @@ object Graph {
         .filter($"rk" <= topK)
         .select($"u", $"v", $"common", $"aa_score", $"rk")
         .localCheckpoint(true)
-    } finally und.unpersist()
+    }
   }
 
   /** Per-node local clustering coefficient (Watts–Strogatz) over the
@@ -897,8 +889,7 @@ object Graph {
       .select(least($"vec_id", $"neighbor_id").as("a"),
         greatest($"vec_id", $"neighbor_id").as("b"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(und) {
       val adj = und.select($"a".as("u"), $"b".as("w"))
         .unionByName(und.select($"b".as("u"), $"a".as("w")))
       val deg = adj.groupBy($"u".as("vec_id")).agg(count(lit(1)).as("deg"))
@@ -921,7 +912,7 @@ object Graph {
         .withColumn("lcc",
           when($"n_wedges" > 0,
             round($"n_closed".cast("double") / $"n_wedges", 6)))
-    } finally und.unpersist()
+    }
   }
 
   /** Sampled harmonic centrality (the Eppstein–Wang estimator family):
@@ -956,8 +947,7 @@ object Graph {
       .select(least($"vec_id", $"neighbor_id").as("a"),
         greatest($"vec_id", $"neighbor_id").as("b"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(und) {
       val edges = und.select($"a".as("u"), $"b".as("v"))
         .unionByName(und.select($"b".as("u"), $"a".as("v")))
       val nodes = spark.read.parquet(s"$dir/embeddings.parquet")
@@ -994,6 +984,6 @@ object Graph {
           coalesce($"harmonic_e6", lit(0L)).as("harmonic_e6"),
           round(coalesce($"harmonic_e6", lit(0L)).cast("double") / 1e6, 6)
             .as("harmonic"))
-    } finally und.unpersist()
+    }
   }
 }

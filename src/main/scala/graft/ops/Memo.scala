@@ -3,7 +3,9 @@ package graft.ops
 import scala.collection.concurrent.TrieMap
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
 /** Bounded, corpus-fingerprinted memoization for the shared-scan caches
   * (the KMV sketch table q228+q230, the spectral moment pass q255/q256/
@@ -21,6 +23,12 @@ import org.apache.spark.sql.SparkSession
   *     costs a recompute), so pinned localCheckpoint blocks and d×d
   *     matrices can't accumulate without bound across many
   *     (dir, params) combinations in one long-lived JVM.
+  *  3. **One release rule**: Memo alone releases storage. A memoized
+  *     value is released by [[release]] when the cap evicts it (or a
+  *     race loses it); a query-local working cache is scoped by
+  *     [[withPersisted]]. Call sites never pick a release or unpersist
+  *     a memoized frame themselves. Precondition of eviction: an
+  *     evicted value has no live consumer (see [[cached]]).
   */
 object Memo {
 
@@ -67,61 +75,80 @@ object Memo {
     new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Double)]
   @volatile var currentConsumer: String = ""
 
-  /** Deterministic storage release for an EVICTED memoized DataFrame
-    * (round-13 ADVICE): a cached plan unpersists through the Dataset
-    * API, but a localCheckpoint'd value holds its blocks on an internal
-    * RDD that API can't reach — unpersist that RDD directly. ROOT node
-    * only, on purpose: a derived value (e.g. a sampled filter OVER
-    * another entry's checkpoint) must never release the table it reads
-    * — its own root is a Filter, which falls through to the no-op
-    * Dataset unpersist.
-    */
-  def releaseOnEvict(df: org.apache.spark.sql.DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.unpersist(false); ()
-      case _ => df.unpersist(false); ()
-    }
-
   /** getOrElseUpdate with a per-cache entry cap (default
     * [[maxEntries]]; corpus-sized caches pass a smaller `cap` so a few
     * parameterizations cannot pin several corpus-scale tables at once —
-    * round-13 ADVICE). `onEvict` runs once per evicted value BEFORE the
-    * clear, so values holding executor state (localCheckpoint'd
-    * DataFrames pin block-manager blocks) release it deterministically
-    * at eviction time instead of waiting for driver GC plus the
-    * ContextCleaner to notice the dropped references.
+    * round-13 ADVICE). At the cap every value is released by the one
+    * [[release]] rule BEFORE the clear, so executor state (persisted
+    * plans, localCheckpoint'd blocks) goes at eviction time instead of
+    * waiting for driver GC plus the ContextCleaner. Precondition: an
+    * evicted value has no live consumer — a checkpoint's lineage is
+    * truncated, so a frame still reading an evicted checkpoint cannot
+    * recompute it.
     *
     * The insert is compute-then-putIfAbsent (NOT getOrElseUpdate, whose
     * losing duplicate under concurrent first calls would leak an
-    * eagerly-persisted value for the session lifetime — round-13
-    * ADVICE): if another thread won the race, the loser's value goes
-    * through `onEvict` so its resources release deterministically.
+    * eagerly-checkpointed value for the session lifetime): a race loser
+    * releases only the checkpoint RDDs it alone owns. It never calls
+    * `Dataset.unpersist` or `close()` — a persisted plan uncaches by
+    * plan equality, so that would drop the WINNER's shared cache entry.
     */
-  def cached[K, V](cache: TrieMap[K, V], key: K,
-      onEvict: V => Unit = (_: V) => (), label: String = "",
-      cap: Int = maxEntries)(
-      compute: => V): V =
+  def cached[K, V](cache: TrieMap[K, V], key: K, label: String = "",
+      cap: Int = maxEntries)(compute: => V): V =
     cache.get(key) match {
       case Some(v) => v
       case None =>
-        if (cache.size >= cap) {
-          cache.values.foreach { v =>
-            try onEvict(v)
-            catch { case _: Exception => () } // a dead session must not
-            // poison the recompute — eviction cleanup is best-effort
-          }
-          cache.clear()
-        }
+        if (cache.size >= cap) evictAll(cache)
         val t0 = System.nanoTime()
         val v = compute
         if (label.nonEmpty)
           buildLog.add((label, currentConsumer, (System.nanoTime() - t0) / 1e9))
         cache.putIfAbsent(key, v) match {
-          case Some(winner) =>
-            try onEvict(v) catch { case _: Exception => () }
-            winner
+          case Some(winner) => release(v, owner = false); winner
           case None => v
         }
     }
+
+  /** Release every value of `cache` and clear it (the cap eviction;
+    * also the test hook for a cold start).
+    */
+  private[ops] def evictAll[K, V](cache: TrieMap[K, V]): Unit = {
+    cache.values.foreach(release(_, owner = true))
+    cache.clear()
+  }
+
+  /** The release rule, declared once for every memoized value:
+    *  - a DataFrame whose analyzed ROOT is a `LogicalRDD` (a
+    *    localCheckpoint): unpersist that RDD — `Dataset.unpersist`
+    *    cannot reach it. Root only: a derived value (a filter OVER
+    *    another entry's checkpoint) never releases the table it reads;
+    *  - any other DataFrame: `Dataset.unpersist` (owner only);
+    *  - `Option` / `Tuple2`: each element;
+    *  - `AutoCloseable`: `close()` (owner only);
+    *  - anything else (driver-side codebooks, matrices, non-owning
+    *    overlays): nothing.
+    * Best-effort: a dead session must not poison the recompute.
+    */
+  private def release(v: Any, owner: Boolean): Unit =
+    try v match {
+      case df: Dataset[_] => df.queryExecution.analyzed match {
+        case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+        case _ => if (owner) df.unpersist(blocking = false)
+      }
+      case Some(x) => release(x, owner)
+      case (a, b) => release(a, owner); release(b, owner)
+      case c: AutoCloseable => if (owner) c.close()
+      case _ => ()
+    } catch { case _: Exception => () }
+
+  /** A query-local working cache: persist `dfs` in order at
+    * MEMORY_AND_DISK, run `body`, and unpersist them (last first) when
+    * it returns or throws. `body` must not return a lazy frame that
+    * still reads them — checkpoint or collect inside.
+    */
+  def withPersisted[A](dfs: DataFrame*)(body: => A): A = {
+    dfs.foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
+    try body
+    finally dfs.reverseIterator.foreach(_.unpersist())
+  }
 }

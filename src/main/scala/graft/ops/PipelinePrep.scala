@@ -452,7 +452,6 @@ object PipelinePrep {
     // is served once per (session, corpus fingerprint)
     Memo.cached(sourceRepCache,
         (spark, dir, Memo.fingerprint(spark, s"$dir/documents.parquet")),
-        onEvict = Memo.releaseOnEvict,
         label = "sourceReputation") {
       sourceReputationUncached(spark, dir)
     }
@@ -470,8 +469,7 @@ object PipelinePrep {
         when(size($"t") > 0,
           size(array_distinct($"t")).cast("double") / size($"t"))
           .as("ttr"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(perDoc) {
       val copies = perDoc.groupBy($"ch").agg(count(lit(1)).as("n_copies"))
       val bySource = perDoc.join(copies, Seq("ch"))
         .groupBy($"source")
@@ -489,7 +487,7 @@ object PipelinePrep {
         .select($"source", $"n_docs", $"mean_ttr", $"dup_rate",
           ($"mean_ttr" >= $"thr" && $"dup_rate" <= 0.5).as("keep"))
         .localCheckpoint(true)
-    } finally perDoc.unpersist()
+    }
   }
 
   /** Temperature-scaled source mixing (alpha = 0.5): resample so source

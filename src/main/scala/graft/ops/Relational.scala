@@ -342,8 +342,7 @@ object Relational {
     val per = d.groupBy($"source")
       .agg(hll_sketch_agg($"text").as("sk"),
         count_distinct($"text").as("n_exact"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(per) {
       val perRows = per.select($"source", $"n_exact",
         (abs(hll_sketch_estimate($"sk") - $"n_exact") <=
           lit(tol) * $"n_exact").as("within_tol"))
@@ -353,7 +352,7 @@ object Relational {
         .select(lit("__ALL__").as("source"), $"g".as("n_exact"),
           (abs($"est" - $"g") <= lit(tol) * $"g").as("within_tol"))
       perRows.unionByName(merged).localCheckpoint(true)
-    } finally per.unpersist()
+    }
   }
 
   /** Explicit GROUPING SETS (q140): doc counts/char averages at four

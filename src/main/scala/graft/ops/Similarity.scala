@@ -124,8 +124,7 @@ object Similarity {
           concat(lit("null:"), $"vec_id".cast("string")))
           .otherwise(md5(to_json(struct($"label", $"embedding"))))
           .as("gkey"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(grouped) {
       val reps = grouped
         .groupBy($"gkey").agg(min($"doc_id").as("doc_id"))
         .join(grouped.select($"doc_id", $"label", $"embedding"), Seq("doc_id"))
@@ -153,7 +152,7 @@ object Similarity {
         .select($"doc_a".as("vec_a"), $"doc_b".as("vec_b"),
           $"label", $"cosine")
         .localCheckpoint(true)
-    } finally grouped.unpersist()
+    }
   }
 
   /** SRP-LSH bucketed ANN: random-hyperplane signatures with the first
@@ -298,7 +297,6 @@ object Similarity {
     Memo.cached(knnGraphCache,
         (spark, dir, nPlanes, k,
           Memo.fingerprint(spark, s"$dir/embeddings.parquet")),
-        onEvict = (df: DataFrame) => df.unpersist(),
         label = s"knnGraph/$nPlanes/$k") {
       val df = knnGraphUncached(spark, dir, nPlanes, k)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -473,8 +471,7 @@ object Similarity {
       srpBucket(headVectors(spark, dir, nPlanes)).as("bucket"),
       norm($"embedding").as("nrm"),
       isTrainVec.as("is_train"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(bucketed) {
     val train = bucketed.filter($"is_train")
     val eval_ = bucketed.filter(!$"is_train")
     val screened = eval_.as("e")
@@ -495,7 +492,7 @@ object Similarity {
         coalesce($"n_candidates", lit(0L)).as("n_candidates"),
         coalesce($"max_train_cosine" >= maxCosine, lit(false)).as("contaminated"))
       .localCheckpoint(true)
-    } finally bucketed.unpersist()
+    }
   }
 
   /** IVF-style bucketed ANN over [[sampledCentroids]] (deterministic
@@ -566,20 +563,20 @@ object Similarity {
     // from this table — without the cache each round re-reads and
     // re-decodes the parquet; released after the checkpointed result
     val e = emb(spark, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    var cents: Seq[(Int, IndexedSeq[Double])] = sampledCentroids(spark, dir, k)
-      .map { case (cid, v) => (cid, v.map(_.toDouble).toIndexedSeq) }
-    if (cents.isEmpty) {
-      return e.select($"vec_id", lit(0L).as("cluster_id"),
-        lit(0.0).as("cosine")).limit(0)
+    Memo.withPersisted(e) {
+      var cents: Seq[(Int, IndexedSeq[Double])] = sampledCentroids(spark, dir, k)
+        .map { case (cid, v) => (cid, v.map(_.toDouble).toIndexedSeq) }
+      if (cents.isEmpty)
+        e.select($"vec_id", lit(0L).as("cluster_id"),
+          lit(0.0).as("cosine")).limit(0)
+      else {
+        for (_ <- 1 to iters) cents = lloydStep(e, cents, dp)
+        // a failed mid-loop collect must not leak the cached table for
+        // the JVM's lifetime (Bench keeps running after a query fails)
+        assignToLloyd(e, cents).select($"vec_id", $"cluster_id", $"cosine")
+          .localCheckpoint(true)
+      }
     }
-    for (_ <- 1 to iters) cents = lloydStep(e, cents, dp)
-    // a failed mid-loop collect must not leak the cached table for the
-    // JVM's lifetime (Bench keeps running after a query fails)
-    assignToLloyd(e, cents).select($"vec_id", $"cluster_id", $"cosine")
-      .localCheckpoint(true)
-    } finally e.unpersist()
   }
 
   /** [[kmeansAssign]] iterated to a detected fixpoint (cap `maxIters`):
@@ -613,25 +610,25 @@ object Similarity {
       dir: String, k: Int = 8, maxIters: Int = 8): (DataFrame, Int) = {
     import spark.implicits._
     val e = emb(spark, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(e) {
       var cents: Seq[(Int, IndexedSeq[Double])] = sampledCentroids(spark, dir, k)
         .map { case (cid, v) => (cid, v.map(_.toDouble).toIndexedSeq) }
       if (cents.isEmpty) {
-        return (e.select($"vec_id", lit(0L).as("cluster_id"),
+        (e.select($"vec_id", lit(0L).as("cluster_id"),
           lit(0.0).as("cosine")).limit(0), 0)
+      } else {
+        var it = 0
+        var converged = false
+        while (it < maxIters && !converged) {
+          val next = lloydStep(e, cents, dp = 3)
+          converged = next == cents
+          cents = next
+          it += 1
+        }
+        (assignToLloyd(e, cents).select($"vec_id", $"cluster_id", $"cosine")
+          .localCheckpoint(true), it)
       }
-      var it = 0
-      var converged = false
-      while (it < maxIters && !converged) {
-        val next = lloydStep(e, cents, dp = 3)
-        converged = next == cents
-        cents = next
-        it += 1
-      }
-      (assignToLloyd(e, cents).select($"vec_id", $"cluster_id", $"cosine")
-        .localCheckpoint(true), it)
-    } finally e.unpersist()
+    }
   }
 
   /** Nearest-centroid assignment against literal double centroids (the
@@ -703,45 +700,44 @@ object Similarity {
       iters: Int = 3): DataFrame = {
     import spark.implicits._
     val e = emb(spark, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(e) {
       var cents: Seq[(Int, IndexedSeq[Double])] = sampledCentroids(spark, dir, k)
         .map { case (cid, v) => (cid, v.map(_.toDouble).toIndexedSeq) }
-      if (cents.isEmpty) {
-        return e.sparkSession.emptyDataFrame
+      if (cents.isEmpty)
+        e.sparkSession.emptyDataFrame
           .select(lit(0L).as("cluster_id"), lit(0L).as("n_assigned"),
             lit(0.0).as("mean_cosine"), lit(0.0).as("shift")).limit(0)
+      else {
+        for (_ <- 1 until iters) cents = lloydStep(e, cents)
+        val prev = cents
+        // the final round's assignment feeds both the stats aggregate
+        // and the mean update — persist so the scan projection runs once
+        val a = assignToLloyd(e, prev)
+        Memo.withPersisted(a) {
+          val means = lloydMeans(a)
+          val next = prev.map { case (cid, old) => (cid, means.getOrElse(cid, old)) }
+          val shifts = prev.zip(next).map { case ((cid, p), (_, n)) =>
+            // left-to-right fold over the round-4 literals: the exact
+            // summation order the oracle's list_sum comprehension uses
+            val ss = p.zip(n).foldLeft(0.0) { case (acc, (x, y)) =>
+              acc + (x - y) * (x - y) }
+            (cid.toLong,
+              BigDecimal(math.sqrt(ss))
+                .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+          }.toDF("cluster_id", "shift")
+          val stats = a.groupBy($"cluster_id")
+            .agg(count(lit(1)).as("n_assigned"),
+              round(avg($"cosine"), 4).as("mean_cosine"))
+          // k-row join: a centroid that lost every member still reports,
+          // with n_assigned = 0 and a null mean cosine
+          shifts.join(stats, Seq("cluster_id"), "left")
+            .select($"cluster_id",
+              coalesce($"n_assigned", lit(0L)).as("n_assigned"),
+              $"mean_cosine", $"shift")
+            .localCheckpoint(true)
+        }
       }
-      for (_ <- 1 until iters) cents = lloydStep(e, cents)
-      val prev = cents
-      // the final round's assignment feeds both the stats aggregate and
-      // the mean update — persist so the scan projection runs once
-      val a = assignToLloyd(e, prev)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val means = lloydMeans(a)
-        val next = prev.map { case (cid, old) => (cid, means.getOrElse(cid, old)) }
-        val shifts = prev.zip(next).map { case ((cid, p), (_, n)) =>
-          // left-to-right fold over the round-4 literals: the exact
-          // summation order the oracle's list_sum comprehension uses
-          val ss = p.zip(n).foldLeft(0.0) { case (acc, (x, y)) =>
-            acc + (x - y) * (x - y) }
-          (cid.toLong,
-            BigDecimal(math.sqrt(ss))
-              .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-        }.toDF("cluster_id", "shift")
-        val stats = a.groupBy($"cluster_id")
-          .agg(count(lit(1)).as("n_assigned"),
-            round(avg($"cosine"), 4).as("mean_cosine"))
-        // k-row join: a centroid that lost every member still reports,
-        // with n_assigned = 0 and a null mean cosine
-        shifts.join(stats, Seq("cluster_id"), "left")
-          .select($"cluster_id",
-            coalesce($"n_assigned", lit(0L)).as("n_assigned"),
-            $"mean_cosine", $"shift")
-          .localCheckpoint(true)
-      } finally a.unpersist()
-    } finally e.unpersist()
+    }
   }
 
   /** Top principal component by power iteration — the embedding-space
@@ -763,8 +759,7 @@ object Similarity {
       dim: Int = 64, iters: Int = 4): DataFrame = {
     import spark.implicits._
     val e = emb(spark, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(e) {
       var v: IndexedSeq[Double] = IndexedSeq.fill(dim)(1.0 / math.sqrt(dim))
       var live = true
       for (_ <- 1 to iters if live) {
@@ -789,7 +784,7 @@ object Similarity {
       e.select($"vec_id", $"label".cast("long").as("label"),
           round(dot($"embedding", lit(v.toArray)), 6).as("pc_score"))
         .localCheckpoint(true)
-    } finally e.unpersist()
+    }
   }
 
   /** Measured recall@k of the IVF cell probe against [[cosineTopK]]'s
@@ -952,34 +947,35 @@ object Similarity {
     import spark.implicits._
     val e = emb(spark, dir)
       .select($"vec_id", $"embedding", norm($"embedding").as("nrm"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(e) {
       val seedRow = e.orderBy($"vec_id").limit(1).collect()
       if (seedRow.isEmpty)
-        return Seq.empty[(Long, Long, Option[Double])]
+        Seq.empty[(Long, Long, Option[Double])]
           .toDF("sel_order", "vec_id", "dist_at_selection")
-      def vecOf(r: org.apache.spark.sql.Row): (Long, Seq[Float]) =
-        (r.getLong(0), r.getSeq[Float](1).toSeq)
-      var selected = Seq(vecOf(seedRow(0)))
-      val picks = scala.collection.mutable.ArrayBuffer[(Long, Long, Option[Double])](
-        (1L, selected.head._1, None))
-      for (i <- 2 to k) {
-        val dist = selected.map { case (_, sv) =>
-          round(lit(1.0) - dot($"embedding", litVec(sv)) /
-            ($"nrm" * lit(litNorm(sv))), 6)
-        }.reduce(least(_, _))
-        val next = e
-          .filter(!$"vec_id".isInCollection(selected.map(_._1)))
-          .select($"vec_id", $"embedding", dist.as("d"))
-          .orderBy($"d".desc, $"vec_id").limit(1).collect()
-        if (next.nonEmpty) {
-          selected = selected :+ vecOf(next(0))
-          picks += ((i.toLong, next(0).getLong(0),
-            Some(next(0).getDouble(2))))
+      else {
+        def vecOf(r: org.apache.spark.sql.Row): (Long, Seq[Float]) =
+          (r.getLong(0), r.getSeq[Float](1).toSeq)
+        var selected = Seq(vecOf(seedRow(0)))
+        val picks = scala.collection.mutable.ArrayBuffer[(Long, Long, Option[Double])](
+          (1L, selected.head._1, None))
+        for (i <- 2 to k) {
+          val dist = selected.map { case (_, sv) =>
+            round(lit(1.0) - dot($"embedding", litVec(sv)) /
+              ($"nrm" * lit(litNorm(sv))), 6)
+          }.reduce(least(_, _))
+          val next = e
+            .filter(!$"vec_id".isInCollection(selected.map(_._1)))
+            .select($"vec_id", $"embedding", dist.as("d"))
+            .orderBy($"d".desc, $"vec_id").limit(1).collect()
+          if (next.nonEmpty) {
+            selected = selected :+ vecOf(next(0))
+            picks += ((i.toLong, next(0).getLong(0),
+              Some(next(0).getDouble(2))))
+          }
         }
+        picks.toSeq.toDF("sel_order", "vec_id", "dist_at_selection")
       }
-      picks.toSeq.toDF("sel_order", "vec_id", "dist_at_selection")
-    } finally e.unpersist()
+    }
   }
 
   /** SRP-bucketed triplet mining (q171): for every anchor, the HARDEST
@@ -1021,8 +1017,7 @@ object Similarity {
     val grouped = emb(spark, dir)
       .select($"vec_id", $"label", $"embedding",
         md5(to_json(struct($"label", $"embedding"))).as("gkey"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(grouped) {
       val g1 = grouped.groupBy($"gkey")
         .agg(min($"vec_id").as("min1"), count(lit(1)).as("n_g"))
       val g2 = grouped.join(g1.select($"gkey", $"min1"), Seq("gkey"))
@@ -1037,7 +1032,6 @@ object Similarity {
         // round/NaN behavior for the in-group positive leg verbatim
         .withColumn("self_cos",
           round(dot($"embedding", $"embedding") / ($"nrm" * $"nrm"), 6))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val pairs = reps.as("a").join(reps.as("b"),
           col("a.bucket") === col("b.bucket") &&
             col("a.vec_id") =!= col("b.vec_id"))
@@ -1045,8 +1039,7 @@ object Similarity {
           col("b.vec_id").as("cand"), col("b.label").as("cand_label"),
           round(dot(col("a.embedding"), col("b.embedding")) /
             (col("a.nrm") * col("b.nrm")), 6).as("cosine"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      Memo.withPersisted(reps, pairs) {
         val wPos = org.apache.spark.sql.expressions.Window
           .partitionBy($"ag").orderBy($"cosine".asc, $"cand")
         val posCross = pairs.filter($"cand_label" === $"label")
@@ -1079,8 +1072,8 @@ object Similarity {
             round($"pos_cos" - $"neg_cos", 6).as("gap"),
             ($"neg_cos" > $"pos_cos" - margin).as("margin_violation"))
           .localCheckpoint(true)
-      } finally { pairs.unpersist(); reps.unpersist() }
-    } finally grouped.unpersist()
+      }
+    }
   }
 
   def lshLabelPurity(spark: SparkSession, dir: String, nPlanes: Int = 4): DataFrame = {
@@ -1461,12 +1454,6 @@ object Similarity {
     * and the same plan over a cell-partitioned layout prunes at the
     * file level.
     */
-  /** The materialized (vec_id, cell, adc) IVF-PQ index behind q280,
-    * memoized like the route index (round-11 ADVICE: the eager
-    * localCheckpoint it replaces was never unpersisted, so sweeps and
-    * spec suites accumulated block-manager blocks for the life of the
-    * JVM). The Memo owns the lifetime: eviction unpersists.
-    */
   /** e6 integer view of a float component: round(x·1e3)·1e3 — the e3
     * corpus quantization lifted to the centroid scale (shared by the
     * IVF-PQ pair so the two cannot drift; q271/q276 keep local copies
@@ -1501,6 +1488,13 @@ object Similarity {
     }
   }
 
+  /** The materialized (vec_id, cell, adc) IVF-PQ index behind q280,
+    * memoized like the route index (round-11 ADVICE: the eager
+    * localCheckpoint it replaces was never unpersisted, so sweeps and
+    * spec suites accumulated block-manager blocks for the life of the
+    * JVM). The index is a persisted plan, so Memo's release rule
+    * unpersists it on eviction.
+    */
   private val ivfPqIndexCache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String, String, Long), DataFrame]
 
@@ -1593,12 +1587,11 @@ object Similarity {
     // exactly what a deployed IVF-PQ index IS: cells + codes (here
     // pre-folded through the query's lookup table), ~24 B/row; every
     // probe arm filters THIS, so at 100 TB a probe touches nProbe/nCells
-    // of the index, never the corpus. Memoized with an onEvict unpersist
+    // of the index, never the corpus. Memoized, so eviction releases it
     // (round-11 ADVICE: the eager localCheckpoint here leaked its blocks
     // for the life of the JVM across sweep/spec invocations).
     val fp = Memo.fingerprint(spark, s"$dir/embeddings.parquet")
     Memo.cached(ivfPqIndexCache, (spark, dir, tag, fp),
-        onEvict = (df: DataFrame) => df.unpersist(),
         label = s"ivfPqIndex/$tag") {
       val df = withCell
         .select($"vec_id", $"cell", adcOf(resCodes).as("adc"))
@@ -2225,10 +2218,10 @@ object Similarity {
     * by the driver-steered pair (q293/q294), their wide md5-sampled
     * twins (q296/q297) and the distributed batch path — ONE build per
     * (corpus, geometry). All three DataFrames are persisted; the memo
-    * cache owns the lifetime and calls `close()` on eviction.
+    * cache owns the lifetime and closes the index on eviction.
     */
   private final case class EdgeIndex(e3: DataFrame, e3r: DataFrame,
-      ranked: DataFrame) {
+      ranked: DataFrame) extends AutoCloseable {
     def close(): Unit = { ranked.unpersist(); e3r.unpersist(); e3.unpersist() }
   }
 
@@ -2283,8 +2276,7 @@ object Similarity {
     .empty[(SparkSession, String, Int, Int, Long), Option[EdgeIndex]]
 
   private val routeIndexCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, Int, Seq[Long], Long, Long),
-      Option[RouteIndex]]
+    .empty[(EdgeIndex, Seq[Long], Long), Option[RouteIndex]]
 
   /** The widest query batch the DRIVER-STEERED routing path accepts
     * (round-11 verdict: the exact arm and the rep-matching filter fold
@@ -2307,15 +2299,7 @@ object Similarity {
       s"nPlanes=$nPlanes not divisible by nBands=$nBands")
     val fp = Memo.fingerprint(spark, s"$dir/embeddings.parquet")
     Memo.cached(edgeIndexCache, (spark, dir, nPlanes, nBands, fp),
-        label = s"edgeIndex/$nPlanes/$nBands",
-        onEvict = (v: Option[EdgeIndex]) => {
-          // a cached RouteIndex overlay references these frames; left in
-          // place it would silently recompute the banded build from
-          // lineage on every hop probe after this unpersist (round-12
-          // review finding) — drop the overlays with their index
-          routeIndexCache.clear()
-          v.foreach(_.close())
-        }) {
+        label = s"edgeIndex/$nPlanes/$nBands") {
       buildEdgeIndexUncached(spark, dir, nPlanes, nBands)
     }
   }
@@ -2404,39 +2388,25 @@ object Similarity {
     (s"route_edges_$tag", s"/tmp/graft_route_edges/$tag")
   }
 
-  /** Test hook: drop every cached edge/route index (closing their
-    * persisted frames), so a spec can exercise the cold-start read path
-    * against the durable on-disk artifact.
+  /** Test hook: evict every cached edge index (closing its persisted
+    * frames; route overlays over it then miss by construction), so a
+    * spec can exercise the cold-start read path against the durable
+    * on-disk artifact.
     */
-  private[ops] def evictEdgeIndexes(): Unit = {
-    routeIndexCache.clear()
-    edgeIndexCache.values.foreach(_.foreach(_.close()))
-    edgeIndexCache.clear()
-  }
+  private[ops] def evictEdgeIndexes(): Unit = Memo.evictAll(edgeIndexCache)
 
   /** Memoized (the kmvSketchTable discipline): the q293/q294 pair runs
     * back-to-back in a sweep and the banded build is the dominant
-    * cost; the key folds a corpus fingerprint. Holds no persisted state
-    * of its own (the edge-index memo owns the frames), so no onEvict.
+    * cost. Keyed on the [[EdgeIndex]] INSTANCE it overlays, so a
+    * rebuilt index (evicted, or a rewritten corpus) misses by
+    * construction. Holds no persisted state of its own (the edge-index
+    * memo owns the frames), so its eviction releases nothing.
     */
   private def buildRouteIndex(spark: SparkSession, dir: String,
       nPlanes: Int, nBands: Int, maxK: Int, queryIds: Seq[Long],
       entryId: Long): Option[RouteIndex] = {
     require(maxK <= RouteIndexMaxK,
       s"out-degree $maxK exceeds the shared index width $RouteIndexMaxK")
-    val fp = Memo.fingerprint(spark, s"$dir/embeddings.parquet")
-    Memo.cached(routeIndexCache,
-        (spark, dir, nPlanes, nBands, queryIds, entryId, fp),
-        label = "routeIndex") {
-      buildRouteIndexUncached(spark, dir, nPlanes, nBands, queryIds,
-        entryId)
-    }
-  }
-
-  private def buildRouteIndexUncached(spark: SparkSession, dir: String,
-      nPlanes: Int, nBands: Int, queryIds: Seq[Long],
-      entryId: Long): Option[RouteIndex] = {
-    import spark.implicits._
     require(!queryIds.contains(entryId), "entry node cannot be a query")
     // the plan-size guard (the evalTierGuard discipline): every query
     // in THIS path becomes a literal struct in the exact arm and a
@@ -2446,8 +2416,17 @@ object Similarity {
         s"${queryIds.size} queries > RouteQueryBatchMax=$RouteQueryBatchMax " +
         "— use graphRouteAnnBatch/beamRouteAnnBatch (query vectors as a " +
         "joined table) for large batches")
-    val idx = buildEdgeIndex(spark, dir, nPlanes, nBands)
-      .getOrElse(return None)
+    buildEdgeIndex(spark, dir, nPlanes, nBands).flatMap { idx =>
+      Memo.cached(routeIndexCache, (idx, queryIds, entryId),
+          label = "routeIndex") {
+        buildRouteIndexUncached(spark, idx, queryIds, entryId)
+      }
+    }
+  }
+
+  private def buildRouteIndexUncached(spark: SparkSession, idx: EdgeIndex,
+      queryIds: Seq[Long], entryId: Long): Option[RouteIndex] = {
+    import spark.implicits._
     val (e3, e3r) = (idx.e3, idx.e3r)
     // bounded plan-time collects: |queries| + 1 vectors of 64 longs
     val qVecs: Map[Long, Array[Long]] =
@@ -2733,9 +2712,6 @@ object Similarity {
     Memo.cached(wideQtCache,
         (spark, dir, nPlanes, nBands, entryId,
           Memo.fingerprint(spark, s"$dir/embeddings.parquet")),
-        onEvict = (v: (DataFrame, DataFrame)) => {
-          Memo.releaseOnEvict(v._1); Memo.releaseOnEvict(v._2)
-        },
         label = "wideRouteQueries") {
       val qSel =
         substring(md5(col("vec_id").cast("string")), 1, 2) <= RouteWideHexMax
@@ -3743,41 +3719,41 @@ object Similarity {
       iters: Int = 3): DataFrame = {
     import spark.implicits._
     val e = emb(spark, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(e) {
       var cents: Seq[(Int, IndexedSeq[Double])] = sampledCentroids(spark, dir, k)
         .map { case (cid, v) => (cid, v.map(_.toDouble).toIndexedSeq) }
       if (cents.sizeIs < 2) {
-        return e.select(lit(0L).as("cluster_id"), lit(0L).as("n_members"),
+        e.select(lit(0L).as("cluster_id"), lit(0L).as("n_members"),
           lit(0.0).as("avg_intra_dist"), lit(0.0).as("avg_inter_dist"),
           lit(0.0).as("avg_silhouette")).limit(0)
+      } else {
+        for (_ <- 1 to iters) cents = lloydStep(e, cents)
+        def litNormD(ce: IndexedSeq[Double]): Double =
+          math.sqrt(ce.foldLeft(0.0)((a, v) => a + v * v))
+        val cands = cents.map { case (cid, ce) =>
+          struct(round(dot($"embedding", lit(ce.toArray)) /
+            (norm($"embedding") * lit(litNormD(ce))), 6).as("cos"),
+            lit(-cid).as("neg_cid"))
+        }
+        // ascending (cos, neg_cid): last = assignToLloyd's greatest —
+        // max cosine, ties to the LOWEST cid; second-to-last = runner-up
+        val sorted = array_sort(array(cands: _*))
+        val best = element_at(sorted, -1)
+        val second = element_at(sorted, -2)
+        val perVec = e.select(
+            (-best.getField("neg_cid")).cast("long").as("cluster_id"),
+            (lit(1.0) - best.getField("cos")).as("a"),
+            (lit(1.0) - second.getField("cos")).as("b"))
+          .withColumn("sil",
+            when($"b" > 0.0, ($"b" - $"a") / $"b").otherwise(lit(0.0)))
+        perVec.groupBy($"cluster_id")
+          .agg(count(lit(1)).as("n_members"),
+            round(avg($"a"), 6).as("avg_intra_dist"),
+            round(avg($"b"), 6).as("avg_inter_dist"),
+            round(avg($"sil"), 6).as("avg_silhouette"))
+          .localCheckpoint(true)
       }
-      for (_ <- 1 to iters) cents = lloydStep(e, cents)
-      def litNormD(ce: IndexedSeq[Double]): Double =
-        math.sqrt(ce.foldLeft(0.0)((a, v) => a + v * v))
-      val cands = cents.map { case (cid, ce) =>
-        struct(round(dot($"embedding", lit(ce.toArray)) /
-          (norm($"embedding") * lit(litNormD(ce))), 6).as("cos"),
-          lit(-cid).as("neg_cid"))
-      }
-      // ascending (cos, neg_cid): last = assignToLloyd's greatest —
-      // max cosine, ties to the LOWEST cid; second-to-last = runner-up
-      val sorted = array_sort(array(cands: _*))
-      val best = element_at(sorted, -1)
-      val second = element_at(sorted, -2)
-      val perVec = e.select(
-          (-best.getField("neg_cid")).cast("long").as("cluster_id"),
-          (lit(1.0) - best.getField("cos")).as("a"),
-          (lit(1.0) - second.getField("cos")).as("b"))
-        .withColumn("sil",
-          when($"b" > 0.0, ($"b" - $"a") / $"b").otherwise(lit(0.0)))
-      perVec.groupBy($"cluster_id")
-        .agg(count(lit(1)).as("n_members"),
-          round(avg($"a"), 6).as("avg_intra_dist"),
-          round(avg($"b"), 6).as("avg_inter_dist"),
-          round(avg($"sil"), 6).as("avg_silhouette"))
-        .localCheckpoint(true)
-    } finally e.unpersist()
+    }
   }
 
   /** kNN-distance outlier scoring over the SRP-bucketed KNN graph — the
@@ -3844,51 +3820,51 @@ object Similarity {
       k: Int = 10): DataFrame = {
     import spark.implicits._
     val e = emb(spark, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(e) {
       val heads = e.filter($"vec_id" < nQueries)
         .select($"vec_id", $"embedding", $"label").collect()
         .map(r => (r.getLong(0), r.getSeq[Float](1), r.getInt(2)))
         .sortBy(_._1)
       if (heads.isEmpty) {
-        return e.select($"vec_id".as("query_id"), lit(0L).as("rel_at_k"),
+        e.select($"vec_id".as("query_id"), lit(0L).as("rel_at_k"),
           lit(0L).as("n_relevant"), lit(0.0).as("dcg"), lit(0.0).as("idcg"),
           lit(0.0).as("ndcg")).limit(0)
+      } else {
+        val perQuery = heads.map { case (qid, qv, qlabel) =>
+          val scored = e.filter($"vec_id" =!= qid)
+            .select($"vec_id", ($"label" === qlabel).as("rel"),
+              round(dot($"embedding", litVec(qv)) /
+                (norm($"embedding") * lit(litNorm(qv))), 6).as("cosine"))
+          val top = graft.ops.Ranking.topKGlobal(scored,
+            Seq(("cosine", true), ("vec_id", false)), k)
+          val nRel = e.filter($"vec_id" =!= qid && $"label" === qlabel)
+            .agg(count(lit(1)).as("n_relevant"))
+          top
+            .agg(sum(when($"rel", 1L).otherwise(0L)).as("rel_at_k"),
+              aggregate(
+                array_sort(collect_list(struct($"rk".as("rk"),
+                  when($"rel", 1L).otherwise(0L).as("r")))),
+                lit(0.0),
+                (acc, x) => acc + x.getField("r").cast("double") /
+                  (log(x.getField("rk").cast("double") + 1) / log(lit(2.0))))
+                .as("dcg_raw"))
+            .crossJoin(broadcast(nRel))
+            .select(lit(qid).as("query_id"),
+              coalesce($"rel_at_k", lit(0L)).as("rel_at_k"),
+              $"n_relevant",
+              round(coalesce($"dcg_raw", lit(0.0)), 6).as("dcg"),
+              when($"n_relevant" > 0, round(aggregate(
+                sequence(lit(1L), least(lit(k.toLong), $"n_relevant")),
+                lit(0.0),
+                (acc, i) => acc + lit(1.0) /
+                  (log(i.cast("double") + 1) / log(lit(2.0)))), 6))
+                .otherwise(lit(0.0)).as("idcg"))
+            .withColumn("ndcg",
+              when($"idcg" > 0, round($"dcg" / $"idcg", 6)).otherwise(lit(0.0)))
+        }
+        perQuery.reduce(_ unionByName _).localCheckpoint(true)
       }
-      val perQuery = heads.map { case (qid, qv, qlabel) =>
-        val scored = e.filter($"vec_id" =!= qid)
-          .select($"vec_id", ($"label" === qlabel).as("rel"),
-            round(dot($"embedding", litVec(qv)) /
-              (norm($"embedding") * lit(litNorm(qv))), 6).as("cosine"))
-        val top = graft.ops.Ranking.topKGlobal(scored,
-          Seq(("cosine", true), ("vec_id", false)), k)
-        val nRel = e.filter($"vec_id" =!= qid && $"label" === qlabel)
-          .agg(count(lit(1)).as("n_relevant"))
-        top
-          .agg(sum(when($"rel", 1L).otherwise(0L)).as("rel_at_k"),
-            aggregate(
-              array_sort(collect_list(struct($"rk".as("rk"),
-                when($"rel", 1L).otherwise(0L).as("r")))),
-              lit(0.0),
-              (acc, x) => acc + x.getField("r").cast("double") /
-                (log(x.getField("rk").cast("double") + 1) / log(lit(2.0))))
-              .as("dcg_raw"))
-          .crossJoin(broadcast(nRel))
-          .select(lit(qid).as("query_id"),
-            coalesce($"rel_at_k", lit(0L)).as("rel_at_k"),
-            $"n_relevant",
-            round(coalesce($"dcg_raw", lit(0.0)), 6).as("dcg"),
-            when($"n_relevant" > 0, round(aggregate(
-              sequence(lit(1L), least(lit(k.toLong), $"n_relevant")),
-              lit(0.0),
-              (acc, i) => acc + lit(1.0) /
-                (log(i.cast("double") + 1) / log(lit(2.0)))), 6))
-              .otherwise(lit(0.0)).as("idcg"))
-          .withColumn("ndcg",
-            when($"idcg" > 0, round($"dcg" / $"idcg", 6)).otherwise(lit(0.0)))
-      }
-      perQuery.reduce(_ unionByName _).localCheckpoint(true)
-    } finally e.unpersist()
+    }
   }
 
   /** Label-noise screen (confident-learning-lite, the Cleanlab idea
@@ -4127,8 +4103,7 @@ object Similarity {
         .select($"vec_id", posexplode($"embedding").as(Seq("i", "x")))
         .select($"vec_id", ($"i" + 1).as("i"),
           round($"x".cast("double") * 1000).cast("long").as("xi"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      Memo.withPersisted(comps) {
         val guard = comps.agg(max(abs($"xi")).as("mx")).head()
         if (guard.isNullAt(0)) None
         else {
@@ -4158,7 +4133,7 @@ object Similarity {
           val (v, num, den, lam4) = powerIterate(sm, d, iters)
           Some(Spectral(d, n, sm, v, num, den, lam4))
         }
-      } finally comps.unpersist()
+      }
     }
   }
 
@@ -4205,62 +4180,62 @@ object Similarity {
         posexplode($"embedding").as(Seq("i", "x")))
       .select($"lbl", $"vec_id", ($"i" + 1).as("i"),
         round($"x".cast("double") * 1000).cast("long").as("xi"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(comps) {
       val guard = comps.agg(max(abs($"xi")).as("mx"),
         count_distinct($"lbl").as("nl"),
         max($"i").cast("long").as("d")).head()
       if (guard.isNullAt(0)) {
-        return Seq.empty[(Long, Long, Long, Long, Long, Double)]
+        Seq.empty[(Long, Long, Long, Long, Long, Double)]
           .toDF("label", "n_vecs", "trace", "eigenvalue_e4",
             "energy_frac_e6", "energy_frac")
+      } else {
+        val mx = guard.getLong(0)
+        val (nl, dMax) = (guard.getLong(1), guard.getLong(2))
+        // n_vecs per label from the UNEXPLODED table (oracle predicate:
+        // count(*) WHERE embedding IS NOT NULL AND label IS NOT NULL) —
+        // zero-length arrays count as vectors but have no components.
+        val nPer = base.groupBy($"label".cast("long").as("lbl"))
+          .agg(count(lit(1)).as("nv"))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        val n = nPer.valuesIterator.sum
+        // BigInt comparisons: both the n·mx² moment bound and nl·d² can
+        // overflow i64 exactly in the regimes the guards exist for.
+        require(BigInt(mx) * BigInt(mx) * BigInt(math.max(n, 1L)) <=
+            BigInt(Long.MaxValue),
+          s"labelSpectralEnergy: max|x_e3|=$mx over $n rows overflows the " +
+            "exact-i64 moment sums — quantize coarser or shard the pass")
+        require(BigInt(nl) * BigInt(dMax) * BigInt(dMax) <=
+            BigInt(maxDriverCells),
+          s"labelSpectralEnergy: $nl labels x d=$dMax would collect " +
+            s"${BigInt(nl) * BigInt(dMax) * BigInt(dMax)} moment cells " +
+            s"(> budget $maxDriverCells) onto the driver — shard the " +
+            "loop by label range")
+        val sRows = comps.as("a")
+          .join(comps.as("b"), Seq("lbl", "vec_id"))
+          .select($"lbl", col("a.i").as("i"), col("b.i").as("j"),
+            (col("a.xi") * col("b.xi")).as("p"))
+          .groupBy($"lbl", $"i", $"j").agg(sum($"p").as("s"))
+          .collect()
+          .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3)))
+        val d = sRows.map(_._2).max
+        val out = sRows.groupBy(_._1).toSeq.map { case (lbl, rows) =>
+          val sm = Array.ofDim[BigInt](d + 1, d + 1)
+          for (i <- 0 to d; j <- 0 to d) sm(i)(j) = BigInt(0)
+          rows.foreach { case (_, i, j, s) => sm(i)(j) = BigInt(s) }
+          val (_, num, den, lam4) = powerIterate(sm, d, iters)
+          val trace = (1 to d).map(i => sm(i)(i)).sum
+          require(trace.isValidLong,
+            s"labelSpectralEnergy: trace $trace exceeds i64")
+          val frac6 =
+            if (den == 0 || trace == 0) BigInt(0)
+            else num * 1000000 / (den * trace)
+          (lbl, nPer(lbl), trace.toLong, lam4.toLong, frac6.toLong,
+            frac6.toLong.toDouble / 1000000.0)
+        }
+        out.toDF("label", "n_vecs", "trace", "eigenvalue_e4",
+          "energy_frac_e6", "energy_frac")
       }
-      val mx = guard.getLong(0)
-      val (nl, dMax) = (guard.getLong(1), guard.getLong(2))
-      // n_vecs per label from the UNEXPLODED table (oracle predicate:
-      // count(*) WHERE embedding IS NOT NULL AND label IS NOT NULL) —
-      // zero-length arrays count as vectors but have no components.
-      val nPer = base.groupBy($"label".cast("long").as("lbl"))
-        .agg(count(lit(1)).as("nv"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val n = nPer.valuesIterator.sum
-      // BigInt comparisons: both the n·mx² moment bound and nl·d² can
-      // overflow i64 exactly in the regimes the guards exist for.
-      require(BigInt(mx) * BigInt(mx) * BigInt(math.max(n, 1L)) <=
-          BigInt(Long.MaxValue),
-        s"labelSpectralEnergy: max|x_e3|=$mx over $n rows overflows the " +
-          "exact-i64 moment sums — quantize coarser or shard the pass")
-      require(BigInt(nl) * BigInt(dMax) * BigInt(dMax) <=
-          BigInt(maxDriverCells),
-        s"labelSpectralEnergy: $nl labels x d=$dMax would collect " +
-          s"${BigInt(nl) * BigInt(dMax) * BigInt(dMax)} moment cells " +
-          s"(> budget $maxDriverCells) onto the driver — shard the " +
-          "loop by label range")
-      val sRows = comps.as("a")
-        .join(comps.as("b"), Seq("lbl", "vec_id"))
-        .select($"lbl", col("a.i").as("i"), col("b.i").as("j"),
-          (col("a.xi") * col("b.xi")).as("p"))
-        .groupBy($"lbl", $"i", $"j").agg(sum($"p").as("s"))
-        .collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3)))
-      val d = sRows.map(_._2).max
-      val out = sRows.groupBy(_._1).toSeq.map { case (lbl, rows) =>
-        val sm = Array.ofDim[BigInt](d + 1, d + 1)
-        for (i <- 0 to d; j <- 0 to d) sm(i)(j) = BigInt(0)
-        rows.foreach { case (_, i, j, s) => sm(i)(j) = BigInt(s) }
-        val (_, num, den, lam4) = powerIterate(sm, d, iters)
-        val trace = (1 to d).map(i => sm(i)(i)).sum
-        require(trace.isValidLong,
-          s"labelSpectralEnergy: trace $trace exceeds i64")
-        val frac6 =
-          if (den == 0 || trace == 0) BigInt(0)
-          else num * 1000000 / (den * trace)
-        (lbl, nPer(lbl), trace.toLong, lam4.toLong, frac6.toLong,
-          frac6.toLong.toDouble / 1000000.0)
-      }
-      out.toDF("label", "n_vecs", "trace", "eigenvalue_e4",
-        "energy_frac_e6", "energy_frac")
-    } finally comps.unpersist()
+    }
   }
 
   /** Per-vector dominant-direction share (q262): for every embedding,

@@ -375,8 +375,7 @@ object TextAnalysis {
       .agg(BloomFilter.bloomBuild(mBits)($"p").as("bm"))
     val evalGrams = grams.filter(!$"is_train")
       .select($"doc_id", explode($"g").as("gh"))
-      .persist()
-    try {
+    Memo.withPersisted(evalGrams) {
       val probed = evalGrams.count()
       val pass = evalGrams
         .withColumn("ps", BloomFilter.positionsOf($"gh", mBits, nHashes))
@@ -385,7 +384,7 @@ object TextAnalysis {
         .count()
       val exact = evalGrams.join(trainGrams, "gh").count()
       (probed, pass, exact)
-    } finally evalGrams.unpersist()
+    }
   }
 
   /** Unigram language-model score (CCNet-style perplexity proxy): mean
@@ -438,8 +437,7 @@ object TextAnalysis {
         slice($"t", lit(2), greatest(size($"t") - 1, lit(0))),
         (a, b) => struct(a.as("w1"), b.as("w2")))).as("p"))
       .select($"doc_id", $"p.w1".as("w1"), $"p.w2".as("w2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(pairs) {
       val cb = pairs.groupBy($"w1", $"w2").agg(count(lit(1)).as("cb"))
       val cctx = cb.groupBy($"w1").agg(sum($"cb").as("cctx"))
       val vocab = cb.agg(count_distinct($"w2").as("v"))
@@ -457,7 +455,7 @@ object TextAnalysis {
           coalesce($"n_pairs", lit(0L)).as("n_pairs"),
           $"avg_neg_logprob")
         .localCheckpoint(true)
-    } finally pairs.unpersist()
+    }
   }
 
   /** Within-document repetition ratio: the fraction of word 3-grams that
@@ -681,7 +679,6 @@ object TextAnalysis {
     val uni = docs(spark, dir)
       .select(explode(toks).as("w"))
       .groupBy($"w").agg(count(lit(1)).as("cw"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // adjacent pairs: zip the array with itself shifted by one
     val pairs = docs(spark, dir)
       .select(toks.as("t"))
@@ -691,8 +688,7 @@ object TextAnalysis {
         (a, b) => struct(a.as("w1"), b.as("w2")))).as("p"))
       .select($"p.w1".as("w1"), $"p.w2".as("w2"))
       .groupBy($"w1", $"w2").agg(count(lit(1)).as("cb"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(uni, pairs) {
       pairs
         .filter($"cb" >= minCount)
         .crossJoin(broadcast(pairs.agg(sum($"cb").as("n_bigrams"))))
@@ -706,9 +702,6 @@ object TextAnalysis {
         .orderBy($"pmi".desc, $"w1", $"w2")
         .limit(k)
         .localCheckpoint(true)
-    } finally {
-      uni.unpersist()
-      pairs.unpersist()
     }
   }
 
@@ -730,8 +723,7 @@ object TextAnalysis {
     import spark.implicits._
     val stream = docs(spark, dir)
       .select(explode(toks).as("tok")).filter($"tok" =!= "")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(stream) {
       val exact = stream.groupBy($"tok").agg(count(lit(1)).as("n_exact"))
         .orderBy($"n_exact".desc, $"tok").limit(k)
       val agg = stream.agg(
@@ -748,7 +740,7 @@ object TextAnalysis {
       }
       spark.createDataFrame(rows.toSeq)
         .toDF("tok", "n_exact", "never_undercounts", "within_eps")
-    } finally stream.unpersist()
+    }
   }
 
   /** Language-ID confusion matrix (q143): (true lang, predicted lang)
@@ -780,7 +772,6 @@ object TextAnalysis {
     val uni = docs(spark, dir)
       .select(explode(toks).as("w"))
       .groupBy($"w").agg(count(lit(1)).as("cw"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val arr = docs(spark, dir).select(toks.as("t"))
     val pairCols = (1 to window).map { d =>
       zip_with(
@@ -792,8 +783,7 @@ object TextAnalysis {
       .select(explode(flatten(array(pairCols: _*))).as("p"))
       .select($"p.w1".as("w1"), $"p.w2".as("w2"))
       .groupBy($"w1", $"w2").agg(count(lit(1)).as("cp"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(uni, pairs) {
       pairs
         .filter($"cp" >= minCount)
         .crossJoin(broadcast(pairs.agg(sum($"cp").as("n_pairs"))))
@@ -807,9 +797,6 @@ object TextAnalysis {
         .orderBy($"pmi".desc, $"w1", $"w2")
         .limit(k)
         .localCheckpoint(true)
-    } finally {
-      uni.unpersist()
-      pairs.unpersist()
     }
   }
 
@@ -949,8 +936,7 @@ object TextAnalysis {
     import spark.implicits._
     val scored = unigramLogprob(spark, dir)
       .join(docs(spark, dir).select($"doc_id", $"lang"), "doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(scored) {
       val th = scored.groupBy($"lang")
         .agg(expr("percentile(avg_neg_logprob, array(0.25D, 0.75D))").as("ps"))
         .select($"lang", round($"ps"(0), 4).as("t1"), round($"ps"(1), 4).as("t2"))
@@ -960,7 +946,7 @@ object TextAnalysis {
             .when($"avg_neg_logprob" <= $"t2", "middle")
             .otherwise("tail").as("bucket"))
         .localCheckpoint(true)
-    } finally scored.unpersist()
+    }
   }
 
   /** Near-dup candidates from shared winnowing fingerprints — the
@@ -1113,8 +1099,7 @@ object TextAnalysis {
         terms.zipWithIndex.map { case (tm, i) =>
           size(filter($"t", x => x === tm)).cast("long").as(s"tf$i")
         }: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(perDoc) {
       val statAggs =
         count(lit(1)).as("n_docs") +: avg($"dl").as("avgdl") +:
           terms.indices.map(i =>
@@ -1137,7 +1122,7 @@ object TextAnalysis {
         .orderBy($"score".desc, $"doc_id")
         .limit(k)
         .localCheckpoint(true)
-    } finally perDoc.unpersist()
+    }
   }
 
   /** Per-source distribution drift: KL(source ‖ corpus) over unigram
@@ -1164,7 +1149,6 @@ object TextAnalysis {
     // is served once per (session, corpus fingerprint)
     Memo.cached(sourceDivCache,
         (spark, dir, Memo.fingerprint(spark, s"$dir/documents.parquet")),
-        onEvict = Memo.releaseOnEvict,
         label = "sourceDivergence") {
       sourceDivergenceUncached(spark, dir)
     }
@@ -1175,8 +1159,7 @@ object TextAnalysis {
     val sw = docs(spark, dir)
       .select($"source", explode(toks).as("w"))
       .groupBy($"source", $"w").agg(count(lit(1)).as("cw"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(sw) {
       val corpus = sw.groupBy($"w").agg(sum($"cw").as("ct"))
       val perSource = sw.groupBy($"source").agg(sum($"cw").as("ts"))
       val total = corpus.agg(sum($"ct").as("tc"))
@@ -1191,7 +1174,7 @@ object TextAnalysis {
           count(lit(1)).as("n_types"),
           round(sum(p * log(p / q)), 4).as("kl_divergence"))
         .localCheckpoint(true)
-    } finally sw.unpersist()
+    }
   }
 
   /** Source-vocabulary overlap matrix: Jaccard over each source pair's
@@ -1210,8 +1193,7 @@ object TextAnalysis {
     import spark.implicits._
     val sv = docs(spark, dir)
       .select($"source", explode(toks).as("w")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(sv) {
       val sizes = sv.groupBy($"source").agg(count(lit(1)).as("n"))
       sv.as("a")
         .join(sv.as("b"),
@@ -1224,7 +1206,7 @@ object TextAnalysis {
           round($"common".cast("double") / ($"na" + $"nb" - $"common"), 6)
             .as("jaccard"))
         .localCheckpoint(true)
-    } finally sv.unpersist()
+    }
   }
 
   /** The rule battery as appended columns over any frame with a raw
@@ -2301,8 +2283,6 @@ object TextAnalysis {
     // positions table is already checkpointed.
     Memo.cached(bpeTrainCache,
         (spark, dir, k, Memo.fingerprint(spark, s"$dir/documents.parquet")),
-        onEvict = (v: (Seq[(Long, String, String, String, Long)], DataFrame)) =>
-          Memo.releaseOnEvict(v._2),
         label = s"bpeTrain/$k") {
       bpeTrainUncached(spark, dir, k)
     }
@@ -2388,8 +2368,7 @@ object TextAnalysis {
       .select(explode(toks).as("token"))
       .filter(length($"token") >= 1)
       .groupBy($"token").agg(count(lit(1)).as("freq"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(types) {
       // the ladder rollup references `ranked` exactly once, and
       // coverageRanked checkpoints its own ≤ maxK intermediates, so no
       // outer barrier is needed
@@ -2403,7 +2382,7 @@ object TextAnalysis {
           max($"total").as("total_tokens"),
           count(lit(1)).as("n_types_used"),
           round(max($"cum") / max($"total").cast("double"), 6).as("coverage"))
-    } finally types.unpersist()
+    }
   }
 
   /** The windowed core of [[coverageCurve]], un-checkpointed so
@@ -2479,10 +2458,9 @@ object TextAnalysis {
   private def kmvSketchTable(spark: SparkSession, dir: String, k: Int,
       n: Int): DataFrame = {
     val fp = Memo.fingerprint(spark, s"$dir/documents.parquet")
-    // values are localCheckpoint'd — eviction must unpersist the pinned
-    // blocks, not just drop the reference (round-10 ADVICE)
+    // values are localCheckpoint'd: on eviction Memo's release rule
+    // unpersists the checkpoint RDD (round-10 ADVICE)
     Memo.cached(kmvTableCache, (spark, dir, k, n, fp),
-        onEvict = (df: DataFrame) => { df.unpersist(); () },
         label = s"kmvSketch/$k/$n") {
       import spark.implicits._
       docs(spark, dir)
@@ -2687,36 +2665,36 @@ object TextAnalysis {
         ($"lang" === "en").cast("double").as("y"),
         coalesce(call_function("feature_hash", $"text"),
           array().cast("array<int>")).as("f"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Memo.withPersisted(base) {
       val n = base.count()
       if (n == 0L) {
-        return base.select($"doc_id", lit(0L).as("label"),
+        base.select($"doc_id", lit(0L).as("label"),
           lit(0.0).as("score"), lit(false).as("predicted")).limit(0)
+      } else {
+        var w: IndexedSeq[Double] = IndexedSeq.fill(dim)(0.0)
+        // left-to-right fold over the full dim in index order — adding
+        // exact 0.0 terms for absent buckets, so the sum equals the
+        // oracle's sparse join-sum up to double merge order (≪ the 1e-6
+        // rounding grid)
+        def scoreCol(wv: IndexedSeq[Double]): Column =
+          aggregate(zip_with($"f", array(wv.map(lit): _*),
+            (x, wj) => x.cast("double") * wj), lit(0.0), (acc, v) => acc + v)
+        for (_ <- 1 to rounds) {
+          val g = base
+            .select((lit(1.0) / (lit(1.0) + exp(-scoreCol(w))) - $"y").as("r"),
+              posexplode($"f").as(Seq("j", "x")))
+            .filter($"x" =!= 0)
+            .groupBy($"j").agg(sum($"r" * $"x".cast("double")).as("g"))
+            .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+          w = w.indices.map(j => BigDecimal(w(j) - lrate * g.getOrElse(j, 0.0) / n)
+            .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+        }
+        base.select($"doc_id", $"y".cast("long").as("label"),
+            round(scoreCol(w), 6).as("score"))
+          .withColumn("predicted", $"score" >= 0)
+          .localCheckpoint(true)
       }
-      var w: IndexedSeq[Double] = IndexedSeq.fill(dim)(0.0)
-      // left-to-right fold over the full dim in index order — adding
-      // exact 0.0 terms for absent buckets, so the sum equals the
-      // oracle's sparse join-sum up to double merge order (≪ the 1e-6
-      // rounding grid)
-      def scoreCol(wv: IndexedSeq[Double]): Column =
-        aggregate(zip_with($"f", array(wv.map(lit): _*),
-          (x, wj) => x.cast("double") * wj), lit(0.0), (acc, v) => acc + v)
-      for (_ <- 1 to rounds) {
-        val g = base
-          .select((lit(1.0) / (lit(1.0) + exp(-scoreCol(w))) - $"y").as("r"),
-            posexplode($"f").as(Seq("j", "x")))
-          .filter($"x" =!= 0)
-          .groupBy($"j").agg(sum($"r" * $"x".cast("double")).as("g"))
-          .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-        w = w.indices.map(j => BigDecimal(w(j) - lrate * g.getOrElse(j, 0.0) / n)
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-      }
-      base.select($"doc_id", $"y".cast("long").as("label"),
-          round(scoreCol(w), 6).as("score"))
-        .withColumn("predicted", $"score" >= 0)
-        .localCheckpoint(true)
-    } finally base.unpersist()
+    }
   }
 
   /** Flesch reading-ease per document — the classic readability screen
