@@ -3,6 +3,11 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // local-iteration subset (SPARK_GRAFT_BENCH_ONLY=q16,q162); unset,
+    // the per-round artifact stays the full suite. A typo'd pattern
+    // aborts before the cooldown and the session
+    val selected = SparkEntry.select(
+      sys.env.get("SPARK_GRAFT_BENCH_ONLY").toSeq.flatMap(_.split(",")))
     // drift witnesses, recorded so a round's headline number carries its
     // own measurement conditions: benches taken right after the test
     // suite (page-cache churn) or under concurrent load read 10-25% slow
@@ -68,20 +73,6 @@ object Bench {
     // a failing query must be VISIBLE in the output, not silently timed
     // as ~0 s (which would shrink the total and flatter the engine)
     val errors = scala.collection.mutable.ListBuffer.empty[String]
-    // local-iteration subset (SPARK_GRAFT_BENCH_ONLY=q16,q162): the
-    // driver never sets it, so the per-round artifact stays the full
-    // suite; a typo'd filter aborts rather than benching nothing
-    val selected = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
-      case Some(csv) =>
-        val wanted = csv.split(",").map(_.trim).filter(_.nonEmpty)
-        // exact name or prefix up to the first underscore: "q16" selects
-        // q16_jaccard_pairs but NOT q160-q169 (a bare startsWith would)
-        val m = SparkEntry.queries.filter(kv =>
-          wanted.exists(w => kv._1 == w || kv._1.startsWith(w + "_")))
-        require(m.nonEmpty, s"SPARK_GRAFT_BENCH_ONLY=$csv matches nothing")
-        m
-      case None => SparkEntry.queries
-    }
     // committed-baseline per-query times, read from the PREVIOUS
     // BENCH_FULL.json BEFORE this run overwrites it (on the driver's
     // clean checkout that file IS the committed baseline). Parsed with a
@@ -238,9 +229,8 @@ object Bench {
       // let a broken build pass the 2x gate on a shrunken total
       if (ok) secs else -1.0
     }
-    val firstPass = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      name -> timeOne(name, fn)
-    }
+    val firstPass = selected.map(name =>
+      name -> timeOne(name, SparkEntry.queries(name)))
     // Per-query spike re-check (round-9 verdict #1): the regime gate
     // reads load_avg but not page-cache/JIT state, so a clean-stamped
     // artifact could still embed a one-off 2.7x spike on exactly the
@@ -276,7 +266,7 @@ object Bench {
     val retried: Map[String, (Double, Boolean)] = spikes.map { case (name, _) =>
       System.err.println(f"[bench] $name exceeded 2x committed baseline " +
         f"(${baseline(name)}%.3f s) — re-running once")
-      val r = timeOne(name, selected(name))
+      val r = timeOne(name, SparkEntry.queries(name))
       val memoHit = r >= 0 && qBuilds.getOrElse(name, 0) > lastBuilds
       name -> (r, memoHit)
     }.toMap

@@ -1,14 +1,15 @@
 package graft
 
-/** Plan inspection: `ExplainTool [sfDir] [queryName ...]` prints the
-  * formatted physical plan and wall time for each named query (all
-  * queries if none named). Used to keep plans honest — pushdown reaching
-  * the scan, broadcasts where expected, no stray shuffles.
+/** Plan inspection: `ExplainTool [sfDir] [pattern ...]` prints the
+  * formatted physical plan and wall time for each query the name
+  * patterns select (`SparkEntry.select`: all queries if none given).
+  * Used to keep plans honest — pushdown reaching the scan, broadcasts
+  * where expected, no stray shuffles.
   */
 object ExplainTool {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
+    val names = SparkEntry.select(args.drop(1).toSeq)
     val spark = LocalSession.build("ExplainTool")
     names.foreach { name =>
       // time from query construction: iterative operators (e.g. the

@@ -3,13 +3,14 @@ import org.apache.spark.sql.{SparkSession, DataFrame}
 import graft.ops._
 
 /** Query contract (SURVEY.md §7): each query is one registry entry,
-  * `q(name, builder) -> oracle SQL`, and `queries`/`oracleSql` are views
-  * of it. A query is one operator from the SURVEY.md §2 inventory (§2.12
-  * extended surface: relational, dedup, similarity, text analysis,
-  * sessionization); its oracle is the DuckDB-equivalent SQL, run against
-  * the same parquet tables. Column names and integer widths are aligned
-  * on both sides (Spark int casts to long where DuckDB returns BIGINT;
-  * DuckDB integer SUM is cast from HUGEINT back to BIGINT).
+  * `q(name, builder) -> oracle SQL`, and `queries`/`oracleSql`/`reads`
+  * are views of it. A query is one operator from the SURVEY.md §2
+  * inventory (§2.12 extended surface: relational, dedup, similarity,
+  * text analysis, sessionization); its oracle is the DuckDB-equivalent
+  * SQL, run against the same parquet tables. Column names and integer
+  * widths are aligned on both sides (Spark int casts to long where
+  * DuckDB returns BIGINT; DuckDB integer SUM is cast from HUGEINT back
+  * to BIGINT).
   */
 object SparkEntry {
 
@@ -17,15 +18,50 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.revenueByNation(spark, "/root/testdata/sf0.001")
 
-  /** The two public views of the registry below, keyed by the same
-    * names: `queries` builds each query's DataFrame from an sf directory,
-    * `oracleSql` holds the DuckDB SQL it must match.
+  /** The public views of the registry below, keyed by the same names:
+    * `queries` builds each query's DataFrame from an sf directory,
+    * `oracleSql` holds the DuckDB SQL it must match, `reads` the tables
+    * that SQL reads.
     */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map { case ((name, build), _) => name -> build }.toMap
 
   lazy val oracleSql: Map[String, String] =
     registry.map { case ((name, _), sql) => name -> sql }.toMap
+
+  /** The tables each query reads: every table of `Tables.names` and
+    * `events` that its oracle SQL names right after `FROM` or `JOIN`,
+    * `--` comments aside. A bare word match would not do: q104 and q121
+    * say `customer` and read no such table.
+    */
+  lazy val reads: Map[String, Set[String]] = {
+    val tables = (Tables.names :+ "events").toSet
+    val named = """(?i)\b(?:from|join)\s+(\w+)""".r
+    oracleSql.map { case (name, sql) =>
+      val code = sql.linesIterator.map(_.split("--", 2).head).mkString("\n")
+      name -> named.findAllMatchIn(code).map(_.group(1).toLowerCase)
+        .filter(tables).toSet
+    }
+  }
+
+  /** The names in `among` (sorted) that `patterns` select, the one
+    * selection rule of every tool that runs queries by name. A pattern
+    * selects a name it equals or that starts with it plus `_`: "q16"
+    * selects q16_jaccard_pairs, not q160-q169. Patterns are trimmed,
+    * blank ones dropped, and no pattern selects every name. Fails naming
+    * each pattern that selects nothing, so a typo cannot shrink a run.
+    */
+  def select(patterns: Seq[String],
+      among: Iterable[String] = queries.keys): Seq[String] = {
+    val names = among.toSeq.sorted
+    val wanted = patterns.map(_.trim).filter(_.nonEmpty)
+    def hits(p: String, n: String) = n == p || n.startsWith(p + "_")
+    val unmatched = wanted.filterNot(p => names.exists(hits(p, _)))
+    require(unmatched.isEmpty,
+      s"no query matches: ${unmatched.mkString(", ")}")
+    if (wanted.isEmpty) names
+    else names.filter(n => wanted.exists(hits(_, n)))
+  }
 
   private type Build = (SparkSession, String) => DataFrame
   private type Entry = ((String, Build), String)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,20 +6,14 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
-    // optional extra args: run (and emit oracle SQL for) only these
-    // queries — a local iteration shortcut; the driver passes two args.
-    // A typo'd name would otherwise filter to NOTHING and a downstream
-    // compare over the empty oracle map would vacuously pass
-    val only = args.drop(2).toSet
-    val unknown = only.diff(SparkEntry.queries.keySet)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    def sel[T](m: Map[String, T]): Map[String, T] =
-      if (only.isEmpty) m else m.filter(kv => only(kv._1))
+    // optional extra args: run (and emit oracle SQL for) only the
+    // queries these name patterns select — a local iteration shortcut
+    val names = SparkEntry.select(args.drop(2).toSeq)
     val spark = LocalSession.build()
     new java.io.File(outDir).mkdirs()
-    sel(SparkEntry.queries).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    names.foreach { name =>
+      try SparkEntry.queries(name)(spark, sfDir).coalesce(1)
+        .write.mode("overwrite").parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
@@ -37,8 +30,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = sel(SparkEntry.oracleSql)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = names.map(k => s"${q(k)}: ${q(SparkEntry.oracleSql(k))}")
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

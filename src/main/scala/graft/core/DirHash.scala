@@ -42,10 +42,7 @@ object DirHash {
         // context we did not create (the reference only ever stops its
         // own, dirhash.py:327-332)
         val borrowedContext = org.apache.spark.SparkEnv.get != null
-        val builder = SparkSession.builder()
-          .appName("DirHash")
-          .config("spark.sql.shuffle.partitions",
-            sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+        val builder = SparkSession.builder().appName("DirHash")
         if (!new org.apache.spark.SparkConf().contains("spark.master"))
           builder.master("local[*]")
         val spark = builder.getOrCreate()

@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData, MapData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType, MapType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -504,9 +503,5 @@ object TextOps {
     reg.createOrReplaceTempFunction(
       "cdc_cut_hashes", exprs =>
         CdcCutHashes(exprs.head, litInt(exprs(1))), "built-in")
-  }
-
-  def bigramCountsCol(spark: SparkSession, text: Column): Column = {
-    register(spark); call_function("bigram_counts", text)
   }
 }

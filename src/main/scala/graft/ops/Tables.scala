@@ -11,8 +11,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
 
-  val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
-    "part", "orders", "lineitem", "documents", "embeddings")
+  /** The TPC-H tables; the other parquet tables are the corpus. */
+  val tpch: Seq[String] = Seq("region", "nation", "customer", "supplier",
+    "part", "orders", "lineitem")
+
+  val names: Seq[String] = tpch ++ Seq("documents", "embeddings")
 
   /** Events loader resilient to every physical encoding the testdata
     * generator has shipped for `ts`: TIMESTAMP(NANOS) (readable only as

@@ -7,22 +7,6 @@ package graft
   */
 object TestFixtures {
 
-  /** The `qNN` prefixes of the queries that read TPC-H tables. */
-  private val tpchQueries = Set("q01", "q02", "q03", "q04", "q05", "q06",
-    "q07", "q08", "q09", "q10", "q11", "q12", "q29", "q37", "q38", "q42",
-    "q43", "q44", "q58", "q71", "q111", "q114", "q115", "q120", "q141",
-    "q149", "q150", "q151", "q156", "q173", "q217", "q218", "q219",
-    "q259", "q260", "q266", "q267", "q273", "q274", "q278", "q279",
-    "q281", "q282", "q283", "q284", "q285", "q286", "q287", "q288",
-    "q289", "q290", "q291", "q292")
-
-  /** Whether query `name` reads no TPC-H table, so it runs on a corpus
-    * that carries none (EmptyCorpusSpec, NullTextSpec). Matches the full
-    * `qNN` prefix: `take(3)` would make q100+ collide with q10.
-    */
-  def readsDocsOnly(name: String): Boolean =
-    !tpchQueries.contains(name.takeWhile(_ != '_'))
-
   /** Content hash of the sf0.01 embeddings fixture the exact pinned
     * operating curves (q271/q277/q293/q294/q295) were measured on.
     */

@@ -7,17 +7,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * Value-level parity with DuckDB is the driver's gate (and
   * tools/compare_oracle.py locally); here we pin what a refactor is most
   * likely to break silently: every query plans, runs, returns rows, and
-  * keeps its column contract, and every query has an oracle.
+  * keeps its column contract (SparkEntrySpec pins the registry's views).
   */
 class OpsSpec extends AnyFunSuite {
 
   private val spark = graft.SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
-
-  test("every query has a matching oracleSql entry") {
-    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
-    assert(SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet == Set.empty)
-  }
 
   test("flagship entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)

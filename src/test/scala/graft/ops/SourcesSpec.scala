@@ -40,41 +40,4 @@ class SourcesSpec extends AnyFunSuite {
         .foreach(java.nio.file.Files.delete)
     }
   }
-
-  test("jsonl ingest quarantines malformed lines, loses no clean row and no byte") {
-    import graft.sources.Formats
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val root = java.nio.file.Files.createTempDirectory("graft-jsonl").toString
-    try {
-      // deterministic predicate, not limit(50): LIMIT without ORDER BY
-      // may pick different rows across the write and the expect actions
-      docs.filter("doc_id < 50").coalesce(1).write.json(s"$root/jsonl")
-      // damage the dump: a truncated JSON object, a non-JSON log line,
-      // and an empty-object line (parseable but missing every field) —
-      // as a sibling file (appending to Spark's part file would trip
-      // the Hadoop CRC sidecar, a different failure than malformed JSON)
-      val broken = Seq("""{"doc_id": 999999, "text": "trunca""",
-        "WARN ingest: retrying fetch", "{}")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$root/jsonl/extra-damaged.json"),
-        (broken.mkString("\n") + "\n").getBytes("UTF-8"))
-
-      val parsed = Formats.readJsonlQuarantined(spark, s"$root/jsonl", docs.schema)
-      val (clean, quarantine, release) = Formats.splitQuarantine(parsed)
-      try {
-        // every clean row survives with its content intact
-        val expect = docs.filter("doc_id < 50").collect()
-          .map(r => (r.getLong(0), r.getString(1))).toSet
-        val got = clean.filter("doc_id < 999999 AND doc_id IS NOT NULL")
-          .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-        assert(got == expect)
-        // the two unparseable lines are quarantined byte-for-byte; the
-        // parseable-but-empty object is a (useless) clean row, not lost
-        val q = quarantine.collect().map(_.getString(0)).toSet
-        assert(q == Set("""{"doc_id": 999999, "text": "trunca""",
-          "WARN ingest: retrying fetch"), q)
-        assert(clean.count() == 51) // 50 real + the empty object
-      } finally release()
-    } finally graft.TestFiles.rmrf(java.nio.file.Paths.get(root))
-  }
 }
