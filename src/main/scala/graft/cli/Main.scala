@@ -57,9 +57,10 @@ object Main {
       }
     }
 
-    // the hash runs in the caller's session if one is active, else in a
-    // local one that DirHash creates and stops (the reference's
-    // create-if-absent rule, dirhash.py:325-335); archiving needs no Spark
+    // the hash runs on the caller's SparkContext if one is running, else
+    // on a bare local context that DirHash creates and stops (the
+    // reference's create-if-absent rule, dirhash.py:325-335) — no
+    // SparkSession is built; archiving needs no Spark
     val expected: Option[String] =
       if (args.checkName) {
         // verify the directory's basename as its own hash string

@@ -5,6 +5,9 @@ import graft.hash.Algos
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.{SparkContext, SparkException}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.util.SerializableConfiguration
 
@@ -31,12 +34,16 @@ final class FileChangedException(val path: String, val listedLen: Long)
   * to record multiples (/root/reference/FixedLengthBinaryInputFormat.scala:
   * 41-85) and one RDD per file union-folded together
   * (/root/reference/dirhash.py:399-406) — a lineage chain that collapses at
-  * 10⁵+ files. Here the whole tree is ONE `Dataset[ChunkSpec]` (a row per
+  * 10⁵+ files. Here the whole tree is ONE `RDD[ChunkSpec]` (a row per
   * chunk, planned from the listing's sizes), so Spark schedules uniformly
   * across files and within large files, with no custom InputFormat and no
   * union chain. Alignment is by construction; the short-final-chunk and
   * empty-file→zero-chunks semantics match the reference's record reader
   * (/root/reference/FixedLengthBinaryRecordReader.scala:105-142).
+  *
+  * [[digestListing]] digests that plan as one plain RDD job, with no
+  * Catalyst planning or encoders per call; [[planChunksDataset]] and
+  * [[digestChunks]] are Dataset views of the same plan and read loop.
   */
 object Chunker {
 
@@ -107,48 +114,108 @@ object Chunker {
     slices.result()
   }
 
-  /** The chunk plan as a Dataset with no shuffle behind it: the driver
-    * cuts the UTF-8 `(relPath, idx)`-ordered chunk sequence into
+  /** The chunk plan with no shuffle behind it: the driver cuts the UTF-8
+    * `(relPath, idx)`-ordered chunk sequence into
     * `max(1, min(#chunks, defaultParallelism))` contiguous, byte-balanced
     * slices ([[planSlices]]) and ships one slice per partition, each
     * expanded lazily into its `ChunkSpec`s inside the task. Partition `i`
     * therefore holds the chunks just before partition `i+1`'s, and the
     * driver holds O(#files + #partitions) whatever the block size.
-    *
-    * `knownChunkCount` is unused: the plan counts chunks while cutting
-    * slices. It stays for callers that pass it.
     */
-  def planChunksDataset(spark: SparkSession, rootDir: String,
-      entries: Seq[FileEntry], blockSize: Long,
-      knownChunkCount: Long = -1L): Dataset[ChunkSpec] = {
-    import spark.implicits._
+  private def planChunkRdd(sc: SparkContext, rootDir: String, entries: Seq[FileEntry],
+      blockSize: Long): RDD[ChunkSpec] = {
     require(blockSize > 0, s"block size must be positive: $blockSize")
     val root = graft.fs.Listing.stripTrailingSlashes(rootDir)
     val files = entries.filter(fe => !fe.isDir && fe.size > 0)
       .sortBy(_.relPath)(graft.fs.Listing.utf8Ordering)
     val nChunks = files.iterator.map(fe => chunkCount(fe.size, blockSize)).sum
-    val nParts = math.max(1L,
-      math.min(nChunks, spark.sparkContext.defaultParallelism.toLong)).toInt
+    val nParts = math.max(1L, math.min(nChunks, sc.defaultParallelism.toLong)).toInt
     val slices = planSlices(files, blockSize, nParts)
-    spark.createDataset(spark.sparkContext.parallelize(slices.toSeq, nParts).flatMap(
-      _.iterator.flatMap(s => fileChunkSpecs(root, s.file, blockSize, s.from, s.until))))
+    sc.parallelize(slices.toSeq, nParts).flatMap(
+      _.iterator.flatMap(s => fileChunkSpecs(root, s.file, blockSize, s.from, s.until)))
   }
 
-  /** Computes the domain-separated digest of every planned chunk, streaming
+  /** Reads and digests one partition's chunks in input order, streaming
     * file bytes through the digest in 64 KiB reads (never materializing a
-    * whole chunk — the default block size is 128 MiB).
-    *
-    * No exchange: each partition is digested in input order, so with the
-    * plan of [[planChunksDataset]] `collect()` returns the digests in UTF-8
-    * `(relPath, idx)` order and [[DirHash.hashDirectoryRaw]] folds them
-    * without sorting. A task reads each of its files sequentially. After a
-    * file's final chunk a one-byte read must hit EOF; a file that grew or
-    * shrank since it was listed fails the task with a
-    * [[FileChangedException]] naming the path. `nSpecs` is unused; it stays
-    * for callers that pass it.
+    * whole chunk — the default block size is 128 MiB). A task reads each
+    * of its files sequentially through one open stream. After a file's
+    * final chunk a one-byte read must hit EOF; a file that grew or shrank
+    * since it was listed fails the task with a [[FileChangedException]]
+    * naming the path.
     *
     * Digest layout per chunk, keyed by [[graft.hash.Algos.chunkDigest]]:
     * `H( utf8(relPath) || 0x00 || ascii_decimal(idx) || 0x00 || content )`.
+    */
+  private def digestPartition(algo: String, hadoopConf: Broadcast[SerializableConfiguration],
+      specs: Iterator[ChunkSpec]): Iterator[(ChunkSpec, Array[Byte])] = {
+    val conf = hadoopConf.value.value
+    val buf = new Array[Byte](64 * 1024)
+    var openPath: String = null
+    var in: org.apache.hadoop.fs.FSDataInputStream = null
+    def close(): Unit = if (in != null) { in.close(); in = null; openPath = null }
+    val digests = specs.map { spec =>
+      def changed = new FileChangedException(spec.absPath, spec.fileLen)
+      if (openPath != spec.absPath) {
+        close()
+        val p = new Path(spec.absPath)
+        in = p.getFileSystem(conf).open(p)
+        openPath = spec.absPath
+      }
+      try in.seek(spec.offset)
+      catch { case _: java.io.EOFException => throw changed }
+      val d = Algos.chunkDigest(algo, spec.relPath.getBytes(UTF_8), spec.idx)
+      var remaining = spec.len
+      while (remaining > 0) {
+        val n = in.read(buf, 0, math.min(buf.length.toLong, remaining).toInt)
+        if (n < 0) throw changed
+        d.update(buf, 0, n)
+        remaining -= n
+      }
+      if (spec.offset + spec.len == spec.fileLen && in.read() >= 0) throw changed
+      (spec, d.digest())
+    }
+    new Iterator[(ChunkSpec, Array[Byte])] {
+      def hasNext: Boolean = { val h = digests.hasNext; if (!h) close(); h }
+      def next(): (ChunkSpec, Array[Byte]) = digests.next()
+    }
+  }
+
+  /** The digest of every chunk of the listed files under `rootDir`, in
+    * UTF-8 `(relPath, idx)` order, as one job of one stage: the plan of
+    * [[planChunkRdd]], digested per partition in input order, and only the
+    * digests collected — `collect()` keeps partition order, so nothing is
+    * sorted. The Hadoop conf reaches the tasks as one broadcast, destroyed
+    * when the job ends. A file that changed since `entries` was listed
+    * fails with its [[FileChangedException]], taken out of the job's
+    * `SparkException`.
+    */
+  def digestListing(sc: SparkContext, rootDir: String, entries: Seq[FileEntry],
+      blockSize: Long, algo: String): Array[Array[Byte]] = {
+    Algos.get(algo) // fail fast on the driver for unknown algorithms
+    val specs = planChunkRdd(sc, rootDir, entries, blockSize)
+    val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
+    try specs.mapPartitions(it => digestPartition(algo, conf, it).map(_._2)).collect()
+    catch {
+      case e: SparkException => throw Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).collectFirst { case f: FileChangedException => f }.getOrElse(e)
+    } finally conf.destroy()
+  }
+
+  /** [[planChunkRdd]] as a Dataset, for callers that want one.
+    * `knownChunkCount` is unused; it stays for callers that pass it.
+    */
+  def planChunksDataset(spark: SparkSession, rootDir: String,
+      entries: Seq[FileEntry], blockSize: Long,
+      knownChunkCount: Long = -1L): Dataset[ChunkSpec] = {
+    import spark.implicits._
+    spark.createDataset(planChunkRdd(spark.sparkContext, rootDir, entries, blockSize))
+  }
+
+  /** [[digestPartition]] over a Dataset of specs, keeping each chunk's
+    * `(relPath, idx)`: with the plan of [[planChunksDataset]], `collect()`
+    * returns the rows in UTF-8 `(relPath, idx)` order. The Dataset is lazy,
+    * so its conf broadcast is left to Spark's context cleaner. `nSpecs` is
+    * unused; it stays for callers that pass it.
     */
   def digestChunks(
       spark: SparkSession,
@@ -158,43 +225,14 @@ object Chunker {
       hadoopConf: Configuration): Dataset[ChunkDigest] = {
     import spark.implicits._
     Algos.get(algo) // fail fast on the driver for unknown algorithms
-    val serConf = new SerializableConfiguration(hadoopConf)
-    specs.mapPartitions { it =>
-      val conf = serConf.value
-      val buf = new Array[Byte](64 * 1024)
-      var openPath: String = null
-      var in: org.apache.hadoop.fs.FSDataInputStream = null
-      def close(): Unit = if (in != null) { in.close(); in = null; openPath = null }
-      val digests = it.map { spec =>
-        def changed = new FileChangedException(spec.absPath, spec.fileLen)
-        if (openPath != spec.absPath) {
-          close()
-          val p = new Path(spec.absPath)
-          in = p.getFileSystem(conf).open(p)
-          openPath = spec.absPath
-        }
-        try in.seek(spec.offset)
-        catch { case _: java.io.EOFException => throw changed }
-        val d = Algos.chunkDigest(algo, spec.relPath.getBytes(UTF_8), spec.idx)
-        var remaining = spec.len
-        while (remaining > 0) {
-          val n = in.read(buf, 0, math.min(buf.length.toLong, remaining).toInt)
-          if (n < 0) throw changed
-          d.update(buf, 0, n)
-          remaining -= n
-        }
-        if (spec.offset + spec.len == spec.fileLen && in.read() >= 0) throw changed
-        ChunkDigest(spec.relPath, spec.idx, d.digest())
-      }
-      new Iterator[ChunkDigest] {
-        def hasNext: Boolean = { val h = digests.hasNext; if (!h) close(); h }
-        def next(): ChunkDigest = digests.next()
-      }
-    }
+    val conf = spark.sparkContext.broadcast(new SerializableConfiguration(hadoopConf))
+    specs.mapPartitions(it => digestPartition(algo, conf, it).map { case (s, d) =>
+      ChunkDigest(s.relPath, s.idx, d)
+    })
   }
 
   /** Re-stats the files the listing saw as empty: they have no chunk, so
-    * [[digestChunks]] never reads them. One that now holds bytes fails with
+    * [[digestListing]] never reads them. One that now holds bytes fails with
     * a [[FileChangedException]] naming its path. One stat per such file.
     */
   def checkListedEmpty(rootDir: String, entries: Seq[FileEntry],

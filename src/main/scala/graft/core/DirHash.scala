@@ -2,6 +2,7 @@ package graft.core
 
 import graft.fs.Listing
 import graft.hash.{Algos, HashSpec}
+import org.apache.spark.{SparkConf, SparkContext, SparkEnv}
 import org.apache.spark.sql.SparkSession
 
 /** Outcome of verifying a directory against an expected hash. Truthy iff
@@ -13,8 +14,9 @@ final case class HashComparisonResult(matches: Boolean, actualHash: String)
   * (/root/reference/dirhash.py:307-459), Spark-first:
   *
   *   1. driver: recursive listing (files + dirs, empty dirs included)
-  *   2. executors: chunk-digest every block of every file (one Dataset of
-  *      planned range reads — no per-file RDD union chain)
+  *   2. executors: chunk-digest every block of every file, as one plain
+  *      RDD job over planned range reads (no per-file RDD union chain,
+  *      no Catalyst planning) that collects only the digests
   *   3. the digests come back already in (relPath, idx) order, with no
   *      shuffle: the driver plans the chunks as contiguous, byte-balanced
   *      slices of that order, one per task, so a hash is one job of one
@@ -22,66 +24,66 @@ final case class HashComparisonResult(matches: Boolean, actualHash: String)
   *      plan time, and every byte is read and digested once
   *   4. driver: sequential, order-dependent digest fold (deliberately NOT a
   *      Spark aggregation — it is non-associative and non-commutative,
-  *      SURVEY.md §2.4). Collected rows are 28-64 B digests, so driver
+  *      SURVEY.md §2.4). Collected values are 28-64 B digests, so driver
   *      memory is bounded by chunk count exactly as in the reference.
+  *
+  * The session overloads run on the session's SparkContext.
   */
 object DirHash {
 
-  /** Runs `body` with the caller's session if one is active, otherwise
-    * with a private local session created here and stopped afterwards —
-    * the reference's SparkContext create-if-absent management
-    * (/root/reference/dirhash.py:325-335): a library caller gets the
-    * same no-arguments contract the CLI user gets.
+  /** Runs `body` on the running SparkContext if there is one, otherwise
+    * on a private local context created here and stopped afterwards — the
+    * reference's SparkContext create-if-absent management
+    * (/root/reference/dirhash.py:325-335): a library caller gets the same
+    * no-arguments contract the CLI user gets. A borrowed context, with or
+    * without a SparkSession over it, is never stopped (the reference only
+    * ever stops its own, dirhash.py:327-332).
     */
-  private def withSession[A](body: SparkSession => A): A =
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession) match {
-      case Some(s) => body(s)
-      case None =>
-        // a bare SparkContext without any SparkSession (legacy RDD
-        // caller): getOrCreate() would wrap it — we must not stop a
-        // context we did not create (the reference only ever stops its
-        // own, dirhash.py:327-332)
-        val borrowedContext = org.apache.spark.SparkEnv.get != null
-        val builder = SparkSession.builder().appName("DirHash")
-        if (!new org.apache.spark.SparkConf().contains("spark.master"))
-          builder.master("local[*]")
-        val spark = builder.getOrCreate()
-        try body(spark)
-        finally {
-          if (!borrowedContext) spark.stop()
-          SparkSession.clearActiveSession()
-          SparkSession.clearDefaultSession()
-        }
+  private def withContext[A](body: SparkContext => A): A =
+    if (SparkEnv.get != null) body(SparkContext.getOrCreate())
+    else {
+      val conf = new SparkConf().setAppName("DirHash")
+      if (!conf.contains("spark.master")) conf.setMaster("local[*]")
+      val sc = new SparkContext(conf)
+      try body(sc)
+      finally sc.stop()
     }
 
   /** No-session overloads (reference parity: every entry point accepts a
     * missing context, dirhash.py E1-E4). */
   def hashDirectoryRaw(dir: String, algo: String, blockSize: Long): String =
-    withSession(hashDirectoryRaw(_, dir, algo, blockSize))
+    withContext(hashDirectoryRaw(_, dir, algo, blockSize))
   def hashDirectory(dir: String, algo: String, blockSizeStr: String): String =
-    withSession(hashDirectory(_, dir, algo, blockSizeStr))
+    withContext(hashDirectory(_, dir, algo, blockSizeStr))
   def verifyRawDirectoryHash(dir: String, algo: String, blockSize: Long,
       expectedHex: String): HashComparisonResult =
-    withSession(verifyRawDirectoryHash(_, dir, algo, blockSize, expectedHex))
+    withContext(verifyRawDirectoryHash(_, dir, algo, blockSize, expectedHex))
   def verifyDirectoryHash(dir: String, hashString: String): HashComparisonResult =
-    withSession(verifyDirectoryHash(_, dir, hashString))
+    withContext(verifyDirectoryHash(_, dir, hashString))
+
+  /** Session overloads. */
+  def hashDirectoryRaw(spark: SparkSession, dir: String, algo: String, blockSize: Long): String =
+    hashDirectoryRaw(spark.sparkContext, dir, algo, blockSize)
+  def hashDirectory(spark: SparkSession, dir: String, algo: String, blockSizeStr: String): String =
+    hashDirectory(spark.sparkContext, dir, algo, blockSizeStr)
+  def verifyRawDirectoryHash(spark: SparkSession, dir: String, algo: String, blockSize: Long,
+      expectedHex: String): HashComparisonResult =
+    verifyRawDirectoryHash(spark.sparkContext, dir, algo, blockSize, expectedHex)
+  def verifyDirectoryHash(spark: SparkSession, dir: String, hashString: String): HashComparisonResult =
+    verifyDirectoryHash(spark.sparkContext, dir, hashString)
 
   /** Hex digest of `dir` under `algo` at `blockSize` bytes.
     * (reference `hash_directory_raw`, /root/reference/dirhash.py:307-444)
     */
-  def hashDirectoryRaw(spark: SparkSession, dir: String, algo: String, blockSize: Long): String = {
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
+  def hashDirectoryRaw(sc: SparkContext, dir: String, algo: String, blockSize: Long): String = {
+    val hadoopConf = sc.hadoopConfiguration
     val entries = Listing.list(dir, hadoopConf)
 
-    // Dataset-side plan: O(#files + #tasks) on the driver regardless of
-    // block size (the digest COLLECT below stays driver-bounded by
-    // design — that bound is the reference's own spec)
-    val specs = Chunker.planChunksDataset(spark, dir, entries, blockSize)
-    // the plan's partitions are consecutive runs of the (relPath, idx)
-    // order in UTF-8 bytes (== Python code-point order), digestChunks
-    // keeps row order and collect() keeps partition order: no sort here
-    val sortedDigests = Chunker.digestChunks(spark, specs, algo = algo,
-      hadoopConf = hadoopConf).collect()
+    // one RDD job, O(#files + #tasks) on the driver regardless of block
+    // size; its digests arrive in (relPath, idx) order in UTF-8 bytes
+    // (== Python code-point order), so nothing is sorted here. The collect
+    // stays driver-bounded by design — that bound is the reference's spec
+    val digests = Chunker.digestListing(sc, dir, entries, blockSize, algo)
     // a file listed empty has no chunk, so nothing above has read it
     Chunker.checkListedEmpty(dir, entries, hadoopConf)
 
@@ -102,16 +104,16 @@ object DirHash {
       firstEntry = false
     }
     h.update(zero)
-    sortedDigests.foreach(cd => h.update(cd.digest))
+    digests.foreach(d => h.update(d))
     Algos.hex(h.digest())
   }
 
   /** Versioned hash string `v1-<algo>-<blocksize>-<hex>` of `dir`.
     * (reference `hash_directory`, /root/reference/dirhash.py:446-459)
     */
-  def hashDirectory(spark: SparkSession, dir: String, algo: String, blockSizeStr: String): String = {
+  def hashDirectory(sc: SparkContext, dir: String, algo: String, blockSizeStr: String): String = {
     val blockSize = HashSpec.parseBlockSize(blockSizeStr)
-    val hex = hashDirectoryRaw(spark, dir, algo, blockSize)
+    val hex = hashDirectoryRaw(sc, dir, algo, blockSize)
     HashSpec.buildHashString(algo, blockSizeStr, hex)
   }
 
@@ -119,17 +121,17 @@ object DirHash {
     * (reference `verify_raw_directory_hash`, /root/reference/dirhash.py:521-535)
     */
   def verifyRawDirectoryHash(
-      spark: SparkSession, dir: String, algo: String, blockSize: Long,
+      sc: SparkContext, dir: String, algo: String, blockSize: Long,
       expectedHex: String): HashComparisonResult = {
-    val actual = hashDirectoryRaw(spark, dir, algo, blockSize)
+    val actual = hashDirectoryRaw(sc, dir, algo, blockSize)
     HashComparisonResult(actual == expectedHex, actual)
   }
 
   /** Parse a `v1-…` hash string, re-hash, compare.
     * (reference `verify_directory_hash`, /root/reference/dirhash.py:538-555)
     */
-  def verifyDirectoryHash(spark: SparkSession, dir: String, hashString: String): HashComparisonResult = {
+  def verifyDirectoryHash(sc: SparkContext, dir: String, hashString: String): HashComparisonResult = {
     val hs = HashSpec.parseHashString(hashString)
-    verifyRawDirectoryHash(spark, dir, hs.algo, hs.blockSize, hs.hexDigest)
+    verifyRawDirectoryHash(sc, dir, hs.algo, hs.blockSize, hs.hexDigest)
   }
 }

@@ -163,6 +163,11 @@ class ChunkerPropSpec extends AnyFunSuite {
         graft.fs.Listing.list(root.toString, conf), 1024L)
       def digest() = Chunker.digestChunks(spark, specs, -1L, "sha256", conf).collect()
       assert(digest().length == 3 + 5)
+      // the hash's own RDD job over the same (now stale) listing
+      val listing = graft.fs.Listing.list(root.toString, conf)
+      def rddDigests() = Chunker.digestListing(spark.sparkContext, root.toString, listing,
+        1024L, "sha256")
+      assert(rddDigests().map(_.toSeq).toSeq == digest().map(_.digest.toSeq).toSeq)
       val changed = root.resolve("a/one")
       def assertChanged(): Unit = {
         val e = intercept[Exception](digest())
@@ -171,6 +176,9 @@ class ChunkerPropSpec extends AnyFunSuite {
           .collectFirst { case f: FileChangedException => f }
         assert(typed.exists(f => f.path == changed.toString && f.listedLen == 3000L),
           s"no FileChangedException for $changed in the causes of $e")
+        // the hash path rethrows the typed error itself
+        val f = intercept[FileChangedException](rddDigests())
+        assert(f.path == changed.toString && f.listedLen == 3000L, f.getMessage)
       }
       // grew by one byte: the final chunk reads as listed, the EOF probe fails
       Files.write(changed, Array[Byte](9), java.nio.file.StandardOpenOption.APPEND)

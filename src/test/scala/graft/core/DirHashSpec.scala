@@ -4,11 +4,8 @@ import graft.SparkTestSession
 import graft.fs.{FileEntry, Listing}
 import graft.hash.{Algos, HashSpec}
 import org.apache.hadoop.fs.FileSystem
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -221,45 +218,34 @@ class DirHashSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("hash plan: no exchange, one job, a task per core, every byte read once") {
     // 1M blocks: 32 + 4 chunks, more than the session's cores
-    val executions = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
-    val qeListener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
-        executions.add(qe); ()
-      }
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
     val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val stages = new java.util.concurrent.atomic.AtomicInteger
     val tasks = new java.util.concurrent.atomic.AtomicInteger
-    val jobListener = new SparkListener {
+    val shuffleWritten = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = { tasks.incrementAndGet(); () }
+      override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit = {
+        stages.incrementAndGet(); ()
+      }
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
+        tasks.incrementAndGet()
+        shuffleWritten.addAndGet(te.taskMetrics.shuffleWriteMetrics.bytesWritten); ()
+      }
     }
     drainListeners()
-    spark.listenerManager.register(qeListener)
-    spark.sparkContext.addSparkListener(jobListener)
+    spark.sparkContext.addSparkListener(listener)
     val read0 = fileBytesRead()
     try {
       DirHash.hashDirectoryRaw(spark, root.toString, "sha256", 1024 * 1024)
       drainListeners()
-    } finally {
-      spark.listenerManager.unregister(qeListener)
-      spark.sparkContext.removeSparkListener(jobListener)
-    }
+    } finally spark.sparkContext.removeSparkListener(listener)
     val treeBytes = ZerosLen.toLong + Seq(LoremText, HelloText, PasswordsText, AbcText)
       .map(_.getBytes("UTF-8").length).sum
     assert(fileBytesRead() - read0 == treeBytes)
     assert(jobs.get == 1, s"${jobs.get} jobs for one hash")
+    assert(stages.get == 1, s"${stages.get} stages for one hash")
     assert(tasks.get == math.min(32 + 4, spark.sparkContext.defaultParallelism))
-
-    assert(executions.size == 1)
-    val plan = executions.peek().executedPlan
-    plan match {
-      case a: AdaptiveSparkPlanExec => assert(a.isFinalPlan)
-      case _ =>
-    }
-    val exchanges = new AdaptiveSparkPlanHelper {}
-      .collect(plan) { case e: ShuffleExchangeLike => e }
-    assert(exchanges.isEmpty, s"exchanges:\n${exchanges.mkString("\n")}")
+    assert(shuffleWritten.get == 0L, s"${shuffleWritten.get} shuffle bytes written")
   }
 
   test("fold order is UTF-8 (relPath, idx) order across range partitions, AQE on and off") {
