@@ -579,34 +579,34 @@ object Dedup {
         count(lit(1))).head()
       (r.getLong(0), r.getLong(1))
     }
-    var cur = edges.select(greatest($"s", $"d").as("s"), least($"s", $"d").as("d"))
-      .filter($"s" =!= $"d").distinct().localCheckpoint(true)
-    var prev = sig(cur)
-    var rounds = 0
-    var converged = cur.isEmpty
-    // one job per round (round-14, guide §2.4): the LAZY local
-    // checkpoint is materialized BY the checksum aggregate, so the
-    // former localCheckpoint(true) + agg pair (two driver round-trips
-    // per round) becomes one job — while the checkpoint still cuts the
-    // lineage (a plain persist does NOT: the star rounds reference the
-    // state several times each, so un-cut logical plans grow
-    // exponentially — measured a 2 GiB plan string by round ~15)
-    while (!converged && rounds < maxIters) {
-      val next = smallStar(largeStar(cur)).localCheckpoint(false)
-      val nextSig = sig(next)
-      // equal counts + empty one-sided diff over distinct sets = equal
-      converged = nextSig == prev && next.except(cur).isEmpty
-      prev = nextSig
-      cur = next
-      rounds += 1
-    }
+    // the star rounds reference the state several times each, so the
+    // loop's per-round checkpoint is what keeps the plan bounded
+    // (measured a 2 GiB plan string by round ~15 without it)
+    val init = edges.select(greatest($"s", $"d").as("s"), least($"s", $"d").as("d"))
+      .filter($"s" =!= $"d").distinct()
+    // the checksum of the state a round starts from (round 1 reads the
+    // init's)
+    var curSig: Option[(Long, Long)] = None
+    val (stars, rounds, stable) =
+      Memo.fixpoint(init, maxIters)(e => smallStar(largeStar(e))) { (cur, next) =>
+        val s = curSig.getOrElse(sig(cur))
+        curSig = Some(s)
+        // an empty edge set is already the fixpoint: `next` is never read
+        s._2 > 0 && {
+          val nextSig = sig(next)
+          curSig = Some(nextSig)
+          // equal counts + empty one-sided diff over distinct sets = equal
+          !(nextSig == s && next.except(cur).isEmpty)
+        }
+      }
     // a non-star edge set would emit DUPLICATE doc rows with conflicting
     // labels downstream — fail loudly instead (star contraction converges
     // in O(log² n); hitting maxIters means something is deeply wrong)
-    if (!converged && rounds >= maxIters)
+    if (!stable)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIters rounds")
-    (cur, rounds)
+    // the empty edge set's no-op round is not a contraction round
+    (stars, if (curSig.exists(_._2 == 0)) 0 else rounds)
   }
 
   /** The production dedup composition (see BASELINE.md scale table):

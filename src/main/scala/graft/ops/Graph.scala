@@ -1,14 +1,65 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics over the embedding KNN graph — the
   * centrality signal data-curation pipelines use to pick representative
   * documents out of near-dup neighborhoods (connected components for the
   * keep/drop partition live in [[Dedup.connectedComponents]]).
+  *
+  * Every exit-detected loop here runs through [[Memo.fixpoint]].
   */
 object Graph {
+
+  /** The e12 fixed-point scale of the integer PageRank state. */
+  private val e12 = 1000000000000L
+
+  /** The corpus's vector ids: the node set of every KNN graph. */
+  private def vecIds(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(s"$dir/embeddings.parquet").select(col("vec_id"))
+
+  /** The undirected closure of [[Similarity.knnGraph]], declared once:
+    * each edge canonicalized to (a = min, b = max), deduplicated.
+    */
+  private def undirectedKnn(spark: SparkSession, dir: String, nPlanes: Int,
+      k: Int): DataFrame =
+    Similarity.knnGraph(spark, dir, nPlanes, k)
+      .select(least(col("vec_id"), col("neighbor_id")).as("a"),
+        greatest(col("vec_id"), col("neighbor_id")).as("b"))
+      .distinct()
+
+  /** Both orientations (u, v) of a canonical (a, b) edge list. */
+  private def bothWays(und: DataFrame): DataFrame =
+    und.select(col("a").as("u"), col("b").as("v"))
+      .unionByName(und.select(col("b").as("u"), col("a").as("v")))
+
+  /** The query-local scope over the undirected KNN closure: `body` gets
+    * the canonical edges `und` (a, b), persisted while it runs, and
+    * `directed`, both orientations as (u, v). `body` must checkpoint or
+    * collect what it returns.
+    */
+  private def withUndirectedKnn[A](spark: SparkSession, dir: String,
+      nPlanes: Int, k: Int)(body: (DataFrame, DataFrame) => A): A = {
+    val und = undirectedKnn(spark, dir, nPlanes, k)
+    Memo.withPersisted(und)(body(und, bothWays(und)))
+  }
+
+  /** The query-local scope over the directed KNN edges: `body` gets the
+    * edges (src, dst), persisted while it runs, and the same edges with
+    * the source's out-degree riding along as `deg` (the join reuses the
+    * edge exchange on src — same key both sides). `body` must checkpoint
+    * or collect what it returns.
+    */
+  private def withDirectedKnn[A](spark: SparkSession, dir: String,
+      nPlanes: Int, k: Int)(body: (DataFrame, DataFrame) => A): A = {
+    val edges = Similarity.knnGraph(spark, dir, nPlanes, k)
+      .select(col("vec_id").as("src"), col("neighbor_id").as("dst"))
+    Memo.withPersisted(edges) {
+      body(edges,
+        edges.join(edges.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src"))
+    }
+  }
 
   /** PageRank over [[Similarity.knnGraph]]'s directed top-k edges:
     * `iters` synchronous power-iteration rounds of
@@ -19,23 +70,16 @@ object Graph {
     * Per round: one join of the persisted edge table against the current
     * rank vector on src (both corpus-node-sized, co-keyed) plus one
     * map-side-combined groupBy(dst) — the canonical Spark PageRank
-    * shuffle shape, with localCheckpoint cutting the per-round lineage.
-    * Dangling nodes (no out-edges — a vector alone in its LSH bucket)
-    * keep their base (1−d)/N and their mass leaks, the deterministic
-    * simplification both this and the oracle compute identically.
+    * shuffle shape. Dangling nodes (no out-edges — a vector alone in its
+    * LSH bucket) keep their base (1−d)/N and their mass leaks, the
+    * deterministic simplification both this and the oracle compute
+    * identically.
     */
   def pageRankKnn(spark: SparkSession, dir: String, iters: Int = 5,
       damping: Double = 0.85, nPlanes: Int = 8, k: Int = 3): DataFrame = {
     import spark.implicits._
-    val edges = Similarity.knnGraph(spark, dir, nPlanes, k)
-      .select($"vec_id".as("src"), $"neighbor_id".as("dst"))
-    Memo.withPersisted(edges) {
-      // out-degree rides along each edge row; the join reuses the edge
-      // exchange on src (same key both sides)
-      val withDeg = edges
-        .join(edges.groupBy($"src").agg(count(lit(1)).as("deg")), "src")
-      val nodes = spark.read.parquet(s"$dir/embeddings.parquet")
-        .select($"vec_id")
+    withDirectedKnn(spark, dir, nPlanes, k) { (_, withDeg) =>
+      val nodes = vecIds(spark, dir)
       // one tiny driver-side count (the same bounded-scalar pattern as the
       // dedupClusters edge count): N parameterizes every round's literals
       val n = nodes.count()
@@ -86,35 +130,74 @@ object Graph {
   def knnTriangles(spark: SparkSession, dir: String, nPlanes: Int = 8,
       k: Int = 3): DataFrame = {
     import spark.implicits._
-    val und = Similarity.knnGraph(spark, dir, nPlanes, k)
-      .select(least($"vec_id", $"neighbor_id").as("a"),
-        greatest($"vec_id", $"neighbor_id").as("b"))
-      .distinct()
-    Memo.withPersisted(und) {
-    val tri = und.as("e1")
-      .join(und.as("e2"), col("e1.b") === col("e2.a"))
-      .join(und.as("e3"),
-        col("e1.a") === col("e3.a") && col("e2.b") === col("e3.b"))
-      .select(col("e1.a").as("x"), col("e1.b").as("y"), col("e2.b").as("z"))
-    val perNode = tri
-      .select(explode(array($"x", $"y", $"z")).as("vec_id"))
-      .groupBy($"vec_id").agg(count(lit(1)).as("n_triangles"))
-    val deg = und
-      .select(explode(array($"a", $"b")).as("vec_id"))
-      .groupBy($"vec_id").agg(count(lit(1)).as("degree"))
-    spark.read.parquet(s"$dir/embeddings.parquet")
-      .select($"vec_id")
-      .join(deg, Seq("vec_id"), "left")
-      .join(perNode, Seq("vec_id"), "left")
-      .select($"vec_id",
-        coalesce($"degree", lit(0L)).as("degree"),
-        coalesce($"n_triangles", lit(0L)).as("n_triangles"))
-      .withColumn("clustering_coeff",
-        when($"degree" >= 2,
-          round($"n_triangles" * lit(2.0) / ($"degree" * ($"degree" - 1)), 6)))
-      .localCheckpoint(true)
+    withUndirectedKnn(spark, dir, nPlanes, k) { (und, _) =>
+      val tri = und.as("e1")
+        .join(und.as("e2"), col("e1.b") === col("e2.a"))
+        .join(und.as("e3"),
+          col("e1.a") === col("e3.a") && col("e2.b") === col("e3.b"))
+        .select(col("e1.a").as("x"), col("e1.b").as("y"), col("e2.b").as("z"))
+      val perNode = tri
+        .select(explode(array($"x", $"y", $"z")).as("vec_id"))
+        .groupBy($"vec_id").agg(count(lit(1)).as("n_triangles"))
+      val deg = und
+        .select(explode(array($"a", $"b")).as("vec_id"))
+        .groupBy($"vec_id").agg(count(lit(1)).as("degree"))
+      vecIds(spark, dir)
+        .join(deg, Seq("vec_id"), "left")
+        .join(perNode, Seq("vec_id"), "left")
+        .select($"vec_id",
+          coalesce($"degree", lit(0L)).as("degree"),
+          coalesce($"n_triangles", lit(0L)).as("n_triangles"))
+        .withColumn("clustering_coeff",
+          when($"degree" >= 2,
+            round($"n_triangles" * lit(2.0) / ($"degree" * ($"degree" - 1)), 6)))
+        .localCheckpoint(true)
     }
   }
+
+  /** One synchronous LPA round over `edges` (u, v), the body q170 and
+    * q224 share: every node takes the MODE of its neighbors' labels,
+    * ties broken (count DESC, label ASC); nodes with no neighbors keep
+    * their label. Returns (vec_id, prev, lbl).
+    */
+  private def lpaRound(edges: DataFrame, labels: DataFrame): DataFrame = {
+    // argmax via min_by on the packed (−count, label) struct key — same
+    // (count DESC, label ASC) pick as a rank window, without the
+    // per-round partition sort the window would add
+    val mode = edges.join(labels, col("v") === col("vec_id"))
+      .groupBy(col("u"), col("lbl")).agg(count(lit(1)).as("c"))
+      .groupBy(col("u"))
+      .agg(min_by(col("lbl"), struct((-col("c")).as("nc"), col("lbl")))
+        .as("new_lbl"))
+      .withColumnRenamed("u", "vec_id")
+    labels.join(mode, Seq("vec_id"), "left")
+      .select(col("vec_id"), col("lbl").as("prev"),
+        coalesce(col("new_lbl"), col("lbl")).as("lbl"))
+  }
+
+  /** Every node in its own community to start: label = vec_id. */
+  private def ownLabels(spark: SparkSession, dir: String): DataFrame =
+    vecIds(spark, dir).select(col("vec_id"), col("vec_id").as("lbl"))
+
+  /** Per community: size and the smallest member (the stable name). */
+  private def communities(labels: DataFrame): DataFrame =
+    labels.groupBy(col("lbl").as("community_id"))
+      .agg(count(lit(1)).as("n_members"), min(col("vec_id")).as("min_member"))
+      .localCheckpoint(true)
+
+  /** Shared LPA core: the undirected KNN closure + `rounds` fixed
+    * [[lpaRound]]s. `body` receives (canonical edges, final labels)
+    * while the edge cache is held, and MUST checkpoint what it returns.
+    */
+  private def withLpaLabels[A](spark: SparkSession, dir: String,
+      rounds: Int, nPlanes: Int, k: Int)(
+      body: (DataFrame, DataFrame) => A): A =
+    withUndirectedKnn(spark, dir, nPlanes, k) { (und, edges) =>
+      val labels = (1 to rounds).foldLeft(ownLabels(spark, dir)) { (l, _) =>
+        lpaRound(edges, l).select(col("vec_id"), col("lbl"))
+      }
+      body(und, labels)
+    }
 
   /** Synchronous label propagation over the undirected KNN closure
     * (q170): every node starts in its own community (label = vec_id);
@@ -134,50 +217,10 @@ object Graph {
     * every round — and released after the node-sized result is
     * checkpointed.
     */
-  /** Shared LPA core: undirected closure of the KNN graph (persisted
-    * canonical a<b edge list) + the synchronous mode-of-neighbors label
-    * rounds. `body` receives (canonical edges, final labels) while the
-    * edge cache is held, and MUST checkpoint what it returns.
-    */
-  private def withLpaLabels[A](spark: SparkSession, dir: String,
-      rounds: Int, nPlanes: Int, k: Int)(
-      body: (DataFrame, DataFrame) => A): A = {
-    import spark.implicits._
-    val und = Similarity.knnGraph(spark, dir, nPlanes, k)
-      .select(least($"vec_id", $"neighbor_id").as("a"),
-        greatest($"vec_id", $"neighbor_id").as("b"))
-      .distinct()
-    Memo.withPersisted(und) {
-      val edges = und.select($"a".as("u"), $"b".as("v"))
-        .unionByName(und.select($"b".as("u"), $"a".as("v")))
-      val nodes = spark.read.parquet(s"$dir/embeddings.parquet")
-        .select($"vec_id")
-      var labels = nodes.select($"vec_id", $"vec_id".as("lbl"))
-      for (_ <- 1 to rounds) {
-        // argmax via min_by on the packed (−count, label) struct key —
-        // same (count DESC, label ASC) pick as a rank window, without
-        // the per-round partition sort the window would add
-        val mode = edges.join(labels, $"v" === $"vec_id")
-          .groupBy($"u", $"lbl").agg(count(lit(1)).as("c"))
-          .groupBy($"u")
-          .agg(min_by($"lbl", struct((-$"c").as("nc"), $"lbl")).as("new_lbl"))
-          .withColumnRenamed("u", "vec_id")
-        labels = labels.join(mode, Seq("vec_id"), "left")
-          .select($"vec_id", coalesce($"new_lbl", $"lbl").as("lbl"))
-      }
-      body(und, labels)
-    }
-  }
-
   def labelPropagation(spark: SparkSession, dir: String, rounds: Int = 3,
-      nPlanes: Int = 8, k: Int = 3): DataFrame = {
-    import spark.implicits._
-    withLpaLabels(spark, dir, rounds, nPlanes, k) { (_, labels) =>
-      labels.groupBy($"lbl".as("community_id"))
-        .agg(count(lit(1)).as("n_members"), min($"vec_id").as("min_member"))
-        .localCheckpoint(true)
-    }
-  }
+      nPlanes: Int = 8, k: Int = 3): DataFrame =
+    withLpaLabels(spark, dir, rounds, nPlanes, k)((_, labels) =>
+      communities(labels))
 
   /** LPA to FIXPOINT (q224): the q170 synchronous rounds iterated until
     * a round changes NO label — the community structure the fixed-round
@@ -189,48 +232,39 @@ object Graph {
     * `maxRounds` unrolled rounds on every input, and the oracle unrolls
     * the same `maxRounds` CTE blocks.
     *
-    * Convergence-loop discipline (the q70/q220 rule): labels are
-    * localCheckpoint'ed per round — each round references the previous
-    * labelling twice (mode join + coalesce fallback) plus the
-    * changed-count action, and an un-cut lineage re-evaluates every
-    * prior round per reference.
+    * The loop is a [[Memo.fixpoint]]: each round references the previous
+    * labelling twice (mode join + coalesce fallback), and the changed-
+    * label count is the round's one action.
     */
   def labelPropagationFixpoint(spark: SparkSession, dir: String,
       maxRounds: Int = 8, nPlanes: Int = 8, k: Int = 3): DataFrame = {
     import spark.implicits._
-    val und = Similarity.knnGraph(spark, dir, nPlanes, k)
-      .select(least($"vec_id", $"neighbor_id").as("a"),
-        greatest($"vec_id", $"neighbor_id").as("b"))
-      .distinct()
-    Memo.withPersisted(und) {
-      val edges = und.select($"a".as("u"), $"b".as("v"))
-        .unionByName(und.select($"b".as("u"), $"a".as("v")))
-      val nodes = spark.read.parquet(s"$dir/embeddings.parquet")
-        .select($"vec_id")
-      var labels = nodes.select($"vec_id", $"vec_id".as("lbl"))
-        .localCheckpoint(true)
-      var changed = 1L
-      var r = 0
-      while (r < maxRounds && changed > 0) {
-        val mode = edges.join(labels, $"v" === $"vec_id")
-          .groupBy($"u", $"lbl").agg(count(lit(1)).as("c"))
-          .groupBy($"u")
-          .agg(min_by($"lbl", struct((-$"c").as("nc"), $"lbl")).as("new_lbl"))
-          .withColumnRenamed("u", "vec_id")
-        // one job per round: LAZY local checkpoint materialized by the
-        // convergence count (the q225 round-14 treatment)
-        val next = labels.join(mode, Seq("vec_id"), "left")
-          .select($"vec_id", $"lbl".as("prev"),
-            coalesce($"new_lbl", $"lbl").as("lbl"))
-          .localCheckpoint(false)
-        changed = next.filter($"lbl" =!= $"prev").count()
-        labels = next.select($"vec_id", $"lbl")
-        r += 1
-      }
-      labels.groupBy($"lbl".as("community_id"))
-        .agg(count(lit(1)).as("n_members"), min($"vec_id").as("min_member"))
-        .localCheckpoint(true)
+    withUndirectedKnn(spark, dir, nPlanes, k) { (_, edges) =>
+      val (labels, _, _) = Memo.fixpoint(ownLabels(spark, dir), maxRounds)(
+        lpaRound(edges, _))((_, next) =>
+        next.filter($"lbl" =!= $"prev").count() > 0)
+      communities(labels)
     }
+  }
+
+  /** The exact-integer PageRank loop q225 and q257 share, a
+    * [[Memo.fixpoint]]: from `init` (vec_id, r), each round sets
+    * r ← tele + (85·Σ_{u→v} (r_u div deg_u)) div 100 until no r changes,
+    * at most `maxIters` rounds. `tele` is the round's teleport column.
+    * Returns the final state (vec_id, prev, r) and the rounds run.
+    */
+  private def intPageRank(withDeg: DataFrame, init: DataFrame, tele: Column,
+      maxIters: Int): (DataFrame, Int) = {
+    val (ranks, rounds, _) = Memo.fixpoint(init, maxIters) { ranks =>
+      val inMass = withDeg.join(ranks, col("src") === col("vec_id"))
+        .select(col("dst"), expr("r div deg").as("c"))
+        .groupBy(col("dst")).agg(sum(col("c")).as("s"))
+      ranks.select(col("vec_id"), col("r").as("prev"))
+        .join(inMass, col("vec_id") === col("dst"), "left")
+        .select(col("vec_id"), col("prev"),
+          (tele + expr("(85 * coalesce(s, 0L)) div 100")).as("r"))
+    }((_, next) => next.filter(col("r") =!= col("prev")).count() > 0)
+    (ranks, rounds)
   }
 
   /** PageRank under EXACT e12-scaled integer arithmetic with sound
@@ -270,50 +304,21 @@ object Graph {
       dir: String, maxIters: Int = 12, nPlanes: Int = 8,
       k: Int = 3): (DataFrame, Int) = {
     import spark.implicits._
-    val scale = 1000000000000L
-    val edges = Similarity.knnGraph(spark, dir, nPlanes, k)
-      .select($"vec_id".as("src"), $"neighbor_id".as("dst"))
-    Memo.withPersisted(edges) {
-      val withDeg = edges
-        .join(edges.groupBy($"src").agg(count(lit(1)).as("deg")), "src")
-      val nodes = spark.read.parquet(s"$dir/embeddings.parquet")
-        .select($"vec_id")
+    withDirectedKnn(spark, dir, nPlanes, k) { (_, withDeg) =>
+      val nodes = vecIds(spark, dir)
       val n = nodes.count()
       if (n == 0) {
         (nodes.select($"vec_id", lit(0L).as("rank_e12"),
           lit(0.0).as("rank_ratio")), 0)
       } else {
-        val tele = (scale * 15L / 100L) / n
-        var ranks = nodes.select($"vec_id", lit(scale / n).as("r"))
-          .localCheckpoint(true)
-        var changed = 1L
-        var it = 0
-        while (it < maxIters && changed > 0) {
-          val inMass = withDeg.join(ranks, $"src" === $"vec_id")
-            .select($"dst", expr("r div deg").as("c"))
-            .groupBy($"dst").agg(sum($"c").as("s"))
-          // ONE job per round (round-14, guide §2.4): the LAZY local
-          // checkpoint is materialized BY the convergence count, which
-          // scans every partition — so the state blocks land and `changed`
-          // comes back in the same driver round-trip, replacing the
-          // eager-checkpoint + count() pair. localCheckpoint (not persist)
-          // because the round references `ranks` twice: only a checkpoint
-          // cuts the lineage, and un-cut plans grow exponentially here.
-          val next = ranks.select($"vec_id", $"r".as("prev"))
-            .join(inMass, $"vec_id" === $"dst", "left")
-            .select($"vec_id", $"prev",
-              (lit(tele) +
-                expr(s"(85 * coalesce(s, 0L)) div 100")).as("r"))
-            .localCheckpoint(false)
-          changed = next.filter($"r" =!= $"prev").count()
-          ranks = next.select($"vec_id", $"r")
-          it += 1
-        }
+        val (ranks, it) = intPageRank(withDeg,
+          nodes.select($"vec_id", lit(e12 / n).as("r")),
+          lit((e12 * 15L / 100L) / n), maxIters)
         // cast r to double BEFORE multiplying: r * n in BIGINT overflows
         // Long once n ≳ 1e7 with a concentrated hub rank (ADVICE r7)
         (ranks
           .select($"vec_id", $"r".as("rank_e12"),
-            round($"r".cast("double") * n / scale, 6).as("rank_ratio"))
+            round($"r".cast("double") * n / e12, 6).as("rank_ratio"))
           .localCheckpoint(true), it)
       }
     }
@@ -344,45 +349,21 @@ object Graph {
       dir: String, maxIters: Int = 12, nPlanes: Int = 8, k: Int = 3,
       seedMax: Long = 8L): (DataFrame, Int) = {
     import spark.implicits._
-    val scale = 1000000000000L
-    val edges = Similarity.knnGraph(spark, dir, nPlanes, k)
-      .select($"vec_id".as("src"), $"neighbor_id".as("dst"))
-    Memo.withPersisted(edges) {
-      val withDeg = edges
-        .join(edges.groupBy($"src").agg(count(lit(1)).as("deg")), "src")
-      val nodes = spark.read.parquet(s"$dir/embeddings.parquet")
-        .select($"vec_id")
+    withDirectedKnn(spark, dir, nPlanes, k) { (_, withDeg) =>
+      val nodes = vecIds(spark, dir)
       val ns = nodes.filter($"vec_id" < seedMax).count()
       if (ns == 0) {
         (nodes.select($"vec_id", lit(0L).as("ppr_e12"),
           lit(false).as("is_seed"), lit(0.0).as("ppr_mass")), 0)
       } else {
-        val teleSeed = (scale * 15L / 100L) / ns
         val seedCol = $"vec_id" < seedMax
-        var ranks = nodes.select($"vec_id",
-            when(seedCol, lit(scale / ns)).otherwise(lit(0L)).as("r"))
-          .localCheckpoint(true)
-        var changed = 1L
-        var it = 0
-        while (it < maxIters && changed > 0) {
-          val inMass = withDeg.join(ranks, $"src" === $"vec_id")
-            .select($"dst", expr("r div deg").as("c"))
-            .groupBy($"dst").agg(sum($"c").as("s"))
-          // one job per round: LAZY local checkpoint materialized by the
-          // convergence count (the q225 round-14 treatment)
-          val next = ranks.select($"vec_id", $"r".as("prev"))
-            .join(inMass, $"vec_id" === $"dst", "left")
-            .select($"vec_id", $"prev",
-              (when(seedCol, lit(teleSeed)).otherwise(lit(0L)) +
-                expr(s"(85 * coalesce(s, 0L)) div 100")).as("r"))
-            .localCheckpoint(false)
-          changed = next.filter($"r" =!= $"prev").count()
-          ranks = next.select($"vec_id", $"r")
-          it += 1
-        }
+        def onSeeds(v: Long) = when(seedCol, lit(v)).otherwise(lit(0L))
+        val (ranks, it) = intPageRank(withDeg,
+          nodes.select($"vec_id", onSeeds(e12 / ns).as("r")),
+          onSeeds((e12 * 15L / 100L) / ns), maxIters)
         (ranks
           .select($"vec_id", $"r".as("ppr_e12"), seedCol.as("is_seed"),
-            round($"r".cast("double") / scale, 6).as("ppr_mass"))
+            round($"r".cast("double") / e12, 6).as("ppr_mass"))
           .localCheckpoint(true), it)
       }
     }
@@ -436,69 +417,76 @@ object Graph {
     }
   }
 
+  /** One k-core peel over canonical edges (a, b), the body q135 and q220
+    * share: the nodes of degree ≥ `k` (`keep`: node, deg) and the edges
+    * whose endpoints both survive. The edge list is read three times
+    * (the degree count + both semi-joins), so a loop of peels must cut
+    * its lineage per round or re-run round r−1's subtree 3^r times —
+    * measured 19 s vs ~1 s at sf0.1. The cut table is node-bounded
+    * (≤ corpus × 2k edges), so the barrier is cheap.
+    */
+  private def kCorePeel(edges: DataFrame, k: Int): (DataFrame, DataFrame) = {
+    val keep = edges.select(explode(array(col("a"), col("b"))).as("node"))
+      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+      .filter(col("deg") >= k)
+    (keep, edges
+      .join(keep.select(col("node").as("a")), Seq("a"), "left_semi")
+      .join(keep.select(col("node").as("b")), Seq("b"), "left_semi"))
+  }
+
+  /** Per vector: in the core iff among the last peel's `keep`, and its
+    * degree among the surviving `edges`.
+    */
+  private def kCoreRows(spark: SparkSession, dir: String, edges: DataFrame,
+      keep: DataFrame): DataFrame = {
+    import spark.implicits._
+    val coreDeg = edges.select(explode(array($"a", $"b")).as("node"))
+      .groupBy($"node").agg(count(lit(1)).as("core_deg"))
+    vecIds(spark, dir)
+      .join(keep.withColumnRenamed("node", "vec_id")
+        .select($"vec_id", lit(true).as("in_core")), Seq("vec_id"), "left")
+      .join(coreDeg.withColumnRenamed("node", "vec_id"), Seq("vec_id"), "left")
+      .select($"vec_id", coalesce($"in_core", lit(false)).as("in_core"),
+        coalesce($"core_deg", lit(0L)).as("core_deg"))
+      .localCheckpoint(true)
+  }
+
   /** k-core decomposition, `rounds` fixed pruning rounds (q135): rounds
     * of "drop nodes with degree < k, re-derive degrees among survivors"
     * over the undirected KNN closure — the density filter that separates
     * tight near-dup communities from hub-and-spoke noise before anyone
-    * trusts a cluster. Fixed-round (not to-convergence) keeps the
-    * lineage plan-time-bounded — the q70 lesson: no per-round
-    * materialization barrier — and makes the operator deterministic for
-    * the oracle, which unrolls the same rounds as CTEs.
+    * trusts a cluster. Fixed-round (not to-convergence) makes the
+    * operator deterministic for the oracle, which unrolls the same
+    * rounds as CTEs; each round's edges are still checkpointed eagerly
+    * (see [[kCorePeel]]) — the case the q70 fixed-iteration rule
+    * explicitly carves out.
     *
     * Per round: one explode + node-keyed count and two semi-joins on
     * node ids — degree ≤ 2·knnK bounds every fan-out by a CONSTANT; no
     * step is ever corpus² even on a 100-TB graph.
     */
   def kCore(spark: SparkSession, dir: String, k: Int = 2, rounds: Int = 3,
-      nPlanes: Int = 8, knnK: Int = 3): DataFrame = {
-    import spark.implicits._
-    val und0 = Similarity.knnGraph(spark, dir, nPlanes, knnK)
-      .select(least($"vec_id", $"neighbor_id").as("a"),
-        greatest($"vec_id", $"neighbor_id").as("b"))
-      .distinct()
-    Memo.withPersisted(und0) {
-    var edges = und0.select($"a", $"b")
-    var keep: DataFrame = null
-    for (_ <- 1 to rounds) {
-      keep = edges.select(explode(array($"a", $"b")).as("node"))
-        .groupBy($"node").agg(count(lit(1)).as("deg"))
-        .filter($"deg" >= k)
-      // eager checkpoint per round: each round references the previous
-      // edge set THREE times (the degree count + both semi-joins), so an
-      // un-cut lineage re-evaluates round r−1's subtree 3^r times —
-      // measured 19 s vs ~1 s at sf0.1. The checkpointed table is
-      // node-bounded (≤ corpus × 2k edges), so the barrier is cheap —
-      // this is the convergence-loop case the q70 fixed-iteration rule
-      // explicitly carves out.
-      edges = edges
-        .join(keep.select($"node".as("a")), Seq("a"), "left_semi")
-        .join(keep.select($"node".as("b")), Seq("b"), "left_semi")
-        .localCheckpoint(true)
+      nPlanes: Int = 8, knnK: Int = 3): DataFrame =
+    withUndirectedKnn(spark, dir, nPlanes, knnK) { (und, _) =>
+      var edges = und.select(col("a"), col("b"))
+      var keep: DataFrame = null
+      for (_ <- 1 to rounds) {
+        val (kept, survivors) = kCorePeel(edges, k)
+        keep = kept
+        edges = survivors.localCheckpoint(true)
+      }
+      kCoreRows(spark, dir, edges, keep)
     }
-    val coreDeg = edges.select(explode(array($"a", $"b")).as("node"))
-      .groupBy($"node").agg(count(lit(1)).as("core_deg"))
-    spark.read.parquet(s"$dir/embeddings.parquet")
-      .select($"vec_id")
-      .join(keep.withColumnRenamed("node", "vec_id").select($"vec_id", lit(true).as("in_core")),
-        Seq("vec_id"), "left")
-      .join(coreDeg.withColumnRenamed("node", "vec_id"), Seq("vec_id"), "left")
-      .select($"vec_id", coalesce($"in_core", lit(false)).as("in_core"),
-        coalesce($"core_deg", lit(0L)).as("core_deg"))
-      .localCheckpoint(true)
-    }
-  }
 
   /** k-core to FIXPOINT (q220): the [[kCore]] pruning loop iterated
     * until a round removes no nodes — the TRUE k-core, which the
     * fixed-round variant only reaches if the peel depth happens to fit
     * its round budget — capped at `maxRounds` so a pathological chain
-    * graph (peel depth O(n)) cannot run unbounded. Convergence is
-    * detected on the survivor count: one driver-side count() per round
-    * against the just-checkpointed (already materialized) edge table —
-    * the connectedComponents stability pattern, with the same per-round
-    * localCheckpoint discipline (each round references the previous
-    * edge set three times; an un-cut lineage re-evaluates round r−1
-    * 3^r times).
+    * graph (peel depth O(n)) cannot run unbounded. The loop is a
+    * [[Memo.fixpoint]]: convergence is detected on the surviving-edge
+    * count, and each round's count() is the action that materializes
+    * that round's lazily checkpointed edge table — the
+    * connectedComponents stability pattern.
     *
     * The cap is part of the SEMANTICS, not just a guard: "prune to
     * fixpoint, at most `maxRounds` rounds" equals exactly `maxRounds`
@@ -509,47 +497,25 @@ object Graph {
     * converged.
     */
   def kCoreFixpoint(spark: SparkSession, dir: String, k: Int = 2,
-      maxRounds: Int = 12, nPlanes: Int = 8, knnK: Int = 3): DataFrame = {
-    import spark.implicits._
-    val und0 = Similarity.knnGraph(spark, dir, nPlanes, knnK)
-      .select(least($"vec_id", $"neighbor_id").as("a"),
-        greatest($"vec_id", $"neighbor_id").as("b"))
-      .distinct()
-    Memo.withPersisted(und0) {
-      var edges = und0.select($"a", $"b").localCheckpoint(true)
-      var keep: DataFrame = edges.select(explode(array($"a", $"b")).as("node"))
-        .groupBy($"node").agg(count(lit(1)).as("deg"))
-        .filter($"deg" >= k)
-      var prevCount = -1L
-      var curCount = edges.count()
-      var r = 0
-      while (r < maxRounds && curCount != prevCount) {
-        keep = edges.select(explode(array($"a", $"b")).as("node"))
-          .groupBy($"node").agg(count(lit(1)).as("deg"))
-          .filter($"deg" >= k)
-        // one job per round: the surviving-edge count (this loop's
-        // convergence signal) materializes the LAZY local checkpoint
-        // (the q225 round-14 treatment)
-        edges = edges
-          .join(keep.select($"node".as("a")), Seq("a"), "left_semi")
-          .join(keep.select($"node".as("b")), Seq("b"), "left_semi")
-          .localCheckpoint(false)
-        prevCount = curCount
-        curCount = edges.count()
-        r += 1
+      maxRounds: Int = 12, nPlanes: Int = 8, knnK: Int = 3): DataFrame =
+    withUndirectedKnn(spark, dir, nPlanes, knnK) { (und, _) =>
+      // the keep set of the state the last round peeled (in_core reads
+      // it), and the surviving-edge count of the current state
+      var keep: Option[DataFrame] = None
+      var survivors: Option[Long] = None
+      val (edges, _, _) = Memo.fixpoint(und.select(col("a"), col("b")),
+          maxRounds) { e =>
+        val (kept, next) = kCorePeel(e, k)
+        keep = Some(kept)
+        next
+      } { (prev, next) =>
+        val before = survivors.getOrElse(prev.count())
+        val after = next.count()
+        survivors = Some(after)
+        after != before
       }
-      val coreDeg = edges.select(explode(array($"a", $"b")).as("node"))
-        .groupBy($"node").agg(count(lit(1)).as("core_deg"))
-      spark.read.parquet(s"$dir/embeddings.parquet")
-        .select($"vec_id")
-        .join(keep.withColumnRenamed("node", "vec_id")
-          .select($"vec_id", lit(true).as("in_core")), Seq("vec_id"), "left")
-        .join(coreDeg.withColumnRenamed("node", "vec_id"), Seq("vec_id"), "left")
-        .select($"vec_id", coalesce($"in_core", lit(false)).as("in_core"),
-          coalesce($"core_deg", lit(0L)).as("core_deg"))
-        .localCheckpoint(true)
+      kCoreRows(spark, dir, edges, keep.getOrElse(kCorePeel(edges, k)._1))
     }
-  }
 
   /** Connected-component census of the KNN graph (q216): component
     * count, largest-component mass, singleton share — the global
@@ -566,14 +532,10 @@ object Graph {
   def knnComponents(spark: SparkSession, dir: String, nPlanes: Int = 8,
       k: Int = 3): DataFrame = {
     import spark.implicits._
-    val und = Similarity.knnGraph(spark, dir, nPlanes, k)
-      .select(least($"vec_id", $"neighbor_id").as("s"),
-        greatest($"vec_id", $"neighbor_id").as("d"))
-      .distinct()
-    Memo.withPersisted(und) {
-      val (stars, _) = Dedup.connectedComponents(und)
-      val assign = spark.read.parquet(s"$dir/embeddings.parquet")
-        .select($"vec_id")
+    withUndirectedKnn(spark, dir, nPlanes, k) { (und, _) =>
+      val (stars, _) =
+        Dedup.connectedComponents(und.select($"a".as("s"), $"b".as("d")))
+      val assign = vecIds(spark, dir)
         .join(stars.select($"s".as("vec_id"), $"d".as("root")),
           Seq("vec_id"), "left")
         .select($"vec_id", coalesce($"root", $"vec_id").as("component"))
@@ -593,54 +555,53 @@ object Graph {
     }
   }
 
+  /** Frontier BFS over `edges` (u, v), the loop bfsLevels and
+    * harmonicCentrality share: a [[Memo.fixpoint]] whose state is one
+    * depth's fragment — the (`carry`, vec_id) pairs first reached at that
+    * depth, tagged with the depth in `levelCol` — and whose exit is an
+    * empty fragment (its count is the round's one action). `seeds` is
+    * the depth-0 fragment; `carry` names the columns a multi-source
+    * search keys on besides vec_id. Returns visited: the lazy union of
+    * the checkpointed fragments, so each reference scans materialized
+    * blocks with a depth-bounded plan.
+    */
+  private def frontierBfs(edges: DataFrame, seeds: DataFrame,
+      carry: Seq[String], levelCol: String, maxDepth: Int): DataFrame = {
+    val key = (carry :+ "vec_id").map(col)
+    var fragments = Vector.empty[DataFrame]
+    def visited = fragments.reduce(_ unionByName _)
+    val (last, _, _) = Memo.fixpoint(seeds, maxDepth) { frontier =>
+      fragments :+= frontier
+      edges.join(frontier.select(carry.map(col) :+ col("vec_id").as("u"): _*),
+          Seq("u"))
+        .select(carry.map(col) :+ col("v").as("vec_id"): _*).distinct()
+        .join(visited.select(key: _*), carry :+ "vec_id", "left_anti")
+        .select(key :+ lit(fragments.size.toLong).as(levelCol): _*)
+    }((_, next) => next.count() > 0)
+    fragments :+= last
+    visited
+  }
+
   /** BFS reachability levels from vector 0 over the KNN graph (q213):
     * per hop, how many NEW vectors the frontier reaches, plus the
     * never-reached remainder — the traversal primitive (and the
     * connectivity probe: a giant component shows as most mass within a
     * few hops; shattered buckets show as a large unreachable row).
     *
-    * Scale: classic frontier BFS — per hop one edge join against the
-    * frontier and one anti-join against the visited set, both keyed on
-    * node ids; visited is checkpointed per hop (the kcore
-    * convergence-loop rule: three references per round would otherwise
-    * re-run every prior hop).
+    * Scale: classic frontier BFS ([[frontierBfs]]) — per hop one edge
+    * join against the frontier and one anti-join against the visited
+    * set, both keyed on node ids.
     */
   def bfsLevels(spark: SparkSession, dir: String, maxDepth: Int = 4,
       nPlanes: Int = 8, k: Int = 3): DataFrame = {
     import spark.implicits._
-    val und = Similarity.knnGraph(spark, dir, nPlanes, k)
-      .select(least($"vec_id", $"neighbor_id").as("a"),
-        greatest($"vec_id", $"neighbor_id").as("b"))
-      .distinct()
-    Memo.withPersisted(und) {
-      val edges = und.select($"a".as("u"), $"b".as("v"))
-        .unionByName(und.select($"b".as("u"), $"a".as("v")))
-      var visited = spark.range(1).select(lit(0L).as("vec_id"),
-        lit(0L).as("level")).localCheckpoint(true)
-      var frontier = visited.select($"vec_id")
-      // ONE job per depth (the q225 round-14 treatment): the new-node
-      // count materializes the frontier fragment's LAZY local checkpoint
-      // and doubles as the exhaustion signal; `visited` stays a lazy
-      // union of the checkpointed per-depth fragments, so each
-      // reference scans materialized blocks with a depth-bounded plan
-      var depth = 1
-      var exhausted = false
-      while (depth <= maxDepth && !exhausted) {
-        val next = edges.join(frontier.withColumnRenamed("vec_id", "u"),
-            Seq("u"))
-          .select($"v".as("vec_id")).distinct()
-          .join(visited.select($"vec_id"), Seq("vec_id"), "left_anti")
-          .select($"vec_id", lit(depth.toLong).as("level"))
-          .localCheckpoint(false)
-        if (next.count() == 0) exhausted = true
-        visited = visited.unionByName(next)
-        frontier = next.select($"vec_id")
-        depth += 1
-      }
+    withUndirectedKnn(spark, dir, nPlanes, k) { (_, edges) =>
+      val visited = frontierBfs(edges,
+        spark.range(1).select(lit(0L).as("vec_id"), lit(0L).as("level")),
+        Nil, "level", maxDepth)
       val reached = visited.groupBy($"level")
         .agg(count(lit(1)).as("n_nodes"))
-      val unreached = spark.read.parquet(s"$dir/embeddings.parquet")
-        .select($"vec_id")
+      val unreached = vecIds(spark, dir)
         .join(visited.select($"vec_id"), Seq("vec_id"), "left_anti")
         .agg(count(lit(1)).as("n_nodes"))
         .select(lit(-1L).as("level"), $"n_nodes")
@@ -664,13 +625,8 @@ object Graph {
   def degreeAssortativity(spark: SparkSession, dir: String,
       nPlanes: Int = 8, k: Int = 3): DataFrame = {
     import spark.implicits._
-    val und = Similarity.knnGraph(spark, dir, nPlanes, k)
-      .select(least($"vec_id", $"neighbor_id").as("a"),
-        greatest($"vec_id", $"neighbor_id").as("b"))
-      .distinct()
-      .localCheckpoint(true)
-    val directed = und.select($"a".as("u"), $"b".as("v"))
-      .unionByName(und.select($"b".as("u"), $"a".as("v")))
+    val directed =
+      bothWays(undirectedKnn(spark, dir, nPlanes, k).localCheckpoint(true))
     val deg = directed.groupBy($"u".as("node")).agg(count(lit(1)).as("deg"))
     directed
       .join(deg.select($"node".as("u"), $"deg".as("du")), Seq("u"))
@@ -686,21 +642,6 @@ object Graph {
           .as("assortativity"))
   }
 
-  /** Adamic–Adar link prediction (q177): for every NON-adjacent node
-    * pair (u,v) of the KNN graph sharing at least one neighbor, the
-    * score Σ_w 1/ln(deg(w)) over common neighbors w — the classic
-    * "which edges are missing" signal (a common neighbor is strong
-    * evidence in proportion to how selective it is). Keeps each node's
-    * top `topK` predicted partners; scores are rounded BEFORE ranking
-    * (q67 rule) and ties break on partner id.
-    *
-    * Scale: the wedge join (adjacency self-joined on the shared center
-    * w) is Σ_w deg(w)² rows — deg is bounded by the KNN closure (≤ 2k
-    * after symmetrization plus reverse edges), so wedges are O(nodes ×
-    * k²), never all-pairs. Every common neighbor has deg ≥ 2, so
-    * 1/ln(deg) is always finite. The anti-join that removes existing
-    * edges and the degree join both key on node ids.
-    */
   /** HITS hubs-and-authorities (Kleinberg 1999) over the directed KNN
     * edge set, run as an exact INTEGER fixpoint (the q225 discipline):
     * e6-scaled BIGINT hub/authority vectors, per round
@@ -725,8 +666,8 @@ object Graph {
     *
     * Scale: per round two edge⋈state joins keyed on node id (KNN
     * out-degree ≤ k bounds the fan-out) + two map-side-combined
-    * rollups; the L1 totals are single-row broadcasts. Per-round
-    * localCheckpoint cuts the exit-detected loop's lineage (q220 rule).
+    * rollups; the L1 totals are single-row broadcasts. The loop is a
+    * [[Memo.fixpoint]] (q220 rule).
     */
   def hitsFixpoint(spark: SparkSession, dir: String, maxIters: Int = 6,
       nPlanes: Int = 8, k: Int = 3): DataFrame =
@@ -756,11 +697,8 @@ object Graph {
       dir: String, maxIters: Int = 6, nPlanes: Int = 8,
       k: Int = 3): (DataFrame, Int) = {
     import spark.implicits._
-    val edges = Similarity.knnGraph(spark, dir, nPlanes, k)
-      .select($"vec_id".as("src"), $"neighbor_id".as("dst"))
-    Memo.withPersisted(edges) {
-      val nodes = spark.read.parquet(s"$dir/embeddings.parquet")
-        .select($"vec_id")
+    withDirectedKnn(spark, dir, nPlanes, k) { (edges, _) =>
+      val nodes = vecIds(spark, dir)
       val n = nodes.count()
       if (n == 0) {
         (nodes.select($"vec_id", lit(0L).as("hub_e6"),
@@ -773,12 +711,10 @@ object Graph {
         // L1-renormalize an integer vector to total ≈ SCALE; tot is a
         // one-row aggregate joined by broadcast cross-join (never a
         // SinglePartition window)
-        def renorm(raw: DataFrame, col: String): DataFrame = {
-          val tot = raw.agg(greatest(sum(org.apache.spark.sql.functions
-            .col(col)), lit(1L)).as("tot"))
+        def renorm(raw: DataFrame, c: String): DataFrame = {
+          val tot = raw.agg(greatest(sum(col(c)), lit(1L)).as("tot"))
           raw.crossJoin(broadcast(tot))
-            .select($"vec_id",
-              expr(s"($col * $scale) div tot").as(col))
+            .select($"vec_id", expr(s"($c * $scale) div tot").as(c))
         }
         // State carries the SUPPORT only (rows with a nonzero sum path);
         // zero-in-degree / zero-out-degree nodes are implicit zeros — the
@@ -786,12 +722,9 @@ object Graph {
         // values are bit-identical to the dense formulation while each
         // round drops two parquet-scan left-joins whose only job was
         // materializing those zeros. They are re-added ONCE at the end.
-        var state = nodes
+        val init = nodes
           .select($"vec_id", lit(scale / n).as("h"), lit(scale / n).as("a"))
-          .localCheckpoint(true)
-        var changed = 1L
-        var it = 0
-        while (it < maxIters && changed > 0) {
+        val (state, it, _) = Memo.fixpoint(init, maxIters) { state =>
           val aAgg = edges.join(state.select($"vec_id", $"h"),
               $"src" === $"vec_id")
             .groupBy($"dst").agg(sum($"h").as("a"))
@@ -799,33 +732,28 @@ object Graph {
           // aNorm is referenced three times (h-sum via renorm's double
           // branch + the final join) — unmaterialized that re-evaluates
           // aAgg up to 6× per round, the Spark-side twin of the oracle's
-          // MATERIALIZED-CTE requirement. LAZY checkpoint (round-14): its
-          // blocks land inside the exit-count job below, chained through
-          // `next` — one driver round-trip per round instead of three.
+          // MATERIALIZED-CTE requirement. LAZY checkpoint: its blocks land
+          // inside the round's exit-count job, chained through the state.
           val aNorm = renorm(aAgg, "a").localCheckpoint(false)
           val hAgg = edges.join(aNorm.select($"vec_id".as("av"), $"a"),
               $"dst" === $"av")
             .groupBy($"src").agg(sum($"a").as("h"))
             .select($"src".as("vec_id"), $"h")
-          // lazy checkpoint materialized by the exit count below (the
-          // q225 round-14 treatment)
-          val next = renorm(hAgg, "h")
+          renorm(hAgg, "h")
             .join(aNorm, Seq("vec_id"), "full")
             .select($"vec_id", coalesce($"h", lit(0L)).as("h"),
               coalesce($"a", lit(0L)).as("a"))
-            .localCheckpoint(false)
+        } { (state, next) =>
           // the exit compares FULL states: support-only rows make a
           // vanished (or appeared) row a difference too, so a repeated
           // support state is a repeated full state — the cap argument
           // stays sound
-          changed = next
+          next
             .join(state.select($"vec_id", $"h".as("ph"), $"a".as("pa")),
               Seq("vec_id"), "full")
             .filter($"h".isNull || $"ph".isNull ||
               $"h" =!= $"ph" || $"a" =!= $"pa")
-            .count()
-          state = next
-          it += 1
+            .count() > 0
         }
         (nodes.join(state, Seq("vec_id"), "left")
           .select($"vec_id",
@@ -840,16 +768,26 @@ object Graph {
     }
   }
 
+  /** Adamic–Adar link prediction (q177): for every NON-adjacent node
+    * pair (u,v) of the KNN graph sharing at least one neighbor, the
+    * score Σ_w 1/ln(deg(w)) over common neighbors w — the classic
+    * "which edges are missing" signal (a common neighbor is strong
+    * evidence in proportion to how selective it is). Keeps each node's
+    * top `topK` predicted partners; scores are rounded BEFORE ranking
+    * (q67 rule) and ties break on partner id.
+    *
+    * Scale: the wedge join (adjacency self-joined on the shared center
+    * w) is Σ_w deg(w)² rows — deg is bounded by the KNN closure (≤ 2k
+    * after symmetrization plus reverse edges), so wedges are O(nodes ×
+    * k²), never all-pairs. Every common neighbor has deg ≥ 2, so
+    * 1/ln(deg) is always finite. The anti-join that removes existing
+    * edges and the degree join both key on node ids.
+    */
   def adamicAdar(spark: SparkSession, dir: String, nPlanes: Int = 8,
       k: Int = 3, topK: Int = 5): DataFrame = {
     import spark.implicits._
-    val und = Similarity.knnGraph(spark, dir, nPlanes, k)
-      .select(least($"vec_id", $"neighbor_id").as("a"),
-        greatest($"vec_id", $"neighbor_id").as("b"))
-      .distinct()
-    Memo.withPersisted(und) {
-      val adj = und.select($"a".as("u"), $"b".as("w"))
-        .unionByName(und.select($"b".as("u"), $"a".as("w")))
+    withUndirectedKnn(spark, dir, nPlanes, k) { (und, directed) =>
+      val adj = directed.select($"u", $"v".as("w"))
       val deg = adj.groupBy($"w").agg(count(lit(1)).as("deg"))
       val wedges = adj.select($"u", $"w")
         .join(adj.select($"u".as("v"), $"w"), Seq("w"))
@@ -885,13 +823,8 @@ object Graph {
   def clusteringCoefficient(spark: SparkSession, dir: String,
       nPlanes: Int = 8, k: Int = 3): DataFrame = {
     import spark.implicits._
-    val und = Similarity.knnGraph(spark, dir, nPlanes, k)
-      .select(least($"vec_id", $"neighbor_id").as("a"),
-        greatest($"vec_id", $"neighbor_id").as("b"))
-      .distinct()
-    Memo.withPersisted(und) {
-      val adj = und.select($"a".as("u"), $"b".as("w"))
-        .unionByName(und.select($"b".as("u"), $"a".as("w")))
+    withUndirectedKnn(spark, dir, nPlanes, k) { (und, directed) =>
+      val adj = directed.select($"u", $"v".as("w"))
       val deg = adj.groupBy($"u".as("vec_id")).agg(count(lit(1)).as("deg"))
       val wedges = adj.as("x").join(adj.as("y"),
           col("x.u") === col("y.u") && col("x.w") < col("y.w"))
@@ -900,9 +833,7 @@ object Graph {
       val closed = wedges
         .join(und, $"w1" === $"a" && $"w2" === $"b")
         .groupBy($"center".as("vec_id")).agg(count(lit(1)).as("n_closed"))
-      val nodes = spark.read.parquet(s"$dir/embeddings.parquet")
-        .select($"vec_id")
-      nodes
+      vecIds(spark, dir)
         .join(deg, Seq("vec_id"), "left")
         .join(closed, Seq("vec_id"), "left")
         .select($"vec_id",
@@ -935,45 +866,20 @@ object Graph {
     * both engines; the e6 sum over ≤nSources terms is ≤ 4e6, no
     * overflow anywhere near i64).
     *
-    * Scale: per hop one edge⋈frontier join + one (src, node)-keyed
-    * anti-join, state bounded by nSources × |V|; visited is
-    * checkpointed per hop (the q220 convergence-loop lineage rule).
+    * Scale: the [[frontierBfs]] loop keyed on (src, node) — per hop one
+    * edge⋈frontier join + one (src, node)-keyed anti-join, state
+    * bounded by nSources × |V|.
     */
   def harmonicCentrality(spark: SparkSession, dir: String,
       nSources: Int = 4, maxDepth: Int = 6, nPlanes: Int = 8,
       k: Int = 3): DataFrame = {
     import spark.implicits._
-    val und = Similarity.knnGraph(spark, dir, nPlanes, k)
-      .select(least($"vec_id", $"neighbor_id").as("a"),
-        greatest($"vec_id", $"neighbor_id").as("b"))
-      .distinct()
-    Memo.withPersisted(und) {
-      val edges = und.select($"a".as("u"), $"b".as("v"))
-        .unionByName(und.select($"b".as("u"), $"a".as("v")))
-      val nodes = spark.read.parquet(s"$dir/embeddings.parquet")
-        .select($"vec_id")
-      var visited = nodes.filter($"vec_id" < nSources)
-        .select($"vec_id".as("src"), $"vec_id", lit(0L).as("dist"))
-        .localCheckpoint(true)
-      var frontier = visited.select($"src", $"vec_id")
-      // one job per depth: the frontier count materializes the LAZY
-      // local checkpoint and is the exhaustion signal; visited is a lazy
-      // union of the checkpointed fragments (the q213 round-14 treatment)
-      var depth = 1
-      var exhausted = frontier.isEmpty
-      while (depth <= maxDepth && !exhausted) {
-        val next = edges
-          .join(frontier.withColumnRenamed("vec_id", "u"), Seq("u"))
-          .select($"src", $"v".as("vec_id")).distinct()
-          .join(visited.select($"src", $"vec_id"),
-            Seq("src", "vec_id"), "left_anti")
-          .select($"src", $"vec_id", lit(depth.toLong).as("dist"))
-          .localCheckpoint(false)
-        if (next.count() == 0) exhausted = true
-        visited = visited.unionByName(next)
-        frontier = next.select($"src", $"vec_id")
-        depth += 1
-      }
+    withUndirectedKnn(spark, dir, nPlanes, k) { (_, edges) =>
+      val nodes = vecIds(spark, dir)
+      val visited = frontierBfs(edges,
+        nodes.filter($"vec_id" < nSources)
+          .select($"vec_id".as("src"), $"vec_id", lit(0L).as("dist")),
+        Seq("src"), "dist", maxDepth)
       val per = visited.filter($"dist" > 0)
         .groupBy($"vec_id")
         .agg(count(lit(1)).as("n_sources_reached"),

@@ -151,4 +151,28 @@ object Memo {
     try body
     finally dfs.reverseIterator.foreach(_.unpersist())
   }
+
+  /** The exit-detected loop, declared once: `init` is checkpointed
+    * eagerly, then at most `maxRounds` rounds run. A round's `step`
+    * output is a LAZY local checkpoint, materialized by that round's
+    * `changed(prev, next)` action — one driver action per round, while
+    * the checkpoint still cuts the lineage (a persist does not: a round
+    * that reads its state more than once grows an un-cut plan
+    * exponentially). Returns (final state, rounds run, whether the last
+    * round was stable); zero rounds is not stable.
+    */
+  private[ops] def fixpoint(init: DataFrame, maxRounds: Int)(
+      step: DataFrame => DataFrame)(
+      changed: (DataFrame, DataFrame) => Boolean): (DataFrame, Int, Boolean) = {
+    var state = init.localCheckpoint(true)
+    var rounds = 0
+    var stable = false
+    while (rounds < maxRounds && !stable) {
+      val next = step(state).localCheckpoint(false)
+      stable = !changed(state, next)
+      state = next
+      rounds += 1
+    }
+    (state, rounds, stable)
+  }
 }

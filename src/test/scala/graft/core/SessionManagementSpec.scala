@@ -3,11 +3,13 @@ package graft.core
 import java.nio.file.{Files, Path}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Library-API session management (reference dirhash.py:325-335): every
+/** Library-API context management (reference dirhash.py:325-335): every
   * entry point works without a SparkSession argument — it borrows the
-  * active session when one exists, otherwise creates its own and stops
-  * it. The create-path needs a JVM with no SparkContext, so it runs in a
-  * forked probe JVM ([[SessionlessProbe]]).
+  * running SparkContext when there is one (with or without a session
+  * over it), otherwise creates a private bare SparkContext, builds no
+  * session, and stops the context afterwards. The create-path needs a
+  * JVM with no SparkContext, so it runs in a forked probe JVM
+  * ([[SessionlessProbe]]).
   */
 class SessionManagementSpec extends AnyFunSuite {
 
@@ -58,8 +60,9 @@ class SessionManagementSpec extends AnyFunSuite {
 }
 
 /** Runs in a fresh JVM with no SparkContext: asserts the no-session
-  * library API creates its own session, returns the right hash, and
-  * stops/unregisters the session afterwards.
+  * library API hashes on a private bare SparkContext, returns the right
+  * hash, and leaves no session registered (it builds none) and no
+  * context running afterwards.
   */
 object SessionlessProbe {
   def main(args: Array[String]): Unit = {

@@ -80,28 +80,27 @@ class GraphFixpointSpec extends AnyFunSuite {
   }
 
   test("fixpoint rounds run ONE standalone driver action each (lazy checkpoint + count merge)") {
-    // warm the KNN edge memo so only the loop's own jobs are counted,
-    // then count Spark jobs across a full pagerank fixpoint: per round
-    // the lazy local checkpoint must be materialized BY the convergence
-    // count — ONE action per round. Under AQE every shuffle-stage
-    // materialization is its own job, so the measured shape is ~8
-    // jobs/round (measured 92 for 12 rounds on this fixture); the bound
-    // pins against a recompute-chain regression (an un-cut lineage or a
-    // lost cache re-runs prior rounds per action and multiplies the
-    // count), with slack for stage-count variation.
-    Graph.pageRankFixpoint(spark, sf).collect()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
+    // Per exit-detected loop: warm the KNN edge memo so only the loop's
+    // own jobs are counted, then count Spark jobs across one full run.
+    // Per round the lazy local checkpoint must be materialized BY the
+    // round's exit action — ONE action per round. Under AQE every
+    // shuffle-stage materialization is its own job, so a round costs
+    // several jobs; each bound is the exact count this fixture measured
+    // for the loop before it moved onto Memo.fixpoint (the counts are
+    // deterministic for a fixed plan and fixture). An eager round
+    // checkpoint adds a job per round, and an un-cut lineage or a lost
+    // cache re-runs prior rounds per action; either breaks a bound.
+    def jobsOf(run: => Unit): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          jobs.incrementAndGet(); ()
+        }
       }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val iters =
+      spark.sparkContext.addSparkListener(listener)
       try {
-        val (df, it) = Graph.pageRankFixpointWithStats(spark, sf)
-        df.collect()
+        run
         // listenerBus is private[spark] — the same reflective drain the
         // bench uses, degrading to a bounded sleep
         try {
@@ -109,11 +108,32 @@ class GraphFixpointSpec extends AnyFunSuite {
           val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
           bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
         } catch { case _: Throwable => Thread.sleep(500L) }
-        it
       } finally spark.sparkContext.removeSparkListener(listener)
-    val n = jobs.get
-    info(s"pagerank fixpoint: $iters rounds, $n jobs")
-    assert(n <= 11 * iters + 12,
-      s"$n jobs for $iters rounds — a per-round recompute chain appeared")
+      jobs.get
+    }
+    Graph.pageRankFixpoint(spark, sf).collect()
+    val loops = Seq[(String, Int, () => Any)](
+      ("pageRankFixpoint", 92,
+        () => Graph.pageRankFixpoint(spark, sf).collect()),
+      ("personalizedPageRank", 92,
+        () => Graph.personalizedPageRank(spark, sf).collect()),
+      ("hitsFixpoint", 113, () => Graph.hitsFixpoint(spark, sf).collect()),
+      ("labelPropagationFixpoint", 64,
+        () => Graph.labelPropagationFixpoint(spark, sf).collect()),
+      ("kCoreFixpoint", 20,
+        () => Graph.kCoreFixpoint(spark, sf).collect()),
+      ("bfsLevels", 21,
+        () => Graph.bfsLevels(spark, sf, maxDepth = 20).collect()),
+      ("harmonicCentrality", 21,
+        () => Graph.harmonicCentrality(spark, sf).collect()),
+      // Dedup.connectedComponents, through the KNN component census
+      ("knnComponents", 31,
+        () => Graph.knnComponents(spark, sf).collect()))
+    loops.foreach { case (name, bound, run) =>
+      val n = jobsOf(run())
+      info(s"$name: $n jobs (bound $bound)")
+      assert(n <= bound,
+        s"$name: $n jobs, bound $bound — a per-round job or recompute chain appeared")
+    }
   }
 }

@@ -3,66 +3,13 @@ package graft.ops
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-/** Round-8 batch 2: HITS integer fixpoint, Efraimidis–Spirakis weighted
-  * sampling, Gram-identity label dispersion, Flesch readability.
+/** Round-8 batch 2: Efraimidis–Spirakis weighted sampling,
+  * Gram-identity label dispersion, Flesch readability.
   */
 class Round8bSpec extends AnyFunSuite {
 
   private val spark = graft.SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
-
-  test("hitsScale: e6 below a million nodes, n above it, loud failure past the i64 bound") {
-    // fixed e6 would floor the uniform init scale/n to 0 at n >= 1e6 and
-    // return all-zero centralities the oracle replays — the scale must
-    // grow with n and refuse past the renormalization overflow bound
-    assert(Graph.hitsScale(1L) == 1000000L)
-    assert(Graph.hitsScale(999999L) == 1000000L)
-    assert(Graph.hitsScale(1000000L) == 1000000L) // init = 1, still nonzero
-    assert(Graph.hitsScale(1000001L) == 1000001L)
-    assert(Graph.hitsScale(3000000000L) == 3000000000L)
-    // scale^2 must fit i64: raw <= scale after L1-renorm, raw*scale is
-    // the renormalization product
-    assert(Graph.hitsScale(3000000000L) * Graph.hitsScale(3000000000L) > 0)
-    intercept[IllegalArgumentException] { Graph.hitsScale(3000000001L) }
-  }
-
-  test("hitsFixpoint: L1-normalized integer state, cap-unroll equality, edgeless exit") {
-    val (df6, it6) = Graph.hitsFixpointWithStats(spark, sf, maxIters = 6)
-    val rows6 = df6.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
-    assert(rows6.nonEmpty && it6 <= 6)
-    // L1 discipline: each renormalized vector totals SCALE minus at
-    // most one truncated unit per node, and never exceeds SCALE
-    val scale = 1000000L
-    val hubTot = rows6.map(_._2).sum
-    val authTot = rows6.map(_._3).sum
-    assert(hubTot <= scale && hubTot > scale - rows6.length,
-      s"hub mass off-scale: $hubTot")
-    assert(authTot <= scale && authTot > scale - rows6.length,
-      s"auth mass off-scale: $authTot")
-    assert(rows6.forall(r => r._2 >= 0 && r._3 >= 0))
-    // cap-unroll argument: if the exit fired below the cap the state is
-    // stationary, so a deeper cap must change NOTHING; if the loop ran
-    // the full cap the oracle unrolls exactly those rounds instead
-    if (it6 < 6) {
-      val rows7 = Graph.hitsFixpoint(spark, sf, maxIters = 7).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
-      assert(rows6 == rows7, "early exit changed the answer")
-    }
-    // hubs and authorities concentrate SOMEWHERE: the max node holds
-    // more than the uniform share (the graph is not edgeless)
-    assert(rows6.map(_._3).max > scale / rows6.length)
-    // edgeless graph (one vector, alone in every LSH bucket): state
-    // drops to all-zero in round 1 and the exit detects it at round 2
-    import spark.implicits._
-    val dir = "/tmp/graft_hits_fixpoint_spec"
-    Seq((0L, Seq(1.0f, 0.5f), 1)).toDF("vec_id", "embedding", "label")
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val (dfE, itE) = Graph.hitsFixpointWithStats(spark, dir, maxIters = 50)
-    assert(itE == 2, s"edgeless graph should exit at round 2, ran $itE")
-    val e = dfE.collect()
-    assert(e.length == 1 && e.head.getLong(1) == 0L && e.head.getLong(2) == 0L)
-  }
 
   test("weightedSample: exactly the k smallest exponential keys, ranked") {
     import spark.implicits._

@@ -161,47 +161,6 @@ class Round8cSpec extends AnyFunSuite {
     assert(b(1) == 2L && b(0) == 0L)
   }
 
-  test("harmonicCentrality: brute-force multi-source BFS replay") {
-    // reference BFS over the same knn-derived undirected edge set
-    val knn = Similarity.knnGraph(spark, sf, 8, 3).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    val adj = knn.flatMap { case (a, b) => Seq(a -> b, b -> a) }
-      .distinct.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).toSet }
-    val allIds = spark.read.parquet(s"$sf/embeddings.parquet")
-      .select(col("vec_id")).collect().map(_.getLong(0)).sorted
-    val sources = allIds.filter(_ < 4)
-    assert(sources.nonEmpty)
-    val expect = scala.collection.mutable.Map[Long, (Long, Long)]()
-      .withDefaultValue((0L, 0L))
-    sources.foreach { s =>
-      val dist = scala.collection.mutable.Map(s -> 0)
-      var frontier = Set(s)
-      var d = 1
-      while (d <= 6 && frontier.nonEmpty) {
-        frontier = frontier.flatMap(u => adj.getOrElse(u, Set.empty))
-          .filterNot(dist.contains)
-        frontier.foreach(v => dist(v) = d)
-        d += 1
-      }
-      dist.foreach { case (v, dd) =>
-        if (dd > 0) {
-          val (n, h) = expect(v)
-          expect(v) = (n + 1, h + 1000000L / dd)
-        }
-      }
-    }
-    val got = Graph.harmonicCentrality(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    assert(got.length == allIds.length, "every vector must be emitted")
-    got.foreach { case (id, n, h) =>
-      val (en, eh) = expect(id)
-      assert(n == en && h == eh,
-        s"harmonic drifted for $id: got ($n,$h) want ($en,$eh)")
-    }
-    // the sample reaches SOMETHING beyond itself on real data
-    assert(got.exists(t => t._3 > 0 && !sources.contains(t._1)))
-  }
-
   test("distinctNgramDiversity: hand fixture with planted repetition") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft_dn").toString

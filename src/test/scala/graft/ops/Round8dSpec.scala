@@ -84,41 +84,6 @@ class Round8dSpec extends AnyFunSuite {
     }
   }
 
-  test("clusteringCoefficient: brute-force triangle replay; bounds hold") {
-    val knn = Similarity.knnGraph(spark, sf, 8, 3).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    val und = knn.map { case (a, b) => (math.min(a, b), math.max(a, b)) }
-      .distinct.toSet
-    val adj = und.toSeq.flatMap { case (a, b) => Seq(a -> b, b -> a) }
-      .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).toSet }
-    val allIds = spark.read.parquet(s"$sf/embeddings.parquet")
-      .select(col("vec_id")).collect().map(_.getLong(0))
-    val got = Graph.clusteringCoefficient(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        if (r.isNullAt(4)) None else Some(r.getDouble(4))))
-      .sortBy(_._1)
-    assert(got.length == allIds.length)
-    got.foreach { case (id, deg, closed, wedges, lcc) =>
-      val ns = adj.getOrElse(id, Set.empty)
-      assert(deg == ns.size.toLong, s"deg drifted for $id")
-      val pairs = ns.toSeq.sorted
-      var t = 0L
-      for (i <- pairs.indices; j <- (i + 1) until pairs.length)
-        if (und.contains((math.min(pairs(i), pairs(j)),
-            math.max(pairs(i), pairs(j))))) t += 1
-      assert(closed == t, s"closed wedges drifted for $id: $closed vs $t")
-      assert(wedges == ns.size.toLong * (ns.size - 1) / 2)
-      lcc match {
-        case Some(v) =>
-          assert(wedges > 0 && v >= 0.0 && v <= 1.0 + 1e-9)
-          assert(v == round6(t.toDouble / wedges))
-        case None => assert(wedges == 0)
-      }
-    }
-    // the knn graph on real data closes SOME triangle
-    assert(got.exists(_._3 > 0))
-  }
-
   test("cdcChunkStats: chunks reassemble the text; boundary law; dup ratio sane") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft_cdc").toString

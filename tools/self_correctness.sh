@@ -5,12 +5,17 @@
 # empty or missing driver CORRECTNESS_r<N>.json is immediately
 # diagnosable as a driver glitch vs a real regression.
 #
-# Usage: tools/self_correctness.sh <roundN> [sfDir] [outDir]
+# Usage: tools/self_correctness.sh <roundN> [sfDir] [outDir] [pattern ...]
+# Patterns after outDir go to graft.Verify as SparkEntry.select patterns
+# (a full query name, or its prefix up to `_`), so one family can be
+# re-checked alone, e.g.
+#   tools/self_correctness.sh 15 <sfDir> /tmp/v q216 q41
 set -euo pipefail
 cd "$(dirname "$0")/.."
-N="${1:?usage: self_correctness.sh <roundN> [sfDir] [outDir]}"
+N="${1:?usage: self_correctness.sh <roundN> [sfDir] [outDir] [pattern ...]}"
 SF="${2:-/root/testdata/sf0.01}"
 OUT="${3:-/tmp/graft_self_verify}"
+shift $(( $# < 3 ? $# : 3 ))
 CP="target/scala-2.13/classes:/opt/spark/jars/*"
 JOPTS="--add-opens java.base/java.lang=ALL-UNNAMED \
  --add-opens java.base/java.lang.invoke=ALL-UNNAMED \
@@ -28,5 +33,5 @@ JOPTS="--add-opens java.base/java.lang=ALL-UNNAMED \
  -Dspark.ui.enabled=false"
 sbt -batch compile 1>&2
 # shellcheck disable=SC2086
-java $JOPTS -cp "$CP" graft.Verify "$SF" "$OUT"
+java $JOPTS -cp "$CP" graft.Verify "$SF" "$OUT" "$@"
 python3 tools/compare_oracle.py "$SF" "$OUT" --json "CORRECTNESS_SELF_r${N}.json"
