@@ -843,6 +843,7 @@ object Graph {
         .withColumn("lcc",
           when($"n_wedges" > 0,
             round($"n_closed".cast("double") / $"n_wedges", 6)))
+        .localCheckpoint(true) // fills und's persist before it is dropped
     }
   }
 

@@ -917,15 +917,6 @@ object Similarity {
           .as("hybrid"))
   }
 
-  /** Label purity per SRP-LSH bucket (q132): for each of the 2^nPlanes
-    * hash buckets, the share of its vectors carrying the bucket's
-    * majority label (ties → smallest label) — the cheap external check
-    * of whether the LSH partitioning respects the label structure, run
-    * before anyone trusts bucketed near-dup candidates. Signatures are
-    * the same static-plane scan projection as every SRP operator (zero
-    * shuffle); everything downstream aggregates (bucket, label) cells —
-    * at most 2^nPlanes × |labels| rows.
-    */
   /** Greedy k-center coreset selection (q174): `k` rounds of
     * farthest-point sampling — start from the lowest vec_id, then
     * repeatedly add the vector maximizing its cosine DISTANCE to the
@@ -1076,6 +1067,15 @@ object Similarity {
     }
   }
 
+  /** Label purity per SRP-LSH bucket (q132): for each of the 2^nPlanes
+    * hash buckets, the share of its vectors carrying the bucket's
+    * majority label (ties → smallest label) — the cheap external check
+    * of whether the LSH partitioning respects the label structure, run
+    * before anyone trusts bucketed near-dup candidates. Signatures are
+    * the same static-plane scan projection as every SRP operator (zero
+    * shuffle); everything downstream aggregates (bucket, label) cells —
+    * at most 2^nPlanes × |labels| rows.
+    */
   def lshLabelPurity(spark: SparkSession, dir: String, nPlanes: Int = 4): DataFrame = {
     import spark.implicits._
     val cells = emb(spark, dir)
@@ -2165,58 +2165,11 @@ object Similarity {
     }
   }
 
-  /** Greedy graph-routed ANN, swept over out-degree (q293): the
-    * navigable-graph search family (HNSW's layer-0 descent,
-    * NSG/Vamana's beam-width-1 special case) joining the SRP-LSH
-    * (q31), IVF (q19), PQ-ADC (q269) and IVF-PQ (q280) index shapes.
-    * The graph is a banded-SRP kNN digraph — the q51 band geometry
-    * WITHOUT the label constraint (routing must bridge labels) — with
-    * out-edges ranked by EXACT e3-integer d² (routing is iterative, so
-    * the trajectory must be engine-identical: no float comparison
-    * anywhere). Each query greedily descends from a fixed entry node:
-    * per hop, move to the (d², id)-lexicographic minimum over the
-    * current node's out-neighbors ∪ {current}; a step that keeps the
-    * current node is converged. One arm per out-degree in `kOuts` —
-    * the OPERATING TABLE (the q277 discipline): greedy beam-1 descent
-    * CAN stall in a local minimum, and on this corpus it does at
-    * k_out ≤ 8 (0/4 queries reach the true NN) while k_out = 16/32
-    * reach it for 2/4 and 3/4 — out-degree is the knob that buys hit
-    * rate, measured, not hoped.
-    *
-    * Exact-dedup-first (the q215/q162 treatment, applied to vectors):
-    * the index holds ONE representative (min vec_id) per distinct e3
-    * vector, and each query's own content group is excluded from its
-    * candidates and its exact arm — the nearest DISTINCT-content
-    * neighbor, the semantic a dedup pipeline actually wants (a
-    * byte-identical twin is a trivial d²=0 answer). On an all-distinct
-    * corpus this is IDENTICAL to routing over the raw corpus; on a
-    * duplicated one it collapses the banded buckets back to distinct
-    * content — without it the Σ bucket² candidate volume grows
-    * quadratically in duplication (measured: 297 s at 10× replication,
-    * ~16 s with rep-first).
-    *
-    * Scale: the rep map is one exact-dedup groupBy (the q13 shape);
-    * the graph build is the q15/q51 banded bucket join over reps
-    * (never all-pairs; plane count grows with the corpus to keep
-    * buckets bounded) + ONE per-src ranking window shared by every arm
-    * (millions of tiny partitions, no skew). Routing state is KB-sized
-    * (|queries| × (cur, d², hops)) and driver-steered like the
-    * Lloyd/k-means trajectories: each hop probes the persisted
-    * adjacency and vector cache with ≤ |queries|·k keys — on a real
-    * deployment the adjacency is a key-value index and each hop is
-    * |queries| point lookups, the property that makes graph ANN the
-    * latency king. The exact arm is one zero-shuffle scan (the literal
-    * query vectors exploded per row) + a |queries|-group argmin,
-    * shared by all arms. The oracle unrolls the identical hop
-    * trajectory per arm as MATERIALIZED per-step CTEs (the q74/q105
-    * replay discipline; materialization keeps the chain linear where
-    * plain CTE inlining re-evaluates the graph build 2^hops times).
-    */
   /** The query-independent core of the routing index: e3-quantized
     * vectors, dedup-first reps, and the banded-SRP ranked edge table
     * (top-[[RouteIndexMaxK]] out-edges per rep by exact e3 d²). Shared
-    * by the driver-steered pair (q293/q294), their wide md5-sampled
-    * twins (q296/q297) and the distributed batch path — ONE build per
+    * by every routing query (q293/q294, their wide md5-sampled twins
+    * q296/q297, q304, q305) and the q298 artifact — ONE build per
     * (corpus, geometry). All three DataFrames are persisted; the memo
     * cache owns the lifetime and closes the index on eviction.
     */
@@ -2224,16 +2177,6 @@ object Similarity {
       ranked: DataFrame) extends AutoCloseable {
     def close(): Unit = { ranked.unpersist(); e3r.unpersist(); e3.unpersist() }
   }
-
-  /** The driver-steered routing overlay behind q293/q294: the shared
-    * [[EdgeIndex]] plus the literal query/entry vectors, each query's
-    * content-group rep, and the shared exact-NN arm. Holds no persisted
-    * state of its own — the edge-index memo owns the frames.
-    */
-  private final case class RouteIndex(e3: DataFrame, e3r: DataFrame,
-      ranked: DataFrame, qVecs: Map[Long, Array[Long]],
-      qRep: Map[Long, Long], entryV: Array[Long],
-      exMap: Map[Long, (Long, Long)])
 
   /** The q51/q293/q294 banded-SRP signatures as plain Columns over an
     * `embedding` array<float> column: bit (pid % r) of band (pid / r)
@@ -2260,12 +2203,6 @@ object Similarity {
     }
   }
 
-  private def routeD2(a: Array[Long], b: Array[Long]): Long = {
-    var acc = 0L; var i = 0
-    while (i < a.length) { val d = a(i) - b(i); acc += d * d; i += 1 }
-    acc
-  }
-
   /** The widest out-degree any routing query slices: the edge table is
     * built ONCE at this width and every arm filters `rn <= k` out of
     * it, so q293 (k ≤ 32) and q294 (k = 16) share one memoized index.
@@ -2275,22 +2212,9 @@ object Similarity {
   private val edgeIndexCache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String, Int, Int, Long), Option[EdgeIndex]]
 
-  private val routeIndexCache = scala.collection.concurrent.TrieMap
-    .empty[(EdgeIndex, Seq[Long], Long), Option[RouteIndex]]
-
-  /** The widest query batch the DRIVER-STEERED routing path accepts
-    * (round-11 verdict: the exact arm and the rep-matching filter fold
-    * ONE literal struct/equality PER QUERY into single plan nodes, so
-    * plan cost is O(|queries|) — this repo measured that failure mode
-    * at q280's pre-`pq_res_encode` 16×33 struct tree, ~25 s in planning
-    * alone). Larger batches must use [[graphRouteAnnBatch]] /
-    * [[beamRouteAnnBatch]], where query vectors ride as a joined table.
-    */
-  val RouteQueryBatchMax = 64
-
   /** Memoized query-independent edge index (one banded build per
-    * corpus × geometry, shared by every routing query and both probe
-    * styles); eviction closes the persisted frames. Callers must NOT
+    * corpus × geometry, shared by every routing query); eviction closes
+    * the persisted frames. Callers must NOT
     * close the returned index — the cache owns its lifetime.
     */
   private def buildEdgeIndex(spark: SparkSession, dir: String,
@@ -2359,9 +2283,8 @@ object Similarity {
     // discipline (catalog hit → no-op; files from a previous JVM →
     // marker-checked DDL re-registration, no rebuild; else pay the
     // build+write). Every later session's q293-q299 read the layout;
-    // bucketing on src makes the per-hop src-equality probes
-    // bucket-prunable and the batch frontier⋈adjacency joins
-    // co-located. Staleness follows the q219 rule: the tag keys the
+    // bucketing on src co-locates the per-hop frontier⋈adjacency
+    // joins. Staleness follows the q219 rule: the tag keys the
     // corpus PATH (+ geometry), and a corpus rewritten in place under
     // the same path must drop the artifact dir (in-session rewrites
     // re-key the Memo via its fingerprint but would re-register the
@@ -2372,7 +2295,7 @@ object Similarity {
       Seq("src"), path)
     val ranked = spark.table(tbl)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ranked.count() // materialize once before the hop probes
+    ranked.count() // materialize once before the first descent
     Some(EdgeIndex(e3, e3r, ranked))
   }
 
@@ -2389,268 +2312,10 @@ object Similarity {
   }
 
   /** Test hook: evict every cached edge index (closing its persisted
-    * frames; route overlays over it then miss by construction), so a
-    * spec can exercise the cold-start read path against the durable
-    * on-disk artifact.
+    * frames), so a spec can exercise the cold-start read path against
+    * the durable on-disk artifact.
     */
   private[ops] def evictEdgeIndexes(): Unit = Memo.evictAll(edgeIndexCache)
-
-  /** Memoized (the kmvSketchTable discipline): the q293/q294 pair runs
-    * back-to-back in a sweep and the banded build is the dominant
-    * cost. Keyed on the [[EdgeIndex]] INSTANCE it overlays, so a
-    * rebuilt index (evicted, or a rewritten corpus) misses by
-    * construction. Holds no persisted state of its own (the edge-index
-    * memo owns the frames), so its eviction releases nothing.
-    */
-  private def buildRouteIndex(spark: SparkSession, dir: String,
-      nPlanes: Int, nBands: Int, maxK: Int, queryIds: Seq[Long],
-      entryId: Long): Option[RouteIndex] = {
-    require(maxK <= RouteIndexMaxK,
-      s"out-degree $maxK exceeds the shared index width $RouteIndexMaxK")
-    require(!queryIds.contains(entryId), "entry node cannot be a query")
-    // the plan-size guard (the evalTierGuard discipline): every query
-    // in THIS path becomes a literal struct in the exact arm and a
-    // literal equality in the rep filter — O(|queries|) plan nodes
-    require(queryIds.size <= RouteQueryBatchMax,
-      s"driver-steered routing folds one literal plan node per query; " +
-        s"${queryIds.size} queries > RouteQueryBatchMax=$RouteQueryBatchMax " +
-        "— use graphRouteAnnBatch/beamRouteAnnBatch (query vectors as a " +
-        "joined table) for large batches")
-    buildEdgeIndex(spark, dir, nPlanes, nBands).flatMap { idx =>
-      Memo.cached(routeIndexCache, (idx, queryIds, entryId),
-          label = "routeIndex") {
-        buildRouteIndexUncached(spark, idx, queryIds, entryId)
-      }
-    }
-  }
-
-  private def buildRouteIndexUncached(spark: SparkSession, idx: EdgeIndex,
-      queryIds: Seq[Long], entryId: Long): Option[RouteIndex] = {
-    import spark.implicits._
-    val (e3, e3r) = (idx.e3, idx.e3r)
-    // bounded plan-time collects: |queries| + 1 vectors of 64 longs
-    val qVecs: Map[Long, Array[Long]] =
-      e3.filter($"vec_id".isin(queryIds: _*)).collect()
-        .map(row => row.getLong(0) -> row.getSeq[Long](1).toArray).toMap
-    val entryV = e3.filter($"vec_id" === entryId).collect()
-      .headOption.map(_.getSeq[Long](1).toArray)
-    if (entryV.isEmpty || qVecs.isEmpty) return None
-    // each query's rep: the min id sharing ITS content — the one
-    // index node excluded from that query's candidates and exact arm.
-    // ONE job over the persisted reps (an OR of |queries| + 1 content
-    // equalities), matched back driver-side by array equality
-    val qList = qVecs.toSeq.sortBy(_._1)
-    val contentHits = e3r.filter(
-        (qList.map { case (_, qv) => $"v" === array(qv.map(lit(_)): _*) } :+
-          ($"vec_id" === entryId)).reduce(_ || _))
-      .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-    val qRep: Map[Long, Long] = qList.map { case (q, qv) =>
-      val rep = contentHits.find(rv => java.util.Arrays.equals(rv._2, qv))
-      require(rep.nonEmpty, s"query $q: no rep for its content group " +
-        "(the query row itself guarantees one — corpus changed mid-build?)")
-      q -> rep.get._1
-    }.toMap
-    // the oracle's s0 seeds from qd, which holds REPS only — a non-rep
-    // entry would leave the oracle empty while the engine routes, so
-    // refuse loudly (entryId = the global min id is always its group's
-    // rep; anything else must prove it)
-    require(contentHits.exists(_._1 == entryId),
-      s"entry $entryId is not its content group's representative — " +
-        "the oracle's rep-only seed would diverge from the engine")
-    // exact arm (shared): one zero-shuffle scan over the reps, the
-    // literal query vectors exploded per row (each carrying its
-    // content-group rep to exclude), argmin by (d², id) struct min
-    val dcols = qVecs.toSeq.sortBy(_._1).map { case (q, qv) =>
-      struct(lit(q).as("query_id"), lit(qRep(q)).as("rep_id"),
-        call_function("pq_d2", $"v", lit(0),
-          array(qv.map(lit(_)): _*)).as("d2"))
-    }
-    val exMap = e3r
-      .select($"vec_id", explode(array(dcols: _*)).as("qd"))
-      .select($"vec_id", $"qd.query_id".as("query_id"),
-        $"qd.rep_id".as("rep_id"), $"qd.d2".as("d2"))
-      .filter($"vec_id" =!= $"rep_id")
-      .groupBy($"query_id")
-      .agg(min(struct($"d2", $"vec_id")).as("m"))
-      .collect()
-      .map(row => (row.getLong(0),
-        (row.getStruct(1).getLong(1), row.getStruct(1).getLong(0)))).toMap
-    Some(RouteIndex(e3, e3r, idx.ranked, qVecs, qRep, entryV.get, exMap))
-  }
-
-  /** One hop-probe: the RANKED out-neighbors (rn ≤ maxK) of `curIds`
-    * and the e3 vectors of every non-query id they reach — two bounded
-    * collects against the persisted index (the per-hop point-lookup
-    * pattern). Returns (dst, rn) pairs so the caller can slice any
-    * arm's k ≤ maxK out of ONE probe — the arms lock-step on a shared
-    * fetch instead of each paying its own jobs.
-    */
-  private def probeHop(idx: RouteIndex, curIds: Seq[Long], maxK: Int)
-      : (Map[Long, Seq[(Long, Int)]], Map[Long, Array[Long]]) = {
-    import org.apache.spark.sql.functions.col
-    val adj: Map[Long, Seq[(Long, Int)]] =
-      idx.ranked.filter(col("src").isin(curIds: _*) && col("rn") <= maxK)
-        .collect().groupBy(_.getLong(0))
-        .map { case (s, rows) =>
-          s -> rows.map(r => (r.getLong(1), r.getInt(2))).toSeq }
-    val needIds = adj.values.flatten.map(_._1).toSeq.distinct
-      .filterNot(idx.qVecs.contains)
-    val fetched: Map[Long, Array[Long]] =
-      if (needIds.isEmpty) Map.empty
-      else idx.e3r.filter(col("vec_id").isin(needIds: _*)).collect()
-        .map(row => row.getLong(0) -> row.getSeq[Long](1).toArray).toMap
-    (adj, fetched ++ idx.qVecs)
-  }
-
-  def graphRouteAnn(spark: SparkSession, dir: String, nPlanes: Int = 16,
-      nBands: Int = 4, kOuts: Seq[Int] = Seq(4, 8, 16, 32),
-      maxHops: Int = 6, queryIds: Seq[Long] = Seq(7L, 13L, 29L, 42L),
-      entryId: Long = 0L): DataFrame = {
-    import spark.implicits._
-    require(kOuts.nonEmpty && kOuts == kOuts.sorted && kOuts.distinct == kOuts,
-      s"kOuts must be distinct ascending, got $kOuts")
-    val empty = Seq.empty[(Long, Long, Long, Long, Long, Long, Long, Boolean)]
-      .toDF("k_out", "query_id", "routed_id", "routed_d2", "n_hops",
-        "exact_id", "exact_d2", "hit")
-    buildRouteIndex(spark, dir, nPlanes, nBands, kOuts.max, queryIds,
-        entryId) match {
-      case None => empty
-      case Some(idx) =>
-          // greedy descent per arm, driver-steered: state(q) = (cur,
-          // d2, hops). A converged query is a fixpoint of the step map
-          // (the argmin over nbrs(cur) ∪ {cur} keeps picking cur), so
-          // early-exiting it is value-identical to the oracle's full
-          // maxHops unroll. The arms run in LOCK-STEP sharing one
-          // probe per hop (each slices its k out of the maxK fetch) —
-          // identical trajectories, 1/|arms| of the probe jobs.
-          var states: Map[Int, Map[Long, (Long, Long, Long)]] =
-            kOuts.map { k =>
-              k -> idx.qVecs.map { case (q, qv) =>
-                q -> (entryId, routeD2(qv, idx.entryV), 0L) }
-            }.toMap
-          var liveByK: Map[Int, Set[Long]] =
-            kOuts.map(k => k -> idx.qVecs.keySet).toMap
-          var h = 0
-          while (h < maxHops && liveByK.values.exists(_.nonEmpty)) {
-            val curIds = (for ((k, live) <- liveByK.toSeq; q <- live)
-              yield states(k)(q)._1).distinct
-            val (adjAll, vAll) = probeHop(idx, curIds, kOuts.max)
-            for (k <- kOuts) {
-              var state = states(k)
-              val moved = liveByK(k).flatMap { q =>
-                val (cur, curD2, hops) = state(q)
-                val best = adjAll.getOrElse(cur, Seq.empty)
-                  .filter(e => e._2 <= k && e._1 != idx.qRep(q)) // this
-                  // arm's out-degree; the query's content group is not
-                  // in its index (its rep is the d²=0 trivial answer)
-                  .flatMap { case (id, _) => vAll.get(id)
-                    .map(v => (routeD2(idx.qVecs(q), v), id)) }
-                  .foldLeft((curD2, cur)) { case (b, c) =>
-                    if (c._1 < b._1 || (c._1 == b._1 && c._2 < b._2)) c else b }
-                if (best._2 == cur) None
-                else { state += q -> (best._2, best._1, hops + 1); Some(q) }
-              }
-              states += k -> state
-              liveByK += k -> moved
-            }
-            h += 1
-          }
-          val arms = kOuts.map(k => (k, states(k)))
-          arms.flatMap { case (k, state) =>
-            queryIds.sorted.flatMap { q =>
-              // a query whose content group IS the entry has no s0 row
-              // in the oracle (its rep is excluded from its qd) — drop
-              // it here too so the engines agree on the degenerate case
-              for { st <- state.get(q) if idx.qRep(q) != entryId
-                    ex <- idx.exMap.get(q) }
-                yield (k.toLong, q, st._1, st._2, st._3, ex._1, ex._2,
-                  st._1 == ex._1)
-            }
-          }.toDF("k_out", "query_id", "routed_id", "routed_d2", "n_hops",
-          "exact_id", "exact_d2", "hit")
-    }
-  }
-
-  /** Beam-width sweep over the q293 graph (q294): the OTHER knob of
-    * navigable-graph search. Out-degree fixed at `kOut` (= q293's
-    * middle arm); per beam width B the frontier holds the B best
-    * (d², id) nodes seen so far, and each hop replaces it with the
-    * top-B of DISTINCT(frontier ∪ out-neighbors(frontier) − the
-    * query's rep). The frontier always contains its own previous
-    * members as candidates, so the best distance is non-increasing;
-    * B = 1 is EXACTLY q293's greedy arm at the same k (spec-asserted
-    * against q293's k_out = 16 rows — the cross-query law). Output per
-    * (beam, query): the final best node vs the exact NN.
-    *
-    * Scale: same index, same per-hop point-lookup pattern — each hop
-    * probes ≤ |queries|·B adjacency keys; frontier state is
-    * |queries|·B (id, d²) pairs on the driver. The oracle unrolls the
-    * same frontier recurrence as MATERIALIZED per-step CTEs with a
-    * row_number ≤ B cut.
-    */
-  def beamRouteAnn(spark: SparkSession, dir: String, nPlanes: Int = 16,
-      nBands: Int = 4, kOut: Int = 16, beams: Seq[Int] = Seq(1, 2, 4, 8),
-      maxHops: Int = 6, queryIds: Seq[Long] = Seq(7L, 13L, 29L, 42L),
-      entryId: Long = 0L): DataFrame = {
-    import spark.implicits._
-    require(beams.nonEmpty && beams == beams.sorted && beams.distinct == beams,
-      s"beams must be distinct ascending, got $beams")
-    val empty = Seq.empty[(Long, Long, Long, Long, Long, Long, Boolean)]
-      .toDF("beam", "query_id", "routed_id", "routed_d2",
-        "exact_id", "exact_d2", "hit")
-    buildRouteIndex(spark, dir, nPlanes, nBands, kOut, queryIds,
-        entryId) match {
-      case None => empty
-      case Some(idx) =>
-          // beam arms in LOCK-STEP: one probe per hop over the union
-          // of all arms' frontiers — identical trajectories, 1/|arms|
-          // of the probe jobs
-          var fronts: Map[Int, Map[Long, Seq[(Long, Long)]]] =
-            beams.map { b =>
-              b -> idx.qVecs.map { case (q, qv) =>
-                q -> Seq((routeD2(qv, idx.entryV), entryId)) }
-            }.toMap
-          var liveByB: Map[Int, Set[Long]] =
-            beams.map(b => b -> idx.qVecs.keySet).toMap
-          var h = 0
-          while (h < maxHops && liveByB.values.exists(_.nonEmpty)) {
-            val curIds = (for ((b, live) <- liveByB.toSeq; q <- live;
-              p <- fronts(b)(q)) yield p._2).distinct
-            val (adjAll, vAll) = probeHop(idx, curIds, kOut)
-            for (b <- beams) {
-              val front = fronts(b)
-              val next = liveByB(b).map { q =>
-                val prev = front(q)
-                // previous members carry their scores (they need not
-                // be reachable in THIS hop's fetch); only new neighbor
-                // ids are scored
-                val newIds = prev
-                  .flatMap(p => adjAll.getOrElse(p._2, Seq.empty).map(_._1))
-                  .distinct
-                  .filter(id => id != idx.qRep(q) && !prev.exists(_._2 == id))
-                val scoredNew = newIds.flatMap(id => vAll.get(id)
-                  .map(v => (routeD2(idx.qVecs(q), v), id)))
-                q -> (prev ++ scoredNew).sorted.take(b)
-              }.toMap
-              liveByB += b -> next.collect {
-                case (q, f) if f != front(q) => q }.toSet
-              fronts += b -> (front ++ next)
-            }
-            h += 1
-          }
-          val arms = beams.map(b => (b, fronts(b)))
-          arms.flatMap { case (b, front) =>
-            queryIds.sorted.flatMap { q =>
-              // same degenerate-entry drop as the greedy arm
-              for { f <- front.get(q) if idx.qRep(q) != entryId
-                    best <- f.headOption; ex <- idx.exMap.get(q) }
-                yield (b.toLong, q, best._2, best._1, ex._1, ex._2,
-                  best._2 == ex._1)
-            }
-          }.toDF("beam", "query_id", "routed_id", "routed_d2",
-          "exact_id", "exact_d2", "hit")
-    }
-  }
 
   /** The routing index ARTIFACT itself (q298): the dedup-first
     * banded-SRP ranked edge table — (src, dst, rn ≤ RouteIndexMaxK)
@@ -2673,14 +2338,15 @@ object Similarity {
     }
   }
 
-  /** The batch query table: (query_id, qv, rep_id) for every corpus
-    * vector matching `qSel` (minus the entry), each joined to its
-    * content-group rep by DISTRIBUTED vector equality — no literal
-    * per-query plan nodes anywhere, which is the whole point of the
-    * batch path. Queries whose content group IS the entry are dropped
-    * (the same degenerate-entry rule as the driver-steered path).
+  /** The query table: (query_id, qv, rep_id) for every corpus vector
+    * matching `qSel` (minus the entry), each joined to its
+    * content-group rep by DISTRIBUTED vector equality — the queries
+    * ride as a joined table, never as literal per-query plan nodes, so
+    * the plan is O(1) in |queries|. Queries whose content group IS the
+    * entry are dropped (the degenerate-entry rule: the oracle's s0 has
+    * no row for them).
     */
-  private def routeBatchQueries(idx: EdgeIndex, qSel: Column,
+  private def routeQueryTable(idx: EdgeIndex, qSel: Column,
       entryId: Long): DataFrame = {
     val q = idx.e3.filter(qSel && col("vec_id") =!= lit(entryId))
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
@@ -2690,10 +2356,20 @@ object Similarity {
       .filter(col("rep_id") =!= lit(entryId))
   }
 
-  /** The batch exact arm: reps × broadcast(queries) (the corpus-scan ×
-    * |queries| cost the literal-explode arm pays too, spelled as a
-    * join), minus each query's own rep, argmin by (d², id).
+  /** The exact arm: reps × broadcast(queries), minus each query's own
+    * rep, argmin by (d², id) — one corpus scan × |queries|, shared by
+    * every arm of a call.
     */
+  private def routeExactArm(idx: EdgeIndex, qt: DataFrame): DataFrame =
+    idx.e3r.join(broadcast(qt), col("vec_id") =!= col("rep_id"))
+      .select(col("query_id"),
+        struct(call_function("pq_d2", col("v"), lit(0), col("qv")).as("d2"),
+          col("vec_id")).as("s"))
+      .groupBy(col("query_id"))
+      .agg(min(col("s")).as("m"))
+      .select(col("query_id"), col("m.vec_id").as("exact_id"),
+        col("m.d2").as("exact_d2"))
+
   private val wideQtCache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String, Int, Int, Long, Long),
       (DataFrame, DataFrame)]
@@ -2704,7 +2380,7 @@ object Similarity {
     * — the |Q|-row checkpointed query table plus the |Q|·|reps| exact
     * scorer. One build per (session, corpus fingerprint, geometry,
     * entry) now serves the whole wide-table family; the q293/q294
-    * explicit-query-id paths keep the uncached spelling.
+    * explicit-query-id calls keep the uncached spelling.
     */
   private def wideRouteQueries(spark: SparkSession, dir: String,
       idx: EdgeIndex, nPlanes: Int, nBands: Int,
@@ -2715,99 +2391,159 @@ object Similarity {
         label = "wideRouteQueries") {
       val qSel =
         substring(md5(col("vec_id").cast("string")), 1, 2) <= RouteWideHexMax
-      val qt = routeBatchQueries(idx, qSel, entryId).localCheckpoint(true)
+      val qt = routeQueryTable(idx, qSel, entryId).localCheckpoint(true)
       // the exact arm is a lazy checkpoint: its blocks land inside the
       // first consumer's broadcast collect instead of a standalone job
-      (qt, routeBatchExact(idx, qt).localCheckpoint(false))
+      (qt, routeExactArm(idx, qt).localCheckpoint(false))
     }
 
-  private def routeBatchExact(idx: EdgeIndex, qt: DataFrame): DataFrame =
-    idx.e3r.join(broadcast(qt), col("vec_id") =!= col("rep_id"))
-      .select(col("query_id"),
-        struct(call_function("pq_d2", col("v"), lit(0), col("qv")).as("d2"),
-          col("vec_id")).as("s"))
-      .groupBy(col("query_id"))
-      .agg(min(col("s")).as("m"))
-      .select(col("query_id"), col("m.vec_id").as("exact_id"),
-        col("m.d2").as("exact_d2"))
-
-  /** Distributed greedy routing (the q293 semantics at unbounded batch
-    * size): per hop ONE frontier⋈ranked-adjacency join serves every
-    * (arm, query) — the q213/q221 BFS pattern — with query vectors
-    * carried as a joined table, never folded into the plan as literals.
-    * Row-for-row equal to [[graphRouteAnn]] on any batch the driver-
-    * steered path accepts (spec-asserted), and the REQUIRED spelling
-    * past [[RouteQueryBatchMax]] queries: plan size is O(1) in
-    * |queries|, state is |arms|·|queries| rows, each hop costs one pass
-    * over the persisted edge table regardless of batch size.
+  /** What every descent of one call starts from: the shared edge index,
+    * the entry node and its e3 vector `ev` (one row), the checkpointed
+    * query table `qt` (query_id, qv, rep_id) and its exact-NN arm
+    * (query_id, exact_id, exact_d2).
     */
-  def graphRouteAnnBatch(spark: SparkSession, dir: String,
-      nPlanes: Int = 16, nBands: Int = 4,
-      kOuts: Seq[Int] = Seq(4, 8, 16, 32), maxHops: Int = 6,
-      queryIds: Seq[Long] = Seq(7L, 13L, 29L, 42L),
-      entryId: Long = 0L): DataFrame = {
-    require(!queryIds.contains(entryId), "entry node cannot be a query")
-    graphRouteAnnBatchCore(spark, dir, nPlanes, nBands, kOuts, maxHops,
-      col("vec_id").isin(queryIds: _*), entryId)
+  private final case class RouteSetup(idx: EdgeIndex, entryId: Long,
+      ev: DataFrame, qt: DataFrame, exact: DataFrame)
+
+  /** The routing preamble, declared once for q293-q297, q304 and q305.
+    * Validates first: `arms` distinct ascending, `outDegree` within the
+    * shared index width, and explicit queries not naming the entry; an
+    * invalid call fails before paying any build. Then builds the query
+    * table from `queryIds`, or, when None, takes the memoized wide md5
+    * sample ([[wideRouteQueries]]). None when nothing can route: a
+    * sub-nPlanes corpus, an entry absent from the corpus, or no query
+    * left after the degenerate-entry drop. An entry that is not its
+    * content group's rep is refused: the oracle's s0 seeds from reps
+    * only, so the engines would diverge.
+    */
+  private def routeSetup(spark: SparkSession, dir: String, nPlanes: Int,
+      nBands: Int, armName: String, arms: Seq[Int], outDegree: => Int,
+      entryId: Long, queryIds: Option[Seq[Long]]): Option[RouteSetup] = {
+    require(arms.nonEmpty && arms == arms.sorted && arms.distinct == arms,
+      s"$armName must be distinct ascending, got $arms")
+    require(outDegree <= RouteIndexMaxK,
+      s"out-degree $outDegree exceeds the shared index width $RouteIndexMaxK")
+    queryIds.foreach(ids =>
+      require(!ids.contains(entryId), "entry node cannot be a query"))
+    val idx = buildEdgeIndex(spark, dir, nPlanes, nBands)
+      .getOrElse(return None)
+    val ev = idx.e3.filter(col("vec_id") === entryId).select(col("v").as("ev"))
+    if (ev.isEmpty) return None
+    require(idx.e3r.filter(col("vec_id") === entryId).count() == 1L,
+      s"entry $entryId is not its content group's representative — " +
+        "the oracle's rep-only seed would diverge from the engine")
+    val (qt, exact) = queryIds match {
+      case Some(ids) =>
+        val qt = routeQueryTable(idx, col("vec_id").isin(ids: _*), entryId)
+          .localCheckpoint(true)
+        (qt, routeExactArm(idx, qt))
+      case None => wideRouteQueries(spark, dir, idx, nPlanes, nBands, entryId)
+    }
+    if (qt.isEmpty) None else Some(RouteSetup(idx, entryId, ev, qt, exact))
   }
 
-  private def graphRouteAnnBatchCore(spark: SparkSession, dir: String,
-      nPlanes: Int, nBands: Int, kOuts: Seq[Int], maxHops: Int,
-      qSel: Column, entryId: Long,
-      // a THUNK (round-13 ADVICE): the memoized wide pair must not be
-      // computed (and cached) before this core's argument/entry
-      // validation runs — invalid calls fail before paying the build
-      preQt: Option[() => (DataFrame, DataFrame)] = None): DataFrame = {
+  /** The fixed-entry seed state: one row per (arm, query), every query
+    * at the entry with its exact d² to it. `node` names the position
+    * column (the greedy state's `cur`, the beam frontier's `id`).
+    */
+  private def entrySeed(s: RouteSetup, arm: String, arms: Seq[Int],
+      node: String): DataFrame =
+    s.qt.crossJoin(broadcast(s.ev))
+      .select(explode(array(arms.map(a => lit(a.toLong)): _*)).as(arm),
+        col("query_id"), lit(s.entryId).as(node),
+        call_function("pq_d2", col("qv"), lit(0), col("ev")).as("d2"))
+
+  /** Greedy graph-routed ANN, swept over out-degree (q293): the
+    * navigable-graph search family (HNSW's layer-0 descent,
+    * NSG/Vamana's beam-width-1 special case) joining the SRP-LSH
+    * (q31), IVF (q19), PQ-ADC (q269) and IVF-PQ (q280) index shapes.
+    * The graph is a banded-SRP kNN digraph — the q51 band geometry
+    * WITHOUT the label constraint (routing must bridge labels) — with
+    * out-edges ranked by EXACT e3-integer d² (routing is iterative, so
+    * the trajectory must be engine-identical: no float comparison
+    * anywhere). Each query greedily descends from a fixed entry node:
+    * per hop, move to the (d², id)-lexicographic minimum over the
+    * current node's out-neighbors ∪ {current}; a step that keeps the
+    * current node is converged. One arm per out-degree in `kOuts` —
+    * the OPERATING TABLE (the q277 discipline): greedy beam-1 descent
+    * CAN stall in a local minimum, and on this corpus it does at
+    * k_out ≤ 8 (0/4 queries reach the true NN) while k_out = 16/32
+    * reach it for 2/4 and 3/4 — out-degree is the knob that buys hit
+    * rate, measured, not hoped.
+    *
+    * Exact-dedup-first (the q215/q162 treatment, applied to vectors):
+    * the index holds ONE representative (min vec_id) per distinct e3
+    * vector, and each query's own content group is excluded from its
+    * candidates and its exact arm — the nearest DISTINCT-content
+    * neighbor, the semantic a dedup pipeline actually wants (a
+    * byte-identical twin is a trivial d²=0 answer). On an all-distinct
+    * corpus this is IDENTICAL to routing over the raw corpus; on a
+    * duplicated one it collapses the banded buckets back to distinct
+    * content — without it the Σ bucket² candidate volume grows
+    * quadratically in duplication (measured: 297 s at 10× replication,
+    * ~16 s with rep-first).
+    *
+    * Scale: the rep map is one exact-dedup groupBy (the q13 shape);
+    * the graph build is the q15/q51 banded bucket join over reps
+    * (never all-pairs; plane count grows with the corpus to keep
+    * buckets bounded) + ONE per-src ranking window shared by every arm
+    * (millions of tiny partitions, no skew). The queries ride as a
+    * joined table, so the plan is O(1) in |queries| and any batch size
+    * routes. Routing state is one row per (arm, query) — (cur, d²,
+    * hops) — and each hop is ONE frontier⋈ranked-adjacency join
+    * serving every (arm, query) (the q213/q221 BFS pattern), re-scored
+    * through the broadcast query table, then a per-(arm, query) argmin.
+    * Each hop's state is a LAZY local checkpoint ([[greedyDescentRows]]).
+    * A converged query is a fixpoint of the step map, so running every
+    * hop is value-identical to the oracle's full maxHops unroll. The
+    * exact arm is one broadcast join of the reps against the query
+    * table + a per-query argmin, shared by all arms. The oracle unrolls
+    * the identical hop trajectory per arm as MATERIALIZED per-step CTEs
+    * (the q74/q105 replay discipline; materialization keeps the chain
+    * linear where plain CTE inlining re-evaluates the graph build
+    * 2^hops times).
+    */
+  def graphRouteAnn(spark: SparkSession, dir: String, nPlanes: Int = 16,
+      nBands: Int = 4, kOuts: Seq[Int] = Seq(4, 8, 16, 32),
+      maxHops: Int = 6, queryIds: Seq[Long] = Seq(7L, 13L, 29L, 42L),
+      entryId: Long = 0L): DataFrame =
+    greedyRoute(spark, dir, nPlanes, nBands, kOuts, maxHops,
+      Some(queryIds), entryId)
+
+  /** [[graphRouteAnn]]'s per-query rows over explicit `queryIds`, or
+    * over the wide md5 sample when None (q296).
+    */
+  private def greedyRoute(spark: SparkSession, dir: String, nPlanes: Int,
+      nBands: Int, kOuts: Seq[Int], maxHops: Int,
+      queryIds: Option[Seq[Long]], entryId: Long): DataFrame = {
     import spark.implicits._
-    require(kOuts.nonEmpty && kOuts == kOuts.sorted && kOuts.distinct == kOuts,
-      s"kOuts must be distinct ascending, got $kOuts")
-    require(kOuts.max <= RouteIndexMaxK,
-      s"out-degree ${kOuts.max} exceeds the shared index width $RouteIndexMaxK")
     val empty = Seq.empty[(Long, Long, Long, Long, Long, Long, Long, Boolean)]
       .toDF("k_out", "query_id", "routed_id", "routed_d2", "n_hops",
         "exact_id", "exact_d2", "hit")
-    val idx = buildEdgeIndex(spark, dir, nPlanes, nBands)
-      .getOrElse(return empty)
-    val ev = idx.e3.filter($"vec_id" === entryId).select($"v".as("ev"))
-    if (ev.isEmpty) return empty
-    // same oracle-seed law as the driver path: the oracle's s0 seeds
-    // from qd (reps only) — a non-rep entry must refuse loudly
-    require(idx.e3r.filter($"vec_id" === entryId).count() == 1L,
-      s"entry $entryId is not its content group's representative — " +
-        "the oracle's rep-only seed would diverge from the engine")
-    val (qt, preExact) = preQt match {
-      case Some(f) => val (q, e) = f(); (q, Some(e))
-      case None =>
-        (routeBatchQueries(idx, qSel, entryId).localCheckpoint(true), None)
-    }
-    if (qt.isEmpty) return empty
-    // state: one row per (arm, query) — (cur, d², hops); query vectors
-    // and rep exclusions re-join from the broadcast query table per hop
-    val state0 = qt.crossJoin(broadcast(ev))
-      .select(explode(array(kOuts.map(k => lit(k.toLong)): _*)).as("k_out"),
-        $"query_id", lit(entryId).as("cur"),
-        call_function("pq_d2", $"qv", lit(0), $"ev").as("d2"),
-        lit(0L).as("hops"))
-    greedyDescentRows(idx, qt, state0, maxHops, preExact).drop("n_evals")
+    val s = routeSetup(spark, dir, nPlanes, nBands, "kOuts", kOuts,
+      kOuts.max, entryId, queryIds).getOrElse(return empty)
+    greedyDescentRows(s, entrySeed(s, "k_out", kOuts, "cur"), maxHops)
+      .drop("n_evals")
   }
 
   /** The per-hop greedy frontier recurrence shared by the fixed-entry
-    * batch core and the cell-seeded entry arm (q304): from any
-    * (k_out, query_id, cur, d2, hops) seed state, each hop joins the
-    * ranked adjacency at the arm's degree, re-scores through the
-    * broadcast query table, and steps every (arm, query) to its
-    * (d², id) minimum over neighbors ∪ {current}.
+    * descent and the cell-seeded entry arm (q304): from any
+    * (k_out, query_id, cur, d2) seed state, each hop joins the ranked
+    * adjacency at the arm's degree, re-scores through the broadcast
+    * query table, and steps every (arm, query) to its (d², id) minimum
+    * over neighbors ∪ {current}.
     */
-  private def greedyDescentRows(idx: EdgeIndex, qt: DataFrame,
-      state0: DataFrame, maxHops: Int,
-      preExact: Option[DataFrame] = None): DataFrame = {
+  private def greedyDescentRows(s: RouteSetup, seed: DataFrame,
+      maxHops: Int): DataFrame = {
+    val (idx, qt) = (s.idx, s.qt)
     import idx.e3r.sparkSession.implicits._
     // per-hop LAZY checkpoints (round-14, guide §2.4): each hop's plan
     // still flattens to a LogicalRDD (the state is referenced three
-    // times per hop — the lineage cut is load-bearing), but the blocks
-    // land inside the caller's first action instead of one standalone
-    // driver job per hop — maxHops fewer round-trips per descent
-    var state = state0.withColumn("evals", lit(0L)).localCheckpoint(false)
+    // times per hop — the lineage cut is load-bearing), but no hop pays
+    // a standalone count job for it. Under AQE, creating the checkpoint
+    // still runs the hop's own shuffle stages as jobs.
+    var state = seed.withColumn("hops", lit(0L)).withColumn("evals", lit(0L))
+      .localCheckpoint(false)
     for (_ <- 1 to maxHops) {
       // candidates: ranked out-neighbors of each arm's current node at
       // that arm's degree, minus the query's own rep, scored by exact
@@ -2822,7 +2558,7 @@ object Similarity {
           call_function("pq_d2", $"qv", lit(0), $"dv").as("nd2"))
       // the count aggregates neighbors + the carried current row, so
       // this hop's distance evaluations = cnt - 1 (the q305 family
-      // table's honest cost metric; existing callers drop the column)
+      // table's honest cost metric; other callers drop the column)
       val best = nbrs
         .unionByName(state.select($"k_out", $"query_id",
           $"cur".as("id"), $"d2".as("nd2")))
@@ -2840,66 +2576,57 @@ object Similarity {
           ($"evals" + $"ne").as("evals"))
         .localCheckpoint(false) // per-hop lineage cut (the q224 rule)
     }
-    state.join(broadcast(preExact.getOrElse(routeBatchExact(idx, qt))),
-        Seq("query_id"))
+    state.join(broadcast(s.exact), Seq("query_id"))
       .select($"k_out", $"query_id", $"cur".as("routed_id"),
         $"d2".as("routed_d2"), $"hops".as("n_hops"),
         $"exact_id", $"exact_d2", ($"cur" === $"exact_id").as("hit"),
         $"evals".as("n_evals"))
   }
 
-  /** Distributed beam routing (the q294 semantics at unbounded batch
-    * size): the frontier recurrence spelled as per-hop joins — frontier
-    * rows carry (beam, query, id, d²); new neighbor ids anti-join the
-    * current frontier (the oracle's DISTINCT(frontier ∪ neighbors)
-    * with prev members keeping their scores), then a row_number ≤ beam
-    * cut. Beam-1 equals the greedy batch arm at the same out-degree.
+  /** Beam-width sweep over the q293 graph (q294): the OTHER knob of
+    * navigable-graph search. Out-degree fixed at `kOut` (= q293's
+    * middle arm); per beam width B the frontier holds the B best
+    * (d², id) nodes seen so far, and each hop replaces it with the
+    * top-B of DISTINCT(frontier ∪ out-neighbors(frontier) − the
+    * query's rep). The frontier always contains its own previous
+    * members as candidates, so the best distance is non-increasing;
+    * B = 1 is EXACTLY q293's greedy arm at the same k (spec-asserted
+    * against q293's k_out = 16 rows — the cross-query law). Output per
+    * (beam, query): the final best node vs the exact NN.
+    *
+    * Scale: same index, same query table. Frontier rows carry (beam,
+    * query, id, d²), ≤ B per (beam, query); per hop ONE frontier⋈
+    * ranked-adjacency join at kOut, new ids anti-joined against the
+    * current frontier (prev members keep their scores), then a
+    * row_number ≤ B cut, checkpointed lazily like the greedy state.
+    * The oracle unrolls the same frontier recurrence as MATERIALIZED
+    * per-step CTEs with a row_number ≤ B cut.
     */
-  def beamRouteAnnBatch(spark: SparkSession, dir: String,
-      nPlanes: Int = 16, nBands: Int = 4, kOut: Int = 16,
-      beams: Seq[Int] = Seq(1, 2, 4, 8), maxHops: Int = 6,
-      queryIds: Seq[Long] = Seq(7L, 13L, 29L, 42L),
-      entryId: Long = 0L): DataFrame = {
-    require(!queryIds.contains(entryId), "entry node cannot be a query")
-    beamRouteAnnBatchCore(spark, dir, nPlanes, nBands, kOut, beams,
-      maxHops, col("vec_id").isin(queryIds: _*), entryId)
-  }
+  def beamRouteAnn(spark: SparkSession, dir: String, nPlanes: Int = 16,
+      nBands: Int = 4, kOut: Int = 16, beams: Seq[Int] = Seq(1, 2, 4, 8),
+      maxHops: Int = 6, queryIds: Seq[Long] = Seq(7L, 13L, 29L, 42L),
+      entryId: Long = 0L): DataFrame =
+    beamRoute(spark, dir, nPlanes, nBands, kOut, beams, maxHops,
+      Some(queryIds), entryId)
 
-  private def beamRouteAnnBatchCore(spark: SparkSession, dir: String,
-      nPlanes: Int, nBands: Int, kOut: Int, beams: Seq[Int], maxHops: Int,
-      qSel: Column, entryId: Long,
-      // thunk — see graphRouteAnnBatchCore
-      preQt: Option[() => (DataFrame, DataFrame)] = None): DataFrame = {
+  /** [[beamRouteAnn]]'s per-query rows over explicit `queryIds`, or
+    * over the wide md5 sample when None (q297).
+    */
+  private def beamRoute(spark: SparkSession, dir: String, nPlanes: Int,
+      nBands: Int, kOut: Int, beams: Seq[Int], maxHops: Int,
+      queryIds: Option[Seq[Long]], entryId: Long): DataFrame = {
     import spark.implicits._
-    require(beams.nonEmpty && beams == beams.sorted && beams.distinct == beams,
-      s"beams must be distinct ascending, got $beams")
-    require(kOut <= RouteIndexMaxK,
-      s"out-degree $kOut exceeds the shared index width $RouteIndexMaxK")
     val empty = Seq.empty[(Long, Long, Long, Long, Long, Long, Boolean)]
       .toDF("beam", "query_id", "routed_id", "routed_d2",
         "exact_id", "exact_d2", "hit")
-    val idx = buildEdgeIndex(spark, dir, nPlanes, nBands)
-      .getOrElse(return empty)
-    val ev = idx.e3.filter($"vec_id" === entryId).select($"v".as("ev"))
-    if (ev.isEmpty) return empty
-    require(idx.e3r.filter($"vec_id" === entryId).count() == 1L,
-      s"entry $entryId is not its content group's representative — " +
-        "the oracle's rep-only seed would diverge from the engine")
-    val (qt, preExact) = preQt match {
-      case Some(f) => val (q, e) = f(); (q, Some(e))
-      case None =>
-        (routeBatchQueries(idx, qSel, entryId).localCheckpoint(true), None)
-    }
-    if (qt.isEmpty) return empty
+    val s = routeSetup(spark, dir, nPlanes, nBands, "beams", beams, kOut,
+      entryId, queryIds).getOrElse(return empty)
+    val (idx, qt) = (s.idx, s.qt)
     val wFront = Window.partitionBy($"beam", $"query_id")
       .orderBy($"d2", $"id")
     // frontier: ≤ beam rows per (arm, query)
     // lazy per-hop checkpoints — the greedyDescentRows round-14 note
-    var front = qt.crossJoin(broadcast(ev))
-      .select(explode(array(beams.map(b => lit(b.toLong)): _*)).as("beam"),
-        $"query_id", lit(entryId).as("id"),
-        call_function("pq_d2", $"qv", lit(0), $"ev").as("d2"))
-      .localCheckpoint(false)
+    var front = entrySeed(s, "beam", beams, "id").localCheckpoint(false)
     for (_ <- 1 to maxHops) {
       // new neighbor ids: out-edges of the frontier at kOut, minus the
       // query's rep, minus ids already in the frontier (prev members
@@ -2924,16 +2651,15 @@ object Similarity {
     }
     front.withColumn("rnf", row_number().over(wFront))
       .filter($"rnf" === 1)
-      .join(broadcast(preExact.getOrElse(routeBatchExact(idx, qt))),
-        Seq("query_id"))
+      .join(broadcast(s.exact), Seq("query_id"))
       .select($"beam", $"query_id", $"id".as("routed_id"),
         $"d2".as("routed_d2"), $"exact_id", $"exact_d2",
         ($"id" === $"exact_id").as("hit"))
   }
 
-  /** The md5 query-sampling rule shared by q296/q297 and their oracles
-    * (the q222 sampling discipline): ~|corpus|/16 queries, entry
-    * excluded on both sides.
+  /** The md5 query-sampling rule shared by q296/q297/q304/q305 and
+    * their oracles (the q222 sampling discipline): ~|corpus|/16
+    * queries, entry excluded on both sides.
     */
   val RouteWideHexMax = "0f"
 
@@ -2958,29 +2684,29 @@ object Similarity {
         s"/ $n), 6) AS wilson_high")
   }
 
+  /** The wide operating row per `arm` value over per-query routed rows:
+    * (arm, n_queries, n_hits) + the [[routeWideAggExprs]] text.
+    */
+  private def wideAgg(rows: DataFrame, arm: String): DataFrame = rows
+    .groupBy(col(arm))
+    .agg(count(lit(1)).as("n_queries"),
+      sum(when(col("hit"), lit(1L)).otherwise(lit(0L))).as("n_hits"))
+    .selectExpr(Seq(arm, "n_queries", "n_hits") ++ routeWideAggExprs: _*)
+
   /** Wide greedy routing table (q296): q293's out-degree sweep re-run
     * over an md5-sampled query set (~1/16 of the corpus — 42 queries on
-    * the sf0.01 fixture) via the DISTRIBUTED batch path,
-    * aggregated to the per-arm operating row — n_queries, n_hits,
-    * hit_rate and its Wilson 95% band (4 hand-picked queries were too
-    * small a sample to freeze an out-degree policy on; round-11 verdict
-    * #3). The oracle replays every per-query trajectory, then the
-    * identical aggregate text.
+    * the sf0.01 fixture), aggregated to the per-arm operating row —
+    * n_queries, n_hits, hit_rate and its Wilson 95% band (4 hand-picked
+    * queries were too small a sample to freeze an out-degree policy on;
+    * round-11 verdict #3). The oracle replays every per-query
+    * trajectory, then the identical aggregate text.
     */
   def graphRouteAnnWide(spark: SparkSession, dir: String,
       nPlanes: Int = 16, nBands: Int = 4,
       kOuts: Seq[Int] = Seq(4, 8, 16, 32), maxHops: Int = 6,
       entryId: Long = 0L): DataFrame =
-    graphRouteAnnBatchCore(spark, dir, nPlanes, nBands, kOuts, maxHops,
-      substring(md5(col("vec_id").cast("string")), 1, 2) <= RouteWideHexMax,
-      entryId,
-      buildEdgeIndex(spark, dir, nPlanes, nBands).map(idx =>
-        () => wideRouteQueries(spark, dir, idx, nPlanes, nBands, entryId)))
-      .groupBy(col("k_out"))
-      .agg(count(lit(1)).as("n_queries"),
-        sum(when(col("hit"), lit(1L)).otherwise(lit(0L))).as("n_hits"))
-      .selectExpr(Seq("k_out", "n_queries", "n_hits") ++
-        routeWideAggExprs: _*)
+    wideAgg(greedyRoute(spark, dir, nPlanes, nBands, kOuts, maxHops, None,
+      entryId), "k_out")
 
   /** Wide beam routing table (q297): q294's beam sweep over the same
     * md5-sampled query set, same aggregate contract as q296.
@@ -2989,17 +2715,26 @@ object Similarity {
       nPlanes: Int = 16, nBands: Int = 4, kOut: Int = 16,
       beams: Seq[Int] = Seq(1, 2, 4, 8), maxHops: Int = 6,
       entryId: Long = 0L): DataFrame =
-    beamRouteAnnBatchCore(spark, dir, nPlanes, nBands, kOut, beams,
-      maxHops,
-      substring(md5(col("vec_id").cast("string")), 1, 2) <= RouteWideHexMax,
-      entryId,
-      buildEdgeIndex(spark, dir, nPlanes, nBands).map(idx =>
-        () => wideRouteQueries(spark, dir, idx, nPlanes, nBands, entryId)))
-      .groupBy(col("beam"))
-      .agg(count(lit(1)).as("n_queries"),
-        sum(when(col("hit"), lit(1L)).otherwise(lit(0L))).as("n_hits"))
-      .selectExpr(Seq("beam", "n_queries", "n_hits") ++
-        routeWideAggExprs: _*)
+    wideAgg(beamRoute(spark, dir, nPlanes, nBands, kOut, beams, maxHops,
+      None, entryId), "beam")
+
+  /** Seeded centroids at the e3 integer scale: the literal cell and
+    * code vectors of q304/q305.
+    */
+  private def e3Vectors(seeds: Seq[(Int, Seq[Float])])
+      : IndexedSeq[IndexedSeq[Long]] =
+    seeds.map(_._2.map(x => math.round(x.toDouble * 1000.0)).toIndexedSeq)
+      .toIndexedSeq
+
+  /** One (cell, d²) struct per e3 cell centroid against the e3 vector
+    * column `v`: exploded per row and argmin'd by the caller, the
+    * zero-shuffle cell assignment of q304 and q305.
+    */
+  private def cellStructs(cells: Seq[Seq[Long]], v: Column): Seq[Column] =
+    cells.zipWithIndex.map { case (cv, ci) =>
+      struct(lit(ci.toLong).as("cell"),
+        call_function("pq_d2", v, lit(0), array(cv.map(lit(_)): _*)).as("d2"))
+    }
 
   /** Entry-strategy operating table (q304): q296's wide greedy sweep
     * run under BOTH entry policies over the SAME md5-sampled query set
@@ -3025,69 +2760,42 @@ object Similarity {
     *
     * Scale: one extra zero-shuffle pass over the reps scores the
     * nCells literal centroids (the cell-entry election); everything
-    * after is the q296 batch machinery — per hop ONE frontier⋈ranked
-    * join for every (strategy, arm, query).
+    * after is the q296 machinery — per hop ONE frontier⋈ranked join
+    * for every (strategy, arm, query).
     */
   def graphRouteEntryCompare(spark: SparkSession, dir: String,
       nPlanes: Int = 16, nBands: Int = 4, nCells: Int = 8,
       kOuts: Seq[Int] = Seq(4, 8, 16, 32), maxHops: Int = 6,
       entryId: Long = 0L): DataFrame = {
     import spark.implicits._
-    require(kOuts.nonEmpty && kOuts == kOuts.sorted && kOuts.distinct == kOuts,
-      s"kOuts must be distinct ascending, got $kOuts")
-    require(kOuts.max <= RouteIndexMaxK,
-      s"out-degree ${kOuts.max} exceeds the shared index width $RouteIndexMaxK")
     val empty = Seq.empty[(String, Long, Long, Long, Double, Double, Double)]
       .toDF("entry_strategy", "k_out", "n_queries", "n_hits", "hit_rate",
         "wilson_low", "wilson_high")
+    val s = routeSetup(spark, dir, nPlanes, nBands, "kOuts", kOuts,
+      kOuts.max, entryId, None).getOrElse(return empty)
     val seeds = sampledCentroids(spark, dir, nCells)
-    val idx = buildEdgeIndex(spark, dir, nPlanes, nBands)
-      .getOrElse(return empty)
     if (seeds.size < nCells) return empty
-    val ev = idx.e3.filter($"vec_id" === entryId).select($"v".as("ev"))
-    if (ev.isEmpty) return empty
-    require(idx.e3r.filter($"vec_id" === entryId).count() == 1L,
-      s"entry $entryId is not its content group's representative — " +
-        "the oracle's rep-only seed would diverge from the engine")
-    val (qt, wideExact) =
-      wideRouteQueries(spark, dir, idx, nPlanes, nBands, entryId)
-    if (qt.isEmpty) return empty
-    def aggArm(rows: DataFrame, strategy: String): DataFrame = rows
-      .groupBy(col("k_out"))
-      .agg(count(lit(1)).as("n_queries"),
-        sum(when(col("hit"), lit(1L)).otherwise(lit(0L))).as("n_hits"))
-      .selectExpr(Seq("k_out", "n_queries", "n_hits") ++
-        routeWideAggExprs: _*)
-      .select(lit(strategy).as("entry_strategy"), col("k_out"),
-        col("n_queries"), col("n_hits"), col("hit_rate"),
-        col("wilson_low"), col("wilson_high"))
+    val (idx, qt) = (s.idx, s.qt)
+    def aggArm(rows: DataFrame, strategy: String): DataFrame =
+      wideAgg(rows, "k_out")
+        .select(lit(strategy).as("entry_strategy"), col("k_out"),
+          col("n_queries"), col("n_hits"), col("hit_rate"),
+          col("wilson_low"), col("wilson_high"))
     // fixed arm: exactly the q296 rows (same qt, same descent)
-    val fixed0 = qt.crossJoin(broadcast(ev))
-      .select(explode(array(kOuts.map(k => lit(k.toLong)): _*)).as("k_out"),
-        $"query_id", lit(entryId).as("cur"),
-        call_function("pq_d2", $"qv", lit(0), $"ev").as("d2"),
-        lit(0L).as("hops"))
-    val fixed = greedyDescentRows(idx, qt, fixed0, maxHops, Some(wideExact))
+    val fixed = greedyDescentRows(s, entrySeed(s, "k_out", kOuts, "cur"),
+      maxHops)
     // cell arm: e3-scale literal centroids; each rep scores all nCells
     // in one zero-shuffle pass; argmin per cell elects its entry rep
-    val cellsE3: IndexedSeq[IndexedSeq[Long]] = seeds
-      .map(_._2.map(x => math.round(x.toDouble * 1000.0)).toIndexedSeq)
-      .toIndexedSeq
-    def cellStructs(vcol: Column): Seq[Column] =
-      cellsE3.zipWithIndex.map { case (cv, ci) =>
-        struct(lit(ci.toLong).as("cell"),
-          call_function("pq_d2", vcol, lit(0),
-            array(cv.map(lit(_)): _*)).as("d2"))
-      }
+    val cells = e3Vectors(seeds)
     val cellEntry = idx.e3r
-      .select($"vec_id", explode(array(cellStructs($"v"): _*)).as("cd"))
+      .select($"vec_id", explode(array(cellStructs(cells, $"v"): _*)).as("cd"))
       .select($"vec_id", $"cd.cell".as("cell"), $"cd.d2".as("d2"))
       .groupBy($"cell")
       .agg(min(struct($"d2", $"vec_id")).as("m"))
       .select($"cell", $"m.vec_id".as("entry_id"))
     val qCell = qt
       .select($"query_id", $"rep_id",
-        explode(array(cellStructs($"qv"): _*)).as("cd"))
+        explode(array(cellStructs(cells, $"qv"): _*)).as("cd"))
       .select($"query_id", $"rep_id", $"cd.cell".as("cell"),
         $"cd.d2".as("d2"))
       .groupBy($"query_id", $"rep_id")
@@ -3103,9 +2811,8 @@ object Similarity {
       .join(broadcast(qt), Seq("query_id"))
       .select(explode(array(kOuts.map(k => lit(k.toLong)): _*)).as("k_out"),
         $"query_id", $"entry_id".as("cur"),
-        call_function("pq_d2", $"qv", lit(0), $"ev").as("d2"),
-        lit(0L).as("hops"))
-    val cell = greedyDescentRows(idx, qt, cell0, maxHops, Some(wideExact))
+        call_function("pq_d2", $"qv", lit(0), $"ev").as("d2"))
+    val cell = greedyDescentRows(s, cell0, maxHops)
     aggArm(fixed, "fixed").unionByName(aggArm(cell, "cell"))
   }
 
@@ -3152,49 +2859,32 @@ object Similarity {
       nBands: Int = 4, nCells: Int = 8, nProbe: Int = 4,
       nBlocks: Int = 4, codesPerBlock: Int = 8, kOut: Int = 16,
       maxHops: Int = 6, k: Int = 10, entryId: Long = 0L,
-      queryHexMax: String = RouteWideHexMax,
       maxEvalPairs: Long = 500000000L): DataFrame = {
     import spark.implicits._
     require(nProbe >= 1 && nProbe <= nCells,
       s"nProbe=$nProbe outside 1..$nCells")
-    require(kOut <= RouteIndexMaxK,
-      s"out-degree $kOut exceeds the shared index width $RouteIndexMaxK")
     val empty = Seq.empty[(String, Long, Long, Long, Long, Double, Long,
         Double)]
       .toDF("family", "k", "n_queries", "total_scanned", "sum_overlap",
         "recall", "n_hits", "hit_rate")
+    // the wide md5 sample, shared with q296/q297/q304 through its memo
+    val s = routeSetup(spark, dir, nPlanes, nBands, "kOut", Seq(kOut), kOut,
+      entryId, None).getOrElse(return empty)
     val seeds = sampledCentroids(spark, dir, nCells + codesPerBlock)
     if (seeds.size < nCells + codesPerBlock) return empty
-    val idx = buildEdgeIndex(spark, dir, nPlanes, nBands)
-      .getOrElse(return empty)
-    val ev = idx.e3.filter($"vec_id" === entryId).select($"v".as("ev"))
-    if (ev.isEmpty) return empty
-    require(idx.e3r.filter($"vec_id" === entryId).count() == 1L,
-      s"entry $entryId is not its content group's representative — " +
-        "the oracle's rep-only seed would diverge from the engine")
-    val qSel =
-      substring(md5(col("vec_id").cast("string")), 1, 2) <= queryHexMax
-    // the default sample rides the memoized wide pair (q296/q297/q304
-    // share it); a non-default queryHexMax keeps the direct build
-    val widePair =
-      if (queryHexMax == RouteWideHexMax)
-        Some(wideRouteQueries(spark, dir, idx, nPlanes, nBands, entryId))
-      else None
-    val qt = widePair.map(_._1).getOrElse(
-      routeBatchQueries(idx, qSel, entryId).localCheckpoint(true))
-    if (qt.isEmpty) return empty
+    val (idx, qt) = (s.idx, s.qt)
     val nQ = qt.count()
     // eval-tier guard (the q186 discipline): the shared exact-truth
-    // scorer is |Q|·|reps| pairs with |Q| ~ corpus/16 by default —
-    // measuring recall costs this quadratic arm BY DESIGN, and running
-    // it unbounded is a design error, not a slow query. The error
-    // names the 100-TB recipe: narrow the query sample.
+    // scorer is |Q|·|reps| pairs with |Q| ~ corpus/16 — measuring
+    // recall costs this quadratic arm BY DESIGN, and running it
+    // unbounded is a design error, not a slow query. The error names
+    // the sample rule that sets |Q|.
     val nReps = idx.e3r.count()
     require(nReps * nQ <= maxEvalPairs,
       s"annFamilyTable: exact-truth arm of ${nReps * nQ} (rep, query) " +
-        s"pairs exceeds the eval-tier bound $maxEvalPairs — narrow the " +
-        s"query sample (queryHexMax='$queryHexMax') or raise " +
-        "maxEvalPairs if this corpus size is intentional")
+        s"pairs exceeds the eval-tier bound $maxEvalPairs — the md5 " +
+        s"query sample (RouteWideHexMax='$RouteWideHexMax') is too wide " +
+        "for this corpus; raise maxEvalPairs if its size is intentional")
     // the shared scorer: every (query, rep ≠ own rep) exact-i64 d² —
     // one broadcast join, reused by every family's ranking and by truth
     // round-14: every checkpoint in this table is LAZY — the blocks
@@ -3265,23 +2955,16 @@ object Similarity {
     val srpRow = familyRow("srp_bucket", srpCands)
     // ivf_p4: e3-scale seeded cells; reps assigned once, each query
     // probes its nProbe nearest cells
-    val cellsE3: IndexedSeq[IndexedSeq[Long]] = seeds.take(nCells)
-      .map(_._2.map(x => math.round(x.toDouble * 1000.0)).toIndexedSeq)
-      .toIndexedSeq
-    def cellStructs(vcol: Column): Seq[Column] =
-      cellsE3.zipWithIndex.map { case (cv, ci) =>
-        struct(lit(ci.toLong).as("cell"),
-          call_function("pq_d2", vcol, lit(0),
-            array(cv.map(lit(_)): _*)).as("d2"))
-      }
+    val cells = e3Vectors(seeds.take(nCells))
     val repCell = idx.e3r
-      .select($"vec_id", explode(array(cellStructs($"v"): _*)).as("cd"))
+      .select($"vec_id", explode(array(cellStructs(cells, $"v"): _*)).as("cd"))
       .select($"vec_id", $"cd.cell".as("cell"), $"cd.d2".as("d2"))
       .groupBy($"vec_id")
       .agg(min(struct($"d2", $"cell")).as("m"))
       .select($"vec_id", $"m.cell".as("cell"))
     val qProbe = qt
-      .select($"query_id", explode(array(cellStructs($"qv"): _*)).as("cd"))
+      .select($"query_id",
+        explode(array(cellStructs(cells, $"qv"): _*)).as("cd"))
       .select($"query_id", $"cd.cell".as("cell"), $"cd.d2".as("d2"))
       .withColumn("rk", row_number().over(Window
         .partitionBy($"query_id").orderBy($"d2", $"cell")))
@@ -3297,10 +2980,7 @@ object Similarity {
     // pq_adc: md5-seeded per-block codes at e3 scale; reps encoded
     // once (codegen pq_encode), each query's ADC table joins the codes
     val bw = 64 / nBlocks
-    val cwE3: IndexedSeq[IndexedSeq[Long]] = seeds.drop(nCells)
-      .take(codesPerBlock)
-      .map(_._2.map(x => math.round(x.toDouble * 1000.0)).toIndexedSeq)
-      .toIndexedSeq
+    val cwE3 = e3Vectors(seeds.slice(nCells, nCells + codesPerBlock))
     val codebooks: Seq[Seq[Seq[Long]]] = (0 until nBlocks).map(b =>
       cwE3.map(cw => cw.slice(b * bw, (b + 1) * bw).toSeq))
     val repCodes = idx.e3r.select($"vec_id",
@@ -3329,13 +3009,8 @@ object Similarity {
         Seq("query_id", "vec_id"), "left_semi"))
     // graph_greedy_k16: the q296 descent; cost = measured per-hop
     // distance evaluations
-    val state0 = qt.crossJoin(broadcast(ev))
-      .select(lit(kOut.toLong).as("k_out"), $"query_id",
-        lit(entryId).as("cur"),
-        call_function("pq_d2", $"qv", lit(0), $"ev").as("d2"),
-        lit(0L).as("hops"))
-    val g = greedyDescentRows(idx, qt, state0, maxHops, widePair.map(_._2))
-      .localCheckpoint(false)
+    val g = greedyDescentRows(s, entrySeed(s, "k_out", Seq(kOut), "cur"),
+      maxHops).localCheckpoint(false)
     val graphRow = familyRow(s"graph_greedy_k$kOut",
       g.select($"query_id", $"routed_id".as("vec_id"),
         $"routed_d2".as("score")),

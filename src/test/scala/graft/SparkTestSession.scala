@@ -24,4 +24,29 @@ object SparkTestSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Spark jobs started while `run` runs, counted by a listener on the
+    * shared context (suites run one at a time in the forked test JVM).
+    */
+  def jobsOf(run: => Any): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      run
+      // listenerBus is private[spark] — the same reflective drain the
+      // bench uses, degrading to a bounded sleep
+      try {
+        val sc = spark.sparkContext
+        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+        bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      } catch { case _: Throwable => Thread.sleep(500L) }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get
+  }
 }

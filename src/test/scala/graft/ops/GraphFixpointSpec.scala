@@ -90,27 +90,6 @@ class GraphFixpointSpec extends AnyFunSuite {
     // deterministic for a fixed plan and fixture). An eager round
     // checkpoint adds a job per round, and an un-cut lineage or a lost
     // cache re-runs prior rounds per action; either breaks a bound.
-    def jobsOf(run: => Unit): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        run
-        // listenerBus is private[spark] — the same reflective drain the
-        // bench uses, degrading to a bounded sleep
-        try {
-          val sc = spark.sparkContext
-          val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-          bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-        } catch { case _: Throwable => Thread.sleep(500L) }
-      } finally spark.sparkContext.removeSparkListener(listener)
-      jobs.get
-    }
     Graph.pageRankFixpoint(spark, sf).collect()
     val loops = Seq[(String, Int, () => Any)](
       ("pageRankFixpoint", 92,
@@ -130,7 +109,7 @@ class GraphFixpointSpec extends AnyFunSuite {
       ("knnComponents", 31,
         () => Graph.knnComponents(spark, sf).collect()))
     loops.foreach { case (name, bound, run) =>
-      val n = jobsOf(run())
+      val n = graft.SparkTestSession.jobsOf(run())
       info(s"$name: $n jobs (bound $bound)")
       assert(n <= bound,
         s"$name: $n jobs, bound $bound — a per-round job or recompute chain appeared")

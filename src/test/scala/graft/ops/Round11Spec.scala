@@ -184,48 +184,6 @@ class Round11Spec extends AnyFunSuite {
     assert(rows.map(_._1).sliding(2).forall(w => w.length < 2 || w(0) >= w(1)))
   }
 
-  test("q293: routing never beats exact, hit iff landed on the NN, curve pinned") {
-    val rows = Similarity.graphRouteAnn(spark, "/root/testdata/sf0.01").collect()
-    assert(rows.length == 16, s"4 arms x 4 queries expected, got ${rows.length}")
-    rows.foreach { r =>
-      val (rd2, hops, rid, eid, ed2, hit) = (r.getLong(3), r.getLong(4),
-        r.getLong(2), r.getLong(5), r.getLong(6), r.getBoolean(7))
-      // greedy descent can stall but can never rank below the true NN
-      assert(rd2 >= ed2, s"routed_d2 $rd2 < exact_d2 $ed2")
-      assert(hops <= 6L)
-      assert(hit == (rid == eid))
-      if (hit) assert(rd2 == ed2)
-    }
-    // the measured operating curve on sf0.01 (oracle-verified): greedy
-    // beam-1 stalls at low out-degree, k_out buys hit rate
-    assumePinnedFixture("/root/testdata/sf0.01")
-    val hitsByK = rows.groupBy(_.getLong(0))
-      .view.mapValues(_.count(_.getBoolean(7))).toMap
-    assert(hitsByK == Map(4L -> 0, 8L -> 0, 16L -> 2, 32L -> 3),
-      s"operating curve moved: $hitsByK")
-  }
-
-  test("q294: beam-1 IS q293's greedy arm at the same out-degree; beams pinned") {
-    val beam = Similarity.beamRouteAnn(spark, "/root/testdata/sf0.01").collect()
-    assert(beam.length == 16, s"4 beams x 4 queries expected, got ${beam.length}")
-    // the cross-query law: beam width 1 at k_out=16 must reproduce
-    // q293's k_out=16 greedy arm row for row
-    val greedy16 = Similarity.graphRouteAnn(spark, "/root/testdata/sf0.01")
-      .collect().filter(_.getLong(0) == 16L)
-      .map(r => r.getLong(1) -> (r.getLong(2), r.getLong(3))).toMap
-    val b1 = beam.filter(_.getLong(0) == 1L)
-      .map(r => r.getLong(1) -> (r.getLong(2), r.getLong(3))).toMap
-    assert(b1 == greedy16, s"beam-1 $b1 diverged from greedy $greedy16")
-    // the frontier keeps its own members as candidates, so the landed
-    // distance can never rank below the true NN
-    beam.foreach(r => assert(r.getLong(3) >= r.getLong(5)))
-    assumePinnedFixture("/root/testdata/sf0.01")
-    val hitsByB = beam.groupBy(_.getLong(0))
-      .view.mapValues(_.count(_.getBoolean(6))).toMap
-    assert(hitsByB == Map(1L -> 2, 2L -> 2, 4L -> 3, 8L -> 3),
-      s"beam operating curve moved: $hitsByB")
-  }
-
   test("q285: only the two pair orientations survive, years within the window") {
     val rows = Relational.nationPairVolume(spark, sfSmall).collect()
     rows.foreach { r =>

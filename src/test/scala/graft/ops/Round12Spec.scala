@@ -3,8 +3,7 @@ package graft.ops
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-12 batch: trained IVF-PQ (q295), the memoized IVF-PQ index it
-  * shares with q280, and the sub-nPlanes routing-index guard (round-11
-  * ADVICE #1).
+  * shares with q280, and the filtered-IVF laws (q300/q301).
   */
 class Round12Spec extends AnyFunSuite {
 
@@ -69,49 +68,6 @@ class Round12Spec extends AnyFunSuite {
       "second ivfPqTrainedTopK invocation persisted new RDDs — memo missed")
   }
 
-  test("batch routing == driver-steered routing, row for row (greedy and beam)") {
-    // the scale-safe spelling (frontier joins, query vectors as a
-    // joined table) must be VALUE-IDENTICAL to the literal-folding
-    // driver path on any batch the latter accepts
-    def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
-      df.collect().map(_.toString).toSet
-    assert(rows(Similarity.graphRouteAnnBatch(spark, dir)) ==
-      rows(Similarity.graphRouteAnn(spark, dir)))
-    assert(rows(Similarity.beamRouteAnnBatch(spark, dir)) ==
-      rows(Similarity.beamRouteAnn(spark, dir)))
-  }
-
-  test("driver-steered routing refuses oversized query batches") {
-    // each driver-path query folds a literal struct + equality into
-    // single plan nodes; past RouteQueryBatchMax the batch path is the
-    // required spelling and the guard must say so
-    val big = (1L to (Similarity.RouteQueryBatchMax + 1L)).toSeq
-    val e = intercept[IllegalArgumentException] {
-      Similarity.graphRouteAnn(spark, dir, queryIds = big)
-    }
-    assert(e.getMessage.contains("RouteQueryBatchMax") &&
-      e.getMessage.contains("graphRouteAnnBatch"), e.getMessage)
-  }
-
-  test("q296/q297 wide tables: band laws hold; beam-1 aggregates the greedy k=16 arm") {
-    val wide = Similarity.graphRouteAnnWide(spark, dir).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2),
-        r.getDouble(3), r.getDouble(4), r.getDouble(5))).toMap
-    assert(wide.keySet == Set(4L, 8L, 16L, 32L))
-    wide.values.foreach { case (n, h, p, lo, hi) =>
-      assert(h >= 0L && h <= n)
-      assert(lo <= p && p <= hi, s"Wilson band ($lo, $hi) excludes $p")
-      assert(lo >= 0.0 && hi <= 1.0)
-    }
-    val beamWide = Similarity.beamRouteAnnWide(spark, dir).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(beamWide.keySet == Set(1L, 2L, 4L, 8L))
-    // the cross-query law in aggregate: beam-1 at k_out=16 IS the
-    // greedy k_out=16 arm, so their (n_queries, n_hits) must agree
-    assert(beamWide(1L) == ((wide(16L)._1, wide(16L)._2)),
-      s"beam-1 ${beamWide(1L)} != greedy k16 ${(wide(16L)._1, wide(16L)._2)}")
-  }
-
   test("q300 filtered ANN: postfilter prefix laws; prefilter dominates at lower scan cost") {
     val rows = Similarity.filteredIvfTopK(spark, dir).collect()
       .map(r => r.getString(0) -> (r.getLong(2), r.getLong(3))).toMap
@@ -159,29 +115,5 @@ class Round12Spec extends AnyFunSuite {
       assert(rows((1L, strategy)) == v,
         s"$strategy: q301 set-1 ${rows((1L, strategy))} != q300 $v")
     }
-  }
-
-  test("routing index refuses a sub-nPlanes corpus (constant-0 band hazard)") {
-    // a corpus with fewer head vectors than nPlanes: bandSignatureCols
-    // would emit constant-0 signatures for the plane-less bands (every
-    // rep collides) while the oracle's GROUP BY over existing planes
-    // emits no rows for them — the engine must degrade to empty, not
-    // route over a graph the oracle can't replay
-    val spark2 = spark
-    import spark2.implicits._
-    val tinyPath = java.nio.file.Files.createTempDirectory("graft_tiny_")
-    try {
-      val tiny = tinyPath.toString
-      val vecs = (0L until 8L).map(i =>
-        (i, Array.fill(64)(i.toFloat / 10f + 0.1f), 0))
-      vecs.toDF("vec_id", "embedding", "label")
-        .write.mode("overwrite").parquet(s"$tiny/embeddings.parquet")
-      val out = Similarity.graphRouteAnn(spark, tiny,
-        nPlanes = 16, nBands = 4, queryIds = Seq(3L), entryId = 0L)
-      assert(out.isEmpty, "sub-nPlanes corpus must yield the empty result")
-      val beam = Similarity.beamRouteAnn(spark, tiny,
-        nPlanes = 16, nBands = 4, queryIds = Seq(3L), entryId = 0L)
-      assert(beam.isEmpty)
-    } finally graft.TestFiles.rmrf(tinyPath)
   }
 }

@@ -3,66 +3,12 @@ package graft.ops
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-13 batch: the durable on-disk route-edge artifact (round-12
-  * verdict #5 — the banded build pays once per corpus, later sessions
-  * re-register the files instead of rebuilding).
+/** Round-13 batch: the cell-partitioned IVF probe (q302) and the
+  * filtered-ADC laws (q303).
   */
 class Round13Spec extends AnyFunSuite {
 
   private val spark = graft.SparkTestSession.spark
-  private val sf = "/root/testdata/sf0.001"
-
-  private def fileTimes(path: String): Map[String, Long] = {
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get(path)
-    java.nio.file.Files.walk(root).iterator().asScala
-      .filter(java.nio.file.Files.isRegularFile(_))
-      .map(p => root.relativize(p).toString ->
-        java.nio.file.Files.getLastModifiedTime(p).toMillis)
-      .toMap
-  }
-
-  test("route-edge artifact: a fresh catalog re-registers the on-disk build, no rewrite") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-durable-edges")
-    try {
-      spark.read.parquet(s"$sf/embeddings.parquet")
-        .write.parquet(tmp.resolve("embeddings.parquet").toString)
-      val dir = tmp.toString
-      val (tbl, path) = Similarity.routeEdgeArtifact(dir, 16, 4)
-      def edges(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
-        df.select("src", "dst", "rn").collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      // cold build: pays the banded build and lands the artifact on disk
-      val r1 = edges(Similarity.routeEdgeTable(spark, dir, 16, 4))
-      assert(r1.nonEmpty)
-      assert(spark.catalog.tableExists(tbl), s"artifact table $tbl missing")
-      assert(java.nio.file.Files.exists(
-        java.nio.file.Paths.get(path, "_SUCCESS")), "artifact _SUCCESS missing")
-      assert(java.nio.file.Files.exists(
-        java.nio.file.Paths.get(path, "_graft_layout")), "layout marker missing")
-      val t1 = fileTimes(path)
-      // simulate a fresh session: memo evicted, catalog emptied — the
-      // files survive, so the next build must take the marker-checked
-      // DDL re-registration path and NOT rewrite a byte
-      Similarity.evictEdgeIndexes()
-      spark.sql(s"DROP TABLE IF EXISTS `$tbl`")
-      val r2 = edges(Similarity.routeEdgeTable(spark, dir, 16, 4))
-      assert(r2 == r1, s"re-registered artifact drifted: ${r2.size} vs ${r1.size}")
-      assert(fileTimes(path) == t1,
-        "artifact files were rewritten on the warm-start path")
-      assert(spark.catalog.tableExists(tbl))
-      // the artifact IS the index every routing query reads: the wide
-      // batch path over the re-registered table still routes
-      val wide = Similarity.graphRouteAnnWide(spark, dir).collect()
-      assert(wide.nonEmpty)
-    } finally {
-      val (tbl, path) = Similarity.routeEdgeArtifact(tmp.toString, 16, 4)
-      spark.sql(s"DROP TABLE IF EXISTS `$tbl`")
-      graft.TestFiles.rmrf(java.nio.file.Paths.get(path))
-      Similarity.evictEdgeIndexes()
-      graft.TestFiles.rmrf(tmp)
-    }
-  }
 
   test("q302 cell-partitioned probe == q300 row for row; layout builds once") {
     val dir = "/root/testdata/sf0.01"
@@ -81,9 +27,9 @@ class Round13Spec extends AnyFunSuite {
     val path = s"/tmp/graft_cell_layout/$tag"
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(path, "_graft_layout")), "layout marker missing")
-    val t1 = fileTimes(path)
+    val t1 = graft.TestFiles.fileTimes(path)
     Similarity.cellPartitionedIvfTopK(spark, dir).collect()
-    assert(fileTimes(path) == t1, "layout rewritten on the warm path")
+    assert(graft.TestFiles.fileTimes(path) == t1, "layout rewritten on the warm path")
   }
 
   test("q303 filtered-ADC laws: prefix monotone, scan accounting, pinned operating point") {
@@ -114,89 +60,5 @@ class Round13Spec extends AnyFunSuite {
       "embeddings fixture regenerated — pinned values skipped")
     assert(rows("prefilter")._3 == 0.7, s"prefilter moved: $rows")
     assert(rows("postfilter_x08")._3 == 0.6, s"postfilter_x08 moved: $rows")
-  }
-
-  test("q304 entry compare: fixed slice IS q296; band laws; per-strategy drops") {
-    val dir = "/root/testdata/sf0.01"
-    val rows = Similarity.graphRouteEntryCompare(spark, dir).collect()
-      .map(r => (r.getString(0), r.getLong(1)) ->
-        (r.getLong(2), r.getLong(3), r.getDouble(4), r.getDouble(5),
-          r.getDouble(6))).toMap
-    assert(rows.keySet ==
-      (for (s <- Seq("fixed", "cell"); k <- Seq(4L, 8L, 16L, 32L))
-        yield (s, k)).toSet)
-    rows.values.foreach { case (n, h, p, lo, hi) =>
-      assert(h >= 0L && h <= n)
-      assert(lo <= p && p <= hi, s"Wilson band ($lo, $hi) excludes $p")
-    }
-    // the fixed strategy is EXACTLY q296 (same query table, same
-    // descent, same aggregate text) — the cross-query law that anchors
-    // the comparison to the committed baseline
-    val q296 = Similarity.graphRouteAnnWide(spark, dir).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2),
-        r.getDouble(3), r.getDouble(4), r.getDouble(5))).toMap
-    for ((k, v) <- q296) assert(rows(("fixed", k)) == v,
-      s"fixed arm k=$k drifted from q296: ${rows(("fixed", k))} vs $v")
-    // the cell arm drops queries whose rep IS their cell's entry — its
-    // population can only shrink relative to the shared sample
-    for (k <- Seq(4L, 8L, 16L, 32L))
-      assert(rows(("cell", k))._1 <= rows(("fixed", k))._1)
-  }
-
-  test("q305 family table: accounting laws; graph row IS q296's k16 arm; pinned points") {
-    val dir = "/root/testdata/sf0.01"
-    val rows = Similarity.annFamilyTable(spark, dir).collect()
-      .map(r => r.getString(0) -> (r.getLong(2), r.getLong(3), r.getLong(4),
-        r.getDouble(5), r.getLong(6), r.getDouble(7))).toMap
-    assert(rows.keySet == Set("exact", "srp_bucket", "ivf_p4", "pq_adc",
-      "ivf_pq_p4", "graph_greedy_k16"))
-    // one shared query population
-    assert(rows.values.map(_._1).toSet.size == 1)
-    val nQ = rows("exact")._1
-    // the baseline row is exact by definition
-    assert(rows("exact")._4 == 1.0 && rows("exact")._5 == nQ)
-    // every family's recall and hits are bounded by the baseline's
-    rows.values.foreach { case (_, _, _, rec, hits, _) =>
-      assert(rec >= 0.0 && rec <= 1.0); assert(hits >= 0L && hits <= nQ) }
-    // scan accounting: pq_adc is exhaustive (scans what exact scans);
-    // ivf_pq ranks EXACTLY the ivf candidate set
-    assert(rows("pq_adc")._2 == rows("exact")._2)
-    assert(rows("ivf_pq_p4")._2 == rows("ivf_p4")._2)
-    // the graph family is a 1-NN machine: recall is bounded by 1/k by
-    // construction, and its hit count IS q296's k_out=16 arm (same
-    // descent, same query table — the cross-query law)
-    assert(rows("graph_greedy_k16")._4 <= 1.0 / 10 + 1e-9)
-    val q296k16 = Similarity.graphRouteAnnWide(spark, dir).collect()
-      .map(r => r.getLong(0) -> r.getLong(2)).toMap.apply(16L)
-    assert(rows("graph_greedy_k16")._5 == q296k16,
-      s"graph family hits ${rows("graph_greedy_k16")._5} != q296 $q296k16")
-    // the eval-tier guard refuses an exact-truth arm past the pair
-    // budget and names the sampled recipe (the q186 discipline)
-    val e = intercept[IllegalArgumentException] {
-      Similarity.annFamilyTable(spark, dir, maxEvalPairs = 10L)
-    }
-    assert(e.getMessage.contains("eval-tier") &&
-      e.getMessage.contains("queryHexMax"), e.getMessage)
-    assume(graft.TestFixtures.embeddingsMd5(dir) ==
-        graft.TestFixtures.pinnedEmbeddingsMd5,
-      "embeddings fixture regenerated — pinned values skipped")
-    // the freeze-the-index readout on the pinned fixture: IVF-p4 buys
-    // 0.71 recall at half the exact scan; the LSH buckets 0.40 at ~23%;
-    // the untrained 8-code PQ rankings sit near 0.11 (the q277 lesson)
-    assert(rows("ivf_p4")._4 == 0.711905, s"ivf moved: $rows")
-    assert(rows("srp_bucket")._4 == 0.402381, s"srp moved: $rows")
-  }
-
-  test("route-edge artifact: the durable table equals the maintained fold (q298 ≡ q299)") {
-    // the on-disk artifact is exactly the frame the incremental
-    // maintainer reproduces — cross-gate the two paths on the shared
-    // fixture (both already oracle-gated individually)
-    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
-      df.select("src", "dst", "rn").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val oneShot = rows(Similarity.routeEdgeTable(spark, sf))
-    val folded = rows(graft.streaming.VecStreams.foldRouteEdges(spark, sf))
-    assert(oneShot == folded)
-    assert(oneShot.nonEmpty)
   }
 }
