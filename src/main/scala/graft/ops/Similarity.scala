@@ -564,17 +564,15 @@ object Similarity {
     // re-decodes the parquet; released after the checkpointed result
     val e = emb(spark, dir)
     Memo.withPersisted(e) {
-      var cents: Seq[(Int, IndexedSeq[Double])] = sampledCentroids(spark, dir, k)
-        .map { case (cid, v) => (cid, v.map(_.toDouble).toIndexedSeq) }
-      if (cents.isEmpty)
-        e.select($"vec_id", lit(0L).as("cluster_id"),
+      lloydSeeds(spark, dir, k) match {
+        case None => e.select($"vec_id", lit(0L).as("cluster_id"),
           lit(0.0).as("cosine")).limit(0)
-      else {
-        for (_ <- 1 to iters) cents = lloydStep(e, cents, dp)
-        // a failed mid-loop collect must not leak the cached table for
-        // the JVM's lifetime (Bench keeps running after a query fails)
-        assignToLloyd(e, cents).select($"vec_id", $"cluster_id", $"cosine")
-          .localCheckpoint(true)
+        case Some(init) =>
+          // a failed mid-loop collect must not leak the cached table for
+          // the JVM's lifetime (Bench keeps running after a query fails)
+          val cents = (1 to iters).foldLeft(init)((cs, _) => lloydStep(e, cs, dp))
+          assignToLloyd(e, cents).select($"vec_id", $"cluster_id", $"cosine")
+            .localCheckpoint(true)
       }
     }
   }
@@ -611,24 +609,47 @@ object Similarity {
     import spark.implicits._
     val e = emb(spark, dir)
     Memo.withPersisted(e) {
-      var cents: Seq[(Int, IndexedSeq[Double])] = sampledCentroids(spark, dir, k)
-        .map { case (cid, v) => (cid, v.map(_.toDouble).toIndexedSeq) }
-      if (cents.isEmpty) {
-        (e.select($"vec_id", lit(0L).as("cluster_id"),
+      lloydSeeds(spark, dir, k) match {
+        case None => (e.select($"vec_id", lit(0L).as("cluster_id"),
           lit(0.0).as("cosine")).limit(0), 0)
-      } else {
-        var it = 0
-        var converged = false
-        while (it < maxIters && !converged) {
-          val next = lloydStep(e, cents, dp = 3)
-          converged = next == cents
-          cents = next
-          it += 1
-        }
-        (assignToLloyd(e, cents).select($"vec_id", $"cluster_id", $"cosine")
-          .localCheckpoint(true), it)
+        case Some(init) =>
+          var cents = init
+          var it = 0
+          var converged = false
+          while (it < maxIters && !converged) {
+            val next = lloydStep(e, cents, dp = 3)
+            converged = next == cents
+            cents = next
+            it += 1
+          }
+          (assignToLloyd(e, cents).select($"vec_id", $"cluster_id", $"cosine")
+            .localCheckpoint(true), it)
       }
     }
+  }
+
+  /** The float k-means start of q74/q108/q231/q234: the `k` md5-sampled
+    * seeds as double centroids, or None — the degenerate-corpus guard —
+    * when fewer than `minCents` exist.
+    */
+  private def lloydSeeds(spark: SparkSession, dir: String, k: Int,
+      minCents: Int = 1): Option[Seq[(Int, IndexedSeq[Double])]] = {
+    val cents = sampledCentroids(spark, dir, k)
+      .map { case (cid, v) => (cid, v.map(_.toDouble).toIndexedSeq) }
+    if (cents.sizeIs < minCents) None else Some(cents)
+  }
+
+  /** The (cos, neg_cid) struct of `embedding` against one literal double
+    * centroid: the round-6 cosine and the negated id, so greatest() over
+    * the structs is max cosine with ties to the lowest centroid id. The
+    * centroid norm keeps litNorm's left-to-right accumulation (floats
+    * widen losslessly, so one contract serves both element types).
+    */
+  private def lloydCosStruct(cid: Int, ce: IndexedSeq[Double]): Column = {
+    val nrm = math.sqrt(ce.foldLeft(0.0)((a, v) => a + v * v))
+    struct(round(dot(col("embedding"), lit(ce.toArray)) /
+      (norm(col("embedding")) * lit(nrm)), 6).as("cos"),
+      lit(-cid).as("neg_cid"))
   }
 
   /** Nearest-centroid assignment against literal double centroids (the
@@ -643,15 +664,7 @@ object Similarity {
   private def assignToLloyd(e: DataFrame,
       cs: Seq[(Int, IndexedSeq[Double])]): DataFrame = {
     import e.sparkSession.implicits._
-    // same left-to-right accumulation contract as litNorm (floats widen
-    // losslessly, so one definition serves both element types)
-    def litNormD(ce: IndexedSeq[Double]): Double =
-      math.sqrt(ce.foldLeft(0.0)((a, v) => a + v * v))
-    def cosTo(ce: IndexedSeq[Double]): Column =
-      round(dot($"embedding", lit(ce.toArray)) /
-        (norm($"embedding") * lit(litNormD(ce))), 6)
-    val cands = cs.map { case (cid, ce) =>
-      struct(cosTo(ce).as("cos"), lit(-cid).as("neg_cid")) }
+    val cands = cs.map { case (cid, ce) => lloydCosStruct(cid, ce) }
     val best = if (cands.sizeIs == 1) cands.head else greatest(cands: _*)
     e.select($"vec_id", $"embedding",
       (-best.getField("neg_cid")).cast("long").as("cluster_id"),
@@ -701,41 +714,38 @@ object Similarity {
     import spark.implicits._
     val e = emb(spark, dir)
     Memo.withPersisted(e) {
-      var cents: Seq[(Int, IndexedSeq[Double])] = sampledCentroids(spark, dir, k)
-        .map { case (cid, v) => (cid, v.map(_.toDouble).toIndexedSeq) }
-      if (cents.isEmpty)
-        e.sparkSession.emptyDataFrame
+      lloydSeeds(spark, dir, k) match {
+        case None => e.sparkSession.emptyDataFrame
           .select(lit(0L).as("cluster_id"), lit(0L).as("n_assigned"),
             lit(0.0).as("mean_cosine"), lit(0.0).as("shift")).limit(0)
-      else {
-        for (_ <- 1 until iters) cents = lloydStep(e, cents)
-        val prev = cents
-        // the final round's assignment feeds both the stats aggregate
-        // and the mean update — persist so the scan projection runs once
-        val a = assignToLloyd(e, prev)
-        Memo.withPersisted(a) {
-          val means = lloydMeans(a)
-          val next = prev.map { case (cid, old) => (cid, means.getOrElse(cid, old)) }
-          val shifts = prev.zip(next).map { case ((cid, p), (_, n)) =>
-            // left-to-right fold over the round-4 literals: the exact
-            // summation order the oracle's list_sum comprehension uses
-            val ss = p.zip(n).foldLeft(0.0) { case (acc, (x, y)) =>
-              acc + (x - y) * (x - y) }
-            (cid.toLong,
-              BigDecimal(math.sqrt(ss))
-                .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-          }.toDF("cluster_id", "shift")
-          val stats = a.groupBy($"cluster_id")
-            .agg(count(lit(1)).as("n_assigned"),
-              round(avg($"cosine"), 4).as("mean_cosine"))
-          // k-row join: a centroid that lost every member still reports,
-          // with n_assigned = 0 and a null mean cosine
-          shifts.join(stats, Seq("cluster_id"), "left")
-            .select($"cluster_id",
-              coalesce($"n_assigned", lit(0L)).as("n_assigned"),
-              $"mean_cosine", $"shift")
-            .localCheckpoint(true)
-        }
+        case Some(init) =>
+          val prev = (1 until iters).foldLeft(init)((cs, _) => lloydStep(e, cs))
+          // the final round's assignment feeds both the stats aggregate
+          // and the mean update — persist so the scan projection runs once
+          val a = assignToLloyd(e, prev)
+          Memo.withPersisted(a) {
+            val means = lloydMeans(a)
+            val next = prev.map { case (cid, old) => (cid, means.getOrElse(cid, old)) }
+            val shifts = prev.zip(next).map { case ((cid, p), (_, n)) =>
+              // left-to-right fold over the round-4 literals: the exact
+              // summation order the oracle's list_sum comprehension uses
+              val ss = p.zip(n).foldLeft(0.0) { case (acc, (x, y)) =>
+                acc + (x - y) * (x - y) }
+              (cid.toLong,
+                BigDecimal(math.sqrt(ss))
+                  .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+            }.toDF("cluster_id", "shift")
+            val stats = a.groupBy($"cluster_id")
+              .agg(count(lit(1)).as("n_assigned"),
+                round(avg($"cosine"), 4).as("mean_cosine"))
+            // k-row join: a centroid that lost every member still reports,
+            // with n_assigned = 0 and a null mean cosine
+            shifts.join(stats, Seq("cluster_id"), "left")
+              .select($"cluster_id",
+                coalesce($"n_assigned", lit(0L)).as("n_assigned"),
+                $"mean_cosine", $"shift")
+              .localCheckpoint(true)
+          }
       }
     }
   }
@@ -1093,6 +1103,206 @@ object Similarity {
         round($"n".cast("double") / $"n_vecs", 6).as("purity"))
   }
 
+  // ---- vector quantization: the decisions every k-means, PQ and IVF
+  // query shares (q74/q108/q231/q234, q184, q269-q271, q276, q277,
+  // q280, q295, q300-q303), each declared once
+
+  /** e3 integer view of the `embedding` column: round(x·1e3) per
+    * component — the routing index's scale, shared with the streaming
+    * bucketer (`streaming.VecStreams`) so the two cannot drift.
+    */
+  private[graft] def e3Col: Column = expr(
+    "transform(embedding, x -> cast(round(cast(x as double) * 1000) as bigint))")
+
+  /** e6 integer view of the `embedding` column: [[qe6of]] per component,
+    * the scale of every PQ/IVF codebook.
+    */
+  private def e6Col: Column = expr(
+    "transform(embedding, x -> cast(round(cast(x as double) * 1000) as bigint) * 1000)")
+
+  /** e6 integer view of a float component: round(x·1e3)·1e3 — the e3
+    * corpus quantization lifted to the centroid scale (the driver-side
+    * twin of [[e6Col]]).
+    */
+  private def qe6of(x: Float): Long = math.round(x.toDouble * 1000.0) * 1000L
+
+  private def e6Of(v: Seq[Float]): IndexedSeq[Long] = v.map(qe6of).toIndexedSeq
+
+  /** Per-block e6 codebook cb(block)(code) from float seed vectors. */
+  private def blockCodebook(seeds: Seq[(Int, Seq[Float])], nBlocks: Int,
+      bw: Int): IndexedSeq[IndexedSeq[IndexedSeq[Long]]] =
+    (0 until nBlocks).map(b => seeds.map(s =>
+      e6Of(s._2).slice(b * bw, (b + 1) * bw)).toIndexedSeq)
+
+  /** Exact i64 squared distance between equal-length integer vectors. */
+  private def intD2(a: IndexedSeq[Long], b: IndexedSeq[Long]): Long =
+    a.indices.foldLeft(0L)((acc, i) =>
+      acc + (a(i) - b(i)) * (a(i) - b(i)))
+
+  /** The corpus minus the query vector, with its e6 view `xq`. */
+  private def e6Vecs(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") =!= 0L).select(col("vec_id"), e6Col.as("xq"))
+
+  /** The query vector (vec_id 0), None when the corpus has none. */
+  private def queryVector(e: DataFrame): Option[Seq[Float]] =
+    e.filter(col("vec_id") === 0L).select(col("embedding")).collect()
+      .headOption.map(_.getSeq[Float](0).toSeq)
+
+  /** The ids of the `k` smallest `d2` rows of `scored` (`vec_id` its
+    * first column; min-id ties), collected as literals — the bounded
+    * driver-steering collect of every exact truth arm.
+    */
+  private def topIds(scored: DataFrame, k: Int): Seq[Long] =
+    scored.orderBy(col("d2"), col("vec_id")).limit(k)
+      .collect().map(_.getLong(0)).toSeq
+
+  /** A coarse quantizer seen from one query: the query's e6 vector and
+    * the e6 cell centroids.
+    */
+  private final case class Coarse(qv6: IndexedSeq[Long],
+      cells: IndexedSeq[IndexedSeq[Long]]) {
+    /** Cell ids nearest the query first (exact i64 d², min-id ties). */
+    lazy val cellRank: IndexedSeq[Int] =
+      cells.indices.sortBy(c => (intD2(qv6, cells(c)), c))
+    /** The `nProbe` cells a probe reads. */
+    def probed(nProbe: Int): Seq[Long] = cellRank.take(nProbe).map(_.toLong)
+  }
+
+  /** Seeds → cells, the setup of q280, q295 and q300-q302: the
+    * `nCells + nRest` md5-sampled seeds (sample cut at `hexMax`) and the
+    * query vector of the corpus `e`. The first `nCells` seeds, e6-quantized, are the
+    * coarse cells; the rest come back raw to seed a residual codebook.
+    * None when the corpus has no query vector or fewer than `minSeeds`
+    * seeds.
+    */
+  private def seedCells(spark: SparkSession, dir: String, e: DataFrame,
+      nCells: Int, nRest: Int, minSeeds: Int, hexMax: String = "19")
+      : Option[(Coarse, Seq[(Int, Seq[Float])])] = {
+    val seeds = sampledCentroids(spark, dir, nCells + nRest, hexMax)
+    val qv = queryVector(e)
+    if (seeds.size < minSeeds || qv.isEmpty) None
+    else Some((Coarse(e6Of(qv.get),
+      seeds.take(nCells).map(s => e6Of(s._2)).toIndexedSeq),
+      seeds.drop(nCells)))
+  }
+
+  /** The coarse cell of the e6 vector column `xq`: one codegen'd
+    * pq_encode over a single full-width block (exact-i64 argmin,
+    * min-cell ties).
+    */
+  private def cellCol(spark: SparkSession, xq: Column,
+      cells: IndexedSeq[IndexedSeq[Long]]): Column =
+    element_at(VectorOps.pqEncodeCol(spark, xq, Seq(cells.map(_.toSeq)))
+      .getField("codes"), 1)
+
+  /** One integer Lloyd round (q271's discipline; q271/q277 and both
+    * levels of q295/q303's trainer run it). ONE mergeable `PqRollup`
+    * fold of the assigned `codes` over the e6 `values` (blocks of
+    * width `bw`) gives, per (block, code), the exact i64 member count
+    * and component sums plus the global component minimum — a flat
+    * long buffer per partition, no ×dim posexplode. Each code moves to the exact integer mean of
+    * its members, a floor division made engine-identical by shifting
+    * the numerator non-negative ((s + shift·n) / n − shift); an empty
+    * code keeps its centroid, and with `frozenZero` code 0 stays the
+    * zero vector (q276's law-maker). No float sum ever crosses the
+    * engines.
+    *
+    * The shift holds only while every component is ≥ −shift: below it
+    * the numerator goes negative, where Spark's truncating div diverges
+    * from the oracle's flooring // SILENTLY. A component past the bound
+    * fails loudly instead (the spectralCore discipline) — the minimum
+    * rides the same buffer, so the check costs nothing.
+    */
+  private def integerLloydRound(rows: DataFrame, codes: Column,
+      values: Column, cents: IndexedSeq[IndexedSeq[IndexedSeq[Long]]],
+      bw: Int, shift: Long, frozenZero: Boolean, what: String)
+      : IndexedSeq[IndexedSeq[IndexedSeq[Long]]] = {
+    val (nBlocks, m) = (cents.length, cents.head.length)
+    val buf = rows
+      .select(graft.functions.PqRollup.pqRollup(nBlocks, m, bw)(codes, values)
+        .as("buf"))
+      .head().getSeq[Long](0)
+    def cnt(b: Int, code: Int): Long = buf(1 + b * m + code)
+    def sm(b: Int, code: Int, i: Int): Long =
+      buf(1 + nBlocks * m + (b * m + code) * bw + i)
+    if ((0 until nBlocks).exists(b => (0 until m).exists(c => cnt(b, c) > 0)))
+      require(buf(0) >= -shift,
+        s"$what component ${buf(0)} e-6 below the -${shift / 1000000}.0 " +
+          "shift bound — raise the shift constant or rescale the corpus " +
+          "(engine-split hazard in the mean's floor div)")
+    (0 until nBlocks).map { b =>
+      (0 until m).map { code =>
+        val n = cnt(b, code)
+        if (frozenZero && code == 0) IndexedSeq.fill(bw)(0L)
+        else (0 until bw).map { i =>
+          if (n > 0) (sm(b, code, i) + shift * n) / n - shift
+          else cents(b)(code)(i)
+        }
+      }
+    }
+  }
+
+  /** The argument check of the probe queries (q300-q303, q305), run
+    * before any Spark job: `nProbe` within 1..nCells and, where the
+    * query has postfilter arms, `postMults` distinct ascending.
+    */
+  private def requireProbeArgs(nProbe: Int, nCells: Int,
+      postMults: Option[Seq[Int]] = None): Unit = {
+    require(nProbe >= 1 && nProbe <= nCells,
+      s"nProbe=$nProbe outside 1..$nCells")
+    postMults.foreach(pm => require(pm.nonEmpty && pm == pm.sorted &&
+      pm.distinct == pm, s"postMults must be distinct ascending, got $pm"))
+  }
+
+  /** The filtered-ANN strategy table of q300-q303 over one materialized
+    * probed-cell frame `pd` (vec_id, label, score):
+    *
+    *  - `prefilter`: the predicate `inLabel` applies INSIDE the probed
+    *    cells before ranking, so n_scanned is the label-and-cell-pruned
+    *    row count;
+    *  - `postfilter_xM` for M ∈ `postMults`: rank the probed cells
+    *    label-blind, cut M·k, THEN filter; n_scanned is the full
+    *    probed-cell count.
+    *
+    * n_overlap counts a cut's ids in `truthIds` (the exact filtered
+    * top-k); ranking is by score, min-id ties. Every row filters `pd`:
+    * TakeOrdered arms plus one-row counts, no further scan.
+    */
+  private def filteredStrategyRows(pd: DataFrame, inLabel: Column,
+      truthIds: Seq[Long], k: Int, postMults: Seq[Int]): DataFrame = {
+    def row(strategy: String, arm: DataFrame, cut: Int): DataFrame =
+      arm.orderBy(col("score"), col("vec_id")).limit(cut)
+        .filter(col("vec_id").isin(truthIds: _*))
+        .agg(count(lit(1)).as("n_overlap"))
+        .crossJoin(arm.agg(count(lit(1)).as("n_scanned")))
+        .select(lit(strategy).as("strategy"), lit(k.toLong).as("k"),
+          col("n_scanned"), col("n_overlap"),
+          round(col("n_overlap") / lit(k.toDouble), 6).as("recall"))
+    (row("prefilter", pd.filter(inLabel), k) +: postMults.map(m =>
+      row(f"postfilter_x$m%02d", pd, m * k))).reduce(_ unionByName _)
+  }
+
+  /** q184's block encoder over float seed codes: per block `b` of width
+    * `bw`, the least (rounded d², code) struct — d² = v·v − 2v·c + c·c,
+    * the identical three-dot formula the oracle states, so the doubles
+    * agree bitwise; min-code ties.
+    */
+  private def floatBlockArgmin(seeds: Seq[(Int, Seq[Float])], b: Int,
+      bw: Int): Column = {
+    val v = slice(col("embedding"), b * bw + 1, bw)
+    val cands = seeds.map { case (code, full) =>
+      val c = full.slice(b * bw, (b + 1) * bw)
+      struct(
+        round(dot(v, v) - lit(2.0) * dot(v, litVec(c)) + lit(sumSq(c)), 6)
+          .as("d2"),
+        lit(code.toLong).as("code"))
+    }
+    if (cands.length == 1) cands.head else least(cands: _*)
+  }
+
+  private def sumSq(vals: Seq[Float]): Double =
+    vals.foldLeft(0.0)((acc, v) => acc + v.toDouble * v.toDouble)
+
   /** Product-quantization codebook report (q184): the embedding space
     * split into `nBlocks` contiguous sub-spaces, each with its own
     * `codesPerBlock`-entry codebook (md5-sampled deterministic seeds,
@@ -1115,24 +1325,13 @@ object Similarity {
       codesPerBlock: Int = 8): DataFrame = {
     import spark.implicits._
     val e = emb(spark, dir)
-    val dim = 64
-    val bw = dim / nBlocks
+    val bw = 64 / nBlocks
     val seeds = sampledCentroids(spark, dir, codesPerBlock)
     if (seeds.isEmpty)
       return Seq.empty[(Long, Long, Long, Double)]
         .toDF("block", "code", "n_assigned", "mse")
-    def sumSq(vals: Seq[Float]): Double =
-      vals.foldLeft(0.0)((acc, v) => acc + v.toDouble * v.toDouble)
     val perBlock = (0 until nBlocks).map { b =>
-      val v = slice($"embedding", b * bw + 1, bw)
-      val cands = seeds.map { case (code, full) =>
-        val c = full.slice(b * bw, (b + 1) * bw)
-        struct(
-          round(dot(v, v) - lit(2.0) * dot(v, litVec(c)) + lit(sumSq(c)), 6)
-            .as("d2"),
-          lit(code.toLong).as("code"))
-      }
-      val argmin = if (cands.length == 1) cands.head else least(cands: _*)
+      val argmin = floatBlockArgmin(seeds, b, bw)
       e.select(lit(b.toLong).as("block"),
         argmin.getField("code").as("code"),
         argmin.getField("d2").as("d2"))
@@ -1170,16 +1369,13 @@ object Similarity {
       codesPerBlock: Int = 8, k: Int = 10): DataFrame = {
     import spark.implicits._
     val e = emb(spark, dir)
-    val dim = 64
-    val bw = dim / nBlocks
+    val bw = 64 / nBlocks
     val seeds = sampledCentroids(spark, dir, codesPerBlock)
-    val qRows = e.filter($"vec_id" === 0L).select($"embedding").collect()
-    if (seeds.isEmpty || qRows.isEmpty)
+    val qOpt = queryVector(e)
+    if (seeds.isEmpty || qOpt.isEmpty)
       return Seq.empty[(Long, Long, Long, Double, Double)]
         .toDF("vec_id", "label", "adc_d2_micro", "adc_d2", "exact_d2")
-    val qv = qRows(0).getSeq[Float](0).toSeq
-    def sumSq(vals: Seq[Float]): Double =
-      vals.foldLeft(0.0)((acc, v) => acc + v.toDouble * v.toDouble)
+    val qv = qOpt.get
     def dotSeq(a: Seq[Float], b: Seq[Float]): Double =
       a.zip(b).foldLeft(0.0)((acc, p) => acc + p._1.toDouble * p._2.toDouble)
     // lookup table in micro-units: the same left-to-right double folds
@@ -1195,16 +1391,7 @@ object Similarity {
         }.toIndexedSeq
       }
     val adcMicro = (0 until nBlocks).map { b =>
-      val v = slice($"embedding", b * bw + 1, bw)
-      val cands = seeds.map { case (code, full) =>
-        val c = full.slice(b * bw, (b + 1) * bw)
-        struct(
-          round(dot(v, v) - lit(2.0) * dot(v, litVec(c)) + lit(sumSq(c)), 6)
-            .as("d2"),
-          lit(code.toLong).as("code"))
-      }
-      val codeCol = (if (cands.length == 1) cands.head else least(cands: _*))
-        .getField("code")
+      val codeCol = floatBlockArgmin(seeds, b, bw).getField("code")
       element_at(array(ltMicro(b).map(lit): _*), codeCol.cast("int") + 1)
     }.reduce(_ + _)
     e.filter($"vec_id" =!= 0L)
@@ -1293,74 +1480,24 @@ object Similarity {
       codesPerBlock: Int, iters: Int, k: Int): Option[DataFrame] = {
     import spark.implicits._
     val e = emb(spark, dir)
-    val dim = 64
-    val bw = dim / nBlocks
+    val bw = 64 / nBlocks
     val seeds = sampledCentroids(spark, dir, codesPerBlock)
-    val qRows = e.filter($"vec_id" === 0L).select($"embedding").collect()
-    if (seeds.isEmpty || qRows.isEmpty) return None
+    val qOpt = queryVector(e)
+    if (seeds.isEmpty || qOpt.isEmpty) return None
     val m = seeds.size
-    // e6 integer view of a float component: round(x·1e3)·1e3 — the e3
-    // corpus quantization lifted to the centroid scale
-    def qe6(x: Float): Long = math.round(x.toDouble * 1000.0) * 1000L
-    val xq = expr(
-      "transform(embedding, x -> cast(round(cast(x as double) * 1000) as bigint) * 1000)")
-    val vecs = e.filter($"vec_id" =!= 0L)
-      .select($"vec_id", xq.as("xq"))
-    val qv6: IndexedSeq[Long] =
-      qRows(0).getSeq[Float](0).map(qe6).toIndexedSeq
+    val vecs = e6Vecs(e)
+    val qv6 = e6Of(qOpt.get)
     // centroids(block)(code) = e6 integer vector of length bw
-    var cents: IndexedSeq[IndexedSeq[IndexedSeq[Long]]] =
-      (0 until nBlocks).map(b => seeds.map(s =>
-        s._2.slice(b * bw, (b + 1) * bw).map(qe6).toIndexedSeq).toIndexedSeq)
+    val initCents = blockCodebook(seeds, nBlocks, bw)
     // whole-vector assignment in ONE codegen'd pq_encode call: argmin
     // code per block by exact i64 d², min-code ties — the identical
     // `least(struct(d2, code))` contract, minus the blocks × codes
     // Catalyst tree whose planning time dominated at 16 × 64
     def encodeWith(cs: IndexedSeq[IndexedSeq[IndexedSeq[Long]]]): Column =
       VectorOps.pqEncodeCol(spark, $"xq", cs)
-    val rollup = graft.functions.PqRollup.pqRollup(nBlocks, m, bw)
-    for (_ <- 1 to iters) {
-      val frozen = cents
-      val assigned = vecs.select($"xq",
-        encodeWith(frozen).getField("codes").as("codes"))
-      // the (block, code, dim) rollup as ONE mergeable Aggregator fold:
-      // a flat long[1 + blocks·m + blocks·m·bw] buffer per partition,
-      // exact i64 sums + counts + the global component min — no ×dim
-      // posexplode (38M exploded rows per round at 10×), the shuffle
-      // carries one buffer per partition
-      val buf = assigned
-        .select(rollup(col("codes"), col("xq")).as("buf"))
-        .head().getSeq[Long](0)
-      val nCnt = nBlocks * m
-      def cnt(b: Int, code: Int): Long = buf(1 + b * m + code)
-      def sm(b: Int, code: Int, i: Int): Long =
-        buf(1 + nCnt + (b * m + code) * bw + i)
-      // the shifted floor division below assumes every component ≥ -4e6
-      // (s + 4e6·n ≥ 0); a corpus below -4.0 would send the numerator
-      // negative, where Spark's truncating div diverges from the
-      // oracle's flooring // SILENTLY. Guard loudly instead (the
-      // spectralCore discipline, round-10 ADVICE) — the min rides the
-      // same buffer, so the check costs nothing.
-      if ((0 until nBlocks).exists(b => (0 until m).exists(c => cnt(b, c) > 0)))
-        require(buf(0) >= -4000000L,
-          s"trainedPqRecall: component ${buf(0)} e-6 below the " +
-            "-4.0 shift bound — raise the shift constant or rescale " +
-            "the corpus (engine-split hazard in the mean's floor div)")
-      cents = (0 until nBlocks).map { b =>
-        (0 until m).map { code =>
-          val n = cnt(b, code)
-          (0 until bw).map { i =>
-            if (n > 0)
-              // floor division made engine-identical by shifting the
-              // numerator non-negative (components ≥ -4e6 · n)
-              (sm(b, code, i) + 4000000L * n) / n - 4000000L
-            else cents(b)(code)(i) // empty code keeps its centroid
-          }
-        }
-      }
-    }
-    val initCents = (0 until nBlocks).map(b => seeds.map(s =>
-      s._2.slice(b * bw, (b + 1) * bw).map(qe6).toIndexedSeq).toIndexedSeq)
+    val cents = (1 to iters).foldLeft(initCents)((cs, _) =>
+      integerLloydRound(vecs, encodeWith(cs).getField("codes"), $"xq", cs,
+        bw, 4000000L, frozenZero = false, "trainedPqRecall:"))
     // the exact quantized-L2 ranking is codebook-independent — built
     // ONCE and shared by both phases (it was a per-phase subplan)
     val exactTop = vecs
@@ -1368,12 +1505,8 @@ object Similarity {
       .orderBy($"d2", $"vec_id").limit(k).select($"vec_id")
     def phaseRecall(phase: String,
         cs: IndexedSeq[IndexedSeq[IndexedSeq[Long]]]): DataFrame = {
-      def ltOf(b: Int, code: Int): Long = {
-        val qb = qv6.slice(b * bw, (b + 1) * bw)
-        val c = cs(b)(code)
-        qb.indices.foldLeft(0L)((acc, i) =>
-          acc + (qb(i) - c(i)) * (qb(i) - c(i)))
-      }
+      def ltOf(b: Int, code: Int): Long =
+        intD2(qv6.slice(b * bw, (b + 1) * bw), cs(b)(code))
       // one pq_encode per row serves BOTH readouts: the ADC ranking
       // (lookup-table sum over the assigned codes) and the distortion
       // objective (sum of the per-block min d²s)
@@ -1404,27 +1537,38 @@ object Similarity {
       .unionByName(phaseRecall("trained", cents)))
   }
 
-  /** Residual (two-level) product quantization report (q276): the
-    * second standard compression step after q184/q269's one-level PQ —
-    * quantize each block, then quantize the RESIDUAL against a second
-    * codebook (the RQ/IVF-ADC refinement used by every billion-vector
-    * index when one codebook's cells are too coarse). All integer, and
-    * the improvement is a THEOREM here, not a hope: the residual
-    * codebook always contains the ZERO vector (code 0), so the
-    * two-level distortion of every vector is ≤ its one-level
-    * distortion by construction — `n_violations` (vectors where level
-    * 2 made things worse) is emitted and asserted 0 by the oracle,
-    * alongside the exact distortion totals and the measured
-    * improvement fraction. Level-2 codes are the residuals of the
-    * NEXT 8 md5-sampled vectors against the level-1 codebook (the
-    * first 8 are the level-1 seeds; their own residuals are 0 and
-    * would be degenerate).
-    *
-    * Scale: both levels are zero-shuffle scan projections (argmin over
-    * literal integer vectors — the q269 shape, twice); the report is
-    * one single-row aggregate. Codebooks are plan-time literals
-    * (2 × blocks × codes × blockDim ints).
+  /** The q276/q280 residual-codebook seeding rule, shared by q280 and
+    * q295 (round-12 review: two verbatim copies would let the frozen-
+    * zero law or the tie-break drift between the pair): code 0 = the
+    * zero vector; codes 1.. = the residuals of `resSeeds` against their
+    * nearest cell (exact-i64 argmin, min-cell ties).
     */
+  private def seedResidualCodebook(resSeeds: Seq[(Int, Seq[Float])],
+      cells: IndexedSeq[IndexedSeq[Long]], nBlocks: Int, bw: Int)
+      : IndexedSeq[IndexedSeq[IndexedSeq[Long]]] = {
+    def cellOf(v: IndexedSeq[Long]): Int =
+      cells.indices.minBy(c => (intD2(v, cells(c)), c))
+    (0 until nBlocks).map { b =>
+      val zero = IndexedSeq.fill(bw)(0L)
+      val res = resSeeds.map { s =>
+        val v = e6Of(s._2)
+        val c = cells(cellOf(v))
+        (b * bw until (b + 1) * bw).map(i => v(i) - c(i))
+      }
+      zero +: res.toIndexedSeq
+    }
+  }
+
+  /** The materialized (vec_id, cell, adc) IVF-PQ index behind q280,
+    * memoized like the route index (round-11 ADVICE: the eager
+    * localCheckpoint it replaces was never unpersisted, so sweeps and
+    * spec suites accumulated block-manager blocks for the life of the
+    * JVM). The index is a persisted plan, so Memo's release rule
+    * unpersists it on eviction.
+    */
+  private val ivfPqIndexCache = scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String, String, Long), DataFrame]
+
   /** IVF-PQ search (q280): the full billion-vector index shape the
     * q269-q277 ladder builds toward — a coarse quantizer (nCells
     * full-width cells, exact-i64 argmin) routes every vector to ONE
@@ -1454,81 +1598,21 @@ object Similarity {
     * and the same plan over a cell-partitioned layout prunes at the
     * file level.
     */
-  /** e6 integer view of a float component: round(x·1e3)·1e3 — the e3
-    * corpus quantization lifted to the centroid scale (shared by the
-    * IVF-PQ pair so the two cannot drift; q271/q276 keep local copies
-    * of the same formula, pinned by their own oracles).
-    */
-  private def qe6of(x: Float): Long = math.round(x.toDouble * 1000.0) * 1000L
-
-  /** Exact i64 squared distance between equal-length integer vectors. */
-  private def intD2(a: IndexedSeq[Long], b: IndexedSeq[Long]): Long =
-    a.indices.foldLeft(0L)((acc, i) =>
-      acc + (a(i) - b(i)) * (a(i) - b(i)))
-
-  /** The q276/q280 residual-codebook seeding rule, shared by q280 and
-    * q295 (round-12 review: two verbatim copies would let the frozen-
-    * zero law or the tie-break drift between the pair): code 0 = the
-    * zero vector; codes 1.. = the residuals of `resSeeds` against their
-    * nearest cell (exact-i64 argmin, min-cell ties).
-    */
-  private def seedResidualCodebook(resSeeds: Seq[(Int, Seq[Float])],
-      cells: IndexedSeq[IndexedSeq[Long]], nBlocks: Int, bw: Int)
-      : IndexedSeq[IndexedSeq[IndexedSeq[Long]]] = {
-    def cellOf(v: IndexedSeq[Long]): Int =
-      cells.indices.minBy(c => (intD2(v, cells(c)), c))
-    (0 until nBlocks).map { b =>
-      val zero = IndexedSeq.fill(bw)(0L)
-      val res = resSeeds.map { s =>
-        val v = s._2.map(qe6of).toIndexedSeq
-        val c = cells(cellOf(v))
-        (b * bw until (b + 1) * bw).map(i => v(i) - c(i))
-      }
-      zero +: res.toIndexedSeq
-    }
-  }
-
-  /** The materialized (vec_id, cell, adc) IVF-PQ index behind q280,
-    * memoized like the route index (round-11 ADVICE: the eager
-    * localCheckpoint it replaces was never unpersisted, so sweeps and
-    * spec suites accumulated block-manager blocks for the life of the
-    * JVM). The index is a persisted plan, so Memo's release rule
-    * unpersists it on eviction.
-    */
-  private val ivfPqIndexCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String, Long), DataFrame]
-
   def ivfPqTopK(spark: SparkSession, dir: String, nCells: Int = 8,
       nBlocks: Int = 4, codesPerBlock: Int = 8, k: Int = 10,
       probes: Seq[Int] = Seq(1, 2, 4, 8)): DataFrame = {
     import spark.implicits._
-    val e = emb(spark, dir)
-    val dim = 64
-    val bw = dim / nBlocks
-    val seeds = sampledCentroids(spark, dir, nCells + codesPerBlock)
-    val qRows = e.filter($"vec_id" === 0L).select($"embedding").collect()
-    if (seeds.size <= nCells || qRows.isEmpty)
-      return Seq.empty[(Long, Long, Long, Long, Double)]
-        .toDF("n_probe", "k", "n_scanned", "n_overlap", "recall")
-    val qv6: IndexedSeq[Long] =
-      qRows(0).getSeq[Float](0).map(qe6of).toIndexedSeq
-    // coarse cells: the first nCells sampled vectors, full width
-    val cells: IndexedSeq[IndexedSeq[Long]] =
-      seeds.take(nCells).map(_._2.map(qe6of).toIndexedSeq).toIndexedSeq
+    val bw = 64 / nBlocks
+    val (coarse, resSeeds) = seedCells(spark, dir, emb(spark, dir), nCells,
+      codesPerBlock, nCells + 1).getOrElse(return Seq.empty[(Long, Long, Long, Long, Double)]
+        .toDF("n_probe", "k", "n_scanned", "n_overlap", "recall"))
     // residual codebook: code 0 = zero; codes 1.. = the NEXT sampled
     // vectors' residuals against their own nearest cell (q276's rule)
-    val c2 = seedResidualCodebook(seeds.drop(nCells), cells, nBlocks, bw)
+    val c2 = seedResidualCodebook(resSeeds, coarse.cells, nBlocks, bw)
     ivfPqProbeArms(spark, dir, s"base-$nCells-$nBlocks-$codesPerBlock",
-      qv6, cells, c2, nBlocks, bw, k, probes)
+      coarse, c2, nBlocks, bw, k, probes)
   }
 
-  /** The IVF-PQ probe-curve tail shared by q280 (md5-seed codebooks)
-    * and q295 (Lloyd-trained codebooks): cell ranking, the query-side
-    * ADC lookup table, the ONE-scan encode (pq_encode for the coarse
-    * cell + pq_res_encode for the residual codes), the memoized index,
-    * the shared exact arm and the per-nProbe output rows. `tag`
-    * disambiguates the memo entry per codebook phase/config.
-    */
   /** The memoized (vec_id, cell, adc) IVF-PQ index for ONE query
     * vector under the given codebooks — extracted from the probe-arm
     * tail so q303 (filtered ANN over ADC ranking) shares the EXACT
@@ -1537,34 +1621,25 @@ object Similarity {
     * pre-folded through the query's (cell, block, code) lookup table.
     */
   private def ivfPqEncodedIndex(spark: SparkSession, dir: String,
-      tag: String, qv6: IndexedSeq[Long],
-      cells: IndexedSeq[IndexedSeq[Long]],
+      tag: String, coarse: Coarse,
       c2: IndexedSeq[IndexedSeq[IndexedSeq[Long]]], nBlocks: Int,
       bw: Int): DataFrame = {
     import spark.implicits._
     val e = emb(spark, dir)
+    val Coarse(qv6, cells) = coarse
     // the per-(cell, block, code) ADC lookup table from the query
     // residual
     val lt: IndexedSeq[IndexedSeq[IndexedSeq[Long]]] =
       cells.indices.map { c =>
         val qr = qv6.indices.map(i => qv6(i) - cells(c)(i))
-        (0 until nBlocks).map { b =>
-          c2(b).map { cc =>
-            (0 until bw).foldLeft(0L)((acc, i) =>
-              acc + (qr(b * bw + i) - cc(i)) * (qr(b * bw + i) - cc(i)))
-          }
-        }
+        (0 until nBlocks).map(b =>
+          c2(b).map(cc => intD2(qr.slice(b * bw, (b + 1) * bw), cc)))
       }
-    val xq = expr(
-      "transform(embedding, x -> cast(round(cast(x as double) * 1000) as bigint) * 1000)")
     // ONE scan: coarse cell via pq_encode (a single 64-wide block), then
     // per-block residual codes via codegen'd pq_res_d2 argmins against
     // the cell slice picked out of a literal array-of-arrays
-    val withCell = e.filter($"vec_id" =!= 0L)
-      .select($"vec_id", xq.as("xq"))
-      .select($"vec_id", $"xq",
-        element_at(VectorOps.pqEncodeCol(spark, $"xq", Seq(cells.map(_.toSeq)))
-          .getField("codes"), 1).as("cell"))
+    val withCell = e6Vecs(e)
+      .select($"vec_id", $"xq", cellCol(spark, $"xq", cells).as("cell"))
     // residual codes in ONE pq_res_encode node: the full-width cell
     // centroid is picked per row out of a literal array-of-arrays, the
     // codebook rides as a primitive reference object (at 16 blocks ×
@@ -1601,29 +1676,24 @@ object Similarity {
     }
   }
 
+  /** The IVF-PQ probe-curve tail shared by q280 (md5-seed codebooks)
+    * and q295 (Lloyd-trained codebooks): cell ranking, the query-side
+    * ADC lookup table, the ONE-scan encode (pq_encode for the coarse
+    * cell + pq_res_encode for the residual codes), the memoized index,
+    * the shared exact arm and the per-nProbe output rows. `tag`
+    * disambiguates the memo entry per codebook phase/config.
+    */
   private def ivfPqProbeArms(spark: SparkSession, dir: String, tag: String,
-      qv6: IndexedSeq[Long], cells: IndexedSeq[IndexedSeq[Long]],
-      c2: IndexedSeq[IndexedSeq[IndexedSeq[Long]]], nBlocks: Int, bw: Int,
-      k: Int, probes: Seq[Int]): DataFrame = {
+      coarse: Coarse, c2: IndexedSeq[IndexedSeq[IndexedSeq[Long]]],
+      nBlocks: Int, bw: Int, k: Int, probes: Seq[Int]): DataFrame = {
     import spark.implicits._
     val e = emb(spark, dir)
-    // query-side: probed-cell ranking (exact d², cell id ties)
-    val cellRank: IndexedSeq[Int] =
-      cells.indices.sortBy(c => (intD2(qv6, cells(c)), c)).toIndexedSeq
-    val xq = expr(
-      "transform(embedding, x -> cast(round(cast(x as double) * 1000) as bigint) * 1000)")
-    val enc = ivfPqEncodedIndex(spark, dir, tag, qv6, cells, c2, nBlocks,
-      bw)
+    val enc = ivfPqEncodedIndex(spark, dir, tag, coarse, c2, nBlocks, bw)
     // the exact top-k is probe-independent too: one scan, k ids
-    // collected as literals (the bounded driver-steering collect)
-    val exactIds: Seq[Long] = e.filter($"vec_id" =!= 0L)
-      .select($"vec_id", xq.as("xq"))
-      .select($"vec_id", VectorOps.pqD2Col(spark, $"xq", 0, qv6).as("d2"))
-      .orderBy($"d2", $"vec_id").limit(k)
-      .collect().map(_.getLong(0)).toSeq
+    val exactIds = topIds(e6Vecs(e).select($"vec_id",
+      VectorOps.pqD2Col(spark, $"xq", 0, coarse.qv6).as("d2")), k)
     probes.map { np =>
-      val probed = cellRank.take(np).map(_.toLong)
-      val inCells = enc.filter($"cell".isin(probed: _*))
+      val inCells = enc.filter($"cell".isin(coarse.probed(np): _*))
       val scanned = inCells.agg(count(lit(1)).as("n_scanned"))
       inCells
         .orderBy($"adc", $"vec_id").limit(k)
@@ -1670,21 +1740,20 @@ object Similarity {
       case None =>
         Seq.empty[(Long, Long, Long, Long, Double)]
           .toDF("n_probe", "k", "n_scanned", "n_overlap", "recall")
-      case Some((qv6, cells, c2)) =>
+      case Some((coarse, c2)) =>
         ivfPqProbeArms(spark, dir,
           s"trained-$nCells-$nBlocks-$codesPerBlock-$iters-$seedHexMax",
-          qv6, cells, c2, nBlocks, 64 / nBlocks, k, probes)
+          coarse, c2, nBlocks, 64 / nBlocks, k, probes)
     }
   }
 
   private val trainedCodebookCache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String, Int, Int, Int, Int, String, Long),
-      Option[(IndexedSeq[Long], IndexedSeq[IndexedSeq[Long]],
-        IndexedSeq[IndexedSeq[IndexedSeq[Long]]])]]
+      Option[(Coarse, IndexedSeq[IndexedSeq[IndexedSeq[Long]]])]]
 
   /** The trained codebooks + query vector behind q295 — extracted so
     * q303 (filtered ANN over the trained ADC ranking) trains the
-    * IDENTICAL trajectory: (query e6 vector, Lloyd-trained coarse
+    * IDENTICAL trajectory: (query e6 vector + Lloyd-trained coarse
     * cells, Lloyd-trained residual codebook with code 0 frozen at
     * zero). None when the corpus can't seed the codebooks or has no
     * query vector (the q295 degrade rule). Memoized (KB-sized driver
@@ -1694,9 +1763,8 @@ object Similarity {
     */
   private def trainedIvfPqCodebooks(spark: SparkSession, dir: String,
       nCells: Int, nBlocks: Int, codesPerBlock: Int, iters: Int,
-      seedHexMax: String): Option[(IndexedSeq[Long],
-        IndexedSeq[IndexedSeq[Long]],
-        IndexedSeq[IndexedSeq[IndexedSeq[Long]]])] = {
+      seedHexMax: String)
+      : Option[(Coarse, IndexedSeq[IndexedSeq[IndexedSeq[Long]]])] = {
     val fp = Memo.fingerprint(spark, s"$dir/embeddings.parquet")
     Memo.cached(trainedCodebookCache,
         (spark, dir, nCells, nBlocks, codesPerBlock, iters, seedHexMax,
@@ -1708,100 +1776,44 @@ object Similarity {
 
   private def trainedIvfPqCodebooksUncached(spark: SparkSession,
       dir: String, nCells: Int, nBlocks: Int, codesPerBlock: Int,
-      iters: Int, seedHexMax: String): Option[(IndexedSeq[Long],
-        IndexedSeq[IndexedSeq[Long]],
-        IndexedSeq[IndexedSeq[IndexedSeq[Long]]])] = {
+      iters: Int, seedHexMax: String)
+      : Option[(Coarse, IndexedSeq[IndexedSeq[IndexedSeq[Long]]])] = {
     import spark.implicits._
     val e = emb(spark, dir)
-    val dim = 64
-    val bw = dim / nBlocks
+    val bw = 64 / nBlocks
     // seed pool widened past the q269/q280 '19' cap: 128 residual codes
     // need ~136 seeds and the md5 '19' pool caps at ~10% of the corpus
     // (69 vectors at sf0.01); '7f' is the established ~50% split. The
     // codebook stays FIXED-SIZE — at production scale any md5 slice is
     // seed-rich, so this is a small-fixture accommodation, not a leak
     // of corpus size into the index.
-    val seeds = sampledCentroids(spark, dir, nCells + codesPerBlock,
-      seedHexMax)
-    val qRows = e.filter($"vec_id" === 0L).select($"embedding").collect()
-    if (seeds.size <= nCells || qRows.isEmpty) return None
-    val qv6: IndexedSeq[Long] =
-      qRows(0).getSeq[Float](0).map(qe6of).toIndexedSeq
-    val xq = expr(
-      "transform(embedding, x -> cast(round(cast(x as double) * 1000) as bigint) * 1000)")
-    val vecs = e.filter($"vec_id" =!= 0L).select($"vec_id", xq.as("xq"))
+    val (seeded, resSeeds) = seedCells(spark, dir, e, nCells,
+      codesPerBlock, nCells + 1, seedHexMax).getOrElse(return None)
+    val vecs = e6Vecs(e)
     // ---- coarse Lloyd: one 64-wide block, nCells codes (q271's exact
     // integer trajectory at block width = the full vector)
-    var cells: IndexedSeq[IndexedSeq[Long]] =
-      seeds.take(nCells).map(_._2.map(qe6of).toIndexedSeq).toIndexedSeq
-    val cRollup = graft.functions.PqRollup.pqRollup(1, nCells, dim)
-    for (_ <- 1 to iters) {
-      val frozen = cells
-      val assigned = vecs.select($"xq",
-        VectorOps.pqEncodeCol(spark, $"xq", Seq(frozen.map(_.toSeq)))
-          .getField("codes").as("codes"))
-      val buf = assigned
-        .select(cRollup(col("codes"), col("xq")).as("buf"))
-        .head().getSeq[Long](0)
-      def cnt(c: Int): Long = buf(1 + c)
-      def sm(c: Int, i: Int): Long = buf(1 + nCells + c * dim + i)
-      if ((0 until nCells).exists(cnt(_) > 0))
-        require(buf(0) >= -4000000L,
-          s"ivfPqTrainedTopK: component ${buf(0)} e-6 below the -4.0 " +
-            "shift bound — engine-split hazard in the coarse mean's " +
-            "floor div (see trainedPqRecall)")
-      cells = (0 until nCells).map { c =>
-        val n = cnt(c)
-        (0 until dim).map { i =>
-          if (n > 0) (sm(c, i) + 4000000L * n) / n - 4000000L
-          else cells(c)(i)
-        }
-      }
-    }
+    val cells = (1 to iters).foldLeft(IndexedSeq(seeded.cells))((cs, _) =>
+      integerLloydRound(vecs,
+        VectorOps.pqEncodeCol(spark, $"xq", cs).getField("codes"), $"xq",
+        cs, 64, 4000000L, frozenZero = false, "ivfPqTrainedTopK:")).head
     // ---- residual codebook: code 0 = zero (frozen); codes 1.. seeded
     // from the NEXT sampled vectors' residuals against their nearest
     // TRAINED cell (q280's init rule, over the trained coarse level)
-    var c2 = seedResidualCodebook(seeds.drop(nCells), cells, nBlocks, bw)
-    val m = c2.head.length // codes incl the frozen zero
+    val c20 = seedResidualCodebook(resSeeds, cells, nBlocks, bw)
     // ---- residual Lloyd: assignment against the per-row trained cell
     // (one pq_res_encode node), rollup over the residual components
-    val cellFullArr = typedlit(cells.map(_.toSeq))
     val withCell = vecs.select($"vec_id", $"xq",
-      element_at(VectorOps.pqEncodeCol(spark, $"xq", Seq(cells.map(_.toSeq)))
-        .getField("codes"), 1).as("cell"))
-    val selCell = element_at(cellFullArr, $"cell".cast("int") + 1)
-    val rRollup = graft.functions.PqRollup.pqRollup(nBlocks, m, bw)
-    for (_ <- 1 to iters) {
-      val frozen = c2
-      val codes = VectorOps.pqResEncodeCol(spark, $"xq", selCell,
-        frozen.map(_.map(_.toSeq))).getField("codes")
-      val resVec = zip_with($"xq", selCell, (a: Column, b: Column) => a - b)
-      val buf = withCell
-        .select(rRollup(codes, resVec).as("buf"))
-        .head().getSeq[Long](0)
-      val nCnt = nBlocks * m
-      def cnt(b: Int, code: Int): Long = buf(1 + b * m + code)
-      def sm(b: Int, code: Int, i: Int): Long =
-        buf(1 + nCnt + (b * m + code) * bw + i)
-      if ((0 until nBlocks).exists(b => (0 until m).exists(c => cnt(b, c) > 0)))
-        require(buf(0) >= -8000000L,
-          s"ivfPqTrainedTopK: residual component ${buf(0)} e-6 below " +
-            "the -8.0 shift bound — engine-split hazard in the " +
-            "residual mean's floor div")
-      c2 = (0 until nBlocks).map { b =>
-        (0 until m).map { code =>
-          if (code == 0) IndexedSeq.fill(bw)(0L) // the law-maker stays
-          else {
-            val n = cnt(b, code)
-            (0 until bw).map { i =>
-              if (n > 0) (sm(b, code, i) + 8000000L * n) / n - 8000000L
-              else c2(b)(code)(i)
-            }
-          }
-        }
-      }
-    }
-    Some((qv6, cells, c2))
+      cellCol(spark, $"xq", cells).as("cell"))
+    val selCell = element_at(typedlit(cells.map(_.toSeq)),
+      $"cell".cast("int") + 1)
+    val resVec = zip_with($"xq", selCell, (a: Column, b: Column) => a - b)
+    val c2 = (1 to iters).foldLeft(c20)((cs, _) =>
+      integerLloydRound(withCell,
+        VectorOps.pqResEncodeCol(spark, $"xq", selCell,
+          cs.map(_.map(_.toSeq))).getField("codes"),
+        resVec, cs, bw, 8000000L, frozenZero = true,
+        "ivfPqTrainedTopK: residual"))
+    Some((Coarse(seeded.qv6, cells), c2))
   }
 
   /** Filtered ANN (q300): top-k under a metadata predicate — THE
@@ -1835,62 +1847,40 @@ object Similarity {
       nProbe: Int = 4, k: Int = 10, label: Int = 3,
       postMults: Seq[Int] = Seq(1, 2, 4, 8)): DataFrame = {
     import spark.implicits._
-    require(nProbe >= 1 && nProbe <= nCells,
-      s"nProbe=$nProbe outside 1..$nCells")
-    require(postMults.nonEmpty && postMults == postMults.sorted &&
-      postMults.distinct == postMults,
-      s"postMults must be distinct ascending, got $postMults")
+    requireProbeArgs(nProbe, nCells, Some(postMults))
     val e = emb(spark, dir)
-    val seeds = sampledCentroids(spark, dir, nCells)
-    val qRows = e.filter($"vec_id" === 0L).select($"embedding").collect()
-    if (seeds.size < nCells || qRows.isEmpty)
-      return Seq.empty[(String, Long, Long, Long, Double)]
-        .toDF("strategy", "k", "n_scanned", "n_overlap", "recall")
-    val qv6: IndexedSeq[Long] =
-      qRows(0).getSeq[Float](0).map(qe6of).toIndexedSeq
-    val cells: IndexedSeq[IndexedSeq[Long]] =
-      seeds.map(_._2.map(qe6of).toIndexedSeq).toIndexedSeq
-    val probed = cells.indices
-      .sortBy(c => (intD2(qv6, cells(c)), c)).take(nProbe).map(_.toLong)
-    val xq = expr(
-      "transform(embedding, x -> cast(round(cast(x as double) * 1000) as bigint) * 1000)")
+    val (coarse, _) = seedCells(spark, dir, e, nCells, 0, nCells)
+      .getOrElse(return emptyFiltered(spark))
     // ONE scan: label + coarse cell + exact d² to the query per row
-    val base = e.filter($"vec_id" =!= 0L)
-      .select($"vec_id", $"label".cast("long").as("label"), xq.as("xq"))
-      .select($"vec_id", $"label",
-        element_at(VectorOps.pqEncodeCol(spark, $"xq", Seq(cells.map(_.toSeq)))
-          .getField("codes"), 1).as("cell"),
-        VectorOps.pqD2Col(spark, $"xq", 0, qv6).as("d2"))
+    val base = labeledCellD2(spark, e, coarse)
     // the probed-cell frame every strategy row filters — materialized
     // once (out of scope after this call; the Graph fixpoint lifecycle)
-    val pd = base.filter($"cell".isin(probed: _*))
-      .select($"vec_id", $"label", $"d2")
+    val pd = base.filter($"cell".isin(coarse.probed(nProbe): _*))
+      .select($"vec_id", $"label", $"d2".as("score"))
       .localCheckpoint(true)
-    // truth: the exact label-filtered top-k over the WHOLE corpus,
-    // collected as k id literals (the bounded driver-steering collect)
-    val truthIds: Seq[Long] = base.filter($"label" === label.toLong)
-      .orderBy($"d2", $"vec_id").limit(k)
-      .collect().map(_.getLong(0)).toSeq
-    def row(strategy: String, candidates: DataFrame,
-        scanned: DataFrame): DataFrame =
-      candidates
-        .filter($"vec_id".isin(truthIds: _*))
-        .agg(count(lit(1)).as("n_overlap"))
-        .crossJoin(scanned)
-        .select(lit(strategy).as("strategy"), lit(k.toLong).as("k"),
-          $"n_scanned", $"n_overlap",
-          round($"n_overlap" / lit(k.toDouble), 6).as("recall"))
-    val pre = row("prefilter",
-      pd.filter($"label" === label.toLong)
-        .orderBy($"d2", $"vec_id").limit(k),
-      pd.filter($"label" === label.toLong)
-        .agg(count(lit(1)).as("n_scanned")))
-    val posts = postMults.map { m =>
-      row(f"postfilter_x$m%02d",
-        pd.orderBy($"d2", $"vec_id").limit(m * k),
-        pd.agg(count(lit(1)).as("n_scanned")))
-    }
-    (pre +: posts).reduce(_ unionByName _)
+    // truth: the exact label-filtered top-k over the WHOLE corpus
+    val inLabel = $"label" === label.toLong
+    filteredStrategyRows(pd, inLabel, topIds(base.filter(inLabel), k), k,
+      postMults)
+  }
+
+  private def emptyFiltered(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    Seq.empty[(String, Long, Long, Long, Double)]
+      .toDF("strategy", "k", "n_scanned", "n_overlap", "recall")
+  }
+
+  /** The q300/q301 scan: per corpus vector its label, coarse cell and
+    * exact i64 d² to the query (cell via pq_encode, d² via pq_d2, both
+    * codegen).
+    */
+  private def labeledCellD2(spark: SparkSession, e: DataFrame,
+      coarse: Coarse): DataFrame = {
+    import spark.implicits._
+    e.filter($"vec_id" =!= 0L)
+      .select($"vec_id", $"label".cast("long").as("label"), e6Col.as("xq"))
+      .select($"vec_id", $"label", cellCol(spark, $"xq", coarse.cells)
+        .as("cell"), VectorOps.pqD2Col(spark, $"xq", 0, coarse.qv6).as("d2"))
   }
 
   /** Filtered-ANN selectivity sweep (q301): q300's strategy comparison
@@ -1914,63 +1904,26 @@ object Similarity {
         Seq(0, 2, 3, 4, 5, 7, 8, 9)),
       postMults: Seq[Int] = Seq(1, 2, 4, 8)): DataFrame = {
     import spark.implicits._
-    require(nProbe >= 1 && nProbe <= nCells,
-      s"nProbe=$nProbe outside 1..$nCells")
+    requireProbeArgs(nProbe, nCells, Some(postMults))
     require(labelSets.nonEmpty && labelSets.forall(s =>
       s.nonEmpty && s == s.sorted && s.distinct == s),
       s"labelSets must be non-empty distinct ascending sets, got $labelSets")
     val e = emb(spark, dir)
-    val seeds = sampledCentroids(spark, dir, nCells)
-    val qRows = e.filter($"vec_id" === 0L).select($"embedding").collect()
-    if (seeds.size < nCells || qRows.isEmpty)
+    val (coarse, _) = seedCells(spark, dir, e, nCells, 0, nCells).getOrElse(
       return Seq.empty[(Long, String, Long, Long, Long, Double)]
         .toDF("n_labels", "strategy", "k", "n_scanned", "n_overlap",
-          "recall")
-    val qv6: IndexedSeq[Long] =
-      qRows(0).getSeq[Float](0).map(qe6of).toIndexedSeq
-    val cells: IndexedSeq[IndexedSeq[Long]] =
-      seeds.map(_._2.map(qe6of).toIndexedSeq).toIndexedSeq
-    val probed = cells.indices
-      .sortBy(c => (intD2(qv6, cells(c)), c)).take(nProbe).map(_.toLong)
-    val xq = expr(
-      "transform(embedding, x -> cast(round(cast(x as double) * 1000) as bigint) * 1000)")
+          "recall"))
     // ONE scan serves every selectivity arm and every truth arm
-    val base = e.filter($"vec_id" =!= 0L)
-      .select($"vec_id", $"label".cast("long").as("label"), xq.as("xq"))
-      .select($"vec_id", $"label",
-        element_at(VectorOps.pqEncodeCol(spark, $"xq", Seq(cells.map(_.toSeq)))
-          .getField("codes"), 1).as("cell"),
-        VectorOps.pqD2Col(spark, $"xq", 0, qv6).as("d2"))
-      .localCheckpoint(true)
-    val pd = base.filter($"cell".isin(probed: _*))
-      .select($"vec_id", $"label", $"d2")
-    def row(nLabels: Int, strategy: String, candidates: DataFrame,
-        scanned: DataFrame): DataFrame =
-      candidates
-        .agg(count(lit(1)).as("n_overlap"))
-        .crossJoin(scanned)
-        .select(lit(nLabels.toLong).as("n_labels"),
-          lit(strategy).as("strategy"), lit(k.toLong).as("k"),
-          $"n_scanned", $"n_overlap",
-          round($"n_overlap" / lit(k.toDouble), 6).as("recall"))
-    val rows = labelSets.flatMap { ls =>
+    val base = labeledCellD2(spark, e, coarse).localCheckpoint(true)
+    val pd = base.filter($"cell".isin(coarse.probed(nProbe): _*))
+      .select($"vec_id", $"label", $"d2".as("score"))
+    labelSets.map { ls =>
       val inSet = $"label".isin(ls.map(_.toLong): _*)
-      val truthIds: Seq[Long] = base.filter(inSet)
-        .orderBy($"d2", $"vec_id").limit(k)
-        .collect().map(_.getLong(0)).toSeq
-      val pre = row(ls.size, "prefilter",
-        pd.filter(inSet).orderBy($"d2", $"vec_id").limit(k)
-          .filter($"vec_id".isin(truthIds: _*)),
-        pd.filter(inSet).agg(count(lit(1)).as("n_scanned")))
-      val posts = postMults.map { m =>
-        row(ls.size, f"postfilter_x$m%02d",
-          pd.orderBy($"d2", $"vec_id").limit(m * k)
-            .filter($"vec_id".isin(truthIds: _*)),
-          pd.agg(count(lit(1)).as("n_scanned")))
-      }
-      pre +: posts
-    }
-    rows.reduce(_ unionByName _)
+      filteredStrategyRows(pd, inSet, topIds(base.filter(inSet), k), k,
+        postMults)
+        .select(lit(ls.size.toLong).as("n_labels"), $"strategy", $"k",
+          $"n_scanned", $"n_overlap", $"recall")
+    }.reduce(_ unionByName _)
   }
 
   /** Filtered ANN over a CELL-PARTITIONED corpus layout (q302): the
@@ -2002,25 +1955,10 @@ object Similarity {
       nCells: Int = 8, nProbe: Int = 4, k: Int = 10, label: Int = 3,
       postMults: Seq[Int] = Seq(1, 2, 4, 8)): DataFrame = {
     import spark.implicits._
-    require(nProbe >= 1 && nProbe <= nCells,
-      s"nProbe=$nProbe outside 1..$nCells")
-    require(postMults.nonEmpty && postMults == postMults.sorted &&
-      postMults.distinct == postMults,
-      s"postMults must be distinct ascending, got $postMults")
+    requireProbeArgs(nProbe, nCells, Some(postMults))
     val e = emb(spark, dir)
-    val seeds = sampledCentroids(spark, dir, nCells)
-    val qRows = e.filter($"vec_id" === 0L).select($"embedding").collect()
-    if (seeds.size < nCells || qRows.isEmpty)
-      return Seq.empty[(String, Long, Long, Long, Double)]
-        .toDF("strategy", "k", "n_scanned", "n_overlap", "recall")
-    val qv6: IndexedSeq[Long] =
-      qRows(0).getSeq[Float](0).map(qe6of).toIndexedSeq
-    val cells: IndexedSeq[IndexedSeq[Long]] =
-      seeds.map(_._2.map(qe6of).toIndexedSeq).toIndexedSeq
-    val probed = cells.indices
-      .sortBy(c => (intD2(qv6, cells(c)), c)).take(nProbe).map(_.toLong)
-    val xq = expr(
-      "transform(embedding, x -> cast(round(cast(x as double) * 1000) as bigint) * 1000)")
+    val (coarse, _) = seedCells(spark, dir, e, nCells, 0, nCells)
+      .getOrElse(return emptyFiltered(spark))
     // one-time layout build per (corpus, nCells) — the q219 staleness
     // rule (tag keys the corpus path; centroids re-derive
     // deterministically from its content, so same dir ⇒ same cells)
@@ -2031,49 +1969,28 @@ object Similarity {
     graft.sources.Layouts.ensurePartitioned(spark,
       e.filter($"vec_id" =!= 0L)
         .select($"vec_id", $"label".cast("long").as("label"), $"embedding",
-          element_at(VectorOps.pqEncodeCol(spark, xq, Seq(cells.map(_.toSeq)))
-            .getField("codes"), 1).as("cell")),
+          cellCol(spark, e6Col, coarse.cells).as("cell")),
       path, Seq("cell"))
     // partition discovery types the directory column as int; normalize
     val layout = spark.read.parquet(path)
       .select($"vec_id", $"label", $"embedding",
         $"cell".cast("long").as("cell"))
-    def d2c = VectorOps.pqD2Col(spark, xq, 0, qv6)
+    def d2c = VectorOps.pqD2Col(spark, e6Col, 0, coarse.qv6)
     // the layout's whole point, enforced at query time: the cell
     // predicate must prune at the FILE level (PartitionFilters on the
     // scan), not as a post-read Filter
-    val probedScan = layout.filter($"cell".isin(probed: _*))
+    val probedScan = layout.filter($"cell".isin(coarse.probed(nProbe): _*))
     val planStr = probedScan.queryExecution.executedPlan.toString
     require("PartitionFilters: \\[[^\\]]*cell[^\\]]*\\]".r
         .findFirstIn(planStr).isDefined,
       s"cell predicate did not reach the scan as a partition filter:\n$planStr")
     val pd = probedScan
-      .select($"vec_id", $"label", d2c.as("d2"))
+      .select($"vec_id", $"label", d2c.as("score"))
       .localCheckpoint(true)
-    val truthIds: Seq[Long] = layout.filter($"label" === label.toLong)
-      .select($"vec_id", d2c.as("d2"))
-      .orderBy($"d2", $"vec_id").limit(k)
-      .collect().map(_.getLong(0)).toSeq
-    def row(strategy: String, candidates: DataFrame,
-        scanned: DataFrame): DataFrame =
-      candidates
-        .filter($"vec_id".isin(truthIds: _*))
-        .agg(count(lit(1)).as("n_overlap"))
-        .crossJoin(scanned)
-        .select(lit(strategy).as("strategy"), lit(k.toLong).as("k"),
-          $"n_scanned", $"n_overlap",
-          round($"n_overlap" / lit(k.toDouble), 6).as("recall"))
-    val pre = row("prefilter",
-      pd.filter($"label" === label.toLong)
-        .orderBy($"d2", $"vec_id").limit(k),
-      pd.filter($"label" === label.toLong)
-        .agg(count(lit(1)).as("n_scanned")))
-    val posts = postMults.map { m =>
-      row(f"postfilter_x$m%02d",
-        pd.orderBy($"d2", $"vec_id").limit(m * k),
-        pd.agg(count(lit(1)).as("n_scanned")))
-    }
-    (pre +: posts).reduce(_ unionByName _)
+    val inLabel = $"label" === label.toLong
+    filteredStrategyRows(pd, inLabel,
+      topIds(layout.filter(inLabel).select($"vec_id", d2c.as("d2")), k), k,
+      postMults)
   }
 
   /** Filtered ANN over the TRAINED IVF-PQ ADC path (q303): q300's
@@ -2104,65 +2021,30 @@ object Similarity {
       postMults: Seq[Int] = Seq(1, 2, 4, 8),
       seedHexMax: String = "7f"): DataFrame = {
     import spark.implicits._
-    require(nProbe >= 1 && nProbe <= nCells,
-      s"nProbe=$nProbe outside 1..$nCells")
-    require(postMults.nonEmpty && postMults == postMults.sorted &&
-      postMults.distinct == postMults,
-      s"postMults must be distinct ascending, got $postMults")
-    val empty = Seq.empty[(String, Long, Long, Long, Double)]
-      .toDF("strategy", "k", "n_scanned", "n_overlap", "recall")
-    trainedIvfPqCodebooks(spark, dir, nCells, nBlocks, codesPerBlock,
-        iters, seedHexMax) match {
-      case None => empty
-      case Some((qv6, cells, c2)) =>
-        val e = emb(spark, dir)
-        val bw = 64 / nBlocks
-        val probed = cells.indices
-          .sortBy(c => (intD2(qv6, cells(c)), c)).take(nProbe)
-          .map(_.toLong)
-        val enc = ivfPqEncodedIndex(spark, dir,
-          s"trained-$nCells-$nBlocks-$codesPerBlock-$iters-$seedHexMax",
-          qv6, cells, c2, nBlocks, bw)
-        val lbl = e.filter($"vec_id" =!= 0L)
-          .select($"vec_id", $"label".cast("long").as("label"))
-        // the probed slice of the shared index, labels joined — every
-        // strategy arm filters THIS (out of scope after the call; the
-        // Graph fixpoint lifecycle)
-        val pd = enc.filter($"cell".isin(probed: _*))
-          .join(lbl, Seq("vec_id"))
-          .select($"vec_id", $"label", $"adc")
-          .localCheckpoint(true)
-        val xq = expr(
-          "transform(embedding, x -> cast(round(cast(x as double) * 1000) as bigint) * 1000)")
-        // truth: EXACT label-filtered top-k over the corpus (the lossy
-        // ranking is being judged; the judge must not share its loss)
-        val truthIds: Seq[Long] = e.filter($"vec_id" =!= 0L)
-          .filter($"label".cast("long") === label.toLong)
-          .select($"vec_id",
-            VectorOps.pqD2Col(spark, xq, 0, qv6).as("d2"))
-          .orderBy($"d2", $"vec_id").limit(k)
-          .collect().map(_.getLong(0)).toSeq
-        def row(strategy: String, candidates: DataFrame,
-            scanned: DataFrame): DataFrame =
-          candidates
-            .filter($"vec_id".isin(truthIds: _*))
-            .agg(count(lit(1)).as("n_overlap"))
-            .crossJoin(scanned)
-            .select(lit(strategy).as("strategy"), lit(k.toLong).as("k"),
-              $"n_scanned", $"n_overlap",
-              round($"n_overlap" / lit(k.toDouble), 6).as("recall"))
-        val pre = row("prefilter",
-          pd.filter($"label" === label.toLong)
-            .orderBy($"adc", $"vec_id").limit(k),
-          pd.filter($"label" === label.toLong)
-            .agg(count(lit(1)).as("n_scanned")))
-        val posts = postMults.map { m =>
-          row(f"postfilter_x$m%02d",
-            pd.orderBy($"adc", $"vec_id").limit(m * k),
-            pd.agg(count(lit(1)).as("n_scanned")))
-        }
-        (pre +: posts).reduce(_ unionByName _)
-    }
+    requireProbeArgs(nProbe, nCells, Some(postMults))
+    val (coarse, c2) = trainedIvfPqCodebooks(spark, dir, nCells, nBlocks,
+      codesPerBlock, iters, seedHexMax).getOrElse(return emptyFiltered(spark))
+    val e = emb(spark, dir)
+    val enc = ivfPqEncodedIndex(spark, dir,
+      s"trained-$nCells-$nBlocks-$codesPerBlock-$iters-$seedHexMax",
+      coarse, c2, nBlocks, 64 / nBlocks)
+    val lbl = e.filter($"vec_id" =!= 0L)
+      .select($"vec_id", $"label".cast("long").as("label"))
+    // the probed slice of the shared index, labels joined — every
+    // strategy arm filters THIS (out of scope after the call; the
+    // Graph fixpoint lifecycle)
+    val pd = enc.filter($"cell".isin(coarse.probed(nProbe): _*))
+      .join(lbl, Seq("vec_id"))
+      .select($"vec_id", $"label", $"adc".as("score"))
+      .localCheckpoint(true)
+    // truth: EXACT label-filtered top-k over the corpus (the lossy
+    // ranking is being judged; the judge must not share its loss)
+    val truthIds = topIds(e.filter($"vec_id" =!= 0L)
+      .filter($"label".cast("long") === label.toLong)
+      .select($"vec_id", VectorOps.pqD2Col(spark, e6Col, 0, coarse.qv6)
+        .as("d2")), k)
+    filteredStrategyRows(pd, $"label" === label.toLong, truthIds, k,
+      postMults)
   }
 
   /** The query-independent core of the routing index: e3-quantized
@@ -2232,9 +2114,7 @@ object Similarity {
       nPlanes: Int, nBands: Int): Option[EdgeIndex] = {
     import spark.implicits._
     val e = emb(spark, dir)
-    val e3x = expr(
-      "transform(embedding, x -> cast(round(cast(x as double) * 1000) as bigint))")
-    val e3 = e.select($"vec_id", e3x.as("v"))
+    val e3 = e.select($"vec_id", e3Col.as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val planes = headVectors(spark, dir, nPlanes)
     // planes.length < nPlanes (a corpus with fewer than nPlanes head
@@ -2861,8 +2741,7 @@ object Similarity {
       maxHops: Int = 6, k: Int = 10, entryId: Long = 0L,
       maxEvalPairs: Long = 500000000L): DataFrame = {
     import spark.implicits._
-    require(nProbe >= 1 && nProbe <= nCells,
-      s"nProbe=$nProbe outside 1..$nCells")
+    requireProbeArgs(nProbe, nCells)
     val empty = Seq.empty[(String, Long, Long, Long, Long, Double, Long,
         Double)]
       .toDF("family", "k", "n_queries", "total_scanned", "sum_overlap",
@@ -3019,42 +2898,52 @@ object Similarity {
       .reduce(_ unionByName _)
   }
 
+  /** Residual (two-level) product quantization report (q276): the
+    * second standard compression step after q184/q269's one-level PQ —
+    * quantize each block, then quantize the RESIDUAL against a second
+    * codebook (the RQ/IVF-ADC refinement used by every billion-vector
+    * index when one codebook's cells are too coarse). All integer, and
+    * the improvement is a THEOREM here, not a hope: the residual
+    * codebook always contains the ZERO vector (code 0), so the
+    * two-level distortion of every vector is ≤ its one-level
+    * distortion by construction — `n_violations` (vectors where level
+    * 2 made things worse) is emitted and asserted 0 by the oracle,
+    * alongside the exact distortion totals and the measured
+    * improvement fraction. Level-2 codes are the residuals of the
+    * NEXT 8 md5-sampled vectors against the level-1 codebook (the
+    * first 8 are the level-1 seeds; their own residuals are 0 and
+    * would be degenerate).
+    *
+    * Scale: both levels are zero-shuffle scan projections (argmin over
+    * literal integer vectors — the q269 shape, twice); the report is
+    * one single-row aggregate. Codebooks are plan-time literals
+    * (2 × blocks × codes × blockDim ints).
+    */
   def residualPqDistortion(spark: SparkSession, dir: String,
       nBlocks: Int = 4, codesPerBlock: Int = 8): DataFrame = {
     import spark.implicits._
     val e = emb(spark, dir)
-    val dim = 64
-    val bw = dim / nBlocks
+    val bw = 64 / nBlocks
     val seeds16 = sampledCentroids(spark, dir, 2 * codesPerBlock)
     if (seeds16.size <= codesPerBlock)
       return Seq.empty[(Long, Long, Long, Long, Long, Double)]
         .toDF("n_vecs", "distortion1_m", "distortion2_m", "n_violations",
           "improvement_e6", "improvement_frac")
-    def qe6(x: Float): Long = math.round(x.toDouble * 1000.0) * 1000L
     // level-1 codebook: the first 8 sampled vectors, e6-quantized
-    val c1: IndexedSeq[IndexedSeq[IndexedSeq[Long]]] =
-      (0 until nBlocks).map(b => seeds16.take(codesPerBlock).map(s =>
-        s._2.slice(b * bw, (b + 1) * bw).map(qe6).toIndexedSeq).toIndexedSeq)
+    val c1 = blockCodebook(seeds16.take(codesPerBlock), nBlocks, bw)
     // level-2 codebook: code 0 is the ZERO residual (the law-maker);
     // codes 1.. are the next sampled vectors' residuals against c1,
     // computed driver-side in the same exact integers
-    def argminIdx(v: IndexedSeq[Long], cs: IndexedSeq[IndexedSeq[Long]]): Int =
-      cs.indices.minBy { ci =>
-        (v.indices.foldLeft(0L)((acc, i) =>
-          acc + (v(i) - cs(ci)(i)) * (v(i) - cs(ci)(i))), ci)
-      }
     val c2: IndexedSeq[IndexedSeq[IndexedSeq[Long]]] =
       (0 until nBlocks).map { b =>
         val zero = IndexedSeq.fill(bw)(0L)
         val res = seeds16.drop(codesPerBlock).map { s =>
-          val v = s._2.slice(b * bw, (b + 1) * bw).map(qe6).toIndexedSeq
-          val c = c1(b)(argminIdx(v, c1(b)))
+          val v = e6Of(s._2).slice(b * bw, (b + 1) * bw)
+          val c = c1(b)(c1(b).indices.minBy(ci => (intD2(v, c1(b)(ci)), ci)))
           v.indices.map(i => v(i) - c(i))
         }
         zero +: res.toIndexedSeq
       }
-    val xq = expr(
-      "transform(embedding, x -> cast(round(cast(x as double) * 1000) as bigint) * 1000)")
     // per block: struct(d2_one, d2_two) — level-1 argmin picks the
     // centroid, then level-2 argmin runs on the residual; both exact i64
     def blockPair(b: Int): Column = {
@@ -3077,7 +2966,7 @@ object Similarity {
       }
       struct(d2One.as("d1"), d2Two.as("d2"))
     }
-    val perVec = e.select($"vec_id", xq.as("xq"))
+    val perVec = e.select($"vec_id", e6Col.as("xq"))
       .select(col("vec_id") +: (0 until nBlocks).map(b =>
         blockPair(b).as(s"b$b")): _*)
       .select(
@@ -3125,15 +3014,14 @@ object Similarity {
     val e = emb(spark, dir)
     val adcTop = pqAdcTopK(spark, dir, nBlocks, codesPerBlock, k)
       .select($"vec_id")
-    val qRows = e.filter($"vec_id" === 0L).select($"embedding").collect()
-    val exactTop =
-      if (qRows.isEmpty) adcTop.limit(0)
-      else e.filter($"vec_id" =!= 0L)
-        .select($"vec_id", exactD2To(qRows(0).getSeq[Float](0).toSeq)
-          .as("exact_d2"))
+    val exactTop = queryVector(e) match {
+      case None => adcTop.limit(0)
+      case Some(qv) => e.filter($"vec_id" =!= 0L)
+        .select($"vec_id", exactD2To(qv).as("exact_d2"))
         .orderBy($"exact_d2", $"vec_id")
         .limit(k)
         .select($"vec_id")
+    }
     adcTop.join(exactTop, "vec_id")
       .agg(count(lit(1)).as("n_overlap"))
       .select(lit(k.toLong).as("k"), $"n_overlap",
@@ -3395,38 +3283,31 @@ object Similarity {
     import spark.implicits._
     val e = emb(spark, dir)
     Memo.withPersisted(e) {
-      var cents: Seq[(Int, IndexedSeq[Double])] = sampledCentroids(spark, dir, k)
-        .map { case (cid, v) => (cid, v.map(_.toDouble).toIndexedSeq) }
-      if (cents.sizeIs < 2) {
-        e.select(lit(0L).as("cluster_id"), lit(0L).as("n_members"),
+      // a single centroid has no runner-up to measure against
+      lloydSeeds(spark, dir, k, minCents = 2) match {
+        case None => e.select(lit(0L).as("cluster_id"), lit(0L).as("n_members"),
           lit(0.0).as("avg_intra_dist"), lit(0.0).as("avg_inter_dist"),
           lit(0.0).as("avg_silhouette")).limit(0)
-      } else {
-        for (_ <- 1 to iters) cents = lloydStep(e, cents)
-        def litNormD(ce: IndexedSeq[Double]): Double =
-          math.sqrt(ce.foldLeft(0.0)((a, v) => a + v * v))
-        val cands = cents.map { case (cid, ce) =>
-          struct(round(dot($"embedding", lit(ce.toArray)) /
-            (norm($"embedding") * lit(litNormD(ce))), 6).as("cos"),
-            lit(-cid).as("neg_cid"))
-        }
-        // ascending (cos, neg_cid): last = assignToLloyd's greatest —
-        // max cosine, ties to the LOWEST cid; second-to-last = runner-up
-        val sorted = array_sort(array(cands: _*))
-        val best = element_at(sorted, -1)
-        val second = element_at(sorted, -2)
-        val perVec = e.select(
-            (-best.getField("neg_cid")).cast("long").as("cluster_id"),
-            (lit(1.0) - best.getField("cos")).as("a"),
-            (lit(1.0) - second.getField("cos")).as("b"))
-          .withColumn("sil",
-            when($"b" > 0.0, ($"b" - $"a") / $"b").otherwise(lit(0.0)))
-        perVec.groupBy($"cluster_id")
-          .agg(count(lit(1)).as("n_members"),
-            round(avg($"a"), 6).as("avg_intra_dist"),
-            round(avg($"b"), 6).as("avg_inter_dist"),
-            round(avg($"sil"), 6).as("avg_silhouette"))
-          .localCheckpoint(true)
+        case Some(init) =>
+          val cents = (1 to iters).foldLeft(init)((cs, _) => lloydStep(e, cs))
+          val cands = cents.map { case (cid, ce) => lloydCosStruct(cid, ce) }
+          // ascending (cos, neg_cid): last = assignToLloyd's greatest —
+          // max cosine, ties to the LOWEST cid; second-to-last = runner-up
+          val sorted = array_sort(array(cands: _*))
+          val best = element_at(sorted, -1)
+          val second = element_at(sorted, -2)
+          val perVec = e.select(
+              (-best.getField("neg_cid")).cast("long").as("cluster_id"),
+              (lit(1.0) - best.getField("cos")).as("a"),
+              (lit(1.0) - second.getField("cos")).as("b"))
+            .withColumn("sil",
+              when($"b" > 0.0, ($"b" - $"a") / $"b").otherwise(lit(0.0)))
+          perVec.groupBy($"cluster_id")
+            .agg(count(lit(1)).as("n_members"),
+              round(avg($"a"), 6).as("avg_intra_dist"),
+              round(avg($"b"), 6).as("avg_inter_dist"),
+              round(avg($"sil"), 6).as("avg_silhouette"))
+            .localCheckpoint(true)
       }
     }
   }
@@ -3938,13 +3819,11 @@ object Similarity {
       case Some(sp) =>
         val nv = sp.den.toLong // Σv² ≤ 64·1e12, fits i64
         val vLit = array((1 to sp.d).map(i => lit(sp.v(i).toLong)): _*)
-        val xQ = expr(
-          "transform(embedding, x -> cast(round(cast(x as double) * 1000) as bigint))")
         spark.read.parquet(s"$dir/embeddings.parquet")
           // size > 0 mirrors the oracle, whose component table simply
           // has no rows for an empty array
           .filter($"embedding".isNotNull && size($"embedding") > 0)
-          .select($"vec_id", xQ.as("xq"))
+          .select($"vec_id", e3Col.as("xq"))
           .select($"vec_id",
             aggregate(zip_with($"xq", vLit, (x, vi) => x * vi),
               lit(0L), (acc, t) => acc + t).as("dot_e9"),

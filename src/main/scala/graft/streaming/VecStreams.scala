@@ -116,9 +116,6 @@ object VecStreams {
   final case class RouteIndexState(repVecs: DataFrame, sigs: DataFrame,
       ranked: DataFrame)
 
-  private def e3Col = expr(
-    "transform(embedding, x -> cast(round(cast(x as double) * 1000) as bigint))")
-
   /** The banded-signature projection of a (vec_id, embedding) frame —
     * the SHARED `Similarity.bandSignatureCols` columns, exploded to one
     * (vec_id, band, sig) row per band. The only producer of signature
@@ -152,7 +149,7 @@ object VecStreams {
     graft.functions.VectorOps.register(spark)
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
-    val repIds = e.select(col("vec_id"), e3Col.as("v"))
+    val repIds = e.select(col("vec_id"), Similarity.e3Col.as("v"))
       .groupBy(col("v")).agg(min(col("vec_id")).as("vec_id"))
       .select(col("vec_id"))
     val repVecs = e.join(repIds, Seq("vec_id"), "left_semi")
@@ -167,7 +164,7 @@ object VecStreams {
     // (src, dst, rn): the one-time base join here is what spares every
     // FOLD from rescoring affected srcs' stored edges (init is allowed
     // O(base); folds are not)
-    val e3 = repVecs.select(col("vec_id"), e3Col.as("v"))
+    val e3 = repVecs.select(col("vec_id"), Similarity.e3Col.as("v"))
     val ranked = Similarity.routeEdgeTable(spark, dir, nPlanes, nBands)
       .join(e3.select(col("vec_id").as("src"), col("v").as("va")),
         Seq("src"))
@@ -288,11 +285,11 @@ object VecStreams {
         "rebuild, not a patch")
     // 1. dedup the batch against itself (min id per e3 group, keeping
     // that row's own embedding) and against the existing reps
-    val newE3 = fresh.select(col("vec_id"), col("embedding"), e3Col.as("v"))
+    val newE3 = fresh.select(col("vec_id"), col("embedding"), Similarity.e3Col.as("v"))
     val newGroupReps = newE3
       .groupBy(col("v")).agg(min(col("vec_id")).as("vec_id"))
       .select(col("vec_id"))
-    val stateE3 = state.repVecs.select(col("vec_id"), e3Col.as("v"))
+    val stateE3 = state.repVecs.select(col("vec_id"), Similarity.e3Col.as("v"))
     // LAZY checkpoint + count (round-14, guide §2.4): the emptiness
     // probe materializes the checkpoint in the same job (a count, not
     // isEmpty: isEmpty computes one partition and leaves the lazy
@@ -314,7 +311,7 @@ object VecStreams {
       .localCheckpoint(false)
     val allSigs = baseSigs.unionByName(newSigs)
     val allVecs = state.repVecs.unionByName(newReps)
-      .select(col("vec_id"), e3Col.as("v"))
+      .select(col("vec_id"), Similarity.e3Col.as("v"))
     // every join below BROADCASTS its delta-bounded side (the batch's
     // signatures, the candidate pairs, the affected srcs — all sized
     // delta × bucket occupancy) so the base-sized tables are scanned in

@@ -170,121 +170,6 @@ class Round10Spec extends AnyFunSuite {
     } finally graft.TestFiles.rmrf(java.nio.file.Paths.get(tmp))
   }
 
-  test("pqAdcTopK: brute-force ADC replay agrees; planted near-twin ranks first") {
-    import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_adc").toString
-    try {
-      // 64-dim corpus: vec 0 is the query; vec 7 is a near-twin (tiny
-      // perturbation); the rest are far. Seeds = md5-sampled head — with
-      // 40 vecs several land in the sample, enough for a codebook
-      val rnd = new scala.util.Random(7)
-      def vec(seedShift: Int): Array[Float] =
-        Array.tabulate(64)(i => ((i * 31 + seedShift * 17) % 13 - 6) / 3.0f)
-      val rows = (0L to 39L).map { id =>
-        val base =
-          if (id == 7L) vec(0).zipWithIndex.map { case (v, i) =>
-            v + (if (i % 16 == 0) 0.01f else 0.0f) }
-          else vec(id.toInt)
-        (id, base, (id % 4).toInt)
-      }
-      rows.toDF("vec_id", "embedding", "label")
-        .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
-      val got = Similarity.pqAdcTopK(spark, tmp).collect()
-        .map(r => (r.getLong(0), r.getLong(2), r.getDouble(4)))
-      assert(got.length == 10)
-      // brute-force replay: encode every vector against the same seeds
-      // (rounded-d2 argmin, min-code ties) and sum lookup-table micros
-      val all = rows.map { case (id, e, _) => id -> e }.toMap
-      val seedIds = rows.map(_._1)
-        .filter(id => graft.TestFiles.md5Hex(id.toString).take(2) <= "19")
-        .sorted.take(8)
-      val seeds = seedIds.zipWithIndex.map { case (id, c) => (c, all(id)) }
-      val q = all(0L)
-      def sumSq(v: Seq[Float]) =
-        v.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble)
-      def dotD(a: Seq[Float], b: Seq[Float]) =
-        a.zip(b).foldLeft(0.0)((acc, p) => acc + p._1.toDouble * p._2.toDouble)
-      def d2(a: Seq[Float], b: Seq[Float]) =
-        sumSq(a) - 2.0 * dotD(a, b) + sumSq(b)
-      def rounded6(x: Double) =
-        BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      val expect = rows.filter(_._1 != 0L).map { case (id, e, _) =>
-        val adc = (0 until 4).map { b =>
-          val vb = e.slice(b * 16, b * 16 + 16).toSeq
-          val code = seeds
-            .map { case (c, s) =>
-              (rounded6(d2(vb, s.slice(b * 16, b * 16 + 16).toSeq)), c) }
-            .min._2
-          val qb = q.slice(b * 16, b * 16 + 16).toSeq
-          math.round(d2(qb,
-            seeds(code)._2.slice(b * 16, b * 16 + 16).toSeq) * 1000000.0)
-        }.sum
-        (id, adc)
-      }.sortBy(t => (t._2, t._1)).take(10)
-      assert(got.map(t => (t._1, t._2)).toSeq == expect,
-        s"got ${got.mkString(", ")}\nexpect ${expect.mkString(", ")}")
-      // the planted near-twin is the top hit, and its exact d2 is ~0
-      assert(got.head._1 == 7L, got.mkString(", "))
-      assert(got.head._3 < 0.01, s"near-twin exact_d2 ${got.head._3}")
-      // q270: recall replay — exact top-10 by full-width d2, then the
-      // intersection with the ADC top-10 above
-      val exactTop = rows.filter(_._1 != 0L)
-        .map { case (id, e, _) => (id, rounded6(d2(e.toSeq, q.toSeq))) }
-        .sortBy(t => (t._2, t._1)).take(10).map(_._1).toSet
-      val expOverlap = got.map(_._1).count(exactTop)
-      val rec = Similarity.adcRecallAtK(spark, tmp).head()
-      assert(rec.getLong(0) == 10L)
-      assert(rec.getLong(1) == expOverlap.toLong,
-        s"recall overlap ${rec.getLong(1)} vs replay $expOverlap")
-      assert(rec.getDouble(2) == expOverlap / 10.0)
-      // the near-twin guarantees at least one true hit survives ADC
-      assert(rec.getLong(1) >= 1L)
-    } finally graft.TestFiles.rmrf(java.nio.file.Paths.get(tmp))
-  }
-
-  test("trainedPqRecall: Lloyd never increases distortion; exact-seed corpus is a fixpoint") {
-    import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_tpq").toString
-    try {
-      // clustered corpus: each vector's blocks are one of two patterns
-      // plus a small id-dependent wobble — training must strictly cut
-      // distortion here (the sampled seeds won't sit on the means)
-      val rows = (0L to 63L).map { id =>
-        val base = if (id % 2 == 0) 0.4f else -0.3f
-        (id, Array.tabulate(64)(i => base + (id % 5) * 0.01f + i * 0.001f),
-          (id % 3).toInt)
-      }
-      rows.toDF("vec_id", "embedding", "label")
-        .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
-      val r = Similarity.trainedPqRecall(spark, tmp).collect()
-        .map(x => x.getString(0) -> (x.getLong(2), x.getLong(4))).toMap
-      assert(r.keySet == Set("init", "trained"))
-      val (initD, trainedD) = (r("init")._2, r("trained")._2)
-      assert(trainedD <= initD, s"Lloyd increased distortion: $initD -> $trainedD")
-      assert(trainedD < initD, s"clustered corpus should improve: $initD -> $trainedD")
-      // fixpoint: every vector IS one of the 8 md5-sampled seeds -> the
-      // init codebook is optimal, distortion 0, training changes nothing
-      val seedIds = (0L to 63L)
-        .filter(id => graft.TestFiles.md5Hex(id.toString).take(2) <= "19")
-        .sorted.take(8)
-      assert(seedIds.nonEmpty, "fixture needs at least one sampled seed")
-      val all = rows.map(r2 => r2._1 -> r2._2).toMap
-      val fix = (0L to 63L).map(id =>
-        (id, all(seedIds((id % seedIds.size).toInt)), 0))
-      // seed rows must map to THEMSELVES under the sample+order recipe:
-      // overwrite seed positions with their own vectors
-      val fixed = fix.map { case (id, e, l) =>
-        if (seedIds.contains(id)) (id, all(id), l) else (id, e, l)
-      }
-      fixed.toDF("vec_id", "embedding", "label")
-        .write.mode("overwrite").parquet(s"$tmp/fix/embeddings.parquet")
-      val rf = Similarity.trainedPqRecall(spark, s"$tmp/fix").collect()
-        .map(x => x.getString(0) -> x.getLong(4)).toMap
-      assert(rf("init") == 0L && rf("trained") == 0L,
-        s"exact-seed corpus must have zero distortion: $rf")
-    } finally graft.TestFiles.rmrf(java.nio.file.Paths.get(tmp))
-  }
-
   test("streamAudit: session boundary at EXACTLY the gap splits; +2h pair boundary is inclusive") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft_q272").toString
@@ -421,42 +306,6 @@ class Round10Spec extends AnyFunSuite {
       assert(r.getLong(3) == 9L,
         s"overlapping spans must union: removed ${r.getLong(3)}")
       assert(r.getDouble(4) == math.rint(9.0 / 28.0 * 1e6) / 1e6)
-    } finally graft.TestFiles.rmrf(java.nio.file.Paths.get(tmp))
-  }
-
-  test("residualPqDistortion: zero-code theorem holds; a residual-coded corpus hits zero") {
-    import spark.implicits._
-    // law on the real corpus: no vector gets worse, improvement in [0,1]
-    val r = Similarity.residualPqDistortion(spark, "/root/testdata/sf0.001").head()
-    assert(r.getLong(3) == 0L, s"violations ${r.getLong(3)}")
-    assert(r.getLong(2) <= r.getLong(1), "two-level distortion must not exceed one-level")
-    assert(r.getDouble(5) >= 0.0 && r.getDouble(5) <= 1.0)
-    // planted corpus: every vector IS either a level-1 seed or a
-    // level-2 prototype (sample ranks 9-16), so two-level distortion
-    // collapses to EXACTLY zero while one-level stays positive
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q276").toString
-    try {
-      val sampled = (0L to 199L)
-        .filter(id => graft.TestFiles.md5Hex(id.toString).take(2) <= "19")
-      assert(sampled.size >= 16, s"fixture needs 16 sampled ids: $sampled")
-      val protoIds = sampled.take(16)
-      def proto(k: Int): Array[Float] =
-        Array.tabulate(64)(i =>
-          ((k * 13 + i * 7) % 11 - 5) * 0.05f +
-            (if (k >= 8) ((k * 29 + i * 3) % 9 - 4) * 0.031f else 0f))
-      val protos = protoIds.zipWithIndex.map { case (id, k) => id -> proto(k) }.toMap
-      val rows = (0L to 199L).map { id =>
-        val e = protos.getOrElse(id,
-          proto(8 + java.lang.Math.floorMod(id, 8L).toInt))
-        (id, e, 0)
-      }
-      rows.toDF("vec_id", "embedding", "label")
-        .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
-      val z = Similarity.residualPqDistortion(spark, tmp).head()
-      assert(z.getLong(1) > 0L, "one-level distortion should be positive")
-      assert(z.getLong(2) == 0L,
-        s"residual-coded corpus must quantize exactly: ${z.getLong(2)}")
-      assert(z.getLong(3) == 0L && z.getLong(4) == 1000000L)
     } finally graft.TestFiles.rmrf(java.nio.file.Paths.get(tmp))
   }
 

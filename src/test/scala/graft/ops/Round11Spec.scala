@@ -3,53 +3,12 @@ package graft.ops
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-11 batch: the PQ codebook operating sweep (q277), the
-  * codegen'd pq_encode path it rides, and the q281-q292 TPC-H shape
-  * completion (Q2/Q4/Q5/Q6/Q7/Q8/Q9/Q10/Q12/Q14/Q18/Q19).
+/** Round-11 batch: the q186/q196 eval-tier guard and the q281-q292
+  * TPC-H shape completion (Q2/Q4/Q5/Q6/Q7/Q8/Q9/Q10/Q12/Q14/Q18/Q19).
   */
 class Round11Spec extends AnyFunSuite {
 
   private val spark = graft.SparkTestSession.spark
-
-  /** Exact pinned curves assert only on the fixture they were measured
-    * on (round-11 ADVICE: a value-preserving fixture regeneration must
-    * skip the pins rather than fail them with no code defect; the
-    * invariant assertions in the same tests stay unconditional). Hash
-    * shared via [[graft.TestFixtures]].
-    */
-  private def assumePinnedFixture(dir: String): Unit =
-    assume(graft.TestFixtures.embeddingsMd5(dir) ==
-        graft.TestFixtures.pinnedEmbeddingsMd5,
-      "embeddings fixture regenerated — exact pinned curves skipped " +
-        "(invariants above still gated; re-pin from the oracle run)")
-
-  test("q277 sweep: Lloyd law holds per arm; finer blocks + more codes reach recall 0.7") {
-    val dir = "/root/testdata/sf0.01"
-    val rows = Similarity.pqCodebookSweep(spark, dir).collect()
-      .map(r => ((r.getLong(0), r.getLong(1), r.getString(2)),
-        (r.getLong(4), r.getLong(6)))).toMap
-    assert(rows.size == 8, s"expected 4 configs x 2 phases, got ${rows.size}")
-    // the Lloyd objective provably never increases: trained <= init in
-    // EVERY arm, independent of what recall does
-    for ((nb, cd) <- Seq((4L, 8L), (4L, 64L), (16L, 8L), (16L, 64L))) {
-      val di = rows((nb, cd, "init"))._2
-      val dt = rows((nb, cd, "trained"))._2
-      assert(dt <= di, s"Lloyd violated at ($nb, $cd): trained $dt > init $di")
-    }
-    // more codes at fixed blocks, and finer blocks at fixed codes, both
-    // strictly cut the INIT distortion on this corpus (the axis the
-    // sweep exists to expose)
-    assert(rows((4L, 64L, "init"))._2 < rows((4L, 8L, "init"))._2)
-    assert(rows((16L, 8L, "init"))._2 < rows((4L, 8L, "init"))._2)
-    assumePinnedFixture(dir)
-    // the operating point: (16 blocks x 4 dims, 64 trained codes)
-    // measures recall@10 = 0.7 on sf0.01 — the answer to q270/q271's
-    // "recall is noise at (4, 8)". Pinned as >= so a better trajectory
-    // can't fail the spec, with the exact value cross-checked by the
-    // DuckDB oracle row.
-    assert(rows((16L, 64L, "trained"))._1 >= 7L,
-      s"operating point lost: n_overlap ${rows((16L, 64L, "trained"))._1}")
-  }
 
   test("q186/q196 eval-tier guard: the full-corpus truth arm refuses above the bound") {
     val dir = "/root/testdata/sf0.001"
@@ -67,38 +26,6 @@ class Round11Spec extends AnyFunSuite {
       .count() >= 1L)
     // and at/below the bound the full arm runs as before
     assert(Dedup.dedupEval(spark, dir, maxEvalDocs = 100000L).count() == 1L)
-  }
-
-  test("q280 IVF-PQ: cost curve is exact cell accounting; full probe scans everything") {
-    val dir = "/root/testdata/sf0.01"
-    val rows = Similarity.ivfPqTopK(spark, dir).collect()
-      .map(r => (r.getLong(0), (r.getLong(2), r.getLong(3)))).toMap
-    assert(rows.keySet == Set(1L, 2L, 4L, 8L))
-    // n_scanned is strictly increasing in nProbe (cells are non-empty
-    // on this corpus) and the all-cells arm scans the whole corpus
-    // minus the query vector
-    val scans = Seq(1L, 2L, 4L, 8L).map(np => rows(np)._1)
-    assert(scans == scans.sorted && scans.distinct == scans,
-      s"cost curve not strictly increasing: $scans")
-    // full probe scans the corpus minus the query vector — derived
-    // from the fixture, not pinned (round-12 review: the literal was a
-    // fixture property asserting ahead of the fixture gate)
-    val corpus = spark.read.parquet(s"$dir/embeddings.parquet").count()
-    assert(scans.last == corpus - 1,
-      s"full probe scanned ${scans.last}, corpus minus query is ${corpus - 1}")
-    // probing more cells never loses scanned rows (supersets) — the
-    // recall VALUES are oracle-gated, not asserted monotone (ADC over a
-    // candidate superset can displace true positives; measured and
-    // documented in BASELINE.md)
-  }
-
-  test("trainedPqRecall is unchanged by the pq_encode rewrite (q271 regression pin)") {
-    assumePinnedFixture("/root/testdata/sf0.01")
-    val out = Similarity.trainedPqRecall(spark, "/root/testdata/sf0.01")
-      .collect().map(r => (r.getString(0), (r.getLong(2), r.getLong(4)))).toMap
-    // values pinned from the round-10 oracle-verified run
-    assert(out("init") == ((1L, 625107575L)))
-    assert(out("trained") == ((2L, 409110134L)))
   }
 
   // ---- q281-q292: the TPC-H 1..22 completion batch. The DuckDB oracle

@@ -3,8 +3,8 @@ package graft.ops
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Behavioral contracts for the round-8 operators: q232 stupid-backoff
-  * LM scoring, q233 label-centroid cosines, q234 simplified silhouette,
-  * q235 LR training, q236 SCD2 history.
+  * LM scoring, q233 label-centroid cosines, q235 LR training, q236 SCD2
+  * history.
   */
 class Round8Spec extends AnyFunSuite {
 
@@ -73,19 +73,6 @@ class Round8Spec extends AnyFunSuite {
       assert(out((0, 1)) == ((2L, 2L, 1.0)))
       assert(out((0, 2))._3 == -1.0 && out((1, 2))._3 == -1.0)
     } finally graft.TestFiles.rmrf(tmp)
-  }
-
-  test("kmeansSilhouette: per-cluster rows partition the corpus, sil in [0,1]") {
-    val out = Similarity.kmeansSilhouette(spark, sf).collect()
-    assert(out.nonEmpty)
-    val n = spark.read.parquet(s"$sf/embeddings.parquet").count()
-    assert(out.map(_.getAs[Long]("n_members")).sum == n)
-    out.foreach { r =>
-      val s = r.getAs[Double]("avg_silhouette")
-      assert(s >= 0.0 && s <= 1.0, s"silhouette out of range: $s")
-      assert(r.getAs[Double]("avg_intra_dist") <=
-        r.getAs[Double]("avg_inter_dist") + 1e-9)
-    }
   }
 
   test("lrQualityTrain: training separates the classes on a separable corpus") {
