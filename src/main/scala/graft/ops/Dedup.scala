@@ -62,10 +62,15 @@ object Dedup {
     // raw string comparison against lowercase md5 hex — fail loudly
     require(hexMax.matches("[0-9a-f]{2}"),
       s"hexMax must be two lowercase hex chars, got '$hexMax'")
-    if (hexMax == "ff") d
-    else d.filter(
-      substring(md5(col("doc_id").cast("string")), 1, 2) <= lit(hexMax))
+    if (hexMax == "ff") d else d.filter(samplePred(col("doc_id"), hexMax))
   }
+
+  /** The [[sampleDocs]] predicate over an arbitrary doc-id column —
+    * also the sampled-table serves' filter and q79's base split, so
+    * neither can drift from the sampling definition.
+    */
+  private def samplePred(id: Column, hexMax: String): Column =
+    substring(md5(id.cast("string")), 1, 2) <= lit(hexMax)
 
   // ====================================================================
   // Shared in-session tables (the kmvSketchTable / edge-index / trained-
@@ -89,13 +94,6 @@ object Dedup {
 
   private def docsFingerprint(spark: SparkSession, dir: String): Long =
     Memo.fingerprint(spark, s"$dir/documents.parquet")
-
-  /** The [[sampleDocs]] predicate over an arbitrary doc-id column —
-    * shared by the sampled-table subset serves below so the filter can
-    * never drift from the sampling definition.
-    */
-  private def samplePred(id: Column, hexMax: String): Column =
-    substring(md5(id.cast("string")), 1, 2) <= lit(hexMax)
 
   // Sampled-table subset serves (round-14 optimization): every shared
   // dedup table over an md5 doc sample is a pure per-doc or per-pair
@@ -129,8 +127,29 @@ object Dedup {
   private def lazyPersist(df: DataFrame): DataFrame =
     df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-  private val minsTableCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String, Long), DataFrame]
+  private type SampledCache = scala.collection.concurrent.TrieMap[
+    (SparkSession, String, String, Long), DataFrame]
+
+  /** The memoized `hexMax`-sample table of `cache`, declared once for
+    * the three shared tables below: served from the ff entry by the
+    * subset laws above (rows whose `idCols` are all sampled) when that
+    * entry is already memoized, else built by `build` — never a
+    * full-corpus build. `persist` lazily persists either frame.
+    */
+  private def sampledTable(cache: SampledCache, spark: SparkSession,
+      dir: String, hexMax: String, label: String, persist: Boolean,
+      idCols: String*)(build: => DataFrame): DataFrame = {
+    val fp = docsFingerprint(spark, dir)
+    Memo.cached(cache, (spark, dir, hexMax, fp), label = s"$label/$hexMax") {
+      val full = if (hexMax == "ff") None else cache.get((spark, dir, "ff", fp))
+      val table = full.fold(build)(_.filter(
+        idCols.map(c => samplePred(col(c), hexMax)).reduce(_ && _)))
+      if (persist) lazyPersist(table) else table
+    }
+  }
+
+  private val minsTableCache: SampledCache =
+    scala.collection.concurrent.TrieMap.empty
 
   /** The 16-permutation row-mins table over the `hexMax` md5 doc sample
     * — ONE shingle explode + Kirsch–Mitzenmacher mins pass per (corpus,
@@ -138,27 +157,13 @@ object Dedup {
     */
   private[ops] def minsTable16(spark: SparkSession, dir: String,
       hexMax: String = "ff"): DataFrame =
-    Memo.cached(minsTableCache,
-        (spark, dir, hexMax, docsFingerprint(spark, dir)),
-        label = s"mins16/$hexMax") {
-      val fromFf =
-        if (hexMax == "ff") None
-        else minsTableCache.get(
-          (spark, dir, "ff", docsFingerprint(spark, dir)))
-      fromFf match {
-        // doc-subset invariance: a doc's row-mins depend on its own
-        // shingle set only, so the sampled table IS the memoized full
-        // table filtered to sampled ids — no second shingle explode
-        case Some(full) =>
-          lazyPersist(full.filter(samplePred(col("doc_id"), hexMax)))
-        case None =>
-          lazyPersist(
-            rowMins(shingleRowsOf(sampleDocs(docs(spark, dir), hexMax)), 16))
-      }
+    sampledTable(minsTableCache, spark, dir, hexMax, "mins16",
+        persist = true, "doc_id") {
+      rowMins(shingleRowsOf(sampleDocs(docs(spark, dir), hexMax)), 16)
     }
 
-  private val candTableCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String, Long), DataFrame]
+  private val candTableCache: SampledCache =
+    scala.collection.concurrent.TrieMap.empty
 
   /** The 4×4-banding candidate pairs over the `hexMax` sample — the q15
     * shape, folded from the memoized mins table and itself memoized (it
@@ -166,62 +171,30 @@ object Dedup {
     */
   private[ops] def bandCandidates44(spark: SparkSession, dir: String,
       hexMax: String = "ff"): DataFrame =
-    Memo.cached(candTableCache,
-        (spark, dir, hexMax, docsFingerprint(spark, dir)),
-        label = s"bandCandidates44/$hexMax") {
-      val fromFf =
-        if (hexMax == "ff") None
-        else candTableCache.get(
-          (spark, dir, "ff", docsFingerprint(spark, dir)))
-      fromFf match {
-        // pairwise subset law: (a, b) is a candidate of the sampled
-        // corpus iff it is a candidate of the full corpus with both
-        // endpoints sampled — no sampled band self-join at all
-        case Some(full) =>
-          lazyPersist(full.filter(
-            samplePred(col("doc_a"), hexMax) &&
-              samplePred(col("doc_b"), hexMax)))
-        case None =>
-          lazyPersist(candidatePairs(
-            bandSignaturesFromMins(minsTable16(spark, dir, hexMax), 4, 4)))
-      }
+    sampledTable(candTableCache, spark, dir, hexMax, "bandCandidates44",
+        persist = true, "doc_a", "doc_b") {
+      candidatePairs(
+        bandSignaturesFromMins(minsTable16(spark, dir, hexMax), 4, 4))
     }
 
-  private val pairTableCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String, Long), DataFrame]
+  private val pairTableCache: SampledCache =
+    scala.collection.concurrent.TrieMap.empty
 
   /** The exact shingle-Jaccard pair table at the suite's LOWEST
     * threshold (τ = 0.05, q16's default) over the `hexMax` sample —
-    * already eager (jaccardPairsOf localCheckpoints). Consumers at any
-    * τ ≥ 0.05 filter the rounded jaccard, which is exactly the filter
-    * jaccardPairsOf itself applies last, so the served values are
-    * identical to a direct computation at τ.
+    * already eager (the dedup-first scaffold checkpoints), so it is not
+    * persisted. Consumers at any τ ≥ 0.05 filter the rounded jaccard,
+    * which is exactly the filter the pair core itself applies last, so
+    * the served values are identical to a direct computation at τ. The
+    * native build rides the memoized [[repTables]], so the identity
+    * tables are shared with q148's PPJoin.
     */
   private[ops] def exactPairTable(spark: SparkSession, dir: String,
       hexMax: String = "ff"): DataFrame =
-    Memo.cached(pairTableCache,
-        (spark, dir, hexMax, docsFingerprint(spark, dir)),
-        label = s"exactPairTable/$hexMax") {
-      val fromFf =
-        if (hexMax == "ff") None
-        else pairTableCache.get(
-          (spark, dir, "ff", docsFingerprint(spark, dir)))
-      fromFf match {
-        // pairwise subset law: (doc_a, doc_b, common, jaccard) are pure
-        // functions of the two docs' shingle sets, so the sampled pair
-        // table IS the full (already checkpointed) table filtered to
-        // pairs with both members sampled — the whole sampled truth-arm
-        // build (rep tables + hybrid pair join) disappears
-        case Some(full) =>
-          full.filter(
-            samplePred(col("doc_a"), hexMax) &&
-              samplePred(col("doc_b"), hexMax))
-        case None =>
-          // the dir-keyed scaffold rides the memoized repTables, so the
-          // identity tables are shared with q148's PPJoin
-          shingleSetPairsDedupFirstAt(spark, dir, hexMax)(
-            hybridJaccardRepPairs(spark, _, 0.05, 256))
-      }
+    sampledTable(pairTableCache, spark, dir, hexMax, "exactPairTable",
+        persist = false, "doc_a", "doc_b") {
+      shingleSetPairsDedupFirstAt(spark, dir, hexMax)(
+        hybridJaccardRepPairs(spark, _, 0.05, 256))
     }
 
   /** Per-doc distinct SET of 64-bit shingle hashes: xxhash64 applied
@@ -232,6 +205,13 @@ object Dedup {
     */
   private[ops] def hashedShingleSet(t: Column): Column =
     array_distinct(transform(shinglesOf(t), s => xxhash64(s)))
+
+  /** The 6-dp Jaccard ratio common / (na + nb − common), declared once
+    * for every set-pair operator — and q215's weighted twin over weight
+    * sums.
+    */
+  private[ops] def jaccard6(common: Column, na: Column, nb: Column): Column =
+    round(common.cast("double") / (na + nb - common), 6)
 
   /** Exact dedup via content hash: sha256 groups, keeper = min doc_id.
     * Reuses the engine's hashing idea relationally (the reference's F3
@@ -400,13 +380,15 @@ object Dedup {
           size(array_intersect($"sa", $"sb")).cast("long").as("common"),
           $"na", $"nb")
         .select($"doc_a", $"doc_b", $"n_agree", $"est_jaccard",
-          round($"common".cast("double") / ($"na" + $"nb" - $"common"), 6)
-            .as("jaccard"))
+          jaccard6($"common", $"na", $"nb").as("jaccard"))
         .withColumn("within_tol",
           abs($"est_jaccard" - $"jaccard") <= tol)
         .localCheckpoint(true)
     }
   }
+
+  private val clusterTableCache = scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String, Int, Long, Long), DataFrame]
 
   /** Dedup clusters: connected components over the MinHash candidate
     * graph, labels = min doc_id per component — the step that turns
@@ -418,9 +400,6 @@ object Dedup {
     * the shrinking edge set instead of joining the full vertex table
     * every hop.
     */
-  private val clusterTableCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, Long, Long), DataFrame]
-
   def dedupClusters(spark: SparkSession, dir: String, maxIters: Int = 50,
       driverEdgeLimit: Long = 2000000L): DataFrame =
     // memoized (round-13 optimization): the cluster assignment is read
@@ -620,10 +599,12 @@ object Dedup {
     import spark.implicits._
     keeperShingleIntersections(spark, dir)
       .select($"doc_a", $"doc_b", $"common",
-        round($"common".cast("double") /
-          (col("na") + col("nb") - $"common"), 6).as("jaccard"))
+        jaccard6($"common", $"na", $"nb").as("jaccard"))
       .filter($"jaccard" >= minJaccard)
   }
+
+  private val keeperPairCache = scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String, Long), DataFrame]
 
   /** The shared skeleton under the keeper-pair verifiers (q39 Jaccard,
     * q88 containment): exact-dedup keepers, per-doc hashed shingle sets
@@ -642,9 +623,6 @@ object Dedup {
     * replaces, and spills under MEMORY_AND_DISK. Returns the memoized
     * joined pair table; the Memo releases it, callers never do.
     */
-  private val keeperPairCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Long), DataFrame]
-
   private[ops] def keeperShingleIntersections(
       spark: SparkSession, dir: String): DataFrame =
     // memoized (round-13 optimization): q39 and q88 read the IDENTICAL
@@ -679,6 +657,15 @@ object Dedup {
       }
     }
 
+  /** The measured max document frequency of a `(…, df)` table — one
+    * 1-row aggregate, 0 when empty: the statistic the df-adaptive plans
+    * (q16's hybrid, the q39/q88 keeper grid, q162) branch on.
+    */
+  private def measuredMaxDf(dfreq: DataFrame): Long = {
+    val r = dfreq.agg(max(col("df"))).head()
+    if (r.isNullAt(0)) 0L else r.getLong(0)
+  }
+
   /** The keeper intersection join's pair-row generator: one
     * (doc_a < doc_b) row per SHARED shingle, df-adaptive (round-14,
     * guide §2.5; round-13 verdict "what's wrong" #3). The plain
@@ -702,7 +689,7 @@ object Dedup {
     * Both branches emit EXACTLY one row per (shared shingle, ordered
     * pair): a pair (x, y) with x < y appears in the grid once, at cell
     * (bucket(x), bucket(y)) — so the grouped counts (and every q39/q88
-    * value) are unchanged by construction; KeeperSkewSpec pins the
+    * value) are unchanged by construction; SkewSpec pins the
     * equivalence on a 300-doc boilerplate corpus.
     */
   private[ops] def keeperPairRows(sh: DataFrame, dfCap: Int = 256,
@@ -713,9 +700,7 @@ object Dedup {
         col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
     val dfreq = sh.groupBy($"sh").agg(count(lit(1)).as("df"))
-    val maxRow = dfreq.agg(max($"df")).head()
-    val maxDf = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
-    if (maxDf <= dfCap) pairsOf(sh)
+    if (measuredMaxDf(dfreq) <= dfCap) pairsOf(sh)
     else {
       val tagged = sh.join(dfreq, "sh")
       val light = tagged.filter($"df" <= dfCap).select($"doc_id", $"sh")
@@ -751,8 +736,7 @@ object Dedup {
     import spark.implicits._
     keeperShingleIntersections(spark, dir)
       .select($"doc_a", $"doc_b", $"common",
-        round($"common".cast("double") /
-          (col("na") + col("nb") - $"common"), 6).as("jaccard"),
+        jaccard6($"common", $"na", $"nb").as("jaccard"),
         round($"common".cast("double") / col("na"), 6).as("containment_a"),
         round($"common".cast("double") / col("nb"), 6).as("containment_b"))
       .filter(greatest($"containment_a", $"containment_b") >= minContainment)
@@ -850,7 +834,7 @@ object Dedup {
     * all pairs with J ≥ `minJaccard`, computed candidate-then-verify.
     *
     * Scale has TWO quadratic axes, both closed. (1) Duplication:
-    * exact-dedup-first is BUILT IN via [[shingleSetPairsDedupFirst]]
+    * exact-dedup-first is BUILT IN via [[shingleSetPairsDedupFirstAt]]
     * (the q148 treatment) — identical shingle sets collapse to one
     * representative, pairing runs on representatives only, and the
     * expansion reconstructs the exact all-pairs answer, so a corpus
@@ -886,42 +870,10 @@ object Dedup {
       minJaccard: Double, dfCap: Int = 256): DataFrame = {
     require(minJaccard >= 0.0 && minJaccard <= 1.0,
       s"minJaccard must be in [0, 1], got $minJaccard")
-    shingleSetPairsDedupFirstOf(spark, d)(
+    shingleSetPairsDedupFirstOf(d)(
       hybridJaccardRepPairs(spark, _, minJaccard, dfCap))
   }
 
-  /** Per-document duplicated-window fraction — the exact-substring
-    * duplication METRIC (Lee et al., "Deduplicating Training Data Makes
-    * Language Models Better"): a length-n word window is "duplicated"
-    * if the identical window occurs anywhere else in the corpus
-    * (another doc OR another position of the same doc), and each doc
-    * reports the fraction of its windows that are. The scan emits
-    * 64-bit window hashes via the codegen'd `gram_hashes` expression —
-    * full strings never leave the row — and multiplicity is carried as
-    * a count, so the shuffled volume is distinct-grams-per-doc, not
-    * corpus positions. Docs shorter than n windows are emitted with
-    * zero windows and a null fraction (total output, q72 contract).
-    *
-    * Scale: two hash-keyed aggregates (both map-side combined, uniform
-    * 64-bit keys) and one join back on the gram hash. The global gram
-    * table grows with corpus size, so nothing is force-broadcast. This
-    * is the measurement pass; acting on it (cutting the duplicated
-    * spans) reuses the same per-position hash stream.
-    */
-  /** Shared scaffold for the per-doc window-hash statistics (q77/q81):
-    * gram explode → (doc, h) multiplicity aggregate → one h-keyed
-    * global aggregate → join back → per-doc sums → total left join
-    * (zero-window docs kept, fraction null below one window) →
-    * checkpoint and release. The multiplicity table is persisted
-    * because it feeds both the global aggregate and the join back —
-    * Catalyst expands the self-referencing aggregate into TWO full
-    * gram-explode subtrees otherwise (asymmetric IsNotNull pushdown
-    * defeats AQE stage reuse — verified in the final adaptive plan);
-    * the eager checkpoint of the four-numeric-columns-per-doc result
-    * lets the (much larger) gram cache be released before returning —
-    * the pageRankKnn lifecycle. Parameterized by the global aggregate
-    * and the "this window counts" predicate over its result.
-    */
   private val gramMultCache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String, Int, Long), DataFrame]
 
@@ -947,6 +899,20 @@ object Dedup {
         .groupBy($"doc_id", $"h").agg(count(lit(1)).as("m")))
     }
 
+  /** Shared scaffold for the per-doc window-hash statistics (q77/q81):
+    * gram explode → (doc, h) multiplicity aggregate → one h-keyed
+    * global aggregate → join back → per-doc sums → total left join
+    * (zero-window docs kept, fraction null below one window) →
+    * checkpoint and release. The multiplicity table is persisted
+    * because it feeds both the global aggregate and the join back —
+    * Catalyst expands the self-referencing aggregate into TWO full
+    * gram-explode subtrees otherwise (asymmetric IsNotNull pushdown
+    * defeats AQE stage reuse — verified in the final adaptive plan);
+    * the eager checkpoint of the four-numeric-columns-per-doc result
+    * lets the (much larger) gram cache be released before returning —
+    * the pageRankKnn lifecycle. Parameterized by the global aggregate
+    * and the "this window counts" predicate over its result.
+    */
   private def gramWindowStats(spark: SparkSession, dir: String, n: Int,
       globalAgg: Column, hit: Column, hitName: String,
       fracName: String): DataFrame = {
@@ -969,6 +935,24 @@ object Dedup {
       .localCheckpoint(true)
   }
 
+  /** Per-document duplicated-window fraction — the exact-substring
+    * duplication METRIC (Lee et al., "Deduplicating Training Data Makes
+    * Language Models Better"): a length-n word window is "duplicated"
+    * if the identical window occurs anywhere else in the corpus
+    * (another doc OR another position of the same doc), and each doc
+    * reports the fraction of its windows that are. The scan emits
+    * 64-bit window hashes via the codegen'd `gram_hashes` expression —
+    * full strings never leave the row — and multiplicity is carried as
+    * a count, so the shuffled volume is distinct-grams-per-doc, not
+    * corpus positions. Docs shorter than n windows are emitted with
+    * zero windows and a null fraction (total output, q72 contract).
+    *
+    * Scale: two hash-keyed aggregates (both map-side combined, uniform
+    * 64-bit keys) and one join back on the gram hash. The global gram
+    * table grows with corpus size, so nothing is force-broadcast. This
+    * is the measurement pass; acting on it (cutting the duplicated
+    * spans) reuses the same per-position hash stream.
+    */
   def duplicatedWindowFraction(spark: SparkSession, dir: String,
       n: Int = 8): DataFrame =
     gramWindowStats(spark, dir, n, sum(col("m")).as("total"),
@@ -1062,8 +1046,7 @@ object Dedup {
     */
   def incrementalDedup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    def isBase(id: Column): Column =
-      substring(md5(id.cast("string")), 1, 2) <= "7f"
+    def isBase(id: Column): Column = samplePred(id, "7f")
     // persisted: the hashed doc table feeds the base side and the
     // incoming side — one scan + sha256 pass instead of two; released
     // with the signature cache below
@@ -1113,7 +1096,7 @@ object Dedup {
   def prefixJaccardJoin(spark: SparkSession, dir: String,
       t: Double = 0.6): DataFrame = {
     require(t >= 0.0 && t <= 1.0, s"t must be in [0, 1], got $t")
-    shingleSetPairsDedupFirst(spark, dir)(
+    shingleSetPairsDedupFirstAt(spark, dir, "ff")(
       prefixVerifiedRepPairs(spark, _, t))
   }
 
@@ -1132,11 +1115,8 @@ object Dedup {
     * the array traffic dominates — that regime belongs to
     * [[hybridJaccardRepPairs]]).
     *
-    * The prefix length is computed at τ − 2e-6, not τ: the FINAL filter
-    * compares the 6-dp ROUNDED Jaccard against τ, so a pair at exact
-    * J = τ − 4e-7 rounds up and must be kept — the slack keeps the
-    * bound sound for every pair the rounded filter admits (one extra
-    * prefix element at worst).
+    * The prefix length is computed at [[slackened]] τ (one extra prefix
+    * element at worst).
     */
   private[ops] def prefixVerifiedRepPairs(spark: SparkSession,
       reps: DataFrame, t: Double): DataFrame = {
@@ -1151,8 +1131,7 @@ object Dedup {
         size(array_intersect($"sa", $"sb")).cast("long").as("common"),
         $"na", $"nb")
       .select($"rep_a", $"rep_b", $"common",
-        round($"common".cast("double") / ($"na" + $"nb" - $"common"), 6)
-          .as("jaccard"))
+        jaccard6($"common", $"na", $"nb").as("jaccard"))
       .filter($"jaccard" >= t)
   }
 
@@ -1181,14 +1160,12 @@ object Dedup {
     *    the two branches disjoint; both are exact counts, so the union
     *    is the naive answer value-for-value.
     *
-    * τ enters the heavy-prefix length at τ − 2e-6 (the
-    * [[prefixVerifiedRepPairs]] rounding slack). Returns an EAGER pair
-    * table; internal caches are released before returning.
+    * τ enters the heavy-prefix length [[slackened]]. Returns an EAGER
+    * pair table; internal caches are released before returning.
     */
   private[ops] def hybridJaccardRepPairs(spark: SparkSession,
       reps: DataFrame, t: Double, dfCap: Int = 256): DataFrame = {
     import spark.implicits._
-    val tEff = math.max(0.0, t - 2e-6)
     val sh = reps.select($"doc_id", $"n", explode($"shs").as("sh"))
     val sizes = reps.select($"doc_id", $"n".cast("long").as("n"))
     def jaccardOf(pairs: DataFrame): DataFrame =
@@ -1196,14 +1173,11 @@ object Dedup {
         .join(sizes.select($"doc_id".as("rep_a"), $"n".as("na")), Seq("rep_a"))
         .join(sizes.select($"doc_id".as("rep_b"), $"n".as("nb")), Seq("rep_b"))
         .select($"rep_a", $"rep_b", $"common",
-          round($"common".cast("double") / ($"na" + $"nb" - $"common"), 6)
-            .as("jaccard"))
+          jaccard6($"common", $"na", $"nb").as("jaccard"))
         .filter($"jaccard" >= t)
     val dfreq = sh.groupBy($"sh").agg(count(lit(1)).as("df"))
     Memo.withPersisted(dfreq) {
-      val maxRow = dfreq.agg(max($"df")).head()
-      val maxDf = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
-      if (maxDf <= dfCap) {
+      if (measuredMaxDf(dfreq) <= dfCap) {
         // fast path: the bounded naive join, one shuffle + one groupBy
         val common = sh.as("a")
           .join(sh.as("b"),
@@ -1238,9 +1212,7 @@ object Dedup {
           val hCnt = heavy.groupBy($"doc_id").agg(count(lit(1)).as("hn"))
           val hpref = heavy.join(hCnt, Seq("doc_id"))
             .withColumn("rn", row_number().over(wH))
-            .filter($"rn" <=
-              greatest(lit(0L),
-                ($"hn" - ceil(lit(tEff) * $"n") + 1).cast("long")))
+            .filter($"rn" <= safePrefixLen($"hn", $"n", slackened(t)))
             .select($"doc_id", $"sh")
           val candH = hpref.as("a")
             .join(hpref.as("b"),
@@ -1260,22 +1232,36 @@ object Dedup {
     }
   }
 
+  /** The threshold every pruning bound of the pair family runs at:
+    * τ − 2e-6. The final filters compare the 6-dp ROUNDED score against
+    * τ, so a pair at exact J = τ − 4e-7 rounds up and must be kept —
+    * the slack keeps each bound sound for every pair the rounded filter
+    * admits. Below 2e-6 the negative value admits everything, exactly
+    * as a zero threshold would.
+    */
+  private def slackened(t: Double): Double = t - 2e-6
+
+  /** PPJoin's safe prefix length: of a doc's `size` ordered elements,
+    * the `size − ⌈tEff·n⌉ + 1` first (floored at 0), `n` the doc's
+    * whole set size — two sets with J ≥ τ share an element of their
+    * prefixes.
+    */
+  private def safePrefixLen(size: Column, n: Column, tEff: Double): Column =
+    greatest(lit(0L), (size - ceil(lit(tEff) * n) + 1).cast("long"))
+
   /** Doc-partitioned (df, sh)-ranked postings with each doc's safe
-    * prefix length at τ − 2e-6: (doc_id, sh, rn, plen). Shared by the
-    * verify core and [[prefixCandidates]].
+    * prefix length at [[slackened]] τ: (doc_id, sh, rn, plen). Shared by
+    * the verify core and [[prefixCandidates]].
     */
   private def rankedPostings(spark: SparkSession, reps: DataFrame,
       t: Double): DataFrame = {
     import spark.implicits._
-    val tEff = math.max(0.0, t - 2e-6)
     val sh = reps.select($"doc_id", $"n", explode($"shs").as("sh"))
     val dfreq = sh.groupBy($"sh").agg(count(lit(1)).as("df"))
     val w = Window.partitionBy($"doc_id").orderBy($"df", $"sh")
     sh.join(dfreq, "sh")
       .withColumn("rn", row_number().over(w))
-      .withColumn("plen",
-        greatest(lit(0L),
-          ($"n" - ceil(lit(tEff) * $"n") + 1).cast("long")))
+      .withColumn("plen", safePrefixLen($"n", $"n", slackened(t)))
       .select($"doc_id", $"sh", $"rn", $"plen", $"n")
   }
 
@@ -1294,14 +1280,14 @@ object Dedup {
     * token carries the LARGEST bound, which dominates the true common).
     * The length filter (min(n) ≥ τ·max(n)) prunes impossible size
     * ratios before the bound is even evaluated. Both bounds use
-    * τ − 2e-6 and an absolute 1e-6 slack, so every pair the 6-dp
+    * [[slackened]] τ and an absolute 1e-6 slack, so every pair the 6-dp
     * ROUNDED verify would keep still reaches the verify — soundness is
     * value-checked by the q148 oracle (the naive SQL), not asserted.
     */
   private[ops] def prefixCandidates(spark: SparkSession, reps: DataFrame,
       t: Double): DataFrame = {
     import spark.implicits._
-    val tEff = math.max(0.0, t - 2e-6)
+    val tEff = slackened(t)
     val pref = rankedPostings(spark, reps, t)
       .filter($"rn" <= $"plen").select($"doc_id", $"sh", $"rn", $"n")
     pref.as("a")
@@ -1314,46 +1300,6 @@ object Dedup {
         lit(tEff / (1.0 + tEff)) * (col("a.n") + col("b.n")) - lit(1e-6))
       .select(col("a.doc_id").as("rep_a"), col("b.doc_id").as("rep_b"))
       .distinct()
-  }
-
-  /** Exact-dedup-first scaffold shared by the shingle-set pair operators
-    * (q16 jaccardPairs, q148 prefixJaccardJoin) — the q39 lesson applied
-    * WITHOUT changing the output contract: identical shingle SETS
-    * collapse to one representative before any pairing; `pairFn`
-    * computes the (already-thresholded) pairs over the persisted rep
-    * table `(doc_id, shs, n)` only; every within-group pair is
-    * Jaccard 1.0 by identity and every cross-group pair inherits its
-    * representative pair's (common, jaccard) verbatim, so the expansion
-    * reconstructs the exact all-pairs answer. On a corpus duplicated
-    * k ways this moves the expensive pair stage from O((k·d)²) to O(d²)
-    * and leaves only the irreducible output-sized expansion join
-    * (measured on q148: 239 s → output-bound at 10× replication; any
-    * threshold ≤ 1 keeps the within-group pairs, so both callers'
-    * filters commute with the expansion).
-    */
-  /** Generic rep-pair → member-pair expansion (the back half of the
-    * dedup-first treatment, shared across the pair family): `grouped`
-    * maps every doc to its identity group `(doc_id, gkey)`, `repPairs`
-    * holds pair values computed between group REPRESENTATIVES
-    * (rep = min doc_id per group) with the value columns `valueCols`.
-    * Every (member-of-A, member-of-B) pair inherits its rep pair's
-    * values verbatim — valid whenever the values are pure functions of
-    * the deduped content, which is what the grouping key certifies.
-    * Emits (doc_a, doc_b, values...) with doc_a < doc_b; within-group
-    * pairs are the CALLER's job (their values come from one group, not
-    * a rep pair).
-    */
-  private[ops] def expandRepPairs(grouped: DataFrame, repPairs: DataFrame,
-      valueCols: Seq[String]): DataFrame = {
-    val repKey = grouped.select(col("doc_id").as("rep"), col("gkey"))
-    repPairs
-      .join(repKey.select(col("rep").as("rep_a"), col("gkey").as("ga")), Seq("rep_a"))
-      .join(repKey.select(col("rep").as("rep_b"), col("gkey").as("gb")), Seq("rep_b"))
-      .join(grouped.select(col("doc_id").as("xa"), col("gkey").as("ga")), Seq("ga"))
-      .join(grouped.select(col("doc_id").as("xb"), col("gkey").as("gb")), Seq("gb"))
-      .select((least(col("xa"), col("xb")).as("doc_a") +:
-        greatest(col("xa"), col("xb")).as("doc_b") +:
-        valueCols.map(col)): _*)
   }
 
   /** Identity-group key over the sorted hashed-shingle array: a STRUCT
@@ -1371,42 +1317,64 @@ object Dedup {
     struct(xxhash64(shs).as("h1"), xxhash64(lit(1L), shs).as("h2"))
       .as("gkey")
 
+  /** One representative id per identity group of a `(doc_id, gkey, …)`
+    * frame: (gkey, doc_id = min member id).
+    */
+  private[ops] def repIdsOf(grouped: DataFrame): DataFrame =
+    grouped.groupBy(col("gkey")).agg(min(col("doc_id")).as("doc_id"))
+
+  /** The shingle-set identity tables over `d`, unpersisted: grouped =
+    * (doc_id, shs, gkey, n) for every doc, reps = (doc_id, shs, n) for
+    * one representative per distinct shingle set. Both are read by
+    * several consumers (the pair core's explode and verify fetches, the
+    * expansion), so each caller persists them.
+    */
+  private def identityTables(d: DataFrame): (DataFrame, DataFrame) = {
+    val grouped = d
+      .select(col("doc_id"), array_sort(hashedShingleSet(toks)).as("shs"))
+      .select(col("doc_id"), col("shs"), gkeyOf(col("shs")),
+        size(col("shs")).as("n"))
+    val reps = repIdsOf(grouped)
+      .join(grouped.select(col("doc_id"), col("shs"), col("n")), Seq("doc_id"))
+    (grouped, reps)
+  }
+
   private val repTablesCache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String, String, Long), (DataFrame, DataFrame)]
 
-  /** Memoized dedup-first identity tables over the `hexMax` sample —
-    * (grouped = (doc_id, shs, gkey, n), reps = one row per distinct
-    * shingle set): q16's pair build and q148's PPJoin each derived the
-    * IDENTICAL tables (the corpus-dominating shingle-hash scan plus the
-    * identity groupBy); one persisted build now serves both (round-13
-    * optimization), and the memo owns the lifetime.
+  /** Memoized [[identityTables]] over the `hexMax` sample: q16's pair
+    * build and q148's PPJoin each derived the IDENTICAL tables (the
+    * corpus-dominating shingle-hash scan plus the identity groupBy);
+    * one persisted build serves both, and the memo owns the lifetime.
+    * Lazily persisted on purpose — see [[lazyPersist]]: eager
+    * materialization here re-planned the building query's joins off the
+    * actual cached bytes (q148's broadcasts became sort-merge).
     */
   private def repTables(spark: SparkSession, dir: String,
       hexMax: String): (DataFrame, DataFrame) =
     Memo.cached(repTablesCache,
         (spark, dir, hexMax, docsFingerprint(spark, dir)),
         label = s"repTables/$hexMax") {
-      import spark.implicits._
-      val grouped = lazyPersist(sampleDocs(docs(spark, dir), hexMax)
-        .select($"doc_id", array_sort(hashedShingleSet(toks)).as("shs"))
-        .select($"doc_id", $"shs", gkeyOf($"shs"), size($"shs").as("n")))
-      val reps = lazyPersist(grouped
-        .groupBy($"gkey").agg(min($"doc_id").as("doc_id"))
-        .join(grouped.select($"doc_id", $"shs", $"n"), Seq("doc_id")))
-      // lazily persisted on purpose — see [[lazyPersist]]: eager
-      // materialization here re-planned the building query's joins off
-      // the actual cached bytes (q148's broadcasts became sort-merge)
-      (grouped, reps)
+      val (grouped, reps) = identityTables(sampleDocs(docs(spark, dir), hexMax))
+      (lazyPersist(grouped), lazyPersist(reps))
     }
 
-  private def shingleSetPairsDedupFirst(spark: SparkSession, dir: String)(
-      pairFn: DataFrame => DataFrame): DataFrame = {
-    val (grouped, reps) = repTables(spark, dir, "ff")
-    dedupFirstExpand(grouped, reps)(pairFn)
-  }
-
-  /** The dir-keyed dedup-first scaffold over the memoized [[repTables]]
-    * — q16/q148/q186/q196 and the sampled twins all enter here.
+  /** Exact-dedup-first scaffold shared by the shingle-set pair operators
+    * (q16 jaccardPairs, q148 prefixJaccardJoin, and the q186/q196
+    * truth arms with their q222/q223 sampled twins), over the memoized
+    * [[repTables]] of the `hexMax` sample — the q39 lesson applied
+    * WITHOUT changing the output contract: identical shingle SETS
+    * collapse to one representative before any pairing; `pairFn`
+    * computes the (already-thresholded) pairs over the rep table
+    * `(doc_id, shs, n)` only; every within-group pair is Jaccard 1.0 by
+    * identity and every cross-group pair inherits its representative
+    * pair's (common, jaccard) verbatim, so the expansion reconstructs
+    * the exact all-pairs answer. On a corpus duplicated k ways this
+    * moves the expensive pair stage from O((k·d)²) to O(d²) and leaves
+    * only the irreducible output-sized expansion join (measured on
+    * q148: 239 s → output-bound at 10× replication; any threshold ≤ 1
+    * keeps the within-group pairs, so both callers' filters commute
+    * with the expansion).
     */
   private def shingleSetPairsDedupFirstAt(spark: SparkSession,
       dir: String, hexMax: String)(
@@ -1418,50 +1386,58 @@ object Dedup {
   /** The arbitrary-DataFrame variant (tests, non-corpus inputs): builds
     * and releases its own identity tables.
     */
-  private def shingleSetPairsDedupFirstOf(spark: SparkSession, d: DataFrame)(
+  private def shingleSetPairsDedupFirstOf(d: DataFrame)(
       pairFn: DataFrame => DataFrame): DataFrame = {
-    import spark.implicits._
-    val grouped = d
-      .select($"doc_id", array_sort(hashedShingleSet(toks)).as("shs"))
-      .select($"doc_id", $"shs", gkeyOf($"shs"), size($"shs").as("n"))
-    // reps is read by multiple consumers (pairFn's shingle explode and
-    // verify fetches) — without the persist each one re-runs the
-    // groupBy(gkey)+self-join dedup pipeline from the top
-    val reps = grouped
-      .groupBy($"gkey").agg(min($"doc_id").as("doc_id"))
-      .join(grouped.select($"doc_id", $"shs", $"n"), Seq("doc_id"))
+    val (grouped, reps) = identityTables(d)
     Memo.withPersisted(grouped, reps)(dedupFirstExpand(grouped, reps)(pairFn))
   }
 
-  /** The shared back half of the dedup-first treatment: run `pairFn`
-    * over the reps, expand rep pairs to member pairs, add the
-    * within-group Jaccard-1.0 pairs, checkpoint.
+  /** The shingle-set back half: run `pairFn` over the reps and expand.
+    * Within-group pairs are identical documents — jaccard exactly 1,
+    * common = the set size; empty shingle sets never pair (the naive
+    * route has no rows to join them on), hence n > 0.
     */
   private def dedupFirstExpand(grouped: DataFrame, reps: DataFrame)(
-      pairFn: DataFrame => DataFrame): DataFrame = {
-    import grouped.sparkSession.implicits._
-    val members = grouped.select($"doc_id", $"gkey", $"n")
-    val repPairs = pairFn(reps)
-    // expansion: cross-group pairs carry the rep pair's values; the
-    // rep-to-group joins key on gkey-derived membership
-    val repKey = grouped.select($"doc_id".as("rep"), $"gkey")
-    val crossPairs = repPairs
-      .join(repKey.select($"rep".as("rep_a"), $"gkey".as("ga")), Seq("rep_a"))
-      .join(repKey.select($"rep".as("rep_b"), $"gkey".as("gb")), Seq("rep_b"))
-      .join(members.select($"doc_id".as("xa"), $"gkey".as("ga")), Seq("ga"))
-      .join(members.select($"doc_id".as("xb"), $"gkey".as("gb")), Seq("gb"))
-      .select(least($"xa", $"xb").as("doc_a"),
-        greatest($"xa", $"xb").as("doc_b"), $"common", $"jaccard")
-    // within-group pairs are identical documents: jaccard exactly 1;
-    // empty shingle sets never pair (the naive route has no rows to
-    // join them on), hence n > 0
-    val withinPairs = members.as("x")
-      .join(members.as("y"),
-        col("x.gkey") === col("y.gkey") && col("x.doc_id") < col("y.doc_id"))
-      .filter(col("x.n") > 0)
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        col("x.n").cast("long").as("common"), lit(1.0).as("jaccard"))
-    crossPairs.unionByName(withinPairs).localCheckpoint(true)
+      pairFn: DataFrame => DataFrame): DataFrame =
+    expandRepPairs(grouped, pairFn(reps), None, col("x.n") > 0)(
+      col("x.n").cast("long").as("common"), lit(1.0).as("jaccard"))
+
+  /** The rep-pair → member-pair expansion with its within-group pairs,
+    * declared once for the dedup-first pair family (q16, q148, q162,
+    * q215, q18 and the evaluators over them). `grouped` maps every doc
+    * to its identity group `(doc_id, gkey, …)`; `repPairs` holds
+    * `(rep_a, rep_b, values…)` computed between group REPRESENTATIVES
+    * (rep = min doc_id per group). Every (member-of-A, member-of-B)
+    * pair inherits its rep pair's values verbatim — valid whenever the
+    * values are pure functions of the deduped content, which is what
+    * the grouping key certifies. Within-group pairs come from the gkey
+    * self-join of `grouped` (`x.doc_id < y.doc_id`), joined to the
+    * per-group `stats` `(gkey, …)` when given; `keep` filters them and
+    * `values` are their value columns (over `x.`/`y.` and the stats
+    * columns), named like the rep pairs' value columns. Emits
+    * `(doc_a < doc_b, values…)` for both kinds as one eager checkpoint.
+    */
+  private[ops] def expandRepPairs(grouped: DataFrame, repPairs: DataFrame,
+      stats: Option[DataFrame], keep: Column)(values: Column*): DataFrame = {
+    val members = grouped.as("x").join(grouped.as("y"),
+      col("x.gkey") === col("y.gkey") && col("x.doc_id") < col("y.doc_id"))
+    val within = stats
+      .fold(members)(st => members.join(st.withColumnRenamed("gkey", "gk"),
+        col("x.gkey") === col("gk")))
+      .filter(keep)
+      .select((col("x.doc_id").as("doc_a") +: col("y.doc_id").as("doc_b") +:
+        values): _*)
+    val repKey = grouped.select(col("doc_id").as("rep"), col("gkey"))
+    repPairs
+      .join(repKey.select(col("rep").as("rep_a"), col("gkey").as("ga")), Seq("rep_a"))
+      .join(repKey.select(col("rep").as("rep_b"), col("gkey").as("gb")), Seq("rep_b"))
+      .join(grouped.select(col("doc_id").as("xa"), col("gkey").as("ga")), Seq("ga"))
+      .join(grouped.select(col("doc_id").as("xb"), col("gkey").as("gb")), Seq("gb"))
+      .select((least(col("xa"), col("xb")).as("doc_a") +:
+        greatest(col("xa"), col("xb")).as("doc_b") +:
+        within.columns.toSeq.drop(2).map(col)): _*)
+      .unionByName(within)
+      .localCheckpoint(true)
   }
 
   /** Edit-distance verification of LSH candidates (q145): exact
@@ -1541,7 +1517,7 @@ object Dedup {
       .agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy($"g").agg(count(lit(1)).as("df"))
     val nDocs = docs(spark, dir).agg(count(lit(1)).as("n_docs"))
-    val repIds = grouped.groupBy($"gkey").agg(min($"doc_id").as("doc_id"))
+    val repIds = repIdsOf(grouped)
     val wts = tf.join(repIds, Seq("doc_id"), "left_semi")
       .join(dfreq, "g")
       .crossJoin(broadcast(nDocs))
@@ -1553,9 +1529,7 @@ object Dedup {
           count(lit(1)).as("n_grams"))
       // ---- df-adaptive Σ df² cut (the q16 hybrid rationale): the
       // hazard is HEAVY grams, so branch on the measured max df.
-      val maxRow = dfreq.agg(max($"df")).head()
-      val maxDf = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
-      val repPairs = if (maxDf <= dfCap) {
+      val repPairs = if (measuredMaxDf(dfreq) <= dfCap) {
         // fast path: the plain inverted-index dot join — Σ df² ≤
         // dfCap·|postings| rows, linear in the corpus. Universal grams
         // (possible only when n_docs ≤ dfCap) ride along with weight 0
@@ -1588,11 +1562,10 @@ object Dedup {
         // term only needs to GENERATE candidates while that suffix
         // bound still clears the threshold. Rare terms (the suffix) do,
         // heavy boilerplate terms (early, with tiny per-doc weight)
-        // fall out. The bound runs at minCos − 2e-6: the final filter
-        // compares the 6-dp ROUNDED cosine, so the slack covers pairs
-        // that round up across the threshold plus FP noise in the
-        // suffix sums.
-        val tEff = minCos - 2e-6
+        // fall out. The bound runs at the slackened threshold: the slack
+        // covers pairs whose 6-dp ROUNDED cosine rounds up across the
+        // threshold plus FP noise in the suffix sums.
+        val tEff = slackened(minCos)
         val nUniv = broadcast(dfreq.crossJoin(broadcast(nDocs))
           .filter($"df" === $"n_docs")
           .agg(count(lit(1)).as("n_univ")))
@@ -1635,7 +1608,6 @@ object Dedup {
             round($"dot" / ($"na" * $"nb"), 6).as("cosine"))
           .filter($"cosine" >= minCos)
       }
-      val cross = expandRepPairs(grouped, repPairs, Seq("n_shared", "cosine"))
       // within-group pairs: identical tf vectors share every gram —
       // n_shared is the rep's distinct-gram count, cosine is exactly 1
       // (x/(√x·√x) rounds to 1.0 at 6 dp on both engines); groups whose
@@ -1646,33 +1618,11 @@ object Dedup {
       // BOTH the plan and the oracle, is the deterministic semantics
       val repStats = repIds
         .join(norms.select($"doc_id", $"n_grams", $"nrm"), Seq("doc_id"))
-        .filter($"nrm" > 0)
-        .select($"gkey".as("gk"), $"n_grams")
-      val within = grouped.as("x")
-        .join(grouped.as("y"),
-          col("x.gkey") === col("y.gkey") && col("x.doc_id") < col("y.doc_id"))
-        .join(repStats, col("x.gkey") === col("gk"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-          $"n_grams".as("n_shared"), lit(1.0).as("cosine"))
-      cross.unionByName(within).localCheckpoint(true)
+      expandRepPairs(grouped, repPairs, Some(repStats), $"nrm" > 0)(
+        $"n_grams".as("n_shared"), lit(1.0).as("cosine"))
     }
   }
 
-  /** MinHash banding quality report (q186): precision/recall of the q15
-    * candidate pairs against exact-Jaccard ground truth at threshold
-    * `tau` — "measure, don't guess" applied to the dedup pipeline
-    * itself. Banding parameters are a bet on an S-curve; this is the
-    * query that checks the bet on THIS corpus before a 100-TB run
-    * trusts it. Composes [[minhashCandidates]] and [[jaccardPairs]]
-    * verbatim, so the evaluation can never drift from the operators it
-    * scores.
-    *
-    * Scale: the ground-truth arm is exact-Jaccard and pair-bounded (the
-    * q16 hazard, documented there); at real scale this evaluation runs
-    * on a deterministic md5 doc-sample (the q47 trick) — the S-curve
-    * estimate needs thousands of pairs, not the whole corpus. The
-    * final full-outer join keys on the pair ids.
-    */
   /** IDF-weighted Jaccard re-score of the banding candidates (q215):
     * WJ(A,B) = Σ_{s∈A∩B} w(s) / Σ_{s∈A∪B} w(s) with w(s) = ln(N/df(s))
     * — plain Jaccard counts a boilerplate shingle and a distinctive one
@@ -1706,7 +1656,7 @@ object Dedup {
         .select($"sh",
           round(log($"n_docs" / $"df".cast("double")) * 1e6).cast("long")
             .as("wm"))
-      val repIds = grouped.groupBy($"gkey").agg(min($"doc_id").as("doc_id"))
+      val repIds = repIdsOf(grouped)
       val repSh = sh.join(repIds, Seq("doc_id"), "left_semi")
       Memo.withPersisted(repSh) {
         val shw = repSh.join(wts, Seq("sh"))
@@ -1736,27 +1686,16 @@ object Dedup {
           // pair of two such docs divides 0/0 — engine-dependent NaN
           .filter($"swa" > 0 && $"swb" > 0)
           .select($"doc_a".as("rep_a"), $"doc_b".as("rep_b"), $"common",
-            round($"common" / ($"na" + $"nb" - $"common").cast("double"), 6)
-              .as("jaccard"),
-            round($"iw" / ($"swa" + $"swb" - $"iw").cast("double"), 6)
-              .as("weighted_jaccard"))
-        val cross = expandRepPairs(grouped, repPairs,
-          Seq("common", "jaccard", "weighted_jaccard"))
+            jaccard6($"common", $"na", $"nb").as("jaccard"),
+            jaccard6($"iw", $"swa", $"swb").as("weighted_jaccard"))
         // within-group pairs: identical non-empty shingle sets collide in
         // every band (always candidates) and both ratios are exact 1;
         // empty-set groups have no docW row and drop, like the naive
         // inner joins
-        val repStats = repIds.join(docW, Seq("doc_id"))
-          .filter($"sw" > 0)
-          .select($"gkey".as("gk"), $"n_sh")
-        val within = grouped.as("x")
-          .join(grouped.as("y"),
-            col("x.gkey") === col("y.gkey") && col("x.doc_id") < col("y.doc_id"))
-          .join(repStats, col("x.gkey") === col("gk"))
-          .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-            $"n_sh".as("common"), lit(1.0).as("jaccard"),
-            lit(1.0).as("weighted_jaccard"))
-        cross.unionByName(within).localCheckpoint(true)
+        expandRepPairs(grouped, repPairs,
+            Some(repIds.join(docW, Seq("doc_id"))), $"sw" > 0)(
+          $"n_sh".as("common"), lit(1.0).as("jaccard"),
+          lit(1.0).as("weighted_jaccard"))
       }
     }
   }
@@ -1882,7 +1821,22 @@ object Dedup {
           "if this corpus size is intentional")
     }
 
-  /** `sampleHexMax` < "ff" runs BOTH arms — banding candidates and the
+  /** MinHash banding quality report (q186): precision/recall of the q15
+    * candidate pairs against exact-Jaccard ground truth at threshold
+    * `tau` — "measure, don't guess" applied to the dedup pipeline
+    * itself. Banding parameters are a bet on an S-curve; this is the
+    * query that checks the bet on THIS corpus before a 100-TB run
+    * trusts it. Composes [[minhashCandidates]] and [[jaccardPairs]]
+    * verbatim, so the evaluation can never drift from the operators it
+    * scores.
+    *
+    * Scale: the ground-truth arm is exact-Jaccard and pair-bounded (the
+    * q16 hazard, documented there); at real scale this evaluation runs
+    * on a deterministic md5 doc-sample (the q47 trick) — the S-curve
+    * estimate needs thousands of pairs, not the whole corpus. The
+    * final full-outer join keys on the pair ids.
+    *
+    * `sampleHexMax` < "ff" runs BOTH arms — banding candidates and the
     * exact-Jaccard ground truth — on the same deterministic md5-bucket
     * doc sample ([[sampleDocs]]): at 100 TB the exact truth arm is
     * unrunnable on the full corpus, and the S-curve estimate needs

@@ -59,6 +59,19 @@ object Memo {
     }
   }
 
+  /** The identity of a DURABLE artifact (an on-disk layout that
+    * outlives the session): a 12-hex tag over `key` (the corpus path
+    * plus the build's geometry) and the [[fingerprint]] of every table
+    * the artifact reads — so a corpus rewritten at the same path gets a
+    * fresh tag, and so a fresh build, instead of the stale layout.
+    */
+  private[graft] def artifactTag(spark: SparkSession, key: String,
+      tables: String*): String = {
+    val id = (key +: tables.map(t => fingerprint(spark, t))).mkString("|")
+    "g" + java.security.MessageDigest.getInstance("MD5")
+      .digest(id.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
+  }
+
   /** Build-attribution log (round-14, the bench's `memo_builds`
     * section): one entry per compute-body run — (table label, the
     * consumer that triggered the build, seconds spent in the body).

@@ -125,8 +125,7 @@ object Similarity {
           .otherwise(md5(to_json(struct($"label", $"embedding"))))
           .as("gkey"))
     Memo.withPersisted(grouped) {
-      val reps = grouped
-        .groupBy($"gkey").agg(min($"doc_id").as("doc_id"))
+      val reps = Dedup.repIdsOf(grouped)
         .join(grouped.select($"doc_id", $"label", $"embedding"), Seq("doc_id"))
         .select($"doc_id", $"label", $"embedding", norm($"embedding").as("nrm"))
       val repPairs = reps.as("a")
@@ -137,21 +136,11 @@ object Similarity {
           round(dot(col("a.embedding"), col("b.embedding")) /
             (col("a.nrm") * col("b.nrm")), 6).as("cosine"))
         .filter($"cosine" >= minCosine)
-      val cross = Dedup.expandRepPairs(
-        grouped.select($"doc_id", $"gkey"), repPairs, Seq("label", "cosine"))
-      val within = grouped.as("x")
-        .join(grouped.as("y"),
-          col("x.gkey") === col("y.gkey") && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-          col("x.label").as("label"),
-          round(dot(col("x.embedding"), col("y.embedding")) /
-            (norm(col("x.embedding")) * norm(col("y.embedding"))), 6)
-            .as("cosine"))
-        .filter($"cosine" >= minCosine)
-      cross.unionByName(within)
-        .select($"doc_a".as("vec_a"), $"doc_b".as("vec_b"),
-          $"label", $"cosine")
-        .localCheckpoint(true)
+      val within = round(dot(col("x.embedding"), col("y.embedding")) /
+        (norm(col("x.embedding")) * norm(col("y.embedding"))), 6)
+      Dedup.expandRepPairs(grouped, repPairs, None, within >= minCosine)(
+          col("x.label").as("label"), within.as("cosine"))
+        .toDF("vec_a", "vec_b", "label", "cosine")
     }
   }
 
@@ -1959,12 +1948,11 @@ object Similarity {
     val e = emb(spark, dir)
     val (coarse, _) = seedCells(spark, dir, e, nCells, 0, nCells)
       .getOrElse(return emptyFiltered(spark))
-    // one-time layout build per (corpus, nCells) — the q219 staleness
-    // rule (tag keys the corpus path; centroids re-derive
-    // deterministically from its content, so same dir ⇒ same cells)
-    val tag = "g" + java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|$nCells".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
+    // one-time layout build per (corpus content, nCells): centroids
+    // re-derive deterministically from the content, so same tag ⇒ same
+    // cells
+    val tag = Memo.artifactTag(spark, s"$dir|$nCells",
+      s"$dir/embeddings.parquet")
     val path = s"/tmp/graft_cell_layout/$tag"
     graft.sources.Layouts.ensurePartitioned(spark,
       e.filter($"vec_id" =!= 0L)
@@ -2164,13 +2152,9 @@ object Similarity {
     // marker-checked DDL re-registration, no rebuild; else pay the
     // build+write). Every later session's q293-q299 read the layout;
     // bucketing on src co-locates the per-hop frontier⋈adjacency
-    // joins. Staleness follows the q219 rule: the tag keys the
-    // corpus PATH (+ geometry), and a corpus rewritten in place under
-    // the same path must drop the artifact dir (in-session rewrites
-    // re-key the Memo via its fingerprint but would re-register the
-    // same table name — the spec corpora use fresh tmp dirs, and the
-    // driver's testdata is content-stable across rounds, pin-gated).
-    val (tbl, path) = routeEdgeArtifact(dir, nPlanes, nBands)
+    // joins. The tag folds the corpus fingerprint (q219's rule), so a
+    // corpus rewritten in place builds a fresh artifact.
+    val (tbl, path) = routeEdgeArtifact(spark, dir, nPlanes, nBands)
     graft.sources.Layouts.ensureBucketed(spark, rankedBuild, tbl, 32,
       Seq("src"), path)
     val ranked = spark.table(tbl)
@@ -2179,15 +2163,15 @@ object Similarity {
     Some(EdgeIndex(e3, e3r, ranked))
   }
 
-  /** Identity of the durable route-edge artifact for (corpus,
+  /** Identity of the durable route-edge artifact for (corpus content,
     * geometry): catalog table name + on-disk path. Deterministic per
-    * corpus path so repeat sessions re-register instead of rebuilding.
+    * [[Memo.artifactTag]], so repeat sessions re-register instead of
+    * rebuilding.
     */
-  private[ops] def routeEdgeArtifact(dir: String, nPlanes: Int,
-      nBands: Int): (String, String) = {
-    val tag = "g" + java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|$nPlanes|$nBands".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
+  private[ops] def routeEdgeArtifact(spark: SparkSession, dir: String,
+      nPlanes: Int, nBands: Int): (String, String) = {
+    val tag = Memo.artifactTag(spark, s"$dir|$nPlanes|$nBands",
+      s"$dir/embeddings.parquet")
     (s"route_edges_$tag", s"/tmp/graft_route_edges/$tag")
   }
 

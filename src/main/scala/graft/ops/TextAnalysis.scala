@@ -1203,8 +1203,7 @@ object TextAnalysis {
         .join(broadcast(sizes.select($"source".as("source_a"), $"n".as("na"))), "source_a")
         .join(broadcast(sizes.select($"source".as("source_b"), $"n".as("nb"))), "source_b")
         .select($"source_a", $"source_b", $"common",
-          round($"common".cast("double") / ($"na" + $"nb" - $"common"), 6)
-            .as("jaccard"))
+          Dedup.jaccard6($"common", $"na", $"nb").as("jaccard"))
         .localCheckpoint(true)
     }
   }

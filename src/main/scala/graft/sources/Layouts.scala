@@ -47,10 +47,10 @@ object Layouts {
     * layout build promises: the bucketing shuffle is paid ONCE per
     * corpus, not once per query/JVM.
     *
-    * The caller owns staleness: `path` must be derived from the corpus
-    * identity (q219 keys it by a digest of the corpus dir), so a
-    * different corpus never reuses these files; a corpus EDITED in
-    * place under the same path must drop the directory first.
+    * Staleness: `path` (and `table`) must be derived from the corpus
+    * identity — [[graft.ops.Memo.artifactTag]] folds the fingerprint of
+    * every table the layout reads, so neither a different corpus nor
+    * one rewritten in place under the same path reuses these files.
     *
     * `_SUCCESS` alone does not prove the on-disk LAYOUT matches the
     * request: if code later changes (nBuckets, keys) under the same
@@ -120,8 +120,7 @@ object Layouts {
     * full schema) match, do nothing; otherwise pay the write and stamp
     * the marker. `df` is by-name so the skip path never even plans the
     * build. Staleness follows the [[ensureBucketed]] contract: derive
-    * `path` from the corpus identity; a corpus edited in place under
-    * the same path must drop the directory first.
+    * `path` from [[graft.ops.Memo.artifactTag]].
     */
   def ensurePartitioned(spark: SparkSession, df: => DataFrame,
       path: String, cols: Seq[String]): Unit = {
@@ -240,9 +239,11 @@ object Layouts {
     */
   def bucketedRevenueJoin(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // deterministic per-corpus identity so repeat runs overwrite their
-    // own tables and two corpora never share one
-    val tag = "g" + md5Hex(dir)
+    // per-corpus identity (path + both tables' fingerprints), so repeat
+    // runs reuse their own tables and neither two corpora nor a corpus
+    // rewritten in place share one
+    val tag = graft.ops.Memo.artifactTag(spark, dir,
+      s"$dir/lineitem.parquet", s"$dir/orders.parquet")
     val liT = s"li_q219_$tag"
     val ordT = s"ord_q219_$tag"
     // one-time build per corpus tag: repeat runs (and fresh JVMs over a
@@ -286,10 +287,6 @@ object Layouts {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     result
   }
-
-  private def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
 
   def zorderLocality(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

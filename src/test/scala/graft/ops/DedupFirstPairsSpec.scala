@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * inheritance, min1/min2 in-group positive legs — are exercised here
   * on a 3×-replicated corpus (every doc/vector exists in 3
   * byte-identical copies under fresh ids), pair-for-pair against the
-  * pre-rewrite naive plans re-stated inline.
+  * pre-rewrite naive plans re-stated inline. Also pins q16's and
+  * q148's Spark jobs per call and the evaluators' eval-tier guard.
   */
 class DedupFirstPairsSpec extends AnyFunSuite {
 
@@ -36,15 +37,15 @@ class DedupFirstPairsSpec extends AnyFunSuite {
   private def docs: DataFrame = spark.read.parquet(s"$dir/documents.parquet")
   private def emb: DataFrame = spark.read.parquet(s"$dir/embeddings.parquet")
 
-  test("q16 jaccardPairs == naive shingle-join all-pairs on a duplicated corpus") {
-    val fast = Dedup.jaccardPairs(spark, dir, minJaccard = 0.05).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getDouble(3)))
-      .toMap
+  /** q16's naive spelling: the hashed-shingle postings self-join, its
+    * grouped counts and the 6-dp Jaccard at threshold `t`.
+    */
+  private def naiveJaccard(t: Double): Map[(Long, Long), (Long, Double)] = {
     val base = docs.select($"doc_id", split($"text", " ").as("t"))
     val sh = base.select($"doc_id", explode(Dedup.hashedShingleSet($"t")).as("sh"))
     val sizes = base.select($"doc_id",
       size(Dedup.hashedShingleSet($"t")).cast("long").as("n"))
-    val naive = sh.as("a")
+    sh.as("a")
       .join(sh.as("b"),
         col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
@@ -54,15 +55,62 @@ class DedupFirstPairsSpec extends AnyFunSuite {
       .select($"doc_a", $"doc_b", $"common",
         round($"common".cast("double") / ($"na" + $"nb" - $"common"), 6)
           .as("jaccard"))
-      .filter($"jaccard" >= 0.05)
+      .filter($"jaccard" >= t)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getDouble(3)))
       .toMap
+  }
+
+  private def pairsOf(df: DataFrame): Map[(Long, Long), (Long, Double)] =
+    df.collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getDouble(3)))
+      .toMap
+
+  test("q16 jaccardPairs == naive shingle-join all-pairs on a duplicated corpus") {
+    val fast = pairsOf(Dedup.jaccardPairs(spark, dir, minJaccard = 0.05))
+    val naive = naiveJaccard(0.05)
     assert(fast == naive)
     // duplication actually exercised: each of the 500 base docs with a
     // non-empty shingle set yields 3 within-group pairs at jaccard 1.0
     assert(naive.values.count(_._2 == 1.0) >= 1000,
       "expected replica pairs at jaccard 1.0")
+  }
+
+  test("q148 prefixJaccardJoin == naive shingle-join all-pairs on a duplicated corpus") {
+    // τ = 0.6 is q148's default; at 0.3 the PPJoin prefixes are much
+    // longer and the positional bound prunes differently
+    for (t <- Seq(0.6, 0.3)) {
+      val naive = naiveJaccard(t)
+      assert(pairsOf(Dedup.prefixJaccardJoin(spark, dir, t)) == naive,
+        s"τ=$t diverged")
+      assert(naive.values.count(_._2 == 1.0) >= 1000,
+        "expected replica pairs at jaccard 1.0")
+    }
+  }
+
+  test("q16 and q148 Spark jobs per call, cold and warm") {
+    // each query on its own fresh copy of the sf0.01 documents: a new
+    // corpus fingerprint, so every memo of the family starts cold and
+    // the second call is served warm
+    def coldWarm(q: String => DataFrame): (Int, Int) = {
+      val tmp = java.nio.file.Files.createTempDirectory("graft-dedup-jobs")
+      try {
+        spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+          .write.parquet(s"$tmp/documents.parquet")
+        val d = tmp.toString
+        (graft.SparkTestSession.jobsOf(q(d).collect()),
+          graft.SparkTestSession.jobsOf(q(d).collect()))
+      } finally graft.TestFiles.rmrf(tmp)
+    }
+    // cold: the identity tables, the pair core's df branch and the
+    // eager expansion checkpoint; warm q16 reads its memoized τ=0.05
+    // pair table (the collect alone), warm q148 re-runs PPJoin over the
+    // memoized identity tables
+    assert(coldWarm(Dedup.jaccardPairs(spark, _)) == ((22, 1)))
+    // q148's cold count is 27 or 28 from run to run (adaptive stage
+    // timing), so its bound is the larger
+    val (cold148, warm148) = coldWarm(Dedup.prefixJaccardJoin(spark, _))
+    assert(cold148 <= 28 && warm148 == 16, s"q148 jobs $cold148/$warm148")
   }
 
   test("q162 tfidfCosinePairs == naive tf-idf all-pairs on a duplicated corpus") {
@@ -213,5 +261,23 @@ class DedupFirstPairsSpec extends AnyFunSuite {
           "expected an in-group (replica) positive in the sparse regime")
       }
     }
+  }
+
+  test("q186/q196 eval-tier guard: the full-corpus truth arm refuses above the bound") {
+    val dir = "/root/testdata/sf0.001"
+    val e1 = intercept[IllegalArgumentException] {
+      Dedup.dedupEval(spark, dir, maxEvalDocs = 3L).collect()
+    }
+    assert(e1.getMessage.contains("eval-tier") &&
+      e1.getMessage.contains("q222"), e1.getMessage)
+    val e2 = intercept[IllegalArgumentException] {
+      Dedup.sCurveCheck(spark, dir, maxEvalDocs = 3L).collect()
+    }
+    assert(e2.getMessage.contains("q223"), e2.getMessage)
+    // the sampled twin path never trips the guard, whatever the bound
+    assert(Dedup.dedupEval(spark, dir, sampleHexMax = "7f", maxEvalDocs = 3L)
+      .count() >= 1L)
+    // and at/below the bound the full arm runs as before
+    assert(Dedup.dedupEval(spark, dir, maxEvalDocs = 100000L).count() == 1L)
   }
 }

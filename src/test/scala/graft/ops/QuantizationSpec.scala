@@ -354,15 +354,41 @@ class QuantizationSpec extends AnyFunSuite {
     assert(viaLayout.count() == 5) // prefilter + 4 postfilter arms
     // one-time build: a second invocation must ride the marker skip
     // path and not rewrite a single layout file
-    val tag = "g" + java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|8".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
+    val tag = Memo.artifactTag(spark, s"$dir|8", s"$dir/embeddings.parquet")
     val path = s"/tmp/graft_cell_layout/$tag"
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(path, "_graft_layout")), "layout marker missing")
     val t1 = graft.TestFiles.fileTimes(path)
     Similarity.cellPartitionedIvfTopK(spark, dir).collect()
     assert(graft.TestFiles.fileTimes(path) == t1, "layout rewritten on the warm path")
+  }
+
+  test("q302 on a corpus rewritten at the same path returns the fresh-path rows") {
+    def rows(d: String): Set[String] =
+      Similarity.cellPartitionedIvfTopK(spark, d).collect().map(_.toString).toSet
+    def layoutOf(d: String): java.nio.file.Path = java.nio.file.Paths.get(
+      "/tmp/graft_cell_layout",
+      Memo.artifactTag(spark, s"$d|8", s"$d/embeddings.parquet"))
+    val same = java.nio.file.Files.createTempDirectory("graft-q302-same")
+    val fresh = java.nio.file.Files.createTempDirectory("graft-q302-fresh")
+    val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    val layouts = scala.collection.mutable.Buffer.empty[java.nio.file.Path]
+    try {
+      e.write.parquet(s"$same/embeddings.parquet")
+      rows(same.toString)
+      layouts += layoutOf(same.toString)
+      // the same path now holds a shorter corpus: its layout must be
+      // rebuilt, not served from the first corpus' files
+      val shorter = e.filter(e("vec_id") < 400L)
+      shorter.write.mode("overwrite").parquet(s"$same/embeddings.parquet")
+      shorter.write.parquet(s"$fresh/embeddings.parquet")
+      val rewritten = rows(same.toString)
+      layouts ++= Seq(layoutOf(same.toString), layoutOf(fresh.toString))
+      assert(rewritten == rows(fresh.toString),
+        "q302 served the stale layout of the corpus formerly at this path")
+    } finally {
+      (layouts :+ same :+ fresh).foreach(graft.TestFiles.rmrf)
+    }
   }
 
   test("q303 filtered-ADC laws: prefix monotone, scan accounting, pinned operating point") {

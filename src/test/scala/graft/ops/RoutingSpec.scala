@@ -116,7 +116,7 @@ class RoutingSpec extends AnyFunSuite {
       spark.read.parquet(s"$sf/embeddings.parquet")
         .write.parquet(tmp.resolve("embeddings.parquet").toString)
       val dir = tmp.toString
-      val (tbl, path) = Similarity.routeEdgeArtifact(dir, 16, 4)
+      val (tbl, path) = Similarity.routeEdgeArtifact(spark, dir, 16, 4)
       def edges(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
         df.select("src", "dst", "rn").collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -144,7 +144,7 @@ class RoutingSpec extends AnyFunSuite {
       val wide = Similarity.graphRouteAnnWide(spark, dir).collect()
       assert(wide.nonEmpty)
     } finally {
-      val (tbl, path) = Similarity.routeEdgeArtifact(tmp.toString, 16, 4)
+      val (tbl, path) = Similarity.routeEdgeArtifact(spark, tmp.toString, 16, 4)
       spark.sql(s"DROP TABLE IF EXISTS `$tbl`")
       graft.TestFiles.rmrf(java.nio.file.Paths.get(path))
       Similarity.evictEdgeIndexes()
