@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * on a 3×-replicated corpus (every doc/vector exists in 3
   * byte-identical copies under fresh ids), pair-for-pair against the
   * pre-rewrite naive plans re-stated inline. Also pins q16's and
-  * q148's Spark jobs per call and the evaluators' eval-tier guard.
+  * q148's Spark jobs per call.
   */
 class DedupFirstPairsSpec extends AnyFunSuite {
 
@@ -261,23 +261,5 @@ class DedupFirstPairsSpec extends AnyFunSuite {
           "expected an in-group (replica) positive in the sparse regime")
       }
     }
-  }
-
-  test("q186/q196 eval-tier guard: the full-corpus truth arm refuses above the bound") {
-    val dir = "/root/testdata/sf0.001"
-    val e1 = intercept[IllegalArgumentException] {
-      Dedup.dedupEval(spark, dir, maxEvalDocs = 3L).collect()
-    }
-    assert(e1.getMessage.contains("eval-tier") &&
-      e1.getMessage.contains("q222"), e1.getMessage)
-    val e2 = intercept[IllegalArgumentException] {
-      Dedup.sCurveCheck(spark, dir, maxEvalDocs = 3L).collect()
-    }
-    assert(e2.getMessage.contains("q223"), e2.getMessage)
-    // the sampled twin path never trips the guard, whatever the bound
-    assert(Dedup.dedupEval(spark, dir, sampleHexMax = "7f", maxEvalDocs = 3L)
-      .count() >= 1L)
-    // and at/below the bound the full arm runs as before
-    assert(Dedup.dedupEval(spark, dir, maxEvalDocs = 100000L).count() == 1L)
   }
 }

@@ -3,12 +3,30 @@ package graft.ops
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-11 batch: the q281-q292 TPC-H shape completion
-  * (Q2/Q4/Q5/Q6/Q7/Q8/Q9/Q10/Q12/Q14/Q18/Q19).
+/** Round-11 batch: the q186/q196 eval-tier guard and the q281-q292
+  * TPC-H shape completion (Q2/Q4/Q5/Q6/Q7/Q8/Q9/Q10/Q12/Q14/Q18/Q19).
   */
 class Round11Spec extends AnyFunSuite {
 
   private val spark = graft.SparkTestSession.spark
+
+  test("q186/q196 eval-tier guard: the full-corpus truth arm refuses above the bound") {
+    val dir = "/root/testdata/sf0.001"
+    val e1 = intercept[IllegalArgumentException] {
+      Dedup.dedupEval(spark, dir, maxEvalDocs = 3L).collect()
+    }
+    assert(e1.getMessage.contains("eval-tier") &&
+      e1.getMessage.contains("q222"), e1.getMessage)
+    val e2 = intercept[IllegalArgumentException] {
+      Dedup.sCurveCheck(spark, dir, maxEvalDocs = 3L).collect()
+    }
+    assert(e2.getMessage.contains("q223"), e2.getMessage)
+    // the sampled twin path never trips the guard, whatever the bound
+    assert(Dedup.dedupEval(spark, dir, sampleHexMax = "7f", maxEvalDocs = 3L)
+      .count() >= 1L)
+    // and at/below the bound the full arm runs as before
+    assert(Dedup.dedupEval(spark, dir, maxEvalDocs = 100000L).count() == 1L)
+  }
 
   // ---- q281-q292: the TPC-H 1..22 completion batch. The DuckDB oracle
   // is the value gate; these tests pin the INVARIANTS each shape owes
