@@ -21,23 +21,26 @@ object Dedup {
 
   private def toks: Column = split(col("text"), " ")
 
-  /** Word n-gram shingles over a PRE-MATERIALIZED token array column.
-    * The array must be a plain column reference: inlining `split(text)`
-    * here would re-split the whole text inside every element_at of every
-    * lambda iteration (n × positions × docs full splits — measured 4-5×
-    * slowdown on the shingle queries). Shared with TextAnalysis's
+  /** Word n-gram shingles over the PRE-MATERIALIZED token array column
+    * named `t`. It takes a name, not a `Column`, so an inline
+    * `split(text)` cannot be passed: inlined, the whole text would be
+    * re-split inside every element_at of every lambda iteration
+    * (n × positions × docs full splits — measured 4-5× slowdown on the
+    * shingle queries). Shared with TextAnalysis's
     * repetition/boilerplate signals.
     */
-  private[ops] def ngramsOf(t: Column, n: Int): Column =
+  private[ops] def ngramsOf(t: String, n: Int): Column = {
+    val tc = col(t)
     // docs with <n tokens have no n-grams; unguarded, sequence(0, -k)
     // is descending and element_at(t, 0) throws
-    when(size(t) >= n,
+    when(size(tc) >= n,
       transform(
-        sequence(lit(0), size(t) - lit(n)),
-        i => concat_ws(" ", (1 to n).map(j => element_at(t, i + j)): _*)))
+        sequence(lit(0), size(tc) - lit(n)),
+        i => concat_ws(" ", (1 to n).map(j => element_at(tc, i + j)): _*)))
       .otherwise(array().cast("array<string>"))
+  }
 
-  private def shinglesOf(t: Column): Column = ngramsOf(t, 3)
+  private def shinglesOf(t: String): Column = ngramsOf(t, 3)
 
   /** (doc_id, shingle) rows WITH per-doc multiplicity — the MinHash
     * input (min over salted hashes is multiplicity-invariant, so no
@@ -49,7 +52,7 @@ object Dedup {
 
   private[ops] def shingleRowsOf(d: DataFrame): DataFrame =
     d.select(col("doc_id"), toks.as("t"))
-      .select(col("doc_id"), explode(shinglesOf(col("t"))).as("sh"))
+      .select(col("doc_id"), explode(shinglesOf("t")).as("sh"))
 
   /** Deterministic md5-bucket corpus sample (the q47 idiom): keep a doc
     * iff the first two hex chars of md5(doc_id) are ≤ `hexMax` —
@@ -202,9 +205,18 @@ object Dedup {
     * one hash count once everywhere (intersections stay set-exact over
     * the hashed domain — ADVICE r2) and the dedup compares 8-byte longs
     * instead of ~25-byte strings.
+    *
+    * Takes the TEXT column, not a token array: the codegen'd
+    * `gram_hashes` kernel hashes each 3-gram straight off the document
+    * bytes, bit-identical to `xxhash64(concat_ws(' ', t[i..i+2]))` over
+    * `t = split(text, ' ')`, so no token array or gram string is ever
+    * built and the text is read once. Null text gives the empty set,
+    * not null (the [[ngramsOf]] contract). The caller registers
+    * [[graft.functions.TextOps]] on its session.
     */
-  private[ops] def hashedShingleSet(t: Column): Column =
-    array_distinct(transform(shinglesOf(t), s => xxhash64(s)))
+  private[graft] def hashedShingleSet(text: Column): Column =
+    coalesce(array_distinct(call_function("gram_hashes", text, lit(3))),
+      array().cast("array<bigint>"))
 
   /** The 6-dp Jaccard ratio common / (na + nb − common), declared once
     * for every set-pair operator — and q215's weighted twin over weight
@@ -360,9 +372,9 @@ object Dedup {
     // the mins come from the shared memoized table (the memo owns the
     // persist lifetime); only the per-doc exact sets are query-local
     val mins = minsTable16(spark, dir)
+    graft.functions.TextOps.register(spark)
     val sets = docs(spark, dir)
-      .select($"doc_id", toks.as("t"))
-      .select($"doc_id", hashedShingleSet($"t").as("set"))
+      .select($"doc_id", hashedShingleSet($"text").as("set"))
       .select($"doc_id", $"set", size($"set").cast("long").as("n"))
     Memo.withPersisted(sets) {
       val cand = candidatePairs(bandSignaturesFromMins(mins, bands, rowsPerBand))
@@ -633,13 +645,13 @@ object Dedup {
         (spark, dir, docsFingerprint(spark, dir)),
         label = "keeperShingleIntersections") {
       import spark.implicits._
+      graft.functions.TextOps.register(spark)
       val keepers = docs(spark, dir)
         .groupBy(sha2($"text", 256).as("content_hash"))
         .agg(min($"doc_id").as("doc_id"), first($"text").as("text"))
         .select($"doc_id", $"text")
       val sh = keepers
-        .select($"doc_id", toks.as("t"))
-        .select($"doc_id", explode(hashedShingleSet($"t")).as("sh"))
+        .select($"doc_id", explode(hashedShingleSet($"text")).as("sh"))
       Memo.withPersisted(sh) {
         // sizes from the exploded set: sh rows are distinct per doc, so
         // the count IS the set size — no fourth keeper aggregation
@@ -1329,9 +1341,10 @@ object Dedup {
     * several consumers (the pair core's explode and verify fetches, the
     * expansion), so each caller persists them.
     */
-  private def identityTables(d: DataFrame): (DataFrame, DataFrame) = {
+  private[ops] def identityTables(d: DataFrame): (DataFrame, DataFrame) = {
+    graft.functions.TextOps.register(d.sparkSession)
     val grouped = d
-      .select(col("doc_id"), array_sort(hashedShingleSet(toks)).as("shs"))
+      .select(col("doc_id"), array_sort(hashedShingleSet(col("text"))).as("shs"))
       .select(col("doc_id"), col("shs"), gkeyOf(col("shs")),
         size(col("shs")).as("n"))
     val reps = repIdsOf(grouped)

@@ -167,7 +167,7 @@ object TextAnalysis {
       .select($"doc_id", toks.as("t"),
         (substring(md5($"doc_id".cast("string")), 1, 2) <= "7f").as("is_train"))
       .select($"doc_id", $"is_train",
-        explode(array_distinct(Dedup.ngramsOf($"t", n))).as("gram"))
+        explode(array_distinct(Dedup.ngramsOf("t", n))).as("gram"))
     val trainGrams = grams.filter($"is_train").select($"gram").distinct()
     val evalGrams = grams.filter(!$"is_train")
     val perDoc = evalGrams.groupBy($"doc_id").agg(count(lit(1)).as("n_grams"))
@@ -203,10 +203,10 @@ object TextAnalysis {
     val train = tok.filter($"is_train")
       .select($"doc_id", $"t", size($"t").cast("long").as("n_tokens"))
     val evalGrams = tok.filter(!$"is_train")
-      .select(explode(array_distinct(Dedup.ngramsOf($"t", n))).as("g"))
+      .select(explode(array_distinct(Dedup.ngramsOf("t", n))).as("g"))
       .distinct()
     val sharedPos = train
-      .select($"doc_id", posexplode(Dedup.ngramsOf($"t", n)).as(Seq("pos", "gram")))
+      .select($"doc_id", posexplode(Dedup.ngramsOf("t", n)).as(Seq("pos", "gram")))
       .join(evalGrams, $"gram" === $"g", "left_semi")
       .select($"doc_id", $"pos")
     val covered = sharedPos
@@ -893,7 +893,7 @@ object TextAnalysis {
     import spark.implicits._
     docs(spark, dir)
       .select($"doc_id", toks.as("t"))
-      .select($"doc_id", winnowGramHashes($"t", n).as("g"))
+      .select($"doc_id", winnowGramHashes("t", n).as("g"))
       .select($"doc_id", $"g", winnowFps($"g", w).as("fps"))
       .select($"doc_id",
         size($"g").cast("long").as("n_grams"),
@@ -905,9 +905,10 @@ object TextAnalysis {
 
   /** The winnowing hash/selection pipeline split out so the fingerprint
     * REPORT (q91) and the candidate JOIN (q93) share one definition.
-    * `g` must be a materialized column (the ngramsOf inlining rule).
+    * `t` names the materialized token column (the [[Dedup.ngramsOf]]
+    * rule).
     */
-  private def winnowGramHashes(t: Column, n: Int): Column =
+  private def winnowGramHashes(t: String, n: Int): Column =
     transform(Dedup.ngramsOf(t, n),
       g => conv(substring(md5(g), 1, 8), 16, 10).cast("long"))
 
@@ -970,7 +971,7 @@ object TextAnalysis {
     import spark.implicits._
     val fp = docs(spark, dir)
       .select($"doc_id", toks.as("t"))
-      .select($"doc_id", winnowGramHashes($"t", n).as("g"))
+      .select($"doc_id", winnowGramHashes("t", n).as("g"))
       .select($"doc_id", explode(winnowFps($"g", w)).as("fp"))
     fp.as("a")
       .join(fp.as("b"),
@@ -2417,39 +2418,19 @@ object TextAnalysis {
     r2.crossJoin(totals)
   }
 
-  /** Pairwise source-overlap matrix from K-minimum-values sketches: per
-    * source, the k smallest md5-derived hashes of its distinct 3-word
-    * shingles ([[graft.functions.KmvSketch]]); per source pair, the
-    * Beyer et al. 2007 estimator Ĵ = |A_k ∩ B_k ∩ U| / |U| with
-    * U = k smallest of A_k ∪ B_k (when both sets have < k elements the
-    * sketches ARE the sets and Ĵ is exact Jaccard).
-    *
-    * The sketch aggregation runs straight on the exploded shingle
-    * stream — no distinct, no vocabulary-sized shuffle: duplicates are
-    * absorbed by the sketch's distinct-insert, partials are O(k) per
-    * partition, and the only shuffle is #sources × k longs. This is the
-    * sketch-path twin of [[sourceVocabOverlap]] (exact, pays the full
-    * distinct shuffle); at 100 TB only this one is runnable. The
-    * pairwise stage is |sources|² over a sketch table of #sources rows —
-    * driver-scale by construction.
-    *
-    * Hash = first 15 md5 hex chars as a long (60 bits, positive, exactly
-    * reproducible in DuckDB as ('0x' || substring(md5(g),1,15))::UBIGINT),
-    * so the oracle replays the identical sketch with row_number.
-    */
   /** The per-source KMV sketch + exact-distinct table shared by q228
     * and q230, memoized per (session, dir, k, n) as an eagerly
     * checkpointed #sources-row table: both consumers need the SAME
-    * corpus-dominating pass (explode 3-shingles → md5-hash → sketch
-    * aggregate), and running them back to back used to pay it twice
-    * cold (19.1 + 5.5 s at sf0.1, round-8 BASELINE). This is the
-    * in-session stand-in for what production does structurally — a
-    * sketch TABLE maintained by ingest that analysis queries read in
-    * place. The cached state is #sources × (k longs + 1 count); the key
-    * folds in a corpus fingerprint and the cache is entry-capped (both
-    * via [[graft.ops.Memo]]), so an in-session rewrite of `dir`
-    * recomputes instead of serving the stale checkpoint and pinned
-    * blocks can't accumulate without bound.
+    * corpus-dominating pass ([[kmvSketchRows]]), and running them back
+    * to back used to pay it twice cold (19.1 + 5.5 s at sf0.1, round-8
+    * BASELINE). This is the in-session stand-in for what production
+    * does structurally — a sketch TABLE maintained by ingest that
+    * analysis queries read in place. The cached state is
+    * #sources × (k longs + 1 count); the key folds in a corpus
+    * fingerprint and the cache is entry-capped (both via
+    * [[graft.ops.Memo]]), so an in-session rewrite of `dir` recomputes
+    * instead of serving the stale checkpoint and pinned blocks can't
+    * accumulate without bound.
     */
   private val kmvTableCache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String, Int, Int, Long), DataFrame]
@@ -2461,18 +2442,48 @@ object TextAnalysis {
     // unpersists the checkpoint RDD (round-10 ADVICE)
     Memo.cached(kmvTableCache, (spark, dir, k, n, fp),
         label = s"kmvSketch/$k/$n") {
-      import spark.implicits._
-      docs(spark, dir)
-        .select($"source", explode(Dedup.ngramsOf(toks, n)).as("gram"))
-        .select($"source",
-          conv(substring(md5($"gram"), 1, 15), 16, 10).cast("long").as("h"))
-        .groupBy($"source")
-        .agg(graft.functions.KmvSketch.kmvSketch(k)($"h").as("ks"),
-          count_distinct($"h").as("n_exact"))
-        .localCheckpoint(true)
+      kmvSketchRows(docs(spark, dir), k, n).localCheckpoint(true)
     }
   }
 
+  /** The unmemoized (source, ks, n_exact) build over `d`: explode the
+    * n-shingles of a materialized token column, md5-hash them, take the
+    * (source, h) distinct once, then one aggregate of the sketch and the
+    * row count. Distinct first is value-neutral (the sketch dedups on
+    * insert) and cheaper than the sketch beside a `count_distinct`,
+    * whose Expand adds shuffle stages; the exact arm shuffles the same
+    * distinct set either way.
+    */
+  private[ops] def kmvSketchRows(d: DataFrame, k: Int, n: Int): DataFrame =
+    d.select(col("source"), toks.as("t"))
+      .select(col("source"), explode(Dedup.ngramsOf("t", n)).as("gram"))
+      .select(col("source"),
+        conv(substring(md5(col("gram")), 1, 15), 16, 10).cast("long").as("h"))
+      .distinct()
+      .groupBy(col("source"))
+      .agg(graft.functions.KmvSketch.kmvSketch(k)(col("h")).as("ks"),
+        count(lit(1)).as("n_exact"))
+
+  /** Pairwise source-overlap matrix from K-minimum-values sketches: per
+    * source, the k smallest md5-derived hashes of its distinct 3-word
+    * shingles ([[graft.functions.KmvSketch]]); per source pair, the
+    * Beyer et al. 2007 estimator Ĵ = |A_k ∩ B_k ∩ U| / |U| with
+    * U = k smallest of A_k ∪ B_k (when both sets have < k elements the
+    * sketches ARE the sets and Ĵ is exact Jaccard).
+    *
+    * The sketch itself needs no distinct — duplicates are absorbed by
+    * its distinct-insert and its partials are O(k) per partition — but
+    * the shared table ([[kmvSketchTable]]) also carries q230's exact
+    * distinct count, so it pays a vocabulary-sized (source, hash)
+    * distinct shuffle, as the exact [[sourceVocabOverlap]] pays its
+    * (source, word) one. A sketch-only build (the 100 TB shape) would
+    * shuffle #sources × k longs. The pairwise stage is |sources|² over
+    * a sketch table of #sources rows — driver-scale by construction.
+    *
+    * Hash = first 15 md5 hex chars as a long (60 bits, positive, exactly
+    * reproducible in DuckDB as ('0x' || substring(md5(g),1,15))::UBIGINT),
+    * so the oracle replays the identical sketch with row_number.
+    */
   def kmvSourceOverlap(spark: SparkSession, dir: String, k: Int = 128,
       n: Int = 3): DataFrame = {
     import spark.implicits._
@@ -2507,8 +2518,8 @@ object TextAnalysis {
   def kmvSourceDistinct(spark: SparkSession, dir: String, k: Int = 128,
       n: Int = 3): DataFrame = {
     import spark.implicits._
-    // one grouped pass (shared with q228 via kmvSketchTable) carries
-    // both arms: the O(k) sketch partial and the exact distinct (the
+    // one pass (shared with q228 via kmvSketchTable) carries both
+    // arms: the O(k) sketch and the exact distinct count (the
     // expensive truth twin, q29 pattern)
     val agg = kmvSketchTable(spark, dir, k, n)
     // 2^60 as an exact double; (k-1)*2^60 stays exactly representable
@@ -2757,7 +2768,7 @@ object TextAnalysis {
     import spark.implicits._
     val base = docs(spark, dir).select($"source", toks.as("t"))
     (1 to maxN).map { n =>
-      base.select($"source", explode(Dedup.ngramsOf($"t", n)).as("gram"))
+      base.select($"source", explode(Dedup.ngramsOf("t", n)).as("gram"))
         .groupBy($"source")
         .agg(count(lit(1)).as("n_total"),
           count_distinct($"gram").as("n_distinct"))

@@ -147,6 +147,40 @@ class TextOpsPropSpec extends AnyFunSuite {
     assert(mismatches == 0)
   }
 
+  test("Dedup.hashedShingleSet over the text equals the split+transform+xxhash64 set route") {
+    val spark = graft.SparkTestSession.spark
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    TextOps.register(spark)
+    val fixed = Seq[String](null, "", "x", "x y", "a b c", "a  b c d",
+      " a b c", "a b c ", "a b c a b c a b c d", "é ü 日本 é ü 日本",
+      "😀 𝄞 x 😀 𝄞 x 😀")
+    val df = (fixed ++ samples(texts, 200)).toDF("text")
+      .select($"text", split($"text", " ").as("t"))
+    // the set route the kernel replaced: 3-gram strings over the
+    // materialized token array, hashed, then distinct
+    val t = $"t"
+    val grams = when(size(t) >= 3,
+      transform(sequence(lit(0), size(t) - lit(3)),
+        i => concat_ws(" ", element_at(t, i + 1), element_at(t, i + 2),
+          element_at(t, i + 3))))
+      .otherwise(array().cast("array<string>"))
+    val rows = df
+      .select($"text",
+        array_sort(graft.ops.Dedup.hashedShingleSet($"text")).as("fast"),
+        array_sort(array_distinct(transform(grams, g => xxhash64(g)))).as("slow"))
+      .collect()
+    assert(rows.length == fixed.length + 200)
+    rows.foreach { r =>
+      assert(!r.isNullAt(1), s"null set for text=${r.getString(0)}")
+      assert(r.getSeq[Long](1) == r.getSeq[Long](2), s"text=${r.getString(0)}")
+    }
+    // null text is the empty set, and repeated grams count once
+    val byText = rows.map(r => Option(r.getString(0)) -> r.getSeq[Long](1)).toMap
+    assert(byText(None).isEmpty && byText(Some("x y")).isEmpty)
+    assert(byText(Some("a b c a b c a b c d")).size == 4)
+  }
+
   test("property: bigramCounts total equals max(len-1, 0) and keys are true bigrams") {
     for (text <- samples(texts, 200)) {
       val m = TextOps.bigramCounts(UTF8String.fromString(text))

@@ -38,13 +38,23 @@ class DedupFirstPairsSpec extends AnyFunSuite {
   private def emb: DataFrame = spark.read.parquet(s"$dir/embeddings.parquet")
 
   /** q16's naive spelling: the hashed-shingle postings self-join, its
-    * grouped counts and the 6-dp Jaccard at threshold `t`.
+    * grouped counts and the 6-dp Jaccard at threshold `t`. The shingle
+    * set is the relational route (3-gram strings over the token array,
+    * xxhash64, distinct), not the `gram_hashes` kernel the operators
+    * run, so the reference shares no code with what it checks.
     */
   private def naiveJaccard(t: Double): Map[(Long, Long), (Long, Double)] = {
+    val tk = $"t"
+    val set = array_distinct(transform(
+      when(size(tk) >= 3,
+        transform(sequence(lit(0), size(tk) - lit(3)),
+          i => concat_ws(" ", element_at(tk, i + 1), element_at(tk, i + 2),
+            element_at(tk, i + 3))))
+        .otherwise(array().cast("array<string>")),
+      g => xxhash64(g)))
     val base = docs.select($"doc_id", split($"text", " ").as("t"))
-    val sh = base.select($"doc_id", explode(Dedup.hashedShingleSet($"t")).as("sh"))
-    val sizes = base.select($"doc_id",
-      size(Dedup.hashedShingleSet($"t")).cast("long").as("n"))
+    val sh = base.select($"doc_id", explode(set).as("sh"))
+    val sizes = base.select($"doc_id", size(set).cast("long").as("n"))
     sh.as("a")
       .join(sh.as("b"),
         col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))

@@ -82,6 +82,49 @@ class KmvLangOpsSpec extends AnyFunSuite {
     } finally graft.TestFiles.rmrf(tmp)
   }
 
+  /** (source → (ks, n_exact)) of a sketch table. */
+  private def bySource(df: org.apache.spark.sql.DataFrame): Map[String, (Seq[Long], Long)] =
+    df.collect().map(r => r.getAs[String]("source") ->
+      (r.getSeq[Long](r.fieldIndex("ks")).toList, r.getAs[Long]("n_exact"))).toMap
+
+  /** The single aggregate the distinct-first build replaced: the sketch
+    * beside count_distinct over the raw, duplicated hash stream.
+    */
+  private def singleAggregate(d: org.apache.spark.sql.DataFrame, k: Int,
+      n: Int): Map[String, (Seq[Long], Long)] = {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    bySource(d.select($"source", split($"text", " ").as("t"))
+      .select($"source", explode(Dedup.ngramsOf("t", n)).as("gram"))
+      .select($"source",
+        conv(substring(md5($"gram"), 1, 15), 16, 10).cast("long").as("h"))
+      .groupBy($"source")
+      .agg(graft.functions.KmvSketch.kmvSketch(k)($"h").as("ks"),
+        count_distinct($"h").as("n_exact")))
+  }
+
+  test("distinct-first KMV table equals the single sketch + count_distinct aggregate") {
+    val k = 128
+    val fixture = spark.read.parquet(s"$sf/documents.parquet")
+    val got = bySource(TextAnalysis.kmvSketchRows(fixture, k, 3))
+    assert(got == singleAggregate(fixture, k, 3))
+    assert(got.values.exists(_._2 > k), "no capped sketch on the fixture")
+    // an under-full source (fewer than k distinct grams, each repeated)
+    // beside a capped one: the sketch IS the distinct set
+    val rnd = new scala.util.Random(7)
+    val tmp = writeDocs(
+      (1 to 4).map(i => (i.toLong, "small", "a b c d a b c d")) ++
+      (1 to 8).map(i => (100L + i, "big",
+        (1 to 60).map(_ => s"w${rnd.nextInt(50)}").mkString(" "))))
+    try {
+      val d = spark.read.parquet(s"$tmp/documents.parquet")
+      val small = bySource(TextAnalysis.kmvSketchRows(d, k, 3))
+      assert(small == singleAggregate(d, k, 3))
+      assert(small("small")._2 == 4L && small("small")._1.size == 4)
+      assert(small("big")._2 > k && small("big")._1.size == k)
+    } finally graft.TestFiles.rmrf(tmp)
+  }
+
   test("langMixture: single-language doc has entropy 0.0, no switches") {
     val tmp = writeDocs(Seq(
       (1L, "s", Seq.fill(40)("the").mkString(" ")),   // 3 en windows

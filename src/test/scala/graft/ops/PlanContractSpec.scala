@@ -993,4 +993,25 @@ class PlanContractSpec extends AnyFunSuite {
       "no window partitions on (source, salt); phase-1 salting regressed:\n" +
         wins.map(_.simpleStringWithNodeId()).mkString("\n"))
   }
+
+  test("q148/q228: the corpus shingle scans never re-split the text inside a lambda") {
+    // an inline split(text) under an array lambda re-splits the whole
+    // document once per element_at per gram; the token array must be a
+    // materialized column (or not exist: gram_hashes reads the bytes)
+    import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, StringSplit}
+    def lambdas(df: DataFrame): Seq[LambdaFunction] =
+      df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+        case lf: LambdaFunction => lf
+      }))
+    val d = spark.read.parquet(s"$sf/documents.parquet")
+    val identity = Dedup.identityTables(d)._1
+    val kmv = TextAnalysis.kmvSketchRows(d, 128, 3)
+    // the KMV scan keeps its n-gram lambda, so the guard below has teeth
+    assert(lambdas(kmv).nonEmpty, kmv.queryExecution.optimizedPlan.toString)
+    for ((name, df) <- Seq("q148 identity scan" -> identity, "q228 KMV scan" -> kmv)) {
+      val bad = lambdas(df).filter(_.function.exists(_.isInstanceOf[StringSplit]))
+      assert(bad.isEmpty, s"$name re-splits the text per lambda call:\n" +
+        df.queryExecution.optimizedPlan)
+    }
+  }
 }
